@@ -19,6 +19,13 @@ import graft.queries.Catalog
   * SPARK_GRAFT_BENCH_RUNS to change the pass count.
   */
 object Bench {
+  /** `SPARK_GRAFT_CPUS` as a JSON value: a number when it is one, else an
+    * escaped string (`local[*]` is valid; a quote must not break the line).
+    */
+  private[graft] def cpusJson(cpus: String): String =
+    if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
+    else org.json4s.jackson.JsonMethods.compact(org.json4s.JString(cpus))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -297,9 +304,7 @@ object Bench {
     // that $SPARK_GRAFT_CPUS reached the session — printing the env value
     // and sc.defaultParallelism makes the honor check mechanical
     // (additive fields; existing keys and methodology unchanged)
-    val cpusJson =
-      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"defaultParallelism":${spark.sparkContext.defaultParallelism},"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpusJson(cpus)},"defaultParallelism":${spark.sparkContext.defaultParallelism},"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

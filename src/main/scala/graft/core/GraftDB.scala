@@ -1,9 +1,23 @@
 package graft.core
 
 import java.util.UUID
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** Engine options — Spark-scale defaults replacing the reference's
   * single-node geometry (`kv/option.go:21-33`).
@@ -80,12 +94,15 @@ final case class GraftOptions(
   * then tombstone and TTL visibility filters (reference `kv/db.go:114-130`) —
   * TTL strictly AFTER LWW so a newer expired version shadows an older live one.
   *
-  * Scale design: no driver-side collects except point-get results; every
-  * lifecycle job is a linear scan plus at most one shuffle; compaction output
-  * is range-partitioned and key-sorted so parquet footer min/max stats prune
-  * files/row-groups on point and range reads, and a parquet bloom filter on
-  * `key` serves the negative-lookup role of the reference's per-SST bloom
-  * (`kv/utils/bloom_filter.go`).
+  * Scale design: the driver holds only metadata and a point get's few
+  * matching rows; every lifecycle job is a linear scan plus at most one
+  * shuffle; compaction output is range-partitioned and key-sorted so
+  * parquet footer min/max stats prune files/row-groups on point and range
+  * reads, and a parquet bloom filter on `key`, sized to each file's keys,
+  * serves the negative-lookup role of the reference's per-SST bloom
+  * (`kv/utils/bloom_filter.go`). A point [[get]] runs no Spark job at all:
+  * like the reference's `Get`, it reads the few matching rows on the
+  * driver.
   */
 final class GraftDB(
     val spark: SparkSession,
@@ -137,26 +154,25 @@ final class GraftDB(
       }
     }
     val blobRows = blobs.result()
-    val blobMeta = if (blobRows.nonEmpty) {
+    val blobMetas = if (blobRows.nonEmpty) {
       val dir = newSegmentDir("blobs")
       spark.createDataFrame(spark.sparkContext.parallelize(blobRows, 1),
         KVEntry.blobSchema).write.mode(SaveMode.Overwrite).parquet(dir)
-      Some(BlobFileMeta(dir, blobRows.size.toLong))
-    } else None
+      blobFileMetas(dir, baseBlob, blobSeq - 1)
+    } else Vector.empty
 
     val sorted = rows.sortBy(r => r.getAs[Array[Byte]](0))(UnsignedBytesOrdering)
     val dir = newSegmentDir("data")
     spark.createDataFrame(spark.sparkContext.parallelize(sorted, 1), KVEntry.schema)
       .write.mode(SaveMode.Overwrite)
       .option("parquet.bloom.filter.enabled#key", "true")
+      // the batch's row count bounds its distinct keys: a 16-row segment
+      // carries a 32-byte filter instead of the 1 MB default
+      .option("parquet.bloom.filter.expected.ndv#key", sorted.size.toString)
       .parquet(dir)
-    val meta = FileMeta(dir, level = 0,
-      Hex.encode(sorted.head.getAs[Array[Byte]](0)),
-      Hex.encode(sorted.last.getAs[Array[Byte]](0)),
-      rows.size.toLong, baseVersion)
     manifest.commit(_ => ManifestDelta(
-      addFiles = Vector(meta),
-      addBlobs = blobMeta.toVector))
+      addFiles = segmentFileMetas(dir, level = 0, baseVersion),
+      addBlobs = blobMetas))
     maybeCompact()
   }
 
@@ -201,9 +217,11 @@ final class GraftDB(
     val blobDir = newSegmentDir("blobs")
     val blobDf = withCols.filter(col("blobId").isNotNull).select(col("blobId"), col("value"))
     blobDf.write.mode(SaveMode.Overwrite).parquet(blobDir)
-    // row count + max id from parquet footers in ONE driver-side metadata
-    // pass — no Spark job, no second footer walk
-    val (blobCount, maxUsedBlobId) = blobFooterStats(blobDir)
+    // per-file row counts + id ranges from parquet footers in ONE
+    // driver-side metadata pass — no Spark job, no second footer walk
+    val blobMetas = blobFileMetas(blobDir, baseBlob, baseBlob + (1L << 45) - 1)
+    val blobCount = blobMetas.map(_.rows).sum
+    val maxUsedBlobId = blobMetas.map(_.maxBlobId).maxOption
     // belt to the coalesce's braces: ids past the reserved block would
     // collide with a concurrent writer's reservation — fail loudly
     maxUsedBlobId.foreach(mx => require(mx < baseBlob + (1L << 45),
@@ -227,8 +245,7 @@ final class GraftDB(
         else maxUsedBlobId.map(_ + 1).getOrElse(st.nextBlobId)
       ManifestDelta(
         addFiles = metas,
-        addBlobs = if (blobCount > 0) Vector(BlobFileMeta(blobDir, blobCount))
-                   else Vector.empty,
+        addBlobs = blobMetas,
         nextBlobId = Some(reclaimed))
     }
     maybeCaptureGrid(metas)
@@ -270,8 +287,13 @@ final class GraftDB(
           .sortWithinPartitions("key")
           .write
       }
+    // the adaptive filter keeps candidates from 1 MB down to 2 KB and
+    // writes the smallest that holds the file's distinct keys at the
+    // target false-positive rate, so a bucket file's filter tracks its size
     writer.mode(SaveMode.Overwrite)
       .option("parquet.bloom.filter.enabled#key", "true")
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .option("parquet.bloom.filter.candidates.number#key", "10")
       .parquet(dir)
   }
 
@@ -304,38 +326,77 @@ final class GraftDB(
     walk(new java.io.File(dir.replaceFirst("^file:/+", "/")))
   }
 
+  /** The part files behind one manifest path: segment writes record
+    * their part FILES; a segment DIR (manifests written before that) is
+    * enumerated.
+    */
+  private def partFilesOf(path: String): Vector[String] =
+    if (path.endsWith(".parquet")) Vector(path) else parquetPartFiles(path).map(_.getPath)
+
+  /** Open one part file on the driver with the SESSION's Hadoop conf —
+    * `ParquetFileReader.open(InputFile)` and `ParquetReader.builder` each
+    * build a fresh `Configuration`, ~10 ms a file against ~1 ms here. The
+    * reader keeps only the row groups `filter` cannot rule out by their
+    * statistics, dictionary or key bloom filter, and only the pages of
+    * those the column index cannot.
+    */
+  private def openParquet(path: String,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+      HadoopReadOptions.builder(conf).withRecordFilter(filter).build())
+  }
+
   /** Open one file's parquet footer, run `g`, close. */
-  private def withFooter[T](f: java.io.File)(
-      g: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getPath),
-        spark.sparkContext.hadoopConfiguration))
+  private def withFooter[T](path: String)(g: ParquetMetadata => T): T = {
+    val rd = openParquet(path)
     try g(rd.getFooter) finally rd.close()
   }
 
-  /** Blob-dir stats in ONE footer pass: (total rows, max blobId). The max
-    * is None when the dir has no data blocks or any block lacks blobId
-    * statistics — callers must then keep their conservative reservation.
-    */
-  private def blobFooterStats(dir: String): (Long, Option[Long]) = {
-    import scala.jdk.CollectionConverters._
-    var rows = 0L
-    val perBlock = Vector.newBuilder[Option[Long]]
-    parquetPartFiles(dir).foreach { f =>
-      withFooter(f)(_.getBlocks.asScala.foreach { b =>
-        rows += b.getRowCount
-        perBlock += b.getColumns.asScala.find(_.getPath.toDotString == "blobId")
-          .map(_.getStatistics)
-          .filter(s => s != null && s.hasNonNullValue)
-          .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-      })
-    }
-    val maxes = perBlock.result()
-    val max = if (maxes.isEmpty || maxes.exists(_.isEmpty)) None
-              else Some(maxes.map(_.get).max)
-    (rows, max)
+  /** The rows of one part file that satisfy `pred`, read on the driver. */
+  private def filteredRows(path: String, pred: FilterPredicate): Vector[Group] = {
+    val filter = FilterCompat.get(pred)
+    val rd = openParquet(path, filter)
+    try {
+      val schema = rd.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      val out = Vector.newBuilder[Group]
+      var pages = rd.readNextFilteredRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+        var i = 0L
+        while (i < pages.getRowCount) {
+          // the record filter materializes non-matching rows as null
+          val g = records.read()
+          if (g != null) out += g
+          i += 1
+        }
+        pages = rd.readNextFilteredRowGroup()
+      }
+      out.result()
+    } finally rd.close()
   }
+
+  /** Per-part-file blob metas of a freshly written blob dir: row count and
+    * blobId range from each FOOTER. A file whose blocks lack blobId
+    * statistics records the writer's whole reserved range `[lo, hi]`;
+    * empty files are skipped.
+    */
+  private def blobFileMetas(dir: String, lo: Long, hi: Long): Vector[BlobFileMeta] =
+    parquetPartFiles(dir).flatMap { f =>
+      withFooter(f.getPath) { footer =>
+        val blocks = footer.getBlocks.asScala.toVector
+        val ranges = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == "blobId")
+          .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
+          .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            s.genericGetMax.asInstanceOf[java.lang.Long].longValue)))
+        val rows = blocks.map(_.getRowCount).sum
+        if (rows == 0L) None
+        else if (ranges.exists(_.isEmpty)) Some(BlobFileMeta(f.getPath, rows, lo, hi))
+        else Some(BlobFileMeta(f.getPath, rows,
+          ranges.map(_.get._1).min, ranges.map(_.get._2).max))
+      }
+    }
 
   /** Per-parquet-file manifest entries for a freshly written segment dir:
     * each file's [minKey, maxKey] + row count come from its parquet FOOTER
@@ -354,8 +415,7 @@ final class GraftDB(
     if (files.isEmpty) return Vector.empty
     val fromFooters: Option[Vector[FileMeta]] = {
       val metas = files.map { f =>
-        import scala.jdk.CollectionConverters._
-        withFooter(f) { footer =>
+        withFooter(f.getPath) { footer =>
           val blocks = footer.getBlocks.asScala.toVector
           val rows = blocks.map(_.getRowCount).sum
           val keyStats = blocks.map(b =>
@@ -395,8 +455,6 @@ final class GraftDB(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], KVEntry.schema)
     else spark.read.schema(KVEntry.schema).parquet(paths: _*)
 
-  private def blobTable(): DataFrame = blobTableOf(manifest.load())
-
   private def blobTableOf(st: ManifestState): DataFrame =
     if (st.blobFiles.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], KVEntry.blobSchema)
@@ -412,6 +470,7 @@ final class GraftDB(
   def resolved(df: DataFrame): DataFrame = {
     // version desc is the LWW order; the remaining columns are a
     // deterministic tie-break for intra-batch duplicate keys (same version).
+    // GraftDB.lwwOrder is the same order for the driver-side point get.
     val w = Window.partitionBy(col("key")).orderBy(
       col("version").desc, xxhash64(col("value")).desc, col("blobId").desc_nulls_last,
       col("expiresAt").desc, col("tombstone").desc)
@@ -511,24 +570,41 @@ final class GraftDB(
     }
   }
 
-  /** Point lookup (reference `Get`, `kv/db.go:89-118`). Manifest min/max
-    * pruning narrows to the few segments whose range covers the key; the
-    * parquet bloom filter + row-group stats prune inside each segment.
+  /** Point lookup (reference `Get`, `kv/db.go:89-118`), resolved on the
+    * driver with no Spark job. Manifest min/max pruning narrows to the
+    * few files whose range covers the key; inside each, a `key ==` read
+    * skips every row group that stats or the key bloom filter rule out and
+    * every page the column index does. The surviving versions resolve by
+    * [[resolved]]'s exact order ([[lwwOrder]]), then the same tombstone/TTL
+    * visibility as [[view]]; a blob pointer dereferences through the blob
+    * files whose id range covers it, and a missing blob fails loudly.
     */
   def get(key: Array[Byte]): Option[Array[Byte]] = {
     val hex = Hex.encode(key)
     val st = manifest.load()
-    val candidates = st.files.filter(f => f.minKeyHex <= hex && hex <= f.maxKeyHex)
-    if (candidates.isEmpty) return None
-    val hit = resolved(readSegments(candidates.map(_.path)).filter(col("key") === lit(key)))
-    val row = visible(hit, System.currentTimeMillis() / 1000).head(1)
-    row.headOption.map { r =>
-      if (r.isNullAt(r.fieldIndex("blobId"))) r.getAs[Array[Byte]]("value")
-      else {
-        val id = r.getAs[Long]("blobId")
-        blobTable().filter(col("blobId") === id).head().getAs[Array[Byte]]("value")
-      }
-    }
+    val keyEq = FilterApi.eq(FilterApi.binaryColumn("key"), Binary.fromConstantByteArray(key))
+    val versions = st.files
+      .filter(f => f.minKeyHex <= hex && hex <= f.maxKeyHex)
+      .flatMap(f => partFilesOf(f.path))
+      .flatMap(p => filteredRows(p, keyEq).map(GraftDB.entryOf))
+    versions.maxOption(GraftDB.lwwOrder)
+      .filter(e => !e.tombstone && (e.expiresAt == 0L || e.expiresAt > System.currentTimeMillis() / 1000))
+      .map(e => if (e.blobId == null) e.value else blobValue(st, e.blobId))
+  }
+
+  /** The value of blob `id`: a `blobId ==` read of the blob files whose id
+    * range covers it, stopping at the first hit.
+    */
+  private def blobValue(st: ManifestState, id: Long): Array[Byte] = {
+    val idEq = FilterApi.eq(FilterApi.longColumn("blobId"), java.lang.Long.valueOf(id))
+    st.blobFiles.iterator
+      .filter(b => b.minBlobId <= id && id <= b.maxBlobId)
+      .flatMap(b => partFilesOf(b.path))
+      .flatMap(p => filteredRows(p, idEq))
+      .nextOption()
+      .getOrElse(throw new NoSuchElementException(
+        s"blob $id is referenced by a live key but missing from the blob table"))
+      .getBinary("value", 0).getBytes
   }
 
   /** Ordered scan (reference `NewIterator`, `kv/iterator.go:19-79`), with
@@ -841,8 +917,8 @@ final class GraftDB(
   def gcBlobs(maxSegments: Int = 1,
       discardRatio: Double = options.gcDiscardRatio): (Long, Long) = {
     // ONE manifest load feeds stats, victim pick, AND the rewrite's live
-    // set — so each rewritten segment's recorded row count is exactly the
-    // liveCount the stats pass measured (see [[liveBlobRefsOf]])
+    // set — so each rewrite holds exactly the liveCount rows the stats
+    // pass measured (see [[liveBlobRefsOf]])
     val st0 = manifest.load()
     val stats = blobSegmentStatsOf(st0)
     if (stats.isEmpty) return (0L, 0L)
@@ -857,13 +933,13 @@ final class GraftDB(
     if (victims.isEmpty) return (totalLive, totalDead)
     val liveRefs = liveBlobRefsOf(st0)
     val replacements = victims.map { case (bf, liveCount, _) =>
-      if (liveCount == 0L) bf -> None // fully dead: just drop from manifest
+      if (liveCount == 0L) bf -> Vector.empty // fully dead: just drop from manifest
       else {
         val outDir = newSegmentDir("blobs")
         spark.read.schema(KVEntry.blobSchema).parquet(bf.path)
           .join(liveRefs, Seq("blobId"), "left_semi")
           .write.mode(SaveMode.Overwrite).parquet(outDir)
-        bf -> Some(BlobFileMeta(outDir, liveCount))
+        bf -> blobFileMetas(outDir, bf.minBlobId, bf.maxBlobId)
       }
     }.toMap
     manifest.commit { cur =>
@@ -928,7 +1004,7 @@ final class GraftDB(
   def estimateDeadBlobRatio(fraction: Double = 0.01, seed: Long = 42L): Double = {
     val st = manifest.load()
     if (st.blobFiles.isEmpty) return 0.0
-    val sampled = blobTable().sample(withReplacement = false, fraction, seed)
+    val sampled = blobTableOf(st).sample(withReplacement = false, fraction, seed)
     val liveRefs = resolved(readSegments(st.liveDataPaths))
       .filter(!col("tombstone") && col("blobId").isNotNull)
       .select(col("blobId"))
@@ -1083,6 +1159,27 @@ object GraftDB {
         new java.io.File(s"$dir/MANIFEST.log").exists(),
       s"openBackup: no engine manifest at $dir — incomplete or missing backup")
     new GraftDB(spark, dir, options)
+  }
+
+  /** [[GraftDB.resolved]]'s window order as a driver-side ordering, the
+    * winner greatest: version, then the same-version tie-break —
+    * `xxhash64(value)` (Spark's seed 42, null hashing to the seed), blobId
+    * with nulls lowest, expiresAt, tombstone.
+    */
+  private[core] val lwwOrder: Ordering[KVEntry] = Ordering.by((e: KVEntry) => (
+    e.version,
+    XxHash64Function.hash(e.value, BinaryType, 42L),
+    Option(e.blobId).map(_.longValue),
+    e.expiresAt,
+    e.tombstone))
+
+  /** One data-file row read through parquet's example `Group` model. */
+  private[core] def entryOf(g: Group): KVEntry = {
+    def has(f: String) = g.getFieldRepetitionCount(f) > 0
+    KVEntry(g.getBinary("key", 0).getBytes,
+      if (has("value")) g.getBinary("value", 0).getBytes else null,
+      g.getLong("version", 0), g.getLong("expiresAt", 0), g.getBoolean("tombstone", 0),
+      if (has("blobId")) java.lang.Long.valueOf(g.getLong("blobId", 0)) else null)
   }
 
   /** Smallest byte string strictly greater than every string with `p` as a

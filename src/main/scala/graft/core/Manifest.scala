@@ -18,7 +18,17 @@ final case class FileMeta(
     rows: Long,
     createdVersion: Long)
 
-final case class BlobFileMeta(path: String, rows: Long)
+/** Metadata for one live blob file. `[minBlobId, maxBlobId]` bounds the
+  * ids it holds, so a point read dereferences a blob pointer by opening
+  * only the files whose range covers it (the reference's value pointer
+  * names its vlog file outright, `kv/utils/value.go:19-54`). The defaults
+  * — every id — keep manifests written before these fields correct.
+  */
+final case class BlobFileMeta(
+    path: String,
+    rows: Long,
+    minBlobId: Long = 0L,
+    maxBlobId: Long = Long.MaxValue)
 
 /** The full engine state committed atomically. `nextVersion` is the
   * monotonic commit counter that replaces the reference's inverted-ts

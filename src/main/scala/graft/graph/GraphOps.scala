@@ -328,9 +328,11 @@ object GraphOps {
     // independent (integer-valued double sums below 2^53 are exact in
     // any order — see the normalization note above), so this changes
     // wall clock only.
-    val bytesPerPart = spark.conf
-      .getOption("spark.graft.graph.bytesPerPartition")
-      .map(_.toLong).filter(_ > 0).getOrElse(64L * 1024 * 1024)
+    val bytesPerPartKey = "spark.graft.graph.bytesPerPartition"
+    val bytesPerPart = spark.conf.getOption(bytesPerPartKey)
+      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$bytesPerPartKey must be a whole number of bytes, got '$v'")))
+      .filter(_ > 0).getOrElse(64L * 1024 * 1024)
     val maxParts = math.max(
       spark.sessionState.conf.numShufflePartitions,
       spark.sparkContext.defaultParallelism)

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Model-based fuzz: a seeded random program of engine operations
   * (batchSet / bulk write / del / TTL / compact / promote / majorCompact /
   * blob GC / vacuum) runs against GraftDB AND an in-memory LWW model; after
-  * every lifecycle step the merge-on-read view must equal the model
-  * exactly. This is the cross-cutting check the per-feature specs can't
+  * every step both the merge-on-read view and a point get of every key
+  * must equal the model exactly. This is the cross-cutting check the per-feature specs can't
   * give: grid bucketing, L1→L2 promotion, bottom-level-only dead dropping,
   * and per-segment GC all interacting on one keyspace.
   *
@@ -47,6 +47,11 @@ class EngineFuzzSpec extends AnyFunSuite {
         .map(r => new String(r.getAs[Array[Byte]]("key")) ->
           new String(r.getAs[Array[Byte]]("value"))).toMap
       assert(got == model.toMap, s"view diverged from model after $tag")
+      // point-get parity on the whole keyspace: the driver-side resolve
+      // through L0/L1/L2, tombstones, expired TTLs and blob derefs
+      keyspace.foreach { k =>
+        assert(db.get(b(k)).map(new String(_)) == model.get(k), s"get($k) diverged after $tag")
+      }
     }
 
     // mid-program snapshot: pinned state must read the model AS OF the pin,
@@ -104,10 +109,6 @@ class EngineFuzzSpec extends AnyFunSuite {
           new String(r.getAs[Array[Byte]]("value"))).toMap
       assert(got == frozen, "snapshot drifted from its pin-time model")
       s.close()
-    }
-    // point-get parity on the whole keyspace, through blob deref
-    keyspace.foreach { k =>
-      assert(db.get(b(k)).map(new String(_)) == model.get(k), s"get($k) diverged")
     }
     // engine actually exercised the interesting machinery
     assert(db.gridBounds().nonEmpty, "fuzz never established the grid")

@@ -1,7 +1,8 @@
 package graft.core
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
@@ -508,5 +509,146 @@ class GraftDBSpec extends AnyFunSuite {
     val got = db.view().collect()
       .map(r => new String(r.getAs[Array[Byte]]("key")) -> new String(r.getAs[Array[Byte]]("value"))).toMap
     assert(got.size == 10 && got("ak05") == "g7-5")
+  }
+
+  test("bulk write with same-version duplicate keys: get equals view for every key") {
+    val db = freshDb(GraftOptions(valueThreshold = 12, compactTriggerFiles = 1000))
+    val rnd = new scala.util.Random(11)
+    val now = System.currentTimeMillis() / 1000
+    def word(n: Int): String = (0 until n).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
+    // one write = one commit version, so every duplicate resolves by the
+    // tie-break alone: xxhash64(value), blobId, expiresAt, tombstone.
+    // Values mix inline, blob-routed and null (a tombstone); expiry mixes
+    // none, live and past.
+    val rows = (0 until 40).flatMap { i =>
+      Seq.fill(1 + rnd.nextInt(4)) {
+        val v = rnd.nextInt(6) match {
+          case 0 => null
+          case 1 | 2 => b(word(1 + rnd.nextInt(2)))
+          case _ => b(word(12 + rnd.nextInt(2)))
+        }
+        val exp = rnd.nextInt(5) match { case 0 => now - 100; case 1 => now + 3600; case _ => 0L }
+        Row(b(f"dup$i%02d"), v, exp)
+      }
+    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("key", BinaryType),
+      StructField("value", BinaryType), StructField("expiresAt", LongType)))
+    db.write(spark.createDataFrame(spark.sparkContext.parallelize(rnd.shuffle(rows), 3), schema))
+    val view = db.view().collect()
+      .map(r => new String(r.getAs[Array[Byte]]("key")) -> r.getAs[Array[Byte]]("value").toSeq).toMap
+    assert(view.nonEmpty && view.size < 40, s"${view.size} of 40 keys visible: the mix lost its dead keys")
+    (0 until 40).map(i => f"dup$i%02d").foreach { k =>
+      assert(db.get(b(k)).map(_.toSeq) == view.get(k), s"get($k) disagrees with view()")
+    }
+  }
+
+  test("get reads a store whose manifest records segment and blob DIRS") {
+    // manifests written before per-file metas name each batchSet segment
+    // and blob segment by its directory, with no blob id range
+    val dir = Files.createTempDirectory("graftdb-dirs").toString
+    val (segDir, blobDir) = (s"$dir/data/old", s"$dir/blobs/old")
+    import org.apache.spark.sql.SaveMode
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(b("a"), b("inline"), 0L, 0L, false, null),
+        Row(b("b"), null, 1L, 0L, false, 7L)), 1), KVEntry.schema)
+      .write.mode(SaveMode.Overwrite).parquet(segDir)
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(7L, b("blob"))), 1),
+      KVEntry.blobSchema).write.mode(SaveMode.Overwrite).parquet(blobDir)
+    new Manifest(dir, 1024).commit(_ => ManifestDelta(
+      nextVersion = Some(2L), nextBlobId = Some(8L),
+      addFiles = Vector(FileMeta(segDir, 0, Hex.encode(b("a")), Hex.encode(b("b")), 2L, 0L)),
+      addBlobs = Vector(BlobFileMeta(blobDir, 1L))))
+    val db = new GraftDB(spark, dir)
+    assert(Seq("a", "b", "c").map(k => db.get(b(k)).map(new String(_))) ==
+      Seq(Some("inline"), Some("blob"), None))
+  }
+
+  test("point get runs no Spark job: hit, miss, blob hit, tombstone, expired") {
+    val db = freshDb(GraftOptions(valueThreshold = 16, compactTriggerFiles = 1000))
+    val blob = Array.fill[Byte](64)(7)
+    db.batchSet(Seq(KVEntry(b("hit"), b("v")), KVEntry(b("blob"), blob),
+      KVEntry(b("gone"), b("v")), KVEntry.withTTL(b("old"), b("v"), -100)))
+    db.del(b("gone"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel"))
+          sentinelSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = Seq("hit", "blob", "gone", "old", "absent").map(k => db.get(b(k)).map(_.toSeq))
+      assert(got == Seq(Some(b("v").toSeq), Some(blob.toSeq), None, None, None))
+      // the bus delivers events in order: once the sentinel job's start
+      // arrives, every job a get launched would have arrived before it
+      sc.setJobGroup("sentinel", "flush the listener bus")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran for five point gets")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("key bloom filter is sized to the file and still prunes an in-range absent key") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    def open(file: String, filter: FilterCompat.Filter, bloomOnly: Boolean) =
+      ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+        HadoopReadOptions.builder(conf).withRecordFilter(filter).useStatsFilter(!bloomOnly)
+          .useDictionaryFilter(!bloomOnly).useColumnIndexFilter(!bloomOnly).build())
+    // bitset bytes of the key bloom filter of a one-row-group file
+    def keyBloomBytes(file: String): Int = {
+      val rd = open(file, FilterCompat.NOOP, bloomOnly = false)
+      try {
+        val block = rd.getFooter.getBlocks.asScala.toSeq match {
+          case Seq(g) => g
+          case gs => fail(s"$file has ${gs.size} row groups")
+        }
+        val keyCol = block.getColumns.asScala.find(_.getPath.toDotString == "key").get
+        assert(keyCol.getBloomFilterOffset >= 0, s"the footer of $file declares no bloom filter on key")
+        rd.getBloomFilterDataReader(block).readBloomFilter(keyCol).getBitsetSize
+      } finally rd.close()
+    }
+    def files(db: GraftDB): Seq[String] =
+      db.rawLog().inputFiles.toSeq.map(_.replaceFirst("^file:/+", "/"))
+
+    val db = freshDb()
+    db.batchSet((0 until 16).map(i => KVEntry(b(f"bk${2 * i}%03d"), b(s"v$i"))))
+    val file = files(db) match {
+      case Seq(f) => f
+      case fs => fail(s"expected one segment file, got $fs")
+    }
+    val bytes = new java.io.File(file).length
+    assert(bytes < 4096, s"a 16-row segment file is $bytes bytes")
+    assert(keyBloomBytes(file) <= 1024)
+    // bk001 lies inside the file's [bk000, bk030] range; with statistics,
+    // dictionary and column-index filtering off only the bloom filter can
+    // drop the row group
+    val absent = FilterCompat.get(
+      FilterApi.eq(FilterApi.binaryColumn("key"), Binary.fromString("bk001")))
+    val rd = open(file, absent, bloomOnly = true)
+    try assert(rd.getRowGroups.isEmpty, "the bloom filter kept the row group of an absent key")
+    finally rd.close()
+    assert(db.get(b("bk001")).isEmpty && db.get(b("bk002")).map(new String(_)).contains("v1"))
+
+    // bulk-write and compaction output (the adaptive filter): each file's
+    // filter follows its few hundred keys, not the 1 MB maximum
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("key", BinaryType), StructField("value", BinaryType)))
+    db.write(spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 400).map(i => Row(b(f"bw$i%04d"), b(s"w$i"))), 4), schema))
+    db.compact()
+    files(db).foreach(f => assert(keyBloomBytes(f) <= 4096, s"compacted file $f"))
   }
 }

@@ -253,6 +253,17 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(got(4L)._2 > got(3L)._2 && got(4L)._1 == 0.0)
   }
 
+  test("hits: a malformed bytesPerPartition conf fails naming the key") {
+    import spark.implicits._
+    val key = "spark.graft.graph.bytesPerPartition"
+    spark.conf.set(key, "64MB")
+    try {
+      val e = intercept[IllegalArgumentException](
+        GraphOps.hits(Seq((1L, 2L)).toDF("src", "dst"), iters = 1))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("64MB"))
+    } finally spark.conf.unset(key)
+  }
+
   test("scc: direction splits what cc merges; two cycles bridged one-way stay apart") {
     import spark.implicits._
     // cycle {1,2,3} → bridge → cycle {10,11}, plus a dangling chain
