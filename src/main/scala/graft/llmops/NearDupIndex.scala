@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.functions.expressions.HashExpressions
+import graft.store.{ManifestStore, TagFence}
 
 /** Persisted, appendable MinHash-LSH near-duplicate index — the streaming
   * complement to [[Dedup.minhashLshPairs]]: pay the corpus shingle/band
@@ -59,86 +60,13 @@ object NearDupIndex {
       nDocs: Long = 0L,
       nDeleted: Long = 0L)
 
-  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
   private val lock = new Object
 
-  private def numericTag(t: String): Option[Long] =
-    if (t.nonEmpty && t.length <= 18 && t.forall(c => c >= '0' && c <= '9'))
-      Some(java.lang.Long.parseLong(t))
-    else None
-
-  private def tagApplied(m: NearDupManifest, tag: String): Boolean =
-    numericTag(tag) match {
-      case Some(v) => v <= m.tagHighWater ||
-        m.appliedTags.exists(numericTag(_).contains(v))
-      case None => m.appliedTags.contains(tag)
-    }
-
-  private def recordTag(m: NearDupManifest, tag: String): NearDupManifest =
-    numericTag(tag) match {
-      case Some(v) => m.copy(tagHighWater = math.max(m.tagHighWater, v))
-      case None => m.copy(appliedTags = m.appliedTags :+ tag)
-    }
-
-  // stamp cache (size+mtime revalidation via one getFileStatus — the
-  // GraftDB/text/IVF manifest pattern): repeated probes on an unchanged
-  // index skip the JSON re-parse; every commit changes the file stamp so
-  // foreign writers are still seen. `manifestParses` counts ACTUAL
-  // parses so a spec can pin the cache.
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, NearDupManifest)]()
-  private[llmops] val manifestParses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** `fresh = true` bypasses the stamp cache — the correctness-critical
-    * read for the optimistic commit/vacuum guards, where a same-length
-    * same-mtime-window foreign commit must still be seen.
-    */
-  private[llmops] def readManifest(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fresh: Boolean = false): Option[NearDupManifest] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => manifestCache.remove(indexDir); None
-      case Some(s) =>
-        val cached = manifestCache.get(indexDir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[NearDupManifest](text)
-          manifestParses.incrementAndGet()
-          manifestCache.put(indexDir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
-  }
-
-  /** Swap to `next` only if the manifest still reads as `expected` — the
-    * optimistic cross-process guard shared by every index family here.
-    */
-  private def commitIfUnchanged(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, expected: Option[NearDupManifest], next: NearDupManifest): Unit = {
-    // guard read bypasses the stamp cache — see readManifest's `fresh`
-    if (readManifest(spark, indexDir, fresh = true) != expected)
-      throw new IllegalStateException(
-        s"concurrent near-dup-index mutation on $indexDir — aborting; " +
-          "staged dirs are unreferenced and reclaimed by vacuumNearDupIndex")
-    val dst = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json.tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.Serialization.write(next).getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // drop, don't update: the next read restamps from the renamed file
-    manifestCache.remove(indexDir)
-  }
+  private[llmops] val store =
+    new ManifestStore[NearDupManifest]("near-dup-index", "vacuumNearDupIndex")
+  private val tags = TagFence.numeric[NearDupManifest](
+    m => (m.appliedTags, m.tagHighWater),
+    (m, t, hw) => m.copy(appliedTags = t, tagHighWater = hw))
 
   private val bandSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("bh", org.apache.spark.sql.types.LongType),
@@ -205,7 +133,7 @@ object NearDupIndex {
     require(numBands > 0 && rowsPerBand > 0 && shingleK > 0 && numBuckets > 0,
       "buildNearDupIndex: all parameters must be positive")
     val spark = docs.sparkSession
-    val m0 = readManifest(spark, indexDir)
+    val m0 = store.read(spark, indexDir)
     val empty = NearDupManifest(numBands, rowsPerBand, shingleK, numBuckets,
       Vector.empty, Vector.empty)
     val next = stageBatch(docs, indexDir, empty, idCol, textCol) match {
@@ -213,7 +141,7 @@ object NearDupIndex {
         empty.copy(bands = Vector(bDir), shingles = Vector(sDir), nDocs = n)
       case None => empty // empty corpus: a legitimate streaming start state
     }
-    commitIfUnchanged(spark, indexDir, m0, next)
+    store.commitIfUnchanged(spark, indexDir, m0, next)
   }
 
   /** Append a batch of NEW documents. Returns false (writing nothing)
@@ -227,23 +155,15 @@ object NearDupIndex {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = lock.synchronized {
     val spark = docs.sparkSession
-    val m = readManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"appendToNearDupIndex: no readable index manifest at $indexDir"))
-    if (batchTag.exists(tagApplied(m, _))) return false
+    if (batchTag.exists(tags.applied(m, _))) return false
     stageBatch(docs, indexDir, m, idCol, textCol) match {
       case None => false
       case Some((bDir, sDir, n)) =>
-        val next = m.copy(bands = m.bands :+ bDir, shingles = m.shingles :+ sDir,
-          nDocs = m.nDocs + n)
-        try commitIfUnchanged(spark, indexDir, Some(m),
-          batchTag.fold(next)(recordTag(next, _)))
-        catch { case e: IllegalStateException =>
-          val fs = new org.apache.hadoop.fs.Path(indexDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          for (d <- Seq(bDir, sDir))
-            fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$d"), true)
-          throw e
-        }
+        store.commitOrDrop(spark, indexDir, m, tags.record(
+          m.copy(bands = m.bands :+ bDir, shingles = m.shingles :+ sDir,
+            nDocs = m.nDocs + n), batchTag), Seq(bDir, sDir))
         true
     }
   }
@@ -270,7 +190,7 @@ object NearDupIndex {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = lock.synchronized {
     val spark = ids.sparkSession
-    val m = readManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"deleteFromNearDupIndex: no readable index manifest at $indexDir"))
     val delIds = ids.select(col(idCol).cast("long").as("id")).distinct()
     val delPs = delIds
@@ -293,12 +213,8 @@ object NearDupIndex {
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
-    try commitIfUnchanged(spark, indexDir, Some(m),
-      m.copy(tombs = m.tombs :+ tDir, nDeleted = m.nDeleted + n))
-    catch { case e: IllegalStateException =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
-      throw e
-    }
+    store.commitOrDrop(spark, indexDir, m,
+      m.copy(tombs = m.tombs :+ tDir, nDeleted = m.nDeleted + n), Seq(tDir))
     n
   }
 
@@ -324,7 +240,7 @@ object NearDupIndex {
       maxBucketSize: Int = 5000,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val m = readManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"probeNearDupIndex: no readable index manifest at $indexDir"))
     val psh = probe.select(col(idCol).cast("long").as("probe_id"),
         Text.shingles(col(textCol), m.shingleK).as("psh"))
@@ -386,9 +302,9 @@ object NearDupIndex {
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Boolean = lock.synchronized {
-    readManifest(spark, indexDir) match {
+    store.read(spark, indexDir) match {
       case Some(m) if m.bands.size > 1 || m.shingles.size > 1 ||
-          m.tombs.nonEmpty || m.appliedTags.exists(numericTag(_).isDefined) =>
+          m.tombs.nonEmpty || tags.pending(m) =>
         val dead = tombIds(spark, indexDir, m)
         val bDir = s"bands-${java.util.UUID.randomUUID}"
         readRoots(spark, indexDir, m.bands, bandSchema)
@@ -400,20 +316,10 @@ object NearDupIndex {
           .join(dead, Seq("id"), "left_anti")
           .repartition(col("ps"))
           .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$sDir")
-        val numeric = m.appliedTags.flatMap(numericTag)
-        try commitIfUnchanged(spark, indexDir, Some(m), m.copy(
+        store.commitOrDrop(spark, indexDir, m, tags.absorb(m.copy(
           bands = Vector(bDir), shingles = Vector(sDir),
-          appliedTags = m.appliedTags.filter(numericTag(_).isEmpty),
-          tagHighWater = (m.tagHighWater +: numeric).max,
           tombs = Vector.empty,
-          nDocs = m.nDocs - m.nDeleted, nDeleted = 0L))
-        catch { case e: IllegalStateException =>
-          val fs = new org.apache.hadoop.fs.Path(indexDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          for (d <- Seq(bDir, sDir))
-            fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$d"), true)
-          throw e
-        }
+          nDocs = m.nDocs - m.nDeleted, nDeleted = 0L)), Seq(bDir, sDir))
         true
       case _ => false
     }
@@ -428,7 +334,7 @@ object NearDupIndex {
   def maintainNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, foldRootsAbove: Int = 4,
       deadRatio: Double = 0.25): Boolean = lock.synchronized {
-    readManifest(spark, indexDir) match {
+    store.read(spark, indexDir) match {
       case Some(m) if m.bands.size > foldRootsAbove ||
           (m.nDeleted > 0 && m.nDeleted >= deadRatio * math.max(1L, m.nDocs)) =>
         compactNearDupIndex(spark, indexDir)
@@ -443,24 +349,7 @@ object NearDupIndex {
     */
   def vacuumNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, minAgeMs: Long = 600000L): Int = lock.synchronized {
-    readManifest(spark, indexDir) match {
-      case None => 0
-      case Some(m) =>
-        val root = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = (m.bands ++ m.shingles ++ m.tombs).toSet
-        val cutoff = System.currentTimeMillis() - minAgeMs
-        val stale = fs.listStatus(root).filter { st =>
-          val n = st.getPath.getName
-          st.isDirectory && (n.startsWith("bands-") || n.startsWith("shingles-") ||
-              n.startsWith("tombs-")) &&
-            !live.contains(n) && st.getModificationTime <= cutoff
-        }
-        if (readManifest(spark, indexDir, fresh = true) != Some(m))
-          throw new IllegalStateException(
-            s"concurrent near-dup-index mutation on $indexDir during vacuum — aborting")
-        stale.foreach(st => fs.delete(st.getPath, true))
-        stale.length
-    }
+    store.vacuum(spark, indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+      (m.bands ++ m.shingles ++ m.tombs).toSet, "bands-", "shingles-", "tombs-")))
   }
 }

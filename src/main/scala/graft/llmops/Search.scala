@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.functions.expressions.TopKExpressions
+import graft.store.{ManifestStore, TagFence}
 
 /** Keyword and hybrid retrieval over a document corpus — the lookup side of
   * a training-data pipeline (find documents for a probe set, attribute a
@@ -280,87 +281,37 @@ object Search {
       nDeleted: Long = 0L,
       sumDlDeleted: Long = 0L)
 
-  /** A sequence tag is a PURE digit string (canonical decimal, bounded
-    * below Long overflow) — signs and other decorations take the
-    * exact-match path so "+5" can never alias "5" and a "-1" tag can
-    * never collide with the high-water's -1 never-applied sentinel. The
+  /** A sequence tag is a [[TagFence.numericTag]] digit string, or the
     * historical `stream-batch-<n>` prefix this module's own streaming
-    * ingest used to write is recognized as the same sequence: an index
+    * ingest used to write, recognized as the same sequence: an index
     * built by the old ingest keeps its replay fence across the upgrade
     * (the bare batch id continues the identical numbering).
     */
-  private def numericTag(t: String): Option[Long] = {
-    val s = if (t.startsWith("stream-batch-")) t.substring("stream-batch-".length) else t
-    if (s.nonEmpty && s.length <= 18 && s.forall(c => c >= '0' && c <= '9'))
-      Some(java.lang.Long.parseLong(s))
-    else None
-  }
+  private def seqTag(t: String): Option[Long] = TagFence.numericTag(
+    if (t.startsWith("stream-batch-")) t.substring("stream-batch-".length) else t)
 
-  private def tagApplied(m: TextIndexManifest, tag: String): Boolean =
-    numericTag(tag) match {
-      // value-compare against the vector too: a legacy manifest remembers
-      // batch 17 as "stream-batch-17" while the upgraded ingest replays it
-      // as "17" — a raw-string contains would let the replay through
-      case Some(v) => v <= m.tagHighWater ||
-        m.appliedTags.exists(numericTag(_).contains(v))
-      // sign-decorated numerics ("+5") route to the exact path NOW, but a
-      // pre-upgrade writer absorbed them into the high-water without
-      // storing them — honor that fence too (nonnegative only, so a "-1"
-      // tag can never collide with the -1 never-applied sentinel)
-      case None => m.appliedTags.contains(tag) ||
-        scala.util.Try(java.lang.Long.parseLong(tag)).toOption
-          .exists(v => v >= 0 && v <= m.tagHighWater)
-    }
+  // A legacy manifest remembers batch 17 as "stream-batch-17" while the
+  // upgraded ingest replays it as "17": the fence value-compares its tag
+  // vector through seqTag, so the replay is still caught. Sign-decorated
+  // numerics ("+5") take the exact path now, but a pre-upgrade writer
+  // absorbed them into the high-water without storing them — honor that
+  // fence too (nonnegative only, so a "-1" tag can never collide with the
+  // -1 never-applied sentinel). The full-fold and tag-only compaction
+  // paths absorb through this one fence, so the migration can never
+  // diverge between them.
+  private val tags = new TagFence[TextIndexManifest](
+    m => (m.appliedTags, m.tagHighWater),
+    (m, t, hw) => m.copy(appliedTags = t, tagHighWater = hw),
+    seqTag,
+    (tag, hw) => scala.util.Try(java.lang.Long.parseLong(tag)).toOption
+      .exists(v => v >= 0 && v <= hw))
 
-  private def recordTag(m: TextIndexManifest, tag: String): TextIndexManifest =
-    numericTag(tag) match {
-      case Some(v) => m.copy(tagHighWater = math.max(m.tagHighWater, v))
-      case None => m.copy(appliedTags = m.appliedTags :+ tag)
-    }
-
-  /** Numeric (and legacy `stream-batch-N`) entries in `appliedTags` fold
-    * into the high-water mark; everything else stays exact. Shared by the
-    * full-fold and tag-only compaction paths so the migration can never
-    * diverge between them.
-    */
-  private def absorbNumericTags(m: TextIndexManifest): TextIndexManifest = {
-    val numeric = m.appliedTags.flatMap(numericTag)
-    m.copy(appliedTags = m.appliedTags.filter(numericTag(_).isEmpty),
-      tagHighWater = (m.tagHighWater +: numeric).max)
-  }
-
-  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-
-  // serializes index mutations in-process (build, append, vacuum) — the
-  // same single-writer contract as the IVF index and GraftDB manifest.
-  // Cross-PROCESS writers are guarded optimistically (no portable file
-  // lock on object stores): each mutation snapshots the manifest at
-  // entry and commits through [[commitTextIfUnchanged]], which aborts
-  // loudly if a foreign process moved it in between.
+  // serializes index mutations in-process (build, append, vacuum); the
+  // cross-process contract is ManifestStore's
   private val textLock = new Object
 
-  /** Swap the manifest to `next` ONLY if it still reads as `expected` —
-    * the cross-process guard (same contract as
-    * [[Similarity.commitIvfIfUnchanged]]): a silent last-writer-wins
-    * would orphan a foreign writer's sealed postings or double-apply a
-    * batch tag. The caller drops its staged dirs on abort.
-    */
-  private[llmops] def commitTextIfUnchanged(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      expected: Option[TextIndexManifest], next: TextIndexManifest): Unit = {
-    // the guard read BYPASSES the stamp cache: a foreign commit landing
-    // within the store's mtime granularity at an identical byte length
-    // would stamp-match and silently pass the compare — the optimistic
-    // guard must pay the one fresh parse (queries keep the cache)
-    val cur = readTextManifest(spark, indexDir, fresh = true)
-    if (cur != expected)
-      throw new IllegalStateException(
-        s"concurrent text-index mutation on $indexDir: manifest moved from " +
-          s"$expected to $cur while this writer staged against the former — " +
-          "aborting; re-run against the current index (staged dirs are " +
-          "unreferenced and reclaimed by vacuumTextIndex)")
-    writeTextManifest(spark, indexDir, next)
-  }
+  private[llmops] val textStore =
+    new ManifestStore[TextIndexManifest]("text-index", "vacuumTextIndex")
 
   /** Build a fresh persisted inverted index over `docs` (replacing any
     * prior manifest at `indexDir`; superseded dirs are reclaimed by
@@ -374,10 +325,10 @@ object Search {
       textCol: String = "text"): Unit = textLock.synchronized {
     require(numBuckets > 0, "buildTextIndex: numBuckets must be positive")
     val spark = docs.sparkSession
-    val m0 = readTextManifest(spark, indexDir)
+    val m0 = textStore.read(spark, indexDir)
     val (pDir, dDir, lDir, n, sumDl) =
       stageIndexDelta(docs, indexDir, numBuckets, idCol, textCol, skipIfEmpty = false).get
-    commitTextIfUnchanged(spark, indexDir, m0,
+    textStore.commitIfUnchanged(spark, indexDir, m0,
       TextIndexManifest(numBuckets, n, sumDl, dDir, Vector(pDir),
         docLens = Vector(lDir), docLensFull = true))
   }
@@ -407,9 +358,9 @@ object Search {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = textLock.synchronized {
     val spark = docs.sparkSession
-    val m = readTextManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"appendToTextIndex: no readable index manifest at $indexDir"))
-    if (batchTag.exists(tagApplied(m, _))) return false // replayed batch
+    if (batchTag.exists(tags.applied(m, _))) return false // replayed batch
     val staged = stageIndexDelta(docs, indexDir, m.numBuckets,
       idCol, textCol, skipIfEmpty = true)
     if (staged.isEmpty) return false // empty batch: nothing was written
@@ -419,17 +370,8 @@ object Search {
       postings = m.postings :+ pDir, dicts = m.dicts :+ dDir,
       docLens = m.docLens :+ lDir) // docLensFull inherited: appends can't
                                    // retrofit coverage a legacy base lacks
-    try commitTextIfUnchanged(spark, indexDir, Some(m),
-      batchTag.fold(next)(recordTag(next, _)))
-    catch { case e: IllegalStateException =>
-      // foreign writer moved the manifest between our load and seal: drop
-      // our staged dirs (their state stays intact) and surface loudly
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      for (d <- Seq(pDir, dDir, lDir))
-        fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$d"), true)
-      throw e
-    }
+    textStore.commitOrDrop(spark, indexDir, m, tags.record(next, batchTag),
+      Seq(pDir, dDir, lDir))
     true
   }
 
@@ -469,7 +411,7 @@ object Search {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = textLock.synchronized {
     val spark = ids.sparkSession
-    val m = readTextManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"deleteFromTextIndex: no readable index manifest at $indexDir"))
     if (!m.docLensFull) throw new IllegalStateException(
       s"deleteFromTextIndex: index at $indexDir predates the doc-length " +
@@ -501,13 +443,9 @@ object Search {
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
-    try commitTextIfUnchanged(spark, indexDir, Some(m), m.copy(
+    textStore.commitOrDrop(spark, indexDir, m, m.copy(
       tombs = m.tombs :+ tDir,
-      nDeleted = m.nDeleted + n, sumDlDeleted = m.sumDlDeleted + sdl))
-    catch { case e: IllegalStateException =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
-      throw e
-    }
+      nDeleted = m.nDeleted + n, sumDlDeleted = m.sumDlDeleted + sdl), Seq(tDir))
     n
   }
 
@@ -622,6 +560,7 @@ object Search {
         val existing: Seq[String] =
           if (vals.isEmpty) Nil
           else {
+            // indexDir holds no glob metacharacter: textStore.read refuses one
             val pattern = new org.apache.hadoop.fs.Path(
               s"$indexDir/{${roots.mkString(",")}}/$partColName={${vals.mkString(",")}}")
             val fs = new org.apache.hadoop.fs.Path(indexDir)
@@ -737,17 +676,7 @@ object Search {
       }
       (pDir, dDirOpt)
     }
-    def commitOrCleanup(m: TextIndexManifest, next: TextIndexManifest,
-        staged: Seq[String]): Unit =
-      try commitTextIfUnchanged(spark, indexDir, Some(m), next)
-      catch { case e: IllegalStateException =>
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        staged.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$d"), true))
-        throw e
-      }
-    readTextManifest(spark, indexDir) match {
+    textStore.read(spark, indexDir) match {
       case Some(m) if includeBase && (m.postings.size > 1 || m.dicts.nonEmpty ||
           m.tombs.nonEmpty || m.docLens.size > 1) =>
         // the major fold is the PURGE point for tombstoned docs (the
@@ -782,7 +711,7 @@ object Search {
             .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$lDir")
           Some(lDir)
         }
-        commitOrCleanup(m, absorbNumericTags(m).copy(
+        textStore.commitOrDrop(spark, indexDir, m, tags.absorb(m).copy(
           dict = dDir, dicts = Vector.empty, postings = Vector(pDir),
           levelRoots = 1, docLens = lDirOpt.toVector,
           tombs = Vector.empty,
@@ -795,16 +724,16 @@ object Search {
         val (pDir, dDirOpt) = foldRoots(
           m.postings.drop(m.levelRoots), m.dicts.drop(m.levelRoots - 1),
           m.numBuckets)
-        commitOrCleanup(m, absorbNumericTags(m).copy(
+        textStore.commitOrDrop(spark, indexDir, m, tags.absorb(m).copy(
           postings = m.postings.take(m.levelRoots) :+ pDir,
           dicts = m.dicts.take(m.levelRoots - 1) ++ dDirOpt.toVector,
           levelRoots = m.levelRoots + 1),
           pDir +: dDirOpt.toSeq)
         true
-      case Some(m) if m.appliedTags.exists(numericTag(_).isDefined) =>
+      case Some(m) if tags.pending(m) =>
         // nothing to fold — only legacy numeric tags to absorb: a pure
         // manifest edit, never a corpus-wide postings/dict rewrite
-        commitTextIfUnchanged(spark, indexDir, Some(m), absorbNumericTags(m))
+        textStore.commitIfUnchanged(spark, indexDir, Some(m), tags.absorb(m))
         true
       case _ => false
     }
@@ -832,7 +761,7 @@ object Search {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       majorSizeRatio: Double = 1.0, deadRatio: Double = 0.25): Boolean = textLock.synchronized {
     val minored = compactTextIndex(spark, indexDir, includeBase = false)
-    val majored = readTextManifest(spark, indexDir) match {
+    val majored = textStore.read(spark, indexDir) match {
       case Some(m) if m.nDeleted > 0 && m.nDeleted >= deadRatio * m.nDocs =>
         compactTextIndex(spark, indexDir)
       case Some(m) if m.postings.size > 1 =>
@@ -867,7 +796,7 @@ object Search {
       excludeSelf: Boolean = false,
       queryIdCol: String = "query_id",
       queryTextCol: String = "qtext"): DataFrame = {
-    val m = readTextManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"bm25TopKIndexed: no readable index manifest at $indexDir"))
     // LIVE corpus stats: exact integer totals minus the tombstoned docs'
     // exact contributions — avgdl reproduces the scan form's avg() over
@@ -928,7 +857,7 @@ object Search {
     * `GraftDB.vacuum`; in-flight readers of old dirs are the caller's
     * concern). Dirs modified within `minAgeMs` of now are SPARED: a
     * cross-process writer mid-stage has dirs on disk that no manifest
-    * references yet, and the manifest re-read guard below only detects
+    * references yet, and the manifest re-read guard only detects
     * COMMITTED foreign mutations — the age grace keeps vacuum from
     * deleting a concurrent stage out from under its writer (pass 0 to
     * reclaim everything, e.g. after a known crash with no live writers).
@@ -937,82 +866,8 @@ object Search {
   def vacuumTextIndex(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       minAgeMs: Long = 600000L): Int = textLock.synchronized {
-    readTextManifest(spark, indexDir) match {
-      case None => 0
-      case Some(m) =>
-        val root = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = (m.postings ++ m.dicts ++ m.docLens ++ m.tombs :+ m.dict).toSet
-        val cutoff = System.currentTimeMillis() - minAgeMs
-        val stale = fs.listStatus(root).filter { st =>
-          val n = st.getPath.getName
-          st.isDirectory && (n.startsWith("postings-") || n.startsWith("dict-") ||
-              n.startsWith("doclens-") || n.startsWith("tombs-")) &&
-            !live.contains(n) && st.getModificationTime <= cutoff
-        }
-        // cross-process guard BEFORE deleting: a foreign append may have
-        // sealed one of these "stale" dirs since our load — re-read FRESH
-        // (never through the stamp cache) and abort rather than delete
-        // live postings
-        if (readTextManifest(spark, indexDir, fresh = true) != Some(m))
-          throw new IllegalStateException(
-            s"concurrent text-index mutation on $indexDir during vacuum — " +
-              "aborting before deleting anything; re-run vacuum")
-        stale.foreach(st => fs.delete(st.getPath, true))
-        stale.length
-    }
-  }
-
-  // stamp cache: repeated indexed queries against an unchanged index skip
-  // the manifest re-read/re-parse entirely — one getFileStatus revalidates
-  // by (size, mtime), the GraftDB manifest's pattern (Manifest.scala).
-  // Foreign writers are still seen: every commit changes the file's stamp.
-  // `manifestParses` counts ACTUAL parses so a spec can pin the cache.
-  private val textManifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, TextIndexManifest)]()
-  private[llmops] val textManifestParses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** `fresh = true` bypasses the stamp cache (always re-parses) — the
-    * correctness-critical read for optimistic commit/vacuum guards, where
-    * a same-length same-mtime-window foreign commit must still be seen.
-    */
-  private[llmops] def readTextManifest(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fresh: Boolean = false): Option[TextIndexManifest] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => textManifestCache.remove(indexDir); None
-      case Some(s) =>
-        val cached = textManifestCache.get(indexDir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[TextIndexManifest](text)
-          textManifestParses.incrementAndGet()
-          textManifestCache.put(indexDir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
-  }
-
-  private def writeTextManifest(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, m: TextIndexManifest): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json.tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.Serialization.write(m).getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // drop, don't update: the next read restamps from the renamed file's
-    // actual status (a cache-side stamp guess could race the rename)
-    textManifestCache.remove(indexDir)
+    textStore.vacuum(spark, indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+      (m.postings ++ m.dicts ++ m.docLens ++ m.tombs :+ m.dict).toSet,
+      "postings-", "dict-", "doclens-", "tombs-")))
   }
 }

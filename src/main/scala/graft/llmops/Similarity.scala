@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 import graft.functions.expressions.TopKExpressions
+import graft.store.ManifestStore
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -156,70 +157,17 @@ object Similarity {
   // manifest would let two appends both read the same sealedDirs and the
   // last writer silently orphan the other's batch, and a vacuum running
   // between an append's stage and seal would delete the staged dir out
-  // from under it. Cross-PROCESS writers are out of scope, same
-  // single-writer contract as the GraftDB manifest.
+  // from under it. The cross-process contract is ManifestStore's.
   private val ivfLock = new Object
 
-  // stamp cache (size+mtime revalidation via one getFileStatus — the
-  // GraftDB manifest pattern): repeated probes against an unchanged index
-  // skip the JSON re-read/parse; every commit changes the file stamp, so
-  // foreign writers are still seen. `ivfManifestParses` counts ACTUAL
-  // parses so a spec can pin the cache.
-  private val ivfManifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, IvfManifest)]()
-  private[llmops] val ivfManifestParses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** `fresh = true` bypasses the stamp cache (always re-parses) — the
-    * correctness-critical read for optimistic commit/vacuum guards, where
-    * a same-length same-mtime-window foreign commit must still be seen.
-    */
-  private[llmops] def readIvfManifest(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, fresh: Boolean = false): Option[IvfManifest] = {
-    val (fs, _) = ivfFs(spark, indexDir)
-    val mp = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val st = try Some(fs.getFileStatus(mp))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => ivfManifestCache.remove(indexDir); None
-      case Some(s) =>
-        val cached = ivfManifestCache.get(indexDir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(mp)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[IvfManifest](text)
-          ivfManifestParses.incrementAndGet()
-          ivfManifestCache.put(indexDir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
-  }
-
-  private def writeIvfManifest(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, m: IvfManifest): Unit = {
-    val (fs, _) = ivfFs(spark, indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$indexDir/MANIFEST.json")
-    val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.Serialization.write(m).getBytes("UTF-8"))
-    finally out.close()
-    // FileContext rename with OVERWRITE is the Hadoop-sanctioned ATOMIC
-    // replace — a plain delete-then-rename leaves a window with no
-    // manifest at all, where readers would fall back to the legacy layout
-    org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // drop, don't update: the next read restamps from the renamed file's
-    // actual status (a cache-side stamp guess could race the rename)
-    ivfManifestCache.remove(indexDir)
-  }
+  private[llmops] val ivfStore =
+    new ManifestStore[IvfManifest]("index", "vacuumIvfIndex")
 
   /** Live generation number: Some(n) under the manifest layout, None for
     * a legacy root-layout (or empty) directory.
     */
   def ivfGeneration(spark: org.apache.spark.sql.SparkSession, indexDir: String): Option[Int] =
-    readIvfManifest(spark, indexDir).map(_.gen)
+    ivfStore.read(spark, indexDir).map(_.gen)
 
   private def ivfPaths(spark: org.apache.spark.sql.SparkSession, indexDir: String): (String, String, String) =
     ivfGeneration(spark, indexDir) match {
@@ -234,7 +182,7 @@ object Similarity {
     */
   private def ivfAssignedPaths(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Seq[String] =
-    readIvfManifest(spark, indexDir) match {
+    ivfStore.read(spark, indexDir) match {
       case Some(m) =>
         s"$indexDir/g${m.gen}/assigned" +: m.sealedDirs.map(d => s"$indexDir/g${m.gen}/$d")
       case None => Seq(s"$indexDir/assigned")
@@ -274,94 +222,35 @@ object Similarity {
     }.toOption.flatten
 
   private def writeIvfStats(spark: org.apache.spark.sql.SparkSession,
-      statsPath: String, k: Int, n: Long, sumSqDist: Double): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(statsPath)
-    val tmp = new org.apache.hadoop.fs.Path(statsPath + ".tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"k": $k, "n": $n, "sumSqDist": $sumSqDist}""".getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Swap the manifest to `next` ONLY if it still reads as `expected` —
-    * the cross-PROCESS guard. `ivfLock` serializes writers within one
-    * JVM; across JVMs there is no portable lock (the index may live on an
-    * object store where file locks don't exist), so writers are
-    * optimistic: every mutation snapshots the manifest at entry, stages
-    * its work against that snapshot, and aborts LOUDLY here if a foreign
-    * process moved the manifest in between — a silent last-writer-wins
-    * would orphan the other writer's sealed batches or resurrect a dead
-    * generation. The caller cleans up its staged work on abort; the
-    * foreign writer's state is left untouched.
-    */
-  private[llmops] def commitIvfIfUnchanged(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, expected: Option[IvfManifest], next: IvfManifest): Unit = {
-    // guard read bypasses the stamp cache — see readIvfManifest's `fresh`
-    val cur = readIvfManifest(spark, indexDir, fresh = true)
-    if (cur != expected)
-      throw new IllegalStateException(
-        s"concurrent index mutation on $indexDir: manifest moved from " +
-          s"$expected to $cur while this writer staged against the former — " +
-          "aborting; re-run against the current index (staged dirs are " +
-          "unreferenced and reclaimed by vacuumIvfIndex)")
-    writeIvfManifest(spark, indexDir, next)
-  }
+      statsPath: String, k: Int, n: Long, sumSqDist: Double): Unit =
+    ManifestStore.writeJson(spark, statsPath,
+      s"""{"k": $k, "n": $n, "sumSqDist": $sumSqDist}""")
 
   private def commitIvfGeneration(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, expected: Option[IvfManifest], gen: Int): Unit =
-    commitIvfIfUnchanged(spark, indexDir, expected, IvfManifest(gen)) // fresh gen: no sealed appends
+    ivfStore.commitIfUnchanged(spark, indexDir, expected, IvfManifest(gen)) // fresh gen: no sealed appends
 
   /** Delete all index generations except the live one (the explicit
     * cleanup point, like GraftDB.vacuum — in-flight readers of old
     * generations are the caller's concern). Dirs modified within
     * `minAgeMs` of now are SPARED: a cross-process writer mid-stage (a
     * new generation being built, or an append dir not yet sealed) is on
-    * disk but referenced by no manifest, and the re-read guard below only
+    * disk but referenced by no manifest, and the re-read guard only
     * detects COMMITTED foreign mutations — the age grace keeps vacuum
     * from deleting a concurrent stage out from under its writer (pass 0
     * to reclaim everything after a known crash with no live writers).
     */
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       minAgeMs: Long = 600000L): Int = ivfLock.synchronized {
-    val (fs, root) = ivfFs(spark, indexDir)
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    readIvfManifest(spark, indexDir) match {
-      case None => 0
-      case Some(m) =>
-        val stale = fs.listStatus(root).filter { st =>
-          val n = st.getPath.getName
-          // superseded generations, plus the pre-manifest root tables a
-          // legacy index leaves behind after its first manifest-era build
-          st.isDirectory && st.getModificationTime <= cutoff &&
-            ((n.matches("g\\d+") && n != s"g${m.gen}") ||
-              n == "centroids" || n == "assigned" || n == "stats")
-        }
-        // staged-but-never-sealed append dirs inside the LIVE generation
-        // (a crashed append's leftovers — unreferenced, invisible to reads)
-        val genPath = new org.apache.hadoop.fs.Path(s"$indexDir/g${m.gen}")
-        val torn =
-          if (!fs.exists(genPath)) Array.empty[org.apache.hadoop.fs.FileStatus]
-          else fs.listStatus(genPath).filter { st =>
-            val n = st.getPath.getName
-            st.isDirectory && st.getModificationTime <= cutoff &&
-              ((n.startsWith("append-") && !m.sealedDirs.contains(n)) ||
-                (n.startsWith("tombs-") && !m.tombDirs.contains(n)))
-          }
-        // cross-process guard BEFORE anything is deleted: a foreign writer
-        // may have flipped the generation (making the new live gen look
-        // "stale" to the list above) or sealed one of these "torn" dirs
-        // since our load — re-read FRESH (never through the stamp cache)
-        // and abort rather than delete live data (see commitIvfIfUnchanged)
-        if (readIvfManifest(spark, indexDir, fresh = true) != Some(m))
-          throw new IllegalStateException(
-            s"concurrent index mutation on $indexDir during vacuum — " +
-              "aborting before deleting anything; re-run vacuum")
-        stale.foreach(st => fs.delete(st.getPath, true))
-        torn.foreach(st => fs.delete(st.getPath, true))
-        stale.length + torn.length
-    }
+    ivfStore.vacuum(spark, indexDir, minAgeMs)(m => Seq(
+      // superseded generations, plus the pre-manifest root tables a
+      // legacy index leaves behind after its first manifest-era build
+      "" -> ((n: String) => (n.matches("g\\d+") && n != s"g${m.gen}") ||
+        n == "centroids" || n == "assigned" || n == "stats"),
+      // staged-but-never-sealed append/tombstone dirs inside the LIVE
+      // generation (a crashed writer's leftovers, invisible to reads)
+      s"g${m.gen}" -> ManifestStore.unreferenced(
+        (m.sealedDirs ++ m.tombDirs).toSet, "append-", "tombs-")))
   }
 
   /** Build and persist an IVF index: k-means centroids + the cell-assigned
@@ -416,7 +305,7 @@ object Similarity {
     val centroidArr = model.clusterCenters.map(_.toArray)
     // write the ENTIRE generation before the manifest flips — a failure
     // anywhere below leaves the previous generation live and untouched
-    val m0 = readIvfManifest(spark, indexDir)
+    val m0 = ivfStore.read(spark, indexDir)
     val nextGen = m0.map(_.gen + 1).getOrElse(0)
     val genDir = s"$indexDir/g$nextGen"
     centroidArr.zipWithIndex
@@ -485,7 +374,7 @@ object Similarity {
     import spark.implicits._
     import graft.functions.expressions.VectorExpressions
     val (centroidsPath, assignedPath, statsPath) = ivfPaths(spark, indexDir)
-    val manifest = readIvfManifest(spark, indexDir)
+    val manifest = ivfStore.read(spark, indexDir)
     val centroids = spark.read.parquet(centroidsPath)
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
@@ -526,14 +415,8 @@ object Similarity {
         while (!hasParquet && it.hasNext)
           hasParquet = it.next().getPath.getName.endsWith(".parquet")
         if (hasParquet)
-          try commitIvfIfUnchanged(spark, indexDir, Some(m),
-            m.copy(sealedDirs = m.sealedDirs :+ batchDir))
-          catch { case e: IllegalStateException =>
-            // foreign writer moved the manifest between our load and seal:
-            // drop our stage (their state stays intact) and surface loudly
-            fs.delete(new org.apache.hadoop.fs.Path(batchPath), true)
-            throw e
-          }
+          ivfStore.commitOrDrop(spark, indexDir, m,
+            m.copy(sealedDirs = m.sealedDirs :+ batchDir), Seq(s"g${m.gen}/$batchDir"))
         else fs.delete(new org.apache.hadoop.fs.Path(batchPath), true)
       case None => // legacy root layout: no manifest to seal into
         toWrite.repartition(col("cell"))
@@ -613,11 +496,10 @@ object Similarity {
     */
   def compactIvfAppends(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, includeBase: Boolean = true): Boolean = ivfLock.synchronized {
-    readIvfManifest(spark, indexDir) match {
+    ivfStore.read(spark, indexDir) match {
       case Some(m) if !includeBase && m.sealedDirs.size - m.sealedLevels >= 2 =>
         // minor: fold the L0 batches into one dir, base, generation, and
         // prior fold products untouched
-        val (fs, _) = ivfFs(spark, indexDir)
         val genDir = s"$indexDir/g${m.gen}"
         val batchDir = s"append-${java.util.UUID.randomUUID}"
         m.sealedDirs.drop(m.sealedLevels).map(d => spark.read.parquet(s"$genDir/$d"))
@@ -625,13 +507,9 @@ object Similarity {
           .dropDuplicates("neighbor_id")
           .repartition(col("cell"))
           .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/$batchDir")
-        try commitIvfIfUnchanged(spark, indexDir, Some(m),
+        ivfStore.commitOrDrop(spark, indexDir, m,
           m.copy(sealedDirs = m.sealedDirs.take(m.sealedLevels) :+ batchDir,
-            sealedLevels = m.sealedLevels + 1))
-        catch { case e: IllegalStateException =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$genDir/$batchDir"), true)
-          throw e
-        }
+            sealedLevels = m.sealedLevels + 1), Seq(s"g${m.gen}/$batchDir"))
         true
       case Some(m) if includeBase && (m.sealedDirs.nonEmpty || m.tombDirs.nonEmpty) =>
         // tombstones alone also justify the rewrite: the generation flip
@@ -681,7 +559,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       majorSizeRatio: Double = 1.0, maxTombRoots: Int = 8): Boolean = ivfLock.synchronized {
     val minored = compactIvfAppends(spark, indexDir, includeBase = false)
-    val majored = readIvfManifest(spark, indexDir) match {
+    val majored = ivfStore.read(spark, indexDir) match {
       case Some(m) if m.tombDirs.size >= math.max(1, maxTombRoots) =>
         compactIvfAppends(spark, indexDir)
       case Some(m) if m.sealedDirs.nonEmpty =>
@@ -719,7 +597,7 @@ object Similarity {
     // probes, ADC scans, re-ranks, drift re-fits, and the major fold all
     // see only live vectors, and the fold/re-fit generation rewrite is
     // thereby the physical purge (its fresh manifest carries no tombs)
-    readIvfManifest(spark, indexDir) match {
+    ivfStore.read(spark, indexDir) match {
       case Some(m) if m.tombDirs.nonEmpty =>
         all.join(broadcast(ivfTombIds(spark, indexDir, m)), Seq("neighbor_id"), "left_anti")
       case _ => all
@@ -758,7 +636,7 @@ object Similarity {
       indexDir: String,
       ids: DataFrame,
       idCol: String = "vec_id"): Long = ivfLock.synchronized {
-    val m = readIvfManifest(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = ivfStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
       s"deleteFromIvfIndex: no manifest at $indexDir — legacy root-layout " +
         "indexes don't support deletes; rebuild with buildIvfIndex"))
     val fresh0 = ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
@@ -775,12 +653,8 @@ object Similarity {
       fs.delete(new org.apache.hadoop.fs.Path(tPath), true)
       return 0L
     }
-    try commitIvfIfUnchanged(spark, indexDir, Some(m),
-      m.copy(tombDirs = m.tombDirs :+ tDir))
-    catch { case e: IllegalStateException =>
-      fs.delete(new org.apache.hadoop.fs.Path(tPath), true)
-      throw e
-    }
+    ivfStore.commitOrDrop(spark, indexDir, m,
+      m.copy(tombDirs = m.tombDirs :+ tDir), Seq(s"g${m.gen}/$tDir"))
     n
   }
 
@@ -1083,7 +957,7 @@ object Similarity {
     val codebooks = fitPqCodebooks(c, m, ksub,
       fitSampleRows = math.min(fitSampleRows, Int.MaxValue.toLong).toInt, seed = seed,
       vecCol = "cv")
-    val m0 = readIvfManifest(spark, indexDir)
+    val m0 = ivfStore.read(spark, indexDir)
     val nextGen = m0.map(_.gen + 1).getOrElse(0)
     val genDir = s"$indexDir/g$nextGen"
     centroidArr.zipWithIndex

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.{ManifestStore, TagFence}
 
 /** Incrementally-maintained materialized aggregate views — the LSM write
   * discipline (reference: `kv/lsm/level.go:82` flushes immutable runs,
@@ -58,74 +59,13 @@ object AggView {
       histHi: Double = 0.0,
       histBins: Int = 0)
 
-  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
   private val lock = new Object
 
-  private def numericTag(t: String): Option[Long] =
-    if (t.nonEmpty && t.length <= 18 && t.forall(c => c >= '0' && c <= '9'))
-      Some(java.lang.Long.parseLong(t))
-    else None
-
-  private def tagApplied(m: AggViewManifest, tag: String): Boolean =
-    numericTag(tag) match {
-      case Some(v) => v <= m.tagHighWater ||
-        m.appliedTags.exists(numericTag(_).contains(v))
-      case None => m.appliedTags.contains(tag)
-    }
-
-  private def recordTag(m: AggViewManifest, tag: String): AggViewManifest =
-    numericTag(tag) match {
-      case Some(v) => m.copy(tagHighWater = math.max(m.tagHighWater, v))
-      case None => m.copy(appliedTags = m.appliedTags :+ tag)
-    }
-
-  // stamp cache (size+mtime revalidation — the shared manifest pattern);
-  // `manifestParses` counts actual parses so a spec can pin the cache
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, AggViewManifest)]()
-  private[operators] val manifestParses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[operators] def readManifest(spark: SparkSession, viewDir: String,
-      fresh: Boolean = false): Option[AggViewManifest] = {
-    val p = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => manifestCache.remove(viewDir); None
-      case Some(s) =>
-        val cached = manifestCache.get(viewDir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[AggViewManifest](text)
-          manifestParses.incrementAndGet()
-          manifestCache.put(viewDir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
-  }
-
-  private[operators] def commitIfUnchanged(spark: SparkSession, viewDir: String,
-      expected: Option[AggViewManifest], next: AggViewManifest): Unit = {
-    if (readManifest(spark, viewDir, fresh = true) != expected)
-      throw new IllegalStateException(
-        s"concurrent agg-view mutation on $viewDir — aborting; " +
-          "staged dirs are unreferenced and reclaimed by vacuumAggView")
-    val dst = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json.tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.Serialization.write(next).getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    manifestCache.remove(viewDir)
-  }
+  private[operators] val store =
+    new ManifestStore[AggViewManifest]("agg-view", "vacuumAggView")
+  private val tags = TagFence.numeric[AggViewManifest](
+    m => (m.appliedTags, m.tagHighWater),
+    (m, t, hw) => m.copy(appliedTags = t, tagHighWater = hw))
 
   private def sumCol(m: String): String = s"${m}__sum"
   private def minCol(m: String): String = s"${m}__min"
@@ -282,13 +222,13 @@ object AggView {
     require(histCols.isEmpty || (histBins > 0 && histHi > histLo),
       "buildAggView: histogram needs histHi > histLo and histBins > 0")
     val spark = df.sparkSession
-    val prior = readManifest(spark, viewDir)
+    val prior = store.read(spark, viewDir)
     val m0 = AggViewManifest(keys, metrics, scale, numBuckets, Vector.empty,
       distinctCols = distinctCols, histCols = histCols,
       histLo = histLo, histHi = histHi,
       histBins = if (histCols.isEmpty) 0 else histBins)
     val (dir, n) = stageRoot(df, viewDir, m0, skipIfEmpty = false).get
-    commitIfUnchanged(spark, viewDir, prior,
+    store.commitIfUnchanged(spark, viewDir, prior,
       m0.copy(roots = Vector(dir), nRows = n))
   }
 
@@ -303,21 +243,14 @@ object AggView {
       df: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = df.sparkSession
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"appendToAggView: no readable view manifest at $viewDir"))
-    if (batchTag.exists(tagApplied(m, _))) return false
+    if (batchTag.exists(tags.applied(m, _))) return false
     stageRoot(df, viewDir, m, skipIfEmpty = true) match {
       case None => false
       case Some((dir, n)) =>
-        val next = m.copy(roots = m.roots :+ dir, nRows = m.nRows + n)
-        try commitIfUnchanged(spark, viewDir, Some(m),
-          batchTag.fold(next)(recordTag(next, _)))
-        catch { case e: IllegalStateException =>
-          new org.apache.hadoop.fs.Path(viewDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dir"), true)
-          throw e
-        }
+        store.commitOrDrop(spark, viewDir, m, tags.record(
+          m.copy(roots = m.roots :+ dir, nRows = m.nRows + n), batchTag), Seq(dir))
         true
     }
   }
@@ -383,7 +316,7 @@ object AggView {
     * ever ingested, regardless of how the rows arrived.
     */
   def readAggView(spark: SparkSession, viewDir: String): DataFrame = {
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"readAggView: no readable view manifest at $viewDir"))
     mergedPartial(spark, viewDir, m).select(finalizeCols(m): _*)
   }
@@ -395,7 +328,7 @@ object AggView {
     */
   def lookupAggView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"lookupAggView: no readable view manifest at $viewDir"))
     require(values.length == m.keys.length,
       s"lookupAggView: ${m.keys.length} key values expected")
@@ -428,25 +361,15 @@ object AggView {
     * when a fold ran.
     */
   def compactAggView(spark: SparkSession, viewDir: String): Boolean = lock.synchronized {
-    readManifest(spark, viewDir) match {
-      case Some(m) if m.roots.size > 1 ||
-          m.appliedTags.exists(numericTag(_).isDefined) =>
+    store.read(spark, viewDir) match {
+      case Some(m) if m.roots.size > 1 || tags.pending(m) =>
         val dir = s"agg-${java.util.UUID.randomUUID}"
         mergedPartial(spark, viewDir, m)
           .withColumn("pk", pkExpr(m.keys, m.numBuckets))
           .repartition(col("pk"))
           .write.mode("overwrite").partitionBy("pk").parquet(s"$viewDir/$dir")
-        val numeric = m.appliedTags.flatMap(numericTag)
-        try commitIfUnchanged(spark, viewDir, Some(m), m.copy(
-          roots = Vector(dir),
-          appliedTags = m.appliedTags.filter(numericTag(_).isEmpty),
-          tagHighWater = (m.tagHighWater +: numeric).max))
-        catch { case e: IllegalStateException =>
-          new org.apache.hadoop.fs.Path(viewDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dir"), true)
-          throw e
-        }
+        store.commitOrDrop(spark, viewDir, m,
+          tags.absorb(m.copy(roots = Vector(dir))), Seq(dir))
         true
       case _ => false
     }
@@ -458,7 +381,7 @@ object AggView {
     */
   def maintainAggView(spark: SparkSession, viewDir: String,
       foldRootsAbove: Int = 4): Boolean = lock.synchronized {
-    readManifest(spark, viewDir) match {
+    store.read(spark, viewDir) match {
       case Some(m) if m.roots.size > foldRootsAbove =>
         compactAggView(spark, viewDir)
       case _ => false
@@ -471,23 +394,7 @@ object AggView {
     */
   def vacuumAggView(spark: SparkSession, viewDir: String,
       minAgeMs: Long = 600000L): Int = lock.synchronized {
-    readManifest(spark, viewDir) match {
-      case None => 0
-      case Some(m) =>
-        val root = new org.apache.hadoop.fs.Path(viewDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = m.roots.toSet
-        val cutoff = System.currentTimeMillis() - minAgeMs
-        val stale = fs.listStatus(root).filter { st =>
-          val n = st.getPath.getName
-          st.isDirectory && n.startsWith("agg-") &&
-            !live.contains(n) && st.getModificationTime <= cutoff
-        }
-        if (readManifest(spark, viewDir, fresh = true) != Some(m))
-          throw new IllegalStateException(
-            s"concurrent agg-view mutation on $viewDir during vacuum — aborting")
-        stale.foreach(st => fs.delete(st.getPath, true))
-        stale.length
-    }
+    store.vacuum(spark, viewDir, minAgeMs)(m =>
+      Seq("" -> ManifestStore.unreferenced(m.roots.toSet, "agg-")))
   }
 }

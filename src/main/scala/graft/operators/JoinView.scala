@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.{ManifestStore, TagFence}
 
 /** Incrementally-maintained materialized JOIN views — delta-join
   * maintenance for the enrichment join every pipeline materializes:
@@ -38,9 +39,10 @@ import org.apache.spark.sql.functions._
   * Exactly-once: `batchTag` fences replayed micro-batches (numeric tags
   * collapse into a high-water mark at fold, the shared contract).
   * Crash-safety: roots stage under fresh UUID dirs and become visible
-  * only at the manifest swap; a loser of the optimistic commit race
-  * deletes its stage and throws; [[vacuumJoinView]] reclaims orphans
-  * past an age grace.
+  * only at the manifest swap; a writer whose snapshot a foreign commit
+  * moved deletes its stage and throws (`ManifestStore` states the
+  * cross-process window); [[vacuumJoinView]] reclaims orphans past an
+  * age grace.
   *
   * Scale notes: no driver-side data collects — affected-bucket lists
   * are bounded by `numBuckets`, read from the staged parquet's
@@ -79,77 +81,16 @@ object JoinView {
       dimAppliedTags: Vector[String] = Vector.empty,
       dimTagHighWater: Long = -1L)
 
-  private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
   private val lock = new Object
 
-  private def numericTag(t: String): Option[Long] =
-    if (t.nonEmpty && t.length <= 18 && t.forall(c => c >= '0' && c <= '9'))
-      Some(java.lang.Long.parseLong(t))
-    else None
-
-  private def tagApplied(m: JoinViewManifest, tag: String,
-      dim: Boolean): Boolean = {
-    val (tags, hw) =
-      if (dim) (m.dimAppliedTags, m.dimTagHighWater)
-      else (m.appliedTags, m.tagHighWater)
-    numericTag(tag) match {
-      case Some(v) => v <= hw || tags.exists(numericTag(_).contains(v))
-      case None => tags.contains(tag)
-    }
-  }
-
-  private def recordTag(m: JoinViewManifest, tag: String,
-      dim: Boolean): JoinViewManifest =
-    (numericTag(tag), dim) match {
-      case (Some(v), false) => m.copy(tagHighWater = math.max(m.tagHighWater, v))
-      case (Some(v), true) => m.copy(dimTagHighWater = math.max(m.dimTagHighWater, v))
-      case (None, false) => m.copy(appliedTags = m.appliedTags :+ tag)
-      case (None, true) => m.copy(dimAppliedTags = m.dimAppliedTags :+ tag)
-    }
-
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, JoinViewManifest)]()
-
-  private[operators] def readManifest(spark: SparkSession, viewDir: String,
-      fresh: Boolean = false): Option[JoinViewManifest] = {
-    val p = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => manifestCache.remove(viewDir); None
-      case Some(s) =>
-        val cached = manifestCache.get(viewDir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[JoinViewManifest](text)
-          manifestCache.put(viewDir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
-  }
-
-  private[operators] def commitIfUnchanged(spark: SparkSession, viewDir: String,
-      expected: Option[JoinViewManifest], next: JoinViewManifest): Unit = {
-    if (readManifest(spark, viewDir, fresh = true) != expected)
-      throw new IllegalStateException(
-        s"concurrent join-view mutation on $viewDir — aborting; " +
-          "staged dirs are unreferenced and reclaimed by vacuumJoinView")
-    val dst = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$viewDir/MANIFEST.json.tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(org.json4s.jackson.Serialization.write(next).getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    manifestCache.remove(viewDir)
-  }
+  private[operators] val store =
+    new ManifestStore[JoinViewManifest]("join-view", "vacuumJoinView")
+  private val factTags = TagFence.numeric[JoinViewManifest](
+    m => (m.appliedTags, m.tagHighWater),
+    (m, t, hw) => m.copy(appliedTags = t, tagHighWater = hw))
+  private val dimTags = TagFence.numeric[JoinViewManifest](
+    m => (m.dimAppliedTags, m.dimTagHighWater),
+    (m, t, hw) => m.copy(dimAppliedTags = t, dimTagHighWater = hw))
 
   private def pkExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
@@ -249,14 +190,14 @@ object JoinView {
       s"buildJoinView: fact/dim column names must be disjoint, got $clash")
     require(!(factCols ++ dimCols).exists(c => c == "pk" || c.startsWith("__")),
       "buildJoinView: pk and __-prefixed column names are reserved")
-    val prior = readManifest(spark, viewDir)
+    val prior = store.read(spark, viewDir)
     val m0 = JoinViewManifest(joinKeys, factCols, dimCols, numBuckets,
       Vector.empty, Vector.empty)
     val (dimDir, _) = stageDimRoot(spark, viewDir, dim, m0, seq = 0L, lit(false))
     val m1 = m0.copy(dimRoots = Vector(dimDir))
     val (viewDir0, pks) = stageViewRoot(spark, viewDir,
       joined(fact, dimCurrent(spark, viewDir, m1, None), m1))
-    commitIfUnchanged(spark, viewDir, prior,
+    store.commitIfUnchanged(spark, viewDir, prior,
       m1.copy(roots = Vector(RootEntry(viewDir0, pks, pks))))
   }
 
@@ -270,22 +211,15 @@ object JoinView {
       delta: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"appendFactsToJoinView: no readable view manifest at $viewDir"))
-    if (batchTag.exists(tagApplied(m, _, dim = false))) return false
+    if (batchTag.exists(factTags.applied(m, _))) return false
     if (delta.isEmpty) return false
     val (dir, pks) = stageViewRoot(spark, viewDir,
       joined(delta.select((m.joinKeys ++ m.factCols).map(col): _*),
         dimCurrent(spark, viewDir, m, None), m))
-    val next = m.copy(roots = m.roots :+ RootEntry(dir, pks, pks))
-    try commitIfUnchanged(spark, viewDir, Some(m),
-      batchTag.fold(next)(recordTag(next, _, dim = false)))
-    catch { case e: IllegalStateException =>
-      new org.apache.hadoop.fs.Path(viewDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dir"), true)
-      throw e
-    }
+    store.commitOrDrop(spark, viewDir, m, factTags.record(
+      m.copy(roots = m.roots :+ RootEntry(dir, pks, pks)), batchTag), Seq(dir))
     true
   }
 
@@ -321,9 +255,9 @@ object JoinView {
       delExpr: Column,
       batchTag: Option[String]): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"upsertDimToJoinView: no readable view manifest at $viewDir"))
-    if (batchTag.exists(tagApplied(m, _, dim = true))) return false
+    if (batchTag.exists(dimTags.applied(m, _))) return false
     if (delta.isEmpty) return false
     val (dimDir, touched) =
       stageDimRoot(spark, viewDir, delta, m, m.nextSeq, delExpr)
@@ -350,16 +284,8 @@ object JoinView {
       case Some((dir, pks)) if pks.nonEmpty => kept :+ RootEntry(dir, pks, pks)
       case _ => kept
     })
-    try commitIfUnchanged(spark, viewDir, Some(m),
-      batchTag.fold(next)(recordTag(next, _, dim = true)))
-    catch { case e: IllegalStateException =>
-      val fs = new org.apache.hadoop.fs.Path(viewDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dimDir"), true)
-      staged.foreach { case (dir, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dir"), true) }
-      throw e
-    }
+    store.commitOrDrop(spark, viewDir, m, dimTags.record(next, batchTag),
+      dimDir +: staged.map(_._1).toSeq)
     true
   }
 
@@ -413,7 +339,7 @@ object JoinView {
     */
   def readJoinView(spark: SparkSession, viewDir: String,
       inner: Boolean = true): DataFrame = {
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"readJoinView: no readable view manifest at $viewDir"))
     val raw = readRaw(spark, viewDir, m, None)
     val base = if (inner) raw.filter(col("__m")) else raw
@@ -428,7 +354,7 @@ object JoinView {
     */
   def lookupJoinView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = readManifest(spark, viewDir).getOrElse(throw new IllegalStateException(
+    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
       s"lookupJoinView: no readable view manifest at $viewDir"))
     require(values.length == m.joinKeys.length,
       s"lookupJoinView: ${m.joinKeys.length} key values expected")
@@ -453,31 +379,17 @@ object JoinView {
     * Bit-identical reads before/after. Returns true when a fold ran.
     */
   def compactJoinView(spark: SparkSession, viewDir: String): Boolean = lock.synchronized {
-    readManifest(spark, viewDir) match {
+    store.read(spark, viewDir) match {
       case Some(m) if m.roots.size > 1 || m.dimRoots.size > 1 ||
-          m.appliedTags.exists(numericTag(_).isDefined) ||
-          m.dimAppliedTags.exists(numericTag(_).isDefined) =>
+          factTags.pending(m) || dimTags.pending(m) =>
         val (viewDir1, pks) = stageViewRoot(spark, viewDir,
           readRaw(spark, viewDir, m, None))
         val (dimDir, _) = stageDimRoot(spark, viewDir,
           dimCurrent(spark, viewDir, m, None), m, m.nextSeq, lit(false))
-        val numeric = m.appliedTags.flatMap(numericTag)
-        val dimNumeric = m.dimAppliedTags.flatMap(numericTag)
-        try commitIfUnchanged(spark, viewDir, Some(m), m.copy(
+        store.commitOrDrop(spark, viewDir, m, dimTags.absorb(factTags.absorb(m.copy(
           roots = Vector(RootEntry(viewDir1, pks, pks)),
           dimRoots = Vector(dimDir),
-          nextSeq = m.nextSeq + 1,
-          appliedTags = m.appliedTags.filter(numericTag(_).isEmpty),
-          tagHighWater = (m.tagHighWater +: numeric).max,
-          dimAppliedTags = m.dimAppliedTags.filter(numericTag(_).isEmpty),
-          dimTagHighWater = (m.dimTagHighWater +: dimNumeric).max))
-        catch { case e: IllegalStateException =>
-          val fs = new org.apache.hadoop.fs.Path(viewDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$viewDir/$viewDir1"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$viewDir/$dimDir"), true)
-          throw e
-        }
+          nextSeq = m.nextSeq + 1))), Seq(viewDir1, dimDir))
         true
       case _ => false
     }
@@ -489,7 +401,7 @@ object JoinView {
   def maintainJoinView(spark: SparkSession, viewDir: String,
       foldRootsAbove: Int = 4, foldDimGensAbove: Int = 4): Boolean =
     lock.synchronized {
-      readManifest(spark, viewDir) match {
+      store.read(spark, viewDir) match {
         case Some(m) if m.roots.size > foldRootsAbove ||
             m.dimRoots.size > foldDimGensAbove =>
           compactJoinView(spark, viewDir)
@@ -503,23 +415,7 @@ object JoinView {
     */
   def vacuumJoinView(spark: SparkSession, viewDir: String,
       minAgeMs: Long = 600000L): Int = lock.synchronized {
-    readManifest(spark, viewDir) match {
-      case None => 0
-      case Some(m) =>
-        val root = new org.apache.hadoop.fs.Path(viewDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = m.roots.map(_.dir).toSet ++ m.dimRoots.toSet
-        val cutoff = System.currentTimeMillis() - minAgeMs
-        val stale = fs.listStatus(root).filter { st =>
-          val n = st.getPath.getName
-          st.isDirectory && (n.startsWith("jv-") || n.startsWith("jvdim-")) &&
-            !live.contains(n) && st.getModificationTime <= cutoff
-        }
-        if (readManifest(spark, viewDir, fresh = true) != Some(m))
-          throw new IllegalStateException(
-            s"concurrent join-view mutation on $viewDir during vacuum — aborting")
-        stale.foreach(st => fs.delete(st.getPath, true))
-        stale.length
-    }
+    store.vacuum(spark, viewDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+      m.roots.map(_.dir).toSet ++ m.dimRoots, "jv-", "jvdim-")))
   }
 }

@@ -39,7 +39,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     // major fold = physical purge: new generation has no dead rows and a
     // tombstone-free manifest
     assert(Similarity.compactIvfAppends(spark, dir)) // tombs force a rewrite
-    val m = Similarity.readIvfManifest(spark, dir).get
+    val m = Similarity.ivfStore.read(spark, dir).get
     assert(m.tombDirs.isEmpty)
     assert(Similarity.ivfAssigned(spark, dir).count() === total - deadIds.size)
     val onDisk = spark.read.parquet(s"$dir/g${m.gen}/assigned")
@@ -51,11 +51,11 @@ class IvfDeleteSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivf-del-idem").toString
     Similarity.buildIvfIndex(emb, dir, numCentroids = 8)
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(7L, 8L).toDF("vec_id")) === 2L)
-    val m1 = Similarity.readIvfManifest(spark, dir).get
+    val m1 = Similarity.ivfStore.read(spark, dir).get
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(7L, 8L).toDF("vec_id")) === 0L)
-    assert(Similarity.readIvfManifest(spark, dir).get === m1, "replay mutated the manifest")
+    assert(Similarity.ivfStore.read(spark, dir).get === m1, "replay mutated the manifest")
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(8L, 9L).toDF("vec_id")) === 1L)
-    assert(Similarity.readIvfManifest(spark, dir).get.tombDirs.size === 2)
+    assert(Similarity.ivfStore.read(spark, dir).get.tombDirs.size === 2)
   }
 
   test("delete interacts with appends: sealed batches honor tombstones too") {
@@ -89,7 +89,7 @@ class IvfDeleteSpec extends AnyFunSuite {
       s"ADC path surfaced dead ids: ${hits.intersect(deadIds)}")
     // purge rewrites the generation with codes intact and tombstones gone
     assert(Similarity.compactIvfAppends(spark, dir))
-    val m = Similarity.readIvfManifest(spark, dir).get
+    val m = Similarity.ivfStore.read(spark, dir).get
     assert(m.tombDirs.isEmpty)
     val hits2 = Similarity.ivfPqTopK(spark, dir, q, k = 10, nProbe = 8, rerank = 50)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
@@ -144,11 +144,11 @@ class IvfDeleteSpec extends AnyFunSuite {
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(1L).toDF("vec_id")) === 1L)
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(2L).toDF("vec_id")) === 1L)
     assert(!Similarity.maintainIvfIndex(spark, dir, maxTombRoots = 3))
-    assert(Similarity.readIvfManifest(spark, dir).get.tombDirs.size === 2)
+    assert(Similarity.ivfStore.read(spark, dir).get.tombDirs.size === 2)
     // the third root trips the purge even though nothing was ever appended
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(3L).toDF("vec_id")) === 1L)
     assert(Similarity.maintainIvfIndex(spark, dir, maxTombRoots = 3))
-    val m = Similarity.readIvfManifest(spark, dir).get
+    val m = Similarity.ivfStore.read(spark, dir).get
     assert(m.tombDirs.isEmpty)
     assert(Similarity.ivfAssigned(spark, dir)
       .filter(col("neighbor_id").isin(1L, 2L, 3L)).count() === 0L)
@@ -179,7 +179,7 @@ class IvfDeleteSpec extends AnyFunSuite {
       "the outlier batch should have triggered a drift re-fit")
     // fresh generation: tombstones consumed, dead ids physically gone,
     // outliers present, probes serve
-    val m = Similarity.readIvfManifest(spark, dir).get
+    val m = Similarity.ivfStore.read(spark, dir).get
     assert(m.tombDirs.isEmpty, "re-fit generation must carry no tombstones")
     val ids = Similarity.ivfAssigned(spark, dir).select("neighbor_id")
       .collect().map(_.getLong(0)).toSet

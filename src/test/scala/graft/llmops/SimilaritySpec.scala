@@ -254,18 +254,18 @@ class SimilaritySpec extends AnyFunSuite {
   test("cross-process guard: a commit staged against a stale manifest aborts loudly") {
     val dir = java.nio.file.Files.createTempDirectory("ivf-guard").toString
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < 100), dir, numCentroids = 4)
-    val before = Similarity.readIvfManifest(spark, dir)
+    val before = Similarity.ivfStore.read(spark, dir)
     // a "foreign" writer seals an append batch — the manifest moves
     Similarity.appendToIvfIndex(spark, dir,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 150))
-    val moved = Similarity.readIvfManifest(spark, dir)
+    val moved = Similarity.ivfStore.read(spark, dir)
     assert(moved != before, "append did not move the manifest")
     // a writer that staged against the PRE-append snapshot must abort,
     // leaving the moved manifest exactly as the foreign writer wrote it
     intercept[IllegalStateException] {
-      Similarity.commitIvfIfUnchanged(spark, dir, before, Similarity.IvfManifest(99))
+      Similarity.ivfStore.commitIfUnchanged(spark, dir, before, Similarity.IvfManifest(99))
     }
-    assert(Similarity.readIvfManifest(spark, dir) == moved,
+    assert(Similarity.ivfStore.read(spark, dir) == moved,
       "aborted commit must not touch the manifest")
     // and the index remains fully queryable
     assert(Similarity.ivfTopKIndexed(spark, dir, emb.limit(2), k = 2, nProbe = 4)
@@ -334,7 +334,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.compactIvfAppends(spark, dir, includeBase = false))
     assert(Similarity.ivfGeneration(spark, dir).contains(genPre),
       "minor fold must not flip the generation")
-    assert(Similarity.readIvfManifest(spark, dir).get.sealedDirs.size == 1)
+    assert(Similarity.ivfStore.read(spark, dir).get.sealedDirs.size == 1)
     assert(Similarity.ivfAssigned(spark, dir).count() == total)
     // one sealed dir left: a second minor fold has nothing to do
     assert(!Similarity.compactIvfAppends(spark, dir, includeBase = false))
@@ -375,16 +375,16 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivf-stamp").toString
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < 200), dir, numCentroids = 4)
     Similarity.ivfTopKIndexed(spark, dir, emb.limit(2), k = 2, nProbe = 4).collect()
-    val parses0 = Similarity.ivfManifestParses.get()
+    val parses0 = Similarity.ivfStore.parses.get()
     (1 to 5).foreach(_ =>
       Similarity.ivfTopKIndexed(spark, dir, emb.limit(2), k = 2, nProbe = 4).collect())
-    assert(Similarity.ivfManifestParses.get() === parses0,
+    assert(Similarity.ivfStore.parses.get() === parses0,
       "unchanged index re-parsed its manifest on repeated probes")
     // a mutation moves the stamp and is observed
     Similarity.appendToIvfIndex(spark, dir,
       emb.filter(col("vec_id") >= 200 && col("vec_id") < 220))
     Similarity.ivfTopKIndexed(spark, dir, emb.limit(2), k = 2, nProbe = 4).collect()
-    assert(Similarity.ivfManifestParses.get() > parses0,
+    assert(Similarity.ivfStore.parses.get() > parses0,
       "stamp cache failed to notice a manifest mutation")
   }
 
@@ -416,7 +416,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.maintainIvfIndex(spark, dir))
     assert(Similarity.ivfGeneration(spark, dir).contains(gen0),
       "maintain majored on a sliver of appends")
-    assert(Similarity.readIvfManifest(spark, dir).get.sealedLevels === 1)
+    assert(Similarity.ivfStore.read(spark, dir).get.sealedLevels === 1)
     // appends that rival the base cross the size ratio: maintain majors
     // (the corpus is 500 rows — re-shift ids to fabricate bulk appends)
     Similarity.appendToIvfIndex(spark, dir,
@@ -428,7 +428,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.maintainIvfIndex(spark, dir, majorSizeRatio = 0.5))
     assert(Similarity.ivfGeneration(spark, dir).contains(gen0 + 1),
       "maintain failed to major once appends outgrew the ratio")
-    assert(Similarity.readIvfManifest(spark, dir).get.sealedDirs.isEmpty)
+    assert(Similarity.ivfStore.read(spark, dir).get.sealedDirs.isEmpty)
   }
 
   test("randomized append/compact interleavings keep the assignment table exact (seeded mini-fuzz)") {

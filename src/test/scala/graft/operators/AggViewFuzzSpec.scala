@@ -76,7 +76,7 @@ class AggViewFuzzSpec extends AnyFunSuite {
     // final fold + vacuum leaves one root and the exact same answer
     AggView.compactAggView(spark, dir)
     AggView.vacuumAggView(spark, dir, minAgeMs = 0L)
-    assert(AggView.readManifest(spark, dir).get.roots.size == 1)
+    assert(AggView.store.read(spark, dir).get.roots.size == 1)
     assert(AggView.readAggView(spark, dir).orderBy("k1", "k2")
       .collect().map(_.toSeq).toSeq == oneShot(applied).toSeq)
   }

@@ -40,7 +40,7 @@ class AggViewSpec extends AnyFunSuite {
       .collect().map(_.toSeq)
 
   private def rootCount(dir: String): Int =
-    AggView.readManifest(spark, dir).get.roots.size
+    AggView.store.read(spark, dir).get.roots.size
 
   test("incremental view == one-shot aggregate at every step, any append order") {
     val dir = Files.createTempDirectory("aggview").toString
@@ -208,29 +208,29 @@ class AggViewSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("aggview-stamp").toString
     AggView.buildAggView(mkBatch(0 until 60), dir, Seq("status", "prio"), Seq("price"))
     AggView.readAggView(spark, dir).collect() // prime the stamp
-    val p0 = AggView.manifestParses.get()
+    val p0 = AggView.store.parses.get()
     (0 until 5).foreach(_ => AggView.readAggView(spark, dir).collect())
-    assert(AggView.manifestParses.get() == p0,
+    assert(AggView.store.parses.get() == p0,
       "unchanged view re-parsed its manifest")
     AggView.appendToAggView(dir, mkBatch(60 until 80))
     AggView.readAggView(spark, dir).collect()
-    assert(AggView.manifestParses.get() > p0, "a commit must restamp")
+    assert(AggView.store.parses.get() > p0, "a commit must restamp")
   }
 
   test("cross-process guard: a commit against a stale manifest aborts, state intact") {
     val dir = Files.createTempDirectory("aggview-xproc").toString
     AggView.buildAggView(mkBatch(0 until 80), dir, Seq("status", "prio"), Seq("price"))
-    val stale = AggView.readManifest(spark, dir).get
+    val stale = AggView.store.read(spark, dir).get
     // a "foreign" writer moves the manifest after our snapshot (the
     // in-process lock serializes the public API, so the guard is
     // asserted through the commit primitive — the TextDelete pattern)
     assert(AggView.appendToAggView(dir, mkBatch(80 until 120), Some("9")))
     val e = intercept[IllegalStateException] {
-      AggView.commitIfUnchanged(spark, dir, Some(stale), stale.copy(nRows = 999L))
+      AggView.store.commitIfUnchanged(spark, dir, Some(stale), stale.copy(nRows = 999L))
     }
     assert(e.getMessage.contains("concurrent"))
     // the view remains exactly the foreign writer's state
-    val m = AggView.readManifest(spark, dir).get
+    val m = AggView.store.read(spark, dir).get
     assert(m.roots.size == 2 && m.nRows == 120L && m.tagHighWater == 9L)
   }
 
