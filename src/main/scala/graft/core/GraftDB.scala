@@ -5,19 +5,22 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetCompressionCodec, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, StructType}
 
 /** Engine options — Spark-scale defaults replacing the reference's
   * single-node geometry (`kv/option.go:21-33`).
@@ -82,7 +85,8 @@ final case class GraftOptions(
   * Storage layout under `rootDir`:
   *   - `data/<uuid>/`  sorted parquet segments ("generations"): level 0 =
   *     freshly appended batches (the memtable-flush analog, reference
-  *     `kv/lsm/level.go:82-106`); level 1 = compacted, range-partitioned,
+  *     `kv/lsm/level.go:82-106`; a [[batchSet]] writes its one part file on
+  *     the driver); level 1 = compacted, range-partitioned,
   *     key-sorted output (reference compaction, `kv/lsm/compact.go:239-447`).
   *   - `blobs/<uuid>/` parquet blob segments (the value-log analog,
   *     reference `kv/vlog.go:366-484`).
@@ -100,9 +104,10 @@ final case class GraftOptions(
   * parquet footer min/max stats prune files/row-groups on point and range
   * reads, and a parquet bloom filter on `key`, sized to each file's keys,
   * serves the negative-lookup role of the reference's per-SST bloom
-  * (`kv/utils/bloom_filter.go`). A point [[get]] runs no Spark job at all:
-  * like the reference's `Get`, it reads the few matching rows on the
-  * driver.
+  * (`kv/utils/bloom_filter.go`). Neither a point [[get]] nor a small
+  * commit ([[batchSet]]) runs a Spark job: like the reference's `Get` and
+  * group commit, they read the few matching rows, or write the batch's
+  * one segment file, on the driver.
   */
 final class GraftDB(
     val spark: SparkSession,
@@ -127,9 +132,19 @@ final class GraftDB(
   /** Group-commit a batch (reference `batchSet` write pipeline,
     * `kv/db.go:191-285`). Entries later in the batch win over earlier
     * duplicates (distinct versions are assigned in batch order).
+    *
+    * Like the reference's local group commit, a batch is written on the
+    * driver and runs no Spark job: its key-sorted rows become one level-0
+    * part file and its blob values one blob part file, and the manifest
+    * entries come straight from the batch (key range, row count, assigned
+    * blob ids). Only the inline compaction the commit may trigger runs
+    * Spark jobs.
     */
   def batchSet(entries: Seq[KVEntry]): Unit = {
     if (entries.isEmpty) return
+    val nullKey = entries.indexWhere(_.key == null)
+    if (nullKey >= 0) throw new IllegalArgumentException(
+      s"batchSet: entry $nullKey of ${entries.size} has a null key")
     // Allocate a contiguous version range + blob ids in one manifest txn.
     val nBlobs = entries.count(e =>
       !e.tombstone && e.value != null && e.value.length >= options.valueThreshold)
@@ -141,39 +156,61 @@ final class GraftDB(
         nextBlobId = Some(st.nextBlobId + nBlobs))
     }
     var blobSeq = baseBlob
-    val blobs = Vector.newBuilder[Row]
+    val blobs = Vector.newBuilder[(Long, Array[Byte])]
     val rows = entries.zipWithIndex.map { case (e, i) =>
       val version = baseVersion + i
       if (!e.tombstone && e.value != null && e.value.length >= options.valueThreshold) {
         val id = blobSeq; blobSeq += 1
-        blobs += Row(id, e.value)
-        Row(e.key, null, version, e.expiresAt, false, id)
+        blobs += id -> e.value
+        KVEntry(e.key, null, version, e.expiresAt, tombstone = false, id)
       } else {
-        Row(e.key, if (e.tombstone) null else e.value, version, e.expiresAt,
+        KVEntry(e.key, if (e.tombstone) null else e.value, version, e.expiresAt,
           e.tombstone, null)
       }
     }
     val blobRows = blobs.result()
-    val blobMetas = if (blobRows.nonEmpty) {
-      val dir = newSegmentDir("blobs")
-      spark.createDataFrame(spark.sparkContext.parallelize(blobRows, 1),
-        KVEntry.blobSchema).write.mode(SaveMode.Overwrite).parquet(dir)
-      blobFileMetas(dir, baseBlob, blobSeq - 1)
-    } else Vector.empty
-
-    val sorted = rows.sortBy(r => r.getAs[Array[Byte]](0))(UnsignedBytesOrdering)
-    val dir = newSegmentDir("data")
-    spark.createDataFrame(spark.sparkContext.parallelize(sorted, 1), KVEntry.schema)
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.bloom.filter.enabled#key", "true")
-      // the batch's row count bounds its distinct keys: a 16-row segment
-      // carries a 32-byte filter instead of the 1 MB default
-      .option("parquet.bloom.filter.expected.ndv#key", sorted.size.toString)
-      .parquet(dir)
+    val blobMetas = if (blobRows.isEmpty) Vector.empty else {
+      val path = writePart("blobs", KVEntry.blobSchema, blobRows) {
+        case (g, (id, value)) =>
+          g.add("blobId", id)
+          g.add("value", Binary.fromConstantByteArray(value))
+      }
+      Vector(BlobFileMeta(path, blobRows.size, baseBlob, blobSeq - 1))
+    }
+    val sorted = rows.sortBy(_.key)(UnsignedBytesOrdering)
+    val path = writePart("data", KVEntry.schema, sorted)(GraftDB.fillRow)
     manifest.commit(_ => ManifestDelta(
-      addFiles = segmentFileMetas(dir, level = 0, baseVersion),
+      addFiles = Vector(FileMeta(path, level = 0, Hex.encode(sorted.head.key),
+        Hex.encode(sorted.last.key), sorted.size, baseVersion)),
       addBlobs = blobMetas))
     maybeCompact()
+  }
+
+  /** Write `rows` on the driver as `<kind>/<uuid>/part-00000.parquet` and
+    * return its path: the file a one-partition `DataFrame.write` of
+    * `schema` would produce (Spark's own schema conversion, so non-nullable
+    * fields are `required`; the session's compression codec; row-group
+    * statistics and column-index pages). A `key` column gets a bloom
+    * filter sized to the rows, which bound the file's distinct keys: a
+    * 16-row segment carries a 32-byte filter. The writer uses the
+    * session's Hadoop conf, like [[openParquet]].
+    */
+  private def writePart[T](kind: String, schema: StructType, rows: Seq[T])(
+      fill: (Group, T) => Unit): String = {
+    val path = s"${newSegmentDir(kind)}/part-00000.parquet"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val msg = new SparkToParquetSchemaConverter().convert(schema)
+    val codec = ParquetCompressionCodec.fromString(
+      spark.sessionState.conf.parquetCompressionCodec).getCompressionCodec
+    val builder = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), conf))
+      .withConf(conf).withType(msg).withCompressionCodec(codec)
+    val writer = (if (!schema.fieldNames.contains("key")) builder
+      else builder.withBloomFilterEnabled("key", true).withBloomFilterNDV("key", rows.size.toLong))
+      .build()
+    val groups = new SimpleGroupFactory(msg)
+    try rows.foreach { r => val g = groups.newGroup(); fill(g, r); writer.write(g) }
+    finally writer.close()
+    path
   }
 
   /** Bulk ingest: a whole DataFrame `(key binary, value binary[, expiresAt
@@ -487,8 +524,18 @@ final class GraftDB(
   def view(asOfUnixSec: Long = System.currentTimeMillis() / 1000): DataFrame =
     viewOf(manifest.load(), asOfUnixSec)
 
-  private[core] def viewOf(st: ManifestState, asOfUnixSec: Long): DataFrame = {
-    val base = visible(resolved(readSegments(st.liveDataPaths)), asOfUnixSec)
+  private[core] def viewOf(st: ManifestState, asOfUnixSec: Long): DataFrame =
+    viewOver(st, st.files, None, asOfUnixSec)
+
+  /** The view of the keys `keyPred` admits, read from `files` only. The
+    * predicate applies before [[resolved]]: the LWW window partitions by
+    * key, so dropping whole keys first is exact, provided `files` hold
+    * every version of the admitted keys.
+    */
+  private def viewOver(st: ManifestState, files: Seq[FileMeta], keyPred: Option[Column],
+      asOfUnixSec: Long): DataFrame = {
+    val log = readSegments(files.map(_.path))
+    val base = visible(resolved(keyPred.fold(log)(log.filter)), asOfUnixSec)
     val blobs = blobTableOf(st).withColumnRenamed("value", "__blobValue")
     base.join(blobs, Seq("blobId"), "left")
       .select(col("key"),
@@ -612,6 +659,10 @@ final class GraftDB(
     * [prefix, prefixSuccessor) range trick so it pushes down to parquet as
     * two comparisons (the reference declared prefix but never enforced it,
     * `kv/utils/iterator.go:16-19` — we implement it for real).
+    *
+    * The options narrow to one `[lo, hi)` key range, and only the manifest
+    * files whose `[minKey, maxKey]` overlaps it are read, the range filter
+    * applied before the LWW resolve (see [[viewOver]]).
     */
   def scan(
       from: Option[Array[Byte]] = None,
@@ -619,14 +670,15 @@ final class GraftDB(
       prefix: Option[Array[Byte]] = None,
       ascending: Boolean = true,
       asOfUnixSec: Long = System.currentTimeMillis() / 1000): DataFrame = {
-    var df = view(asOfUnixSec)
-    from.foreach(f => df = df.filter(col("key") >= lit(f)))
-    until.foreach(u => df = df.filter(col("key") < lit(u)))
-    prefix.foreach { p =>
-      df = df.filter(col("key") >= lit(p))
-      GraftDB.prefixSuccessor(p).foreach(s => df = df.filter(col("key") < lit(s)))
-    }
-    df.orderBy(if (ascending) col("key").asc else col("key").desc)
+    val lo = (from ++ prefix).maxOption(UnsignedBytesOrdering)
+    val hi = (until ++ prefix.flatMap(GraftDB.prefixSuccessor)).minOption(UnsignedBytesOrdering)
+    val (loHex, hiHex) = (lo.map(Hex.encode), hi.map(Hex.encode))
+    val st = manifest.load()
+    val files = st.files.filter(f =>
+      loHex.forall(f.maxKeyHex >= _) && hiHex.forall(f.minKeyHex < _))
+    val keyPred = (lo.map(col("key") >= lit(_)) ++ hi.map(col("key") < lit(_))).reduceOption(_ && _)
+    viewOver(st, files, keyPred, asOfUnixSec)
+      .orderBy(if (ascending) col("key").asc else col("key").desc)
   }
 
   // ------------------------------------------------------------ lifecycle jobs
@@ -1172,6 +1224,18 @@ object GraftDB {
     Option(e.blobId).map(_.longValue),
     e.expiresAt,
     e.tombstone))
+
+  /** One data-file row written through parquet's example `Group` model:
+    * the inverse of [[entryOf]], null value and blobId left unset.
+    */
+  private def fillRow(g: Group, e: KVEntry): Unit = {
+    g.add("key", Binary.fromConstantByteArray(e.key))
+    if (e.value != null) g.add("value", Binary.fromConstantByteArray(e.value))
+    g.add("version", e.version)
+    g.add("expiresAt", e.expiresAt)
+    g.add("tombstone", e.tombstone)
+    if (e.blobId != null) g.add("blobId", e.blobId.longValue)
+  }
 
   /** One data-file row read through parquet's example `Group` model. */
   private[core] def entryOf(g: Group): KVEntry = {

@@ -570,6 +570,15 @@ class GraftDBSpec extends AnyFunSuite {
     db.batchSet(Seq(KVEntry(b("hit"), b("v")), KVEntry(b("blob"), blob),
       KVEntry(b("gone"), b("v")), KVEntry.withTTL(b("old"), b("v"), -100)))
     db.del(b("gone"))
+    val jobs = sparkJobsDuring {
+      val got = Seq("hit", "blob", "gone", "old", "absent").map(k => db.get(b(k)).map(_.toSeq))
+      assert(got == Seq(Some(b("v").toSeq), Some(blob.toSeq), None, None, None))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs ran for five point gets")
+  }
+
+  /** The number of Spark jobs `body` starts. */
+  private def sparkJobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
@@ -581,15 +590,131 @@ class GraftDBSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      val got = Seq("hit", "blob", "gone", "old", "absent").map(k => db.get(b(k)).map(_.toSeq))
-      assert(got == Seq(Some(b("v").toSeq), Some(blob.toSeq), None, None, None))
+      body
       // the bus delivers events in order: once the sentinel job's start
-      // arrives, every job a get launched would have arrived before it
+      // arrives, every job `body` launched would have arrived before it
       sc.setJobGroup("sentinel", "flush the listener bus")
       try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran for five point gets")
+      jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("batchSet runs no Spark job: inline, blob, TTL and tombstone in one batch") {
+    val db = freshDb(GraftOptions(valueThreshold = 16, compactTriggerFiles = 1000))
+    val blob = Array.fill[Byte](64)(7)
+    val jobs = sparkJobsDuring {
+      db.batchSet(Seq(KVEntry(b("inline"), b("v")), KVEntry(b("blob"), blob),
+        KVEntry.withTTL(b("ttl"), b("t"), 10000), KVEntry.tombstone(b("gone"))))
+      db.set(b("one"), b("1"))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs ran for two commits")
+    assert(Seq("inline", "blob", "ttl", "gone", "one").map(k => db.get(b(k)).map(_.toSeq)) ==
+      Seq(Some(b("v").toSeq), Some(blob.toSeq), Some(b("t").toSeq), None, Some(b("1").toSeq)))
+  }
+
+  test("batchSet rejects a null key before reserving versions") {
+    val db = freshDb()
+    db.set(b("a"), b("1"))
+    val stats0 = db.stats()
+    val files0 = new Manifest(db.rootDir).load().files
+    val e = intercept[IllegalArgumentException] {
+      db.batchSet(Seq(KVEntry(b("x"), b("1")), KVEntry(b("y"), b("2")), KVEntry(null, b("3"))))
+    }
+    assert(e.getMessage.contains("entry 2"), e.getMessage)
+    assert(db.stats() == stats0)
+    assert(new Manifest(db.rootDir).load().files == files0)
+    assert(db.get(b("x")).isEmpty && db.get(b("a")).map(new String(_)).contains("1"))
+  }
+
+  test("driver-written segments round-trip through rawLog, compaction, view and get") {
+    val db = freshDb(GraftOptions(valueThreshold = 16, compactTriggerFiles = 1000))
+    db.set(b("pre"), b("p"))
+    val (v0, blob0) = (db.stats()("nextVersion"), db.stats()("nextBlobId"))
+    val blob = Array.fill[Byte](40)(3)
+    db.batchSet(Seq(KVEntry(b("k2"), b("inline")), KVEntry(b("k1"), blob),
+      KVEntry(b("k3"), b("ttl"), 0L, 4000000000L, tombstone = false, null),
+      KVEntry.tombstone(b("k0"))))
+    def show(r: Row) = (new String(r.getAs[Array[Byte]]("key")),
+      Option(r.getAs[Array[Byte]]("value")).map(new String(_)), r.getAs[Long]("version"),
+      r.getAs[Long]("expiresAt"), r.getAs[Boolean]("tombstone"),
+      Option(r.getAs[java.lang.Long]("blobId")).map(_.longValue))
+    val batchRows = db.rawLog().collect().map(show).filter(_._1 != "pre").sortBy(_._1).toSeq
+    assert(batchRows == Seq(
+      ("k0", None, v0 + 3, 0L, true, None),
+      ("k1", None, v0 + 1, 0L, false, Some(blob0)),
+      ("k2", Some("inline"), v0, 0L, false, None),
+      ("k3", Some("ttl"), v0 + 2, 4000000000L, false, None)))
+
+    // several driver-written L0 segments fold into L1 without changing a read
+    (0 until 4).foreach { gen =>
+      db.batchSet((0 until 12).map(i =>
+        if (i % 5 == gen) KVEntry.tombstone(b(f"f$i%02d"))
+        else KVEntry(b(f"f$i%02d"), if (i % 3 == 0) Array.fill[Byte](20)(gen.toByte) else b(s"g$gen"))))
+    }
+    val keys = Seq("pre", "k0", "k1", "k2", "k3") ++ (0 until 12).map(i => f"f$i%02d")
+    def reads() = (viewMap(db), keys.map(k => db.get(b(k)).map(_.toSeq)))
+    val before = reads()
+    db.compact()
+    assert(db.stats()("level0Segments") == 0)
+    assert(reads() == before)
+  }
+
+  private def viewMap(db: GraftDB, asOf: Long = System.currentTimeMillis() / 1000) =
+    db.view(asOf).collect()
+      .map(r => new String(r.getAs[Array[Byte]]("key")) -> r.getAs[Array[Byte]]("value").toSeq).toMap
+
+  test("scan reads only the files overlapping its range and equals the filtered view") {
+    val db = freshDb(GraftOptions(valueThreshold = 12, compactTriggerFiles = 1000,
+      rangePartitions = 4))
+    val rnd = new scala.util.Random(20261019L)
+    val keyspace = for (c <- "abcd"; i <- 0 until 20) yield f"$c$i%02d"
+    def value() = if (rnd.nextInt(4) == 0) "B" * 20 else s"v${rnd.nextInt(1000)}"
+    import org.apache.spark.sql.types._
+    val kv = StructType(Seq(StructField("key", BinaryType), StructField("value", BinaryType)))
+    // L1: a bulk write captures the grid, compaction buckets it into L1 files
+    db.write(spark.createDataFrame(spark.sparkContext.parallelize(
+      keyspace.map(k => Row(b(k), b(value()))), 4), kv))
+    db.compact()
+    // L0 on top: sets, blob values, deletes, live and expired TTLs
+    (0 until 4).foreach { _ =>
+      db.batchSet((0 until 12).map { _ =>
+        val k = b(keyspace(rnd.nextInt(keyspace.size)))
+        rnd.nextInt(4) match {
+          case 0 => KVEntry.tombstone(k)
+          case 1 => KVEntry.withTTL(k, b(value()), if (rnd.nextBoolean()) -100 else 10000)
+          case _ => KVEntry(k, b(value()))
+        }
+      })
+    }
+    val st = new Manifest(db.rootDir).load()
+    assert(st.files.exists(_.level == 0) && st.files.count(_.level == 1) >= 2, st.files)
+    val asOf = System.currentTimeMillis() / 1000
+    val view = viewMap(db, asOf).toSeq.sortBy(_._1)
+
+    def bound() = rnd.nextInt(3) match {
+      case 0 => None
+      case 1 => Some(keyspace(rnd.nextInt(keyspace.size)))
+      case _ => Some(s"${"abcde" (rnd.nextInt(5))}${rnd.nextInt(30)}")
+    }
+    (0 until 12).foreach { _ =>
+      val (from, until) = (bound(), bound())
+      val prefix = Seq(None, Some(""), Some("b"), Some("c1"), Some("d0"), Some("e"))(rnd.nextInt(6))
+      val ascending = rnd.nextBoolean()
+      val got = db.scan(from.map(b), until.map(b), prefix.map(b), ascending, asOf).collect()
+        .map(r => new String(r.getAs[Array[Byte]]("key")) -> r.getAs[Array[Byte]]("value").toSeq).toSeq
+      val want = view.filter { case (k, _) =>
+        from.forall(k >= _) && until.forall(k < _) && prefix.forall(k.startsWith) }
+      assert(got == (if (ascending) want else want.reverse),
+        s"scan(from=$from, until=$until, prefix=$prefix, ascending=$ascending)")
+    }
+
+    // an L1 file wholly above the prefix range is not in the scan's plan
+    def norm(p: String) = p.replaceFirst("^file:/+", "/")
+    val above = st.files.filter(f => f.level == 1 && f.minKeyHex >= Hex.encode(b("b")))
+    assert(above.nonEmpty, st.files)
+    val read = db.scan(prefix = Some(b("a"))).inputFiles.map(norm).toSet
+    above.foreach(f => assert(!read.contains(norm(f.path)), s"scan of a* read ${f.path}"))
   }
 
   test("key bloom filter is sized to the file and still prunes an in-range absent key") {
