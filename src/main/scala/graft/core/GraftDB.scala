@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.UUID
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -21,6 +21,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetCompressionCod
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructType}
+import graft.store.{ManifestFileIndex, PartFile}
 
 /** Engine options — Spark-scale defaults replacing the reference's
   * single-node geometry (`kv/option.go:21-33`).
@@ -170,24 +171,25 @@ final class GraftDB(
     }
     val blobRows = blobs.result()
     val blobMetas = if (blobRows.isEmpty) Vector.empty else {
-      val path = writePart("blobs", KVEntry.blobSchema, blobRows) {
+      val blobPart = writePart("blobs", KVEntry.blobSchema, blobRows) {
         case (g, (id, value)) =>
           g.add("blobId", id)
           g.add("value", Binary.fromConstantByteArray(value))
       }
-      Vector(BlobFileMeta(path, blobRows.size, baseBlob, blobSeq - 1))
+      Vector(BlobFileMeta(blobPart.path, blobRows.size, baseBlob, blobSeq - 1, blobPart.length))
     }
     val sorted = rows.sortBy(_.key)(UnsignedBytesOrdering)
-    val path = writePart("data", KVEntry.schema, sorted)(GraftDB.fillRow)
+    val part = writePart("data", KVEntry.schema, sorted)(GraftDB.fillRow)
     manifest.commit(_ => ManifestDelta(
-      addFiles = Vector(FileMeta(path, level = 0, Hex.encode(sorted.head.key),
-        Hex.encode(sorted.last.key), sorted.size, baseVersion)),
+      addFiles = Vector(FileMeta(part.path, level = 0, Hex.encode(sorted.head.key),
+        Hex.encode(sorted.last.key), sorted.size, baseVersion, part.length)),
       addBlobs = blobMetas))
     maybeCompact()
   }
 
   /** Write `rows` on the driver as `<kind>/<uuid>/part-00000.parquet` and
-    * return its path: the file a one-partition `DataFrame.write` of
+    * return it as a part file (path and byte length): the file a
+    * one-partition `DataFrame.write` of
     * `schema` would produce (Spark's own schema conversion, so non-nullable
     * fields are `required`; the session's compression codec; row-group
     * statistics and column-index pages). A `key` column gets a bloom
@@ -196,7 +198,7 @@ final class GraftDB(
     * session's Hadoop conf, like [[openParquet]].
     */
   private def writePart[T](kind: String, schema: StructType, rows: Seq[T])(
-      fill: (Group, T) => Unit): String = {
+      fill: (Group, T) => Unit): PartFile = {
     val path = s"${newSegmentDir(kind)}/part-00000.parquet"
     val conf = spark.sparkContext.hadoopConfiguration
     val msg = new SparkToParquetSchemaConverter().convert(schema)
@@ -210,7 +212,8 @@ final class GraftDB(
     val groups = new SimpleGroupFactory(msg)
     try rows.foreach { r => val g = groups.newGroup(); fill(g, r); writer.write(g) }
     finally writer.close()
-    path
+    val p = new Path(path)
+    PartFile(path, p.getFileSystem(conf).getFileStatus(p).getLen, None)
   }
 
   /** Bulk ingest: a whole DataFrame `(key binary, value binary[, expiresAt
@@ -349,51 +352,39 @@ final class GraftDB(
     }
   }
 
-  /** Enumerate a segment dir's part files directly (grid segments nest
-    * them under `__bucket=N` dirs; an all-dead compaction output has none
-    * at all) — no partition discovery, so callers record concrete file
-    * paths that readSegments() can open one by one.
+  /** The part files behind one manifest entry: itself, with its recorded
+    * length; an entry without one (a segment DIR, or a file recorded before
+    * lengths were) is listed, `__bucket=N` dirs included.
     */
-  private def parquetPartFiles(dir: String): Vector[java.io.File] = {
-    def walk(f: java.io.File): Vector[java.io.File] =
-      Option(f.listFiles()).getOrElse(Array.empty).toVector.flatMap { c =>
-        if (c.isDirectory) walk(c)
-        else if (c.getName.endsWith(".parquet")) Vector(c) else Vector.empty
-      }
-    walk(new java.io.File(dir.replaceFirst("^file:/+", "/")))
-  }
-
-  /** The part files behind one manifest path: segment writes record
-    * their part FILES; a segment DIR (manifests written before that) is
-    * enumerated.
-    */
-  private def partFilesOf(path: String): Vector[String] =
-    if (path.endsWith(".parquet")) Vector(path) else parquetPartFiles(path).map(_.getPath)
+  private def partsOf(path: String, length: Long): Seq[PartFile] =
+    if (length >= 0) Seq(PartFile(path, length, None))
+    else ManifestFileIndex.list(spark, path, None).map(f =>
+      f.copy(path = if (f.path.isEmpty) path else s"$path/${f.path}"))
 
   /** Open one part file on the driver with the SESSION's Hadoop conf —
     * `ParquetFileReader.open(InputFile)` and `ParquetReader.builder` each
-    * build a fresh `Configuration`, ~10 ms a file against ~1 ms here. The
-    * reader keeps only the row groups `filter` cannot rule out by their
-    * statistics, dictionary or key bloom filter, and only the pages of
-    * those the column index cannot.
+    * build a fresh `Configuration`, ~10 ms a file against ~1 ms here —
+    * at its known length. The reader keeps only the row groups `filter`
+    * cannot rule out by their statistics, dictionary or key bloom
+    * filter, and only the pages of those the column index cannot.
     */
-  private def openParquet(path: String,
+  private def openParquet(f: PartFile,
       filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader = {
     val conf = spark.sparkContext.hadoopConfiguration
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+    ParquetFileReader.open(HadoopInputFile.fromStatus(ManifestFileIndex.status(conf, f), conf),
       HadoopReadOptions.builder(conf).withRecordFilter(filter).build())
   }
 
   /** Open one file's parquet footer, run `g`, close. */
-  private def withFooter[T](path: String)(g: ParquetMetadata => T): T = {
-    val rd = openParquet(path)
+  private def withFooter[T](f: PartFile)(g: ParquetMetadata => T): T = {
+    val rd = openParquet(f)
     try g(rd.getFooter) finally rd.close()
   }
 
   /** The rows of one part file that satisfy `pred`, read on the driver. */
-  private def filteredRows(path: String, pred: FilterPredicate): Vector[Group] = {
+  private def filteredRows(f: PartFile, pred: FilterPredicate): Vector[Group] = {
     val filter = FilterCompat.get(pred)
-    val rd = openParquet(path, filter)
+    val rd = openParquet(f, filter)
     try {
       val schema = rd.getFileMetaData.getSchema
       val io = new ColumnIOFactory().getColumnIO(schema)
@@ -420,8 +411,8 @@ final class GraftDB(
     * empty files are skipped.
     */
   private def blobFileMetas(dir: String, lo: Long, hi: Long): Vector[BlobFileMeta] =
-    parquetPartFiles(dir).flatMap { f =>
-      withFooter(f.getPath) { footer =>
+    partsOf(dir, -1L).toVector.flatMap { f =>
+      withFooter(f) { footer =>
         val blocks = footer.getBlocks.asScala.toVector
         val ranges = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == "blobId")
           .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
@@ -429,9 +420,9 @@ final class GraftDB(
             s.genericGetMax.asInstanceOf[java.lang.Long].longValue)))
         val rows = blocks.map(_.getRowCount).sum
         if (rows == 0L) None
-        else if (ranges.exists(_.isEmpty)) Some(BlobFileMeta(f.getPath, rows, lo, hi))
-        else Some(BlobFileMeta(f.getPath, rows,
-          ranges.map(_.get._1).min, ranges.map(_.get._2).max))
+        else if (ranges.exists(_.isEmpty)) Some(BlobFileMeta(f.path, rows, lo, hi, f.length))
+        else Some(BlobFileMeta(f.path, rows,
+          ranges.map(_.get._1).min, ranges.map(_.get._2).max, f.length))
       }
     }
 
@@ -448,11 +439,11 @@ final class GraftDB(
     * `kv/lsm/level_handler.go:45-64`) before the files are even opened.
     */
   private def segmentFileMetas(dir: String, level: Int, baseVersion: Long): Vector[FileMeta] = {
-    val files = parquetPartFiles(dir)
+    val files = partsOf(dir, -1L).toVector
     if (files.isEmpty) return Vector.empty
     val fromFooters: Option[Vector[FileMeta]] = {
       val metas = files.map { f =>
-        withFooter(f.getPath) { footer =>
+        withFooter(f) { footer =>
           val blocks = footer.getBlocks.asScala.toVector
           val rows = blocks.map(_.getRowCount).sum
           val keyStats = blocks.map(b =>
@@ -464,41 +455,50 @@ final class GraftDB(
               .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
             val maxs = keyStats.map(_.get.genericGetMax
               .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
-            Some(FileMeta(f.getPath, level,
+            Some(FileMeta(f.path, level,
               Hex.encode(mins.min(UnsignedBytesOrdering)),
               Hex.encode(maxs.max(UnsignedBytesOrdering)),
-              rows, baseVersion))
+              rows, baseVersion, f.length))
           }
         }
       }
       if (metas.forall(_.isDefined)) Some(metas.map(_.get)) else None
     }
     fromFooters.getOrElse {
-      spark.read.schema(KVEntry.schema).parquet(files.map(_.getPath): _*)
+      val byPath = files.map(f => qualified(new Path(f.path)) -> f).toMap
+      ManifestFileIndex.read(spark, files, KVEntry.schema, None)
         .groupBy(input_file_name().as("path"))
         .agg(min(col("key")).as("mn"), max(col("key")).as("mx"), count(lit(1)).as("n"))
         .collect()
-        .map(r => FileMeta(r.getString(0), level,
-          Hex.encode(r.getAs[Array[Byte]](1)), Hex.encode(r.getAs[Array[Byte]](2)),
-          r.getLong(3), baseVersion))
+        .map { r =>
+          val f = byPath(qualified(new Path(new java.net.URI(r.getString(0)))))
+          FileMeta(f.path, level,
+            Hex.encode(r.getAs[Array[Byte]](1)), Hex.encode(r.getAs[Array[Byte]](2)),
+            r.getLong(3), baseVersion, f.length)
+        }
         .toVector
     }
   }
 
+  /** `p` absolute with its scheme, the form in which manifest paths,
+    * listed paths and `input_file_name()` URIs compare.
+    */
+  private def qualified(p: Path): String =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+
   // ----------------------------------------------------------------- read path
 
-  private def readSegments(paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], KVEntry.schema)
-    else spark.read.schema(KVEntry.schema).parquet(paths: _*)
+  // each relation is one ManifestFileIndex scan over the manifest's files
+  private def readSegments(files: Seq[FileMeta]): DataFrame =
+    ManifestFileIndex.read(spark, files.flatMap(f => partsOf(f.path, f.length)),
+      KVEntry.schema, None)
 
-  private def blobTableOf(st: ManifestState): DataFrame =
-    if (st.blobFiles.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], KVEntry.blobSchema)
-    else spark.read.schema(KVEntry.blobSchema).parquet(st.blobFiles.map(_.path): _*)
+  private def readBlobs(files: Seq[BlobFileMeta]): DataFrame =
+    ManifestFileIndex.read(spark, files.flatMap(b => partsOf(b.path, b.length)),
+      KVEntry.blobSchema, None)
 
   /** Raw union of live segments (all versions, tombstones included). */
-  def rawLog(): DataFrame = readSegments(manifest.load().liveDataPaths)
+  def rawLog(): DataFrame = readSegments(manifest.load().files)
 
   /** The LWW-resolved view BEFORE visibility filters: one row per key —
     * the newest version, whether live, deleted, or expired.
@@ -534,9 +534,9 @@ final class GraftDB(
     */
   private def viewOver(st: ManifestState, files: Seq[FileMeta], keyPred: Option[Column],
       asOfUnixSec: Long): DataFrame = {
-    val log = readSegments(files.map(_.path))
+    val log = readSegments(files)
     val base = visible(resolved(keyPred.fold(log)(log.filter)), asOfUnixSec)
-    val blobs = blobTableOf(st).withColumnRenamed("value", "__blobValue")
+    val blobs = readBlobs(st.blobFiles).withColumnRenamed("value", "__blobValue")
     base.join(blobs, Seq("blobId"), "left")
       .select(col("key"),
         coalesce(col("value"), col("__blobValue")).as("value"),
@@ -588,9 +588,10 @@ final class GraftDB(
     */
   def changesBetween(from: Snapshot, to: Snapshot,
       asOfUnixSec: Long = System.currentTimeMillis() / 1000): DataFrame = {
-    val pa = from.state.liveDataPaths.toSet
-    val pb = to.state.liveDataPaths.toSet
-    val delta = ((pa diff pb) ++ (pb diff pa)).toSeq
+    val pa = from.state.files.map(_.path).toSet
+    val pb = to.state.files.map(_.path).toSet
+    val delta = from.state.files.filterNot(f => pb(f.path)) ++
+      to.state.files.filterNot(f => pa(f.path))
     val empty = viewOf(to.state, asOfUnixSec)
       .select(col("key"), lit("set").as("op"), col("value"))
       .filter(lit(false))
@@ -611,7 +612,6 @@ final class GraftDB(
   }
 
   private[core] def pinnedPaths(): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     pinnedSnapshots.asScala.toSeq.flatMap { s =>
       s.state.files.map(_.path) ++ s.state.blobFiles.map(_.path)
     }
@@ -632,7 +632,7 @@ final class GraftDB(
     val keyEq = FilterApi.eq(FilterApi.binaryColumn("key"), Binary.fromConstantByteArray(key))
     val versions = st.files
       .filter(f => f.minKeyHex <= hex && hex <= f.maxKeyHex)
-      .flatMap(f => partFilesOf(f.path))
+      .flatMap(f => partsOf(f.path, f.length))
       .flatMap(p => filteredRows(p, keyEq).map(GraftDB.entryOf))
     versions.maxOption(GraftDB.lwwOrder)
       .filter(e => !e.tombstone && (e.expiresAt == 0L || e.expiresAt > System.currentTimeMillis() / 1000))
@@ -646,7 +646,7 @@ final class GraftDB(
     val idEq = FilterApi.eq(FilterApi.longColumn("blobId"), java.lang.Long.valueOf(id))
     st.blobFiles.iterator
       .filter(b => b.minBlobId <= id && id <= b.maxBlobId)
-      .flatMap(b => partFilesOf(b.path))
+      .flatMap(b => partsOf(b.path, b.length))
       .flatMap(p => filteredRows(p, idEq))
       .nextOption()
       .getOrElse(throw new NoSuchElementException(
@@ -748,7 +748,7 @@ final class GraftDB(
       val want = math.max(1, math.min(math.min(maxSplitsPerFile, budget),
         (victim.rows / math.max(1L, options.bucketTargetRows)).toInt - 1))
       val fraction = math.min(1.0, 20000.0 / victim.rows.toDouble)
-      val sampleKeys = spark.read.schema(KVEntry.schema).parquet(victim.path)
+      val sampleKeys = readSegments(Seq(victim))
         .select(col("key")).sample(withReplacement = false, fraction, seed = 42L)
         .collect().map(_.getAs[Array[Byte]](0))
       if (sampleKeys.length >= 2) {
@@ -904,7 +904,7 @@ final class GraftDB(
     val inputs = pick(st0)
     if (inputs.isEmpty) return
     val now = System.currentTimeMillis() / 1000
-    val merged = resolved(readSegments(inputs.map(_.path)))
+    val merged = resolved(readSegments(inputs))
     val compacted = if (dropDead) visible(merged, now) else merged
     val outDir = newSegmentDir("data")
     writeSegment(compacted, outDir)
@@ -936,20 +936,19 @@ final class GraftDB(
     * the rewrite itself, skewing every later discard ratio.
     */
   private def liveBlobRefsOf(st: ManifestState): DataFrame =
-    resolved(readSegments(st.liveDataPaths))
+    resolved(readSegments(st.files))
       .filter(!col("tombstone") && col("blobId").isNotNull)
       .select(col("blobId"))
 
   private def blobSegmentStatsOf(st: ManifestState): Vector[(BlobFileMeta, Long)] = {
     if (st.blobFiles.isEmpty) return Vector.empty
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val perFile = blobTableOf(st).withColumn("__file", input_file_name())
+    val perFile = readBlobs(st.blobFiles).withColumn("__file", input_file_name())
       .join(liveBlobRefsOf(st), Seq("blobId"), "left_semi")
       .groupBy(col("__file")).agg(count(lit(1)).as("n"))
       .collect() // one row per blob part-FILE — tiny
-      .map(r => (norm(r.getString(0)), r.getLong(1)))
+      .map(r => (qualified(new Path(new java.net.URI(r.getString(0)))), r.getLong(1)))
     st.blobFiles.map { bf =>
-      val p = norm(bf.path)
+      val p = qualified(new Path(bf.path))
       val live = perFile.collect {
         case (f, n) if f == p || f.startsWith(p + "/") => n
       }.sum
@@ -988,7 +987,7 @@ final class GraftDB(
       if (liveCount == 0L) bf -> Vector.empty // fully dead: just drop from manifest
       else {
         val outDir = newSegmentDir("blobs")
-        spark.read.schema(KVEntry.blobSchema).parquet(bf.path)
+        readBlobs(Seq(bf))
           .join(liveRefs, Seq("blobId"), "left_semi")
           .write.mode(SaveMode.Overwrite).parquet(outDir)
         bf -> blobFileMetas(outDir, bf.minBlobId, bf.maxBlobId)
@@ -1037,7 +1036,6 @@ final class GraftDB(
       ascending: Boolean = true,
       seek: Option[Array[Byte]] = None,
       prefix: Option[Array[Byte]] = None): Iterator[Row] = {
-    import scala.jdk.CollectionConverters._
     // descending: keys <= seek, i.e. key < seek ++ 0x00 (the least key
     // strictly above seek in unsigned byte order — exact, no 0xff games)
     val (from, until) =
@@ -1056,11 +1054,8 @@ final class GraftDB(
   def estimateDeadBlobRatio(fraction: Double = 0.01, seed: Long = 42L): Double = {
     val st = manifest.load()
     if (st.blobFiles.isEmpty) return 0.0
-    val sampled = blobTableOf(st).sample(withReplacement = false, fraction, seed)
-    val liveRefs = resolved(readSegments(st.liveDataPaths))
-      .filter(!col("tombstone") && col("blobId").isNotNull)
-      .select(col("blobId"))
-    val counts = sampled.join(liveRefs, Seq("blobId"), "left_anti").count().toDouble
+    val sampled = readBlobs(st.blobFiles).sample(withReplacement = false, fraction, seed)
+    val counts = sampled.join(liveBlobRefsOf(st), Seq("blobId"), "left_anti").count().toDouble
     val total = sampled.count().toDouble
     if (total == 0) 0.0 else counts / total
   }
@@ -1072,25 +1067,23 @@ final class GraftDB(
     */
   def vacuum(): Unit = snapshotLock.synchronized {
     val st = manifest.load()
-    // normalize: manifest paths may be segment DIRS (batchSet) or
-    // individual part-FILES with a file: scheme (per-file metas)
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    // files referenced by a live snapshot are as live as the manifest's
-    // own — the snapshot refcount rule (see [[snapshot]])
-    val live = (st.files.map(_.path) ++ st.blobFiles.map(_.path) ++ pinnedPaths()).map(norm)
+    // manifest paths may be segment DIRS or part FILES, with or without a
+    // scheme; qualified, they compare with the listed segment dirs. Files
+    // referenced by a live snapshot are as live as the manifest's own —
+    // the snapshot refcount rule (see [[snapshot]])
+    val live = (st.files.map(_.path) ++ st.blobFiles.map(_.path) ++ pinnedPaths())
+      .map(p => qualified(new Path(p)))
     for (kind <- Seq("data", "blobs")) {
-      val dir = new java.io.File(s"$rootDir/$kind")
-      Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val seg = f.getPath
+      val dir = new Path(s"$rootDir/$kind")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val segs = try fs.listStatus(dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      segs.foreach { f =>
+        val seg = qualified(f.getPath)
         val inUse = live.exists(p => p == seg || p.startsWith(seg + "/"))
-        if (!inUse) deleteRecursively(f)
+        if (!inUse) fs.delete(f.getPath, true)
       }
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
   }
 
   def stats(): Map[String, Long] = {
@@ -1133,26 +1126,24 @@ final class GraftDB(
     * part that matters and is what this implements.
     */
   def backupTo(destDir: String): Unit = {
-    require(!new java.io.File(s"$destDir/MANIFEST.json").exists() &&
-        !new java.io.File(s"$destDir/MANIFEST.log").exists(),
+    val hconf = spark.sparkContext.hadoopConfiguration
+    require(!GraftDB.hasManifest(new Path(destDir), hconf),
       s"backupTo: $destDir already holds an engine manifest — refusing to overwrite")
     val s = snapshot()
     try {
       val st = s.state
-      def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-      val normRoot = norm(rootDir).stripSuffix("/")
+      val root = qualified(new Path(rootDir)).stripSuffix("/")
       def rebase(p: String): String = {
-        val n = norm(p)
-        require(n.startsWith(normRoot + "/"),
+        val q = qualified(new Path(p))
+        require(q.startsWith(root + "/"),
           s"backupTo: segment $p lives outside rootDir $rootDir")
-        s"$destDir/${n.stripPrefix(normRoot + "/")}"
+        s"$destDir/${q.stripPrefix(root + "/")}"
       }
-      val hconf = spark.sparkContext.hadoopConfiguration
       val pairs = (st.files.map(_.path) ++ st.blobFiles.map(_.path))
-        .map(p => (norm(p), rebase(p)))
+        .map(p => (p, rebase(p)))
       pairs.foreach { case (src, dst) =>
-        val sp = new org.apache.hadoop.fs.Path(src)
-        val dp = new org.apache.hadoop.fs.Path(dst)
+        val sp = new Path(src)
+        val dp = new Path(dst)
         val sfs = sp.getFileSystem(hconf)
         val dfs = dp.getFileSystem(hconf)
         dfs.mkdirs(dp.getParent)
@@ -1207,10 +1198,15 @@ object GraftDB {
     */
   def openBackup(spark: SparkSession, dir: String,
       options: GraftOptions = GraftOptions()): GraftDB = {
-    require(new java.io.File(s"$dir/MANIFEST.json").exists() ||
-        new java.io.File(s"$dir/MANIFEST.log").exists(),
+    require(hasManifest(new Path(dir), spark.sparkContext.hadoopConfiguration),
       s"openBackup: no engine manifest at $dir — incomplete or missing backup")
     new GraftDB(spark, dir, options)
+  }
+
+  /** Whether `dir` holds an engine manifest (a base snapshot or a log). */
+  private def hasManifest(dir: Path, conf: org.apache.hadoop.conf.Configuration): Boolean = {
+    val fs = dir.getFileSystem(conf)
+    fs.exists(new Path(dir, "MANIFEST.json")) || fs.exists(new Path(dir, "MANIFEST.log"))
   }
 
   /** [[GraftDB.resolved]]'s window order as a driver-side ordering, the

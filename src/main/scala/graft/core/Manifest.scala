@@ -8,7 +8,8 @@ import org.json4s.jackson.Serialization
 /** Metadata for one live data file (a sorted parquet "generation" segment).
   * Min/max keys are hex-encoded so the manifest JSON stays binary-safe; they
   * drive file pruning on point reads (analog of the reference's per-table
-  * `[minKey, maxKey]` search, `kv/lsm/level_handler.go:45-64`).
+  * `[minKey, maxKey]` search, `kv/lsm/level_handler.go:45-64`). `length`
+  * is the file's byte length; -1 (older entries, segment DIRS) lists.
   */
 final case class FileMeta(
     path: String,
@@ -16,19 +17,22 @@ final case class FileMeta(
     minKeyHex: String,
     maxKeyHex: String,
     rows: Long,
-    createdVersion: Long)
+    createdVersion: Long,
+    length: Long = -1L)
 
 /** Metadata for one live blob file. `[minBlobId, maxBlobId]` bounds the
   * ids it holds, so a point read dereferences a blob pointer by opening
   * only the files whose range covers it (the reference's value pointer
   * names its vlog file outright, `kv/utils/value.go:19-54`). The defaults
   * — every id — keep manifests written before these fields correct.
+  * `length` is as [[FileMeta.length]].
   */
 final case class BlobFileMeta(
     path: String,
     rows: Long,
     minBlobId: Long = 0L,
-    maxBlobId: Long = Long.MaxValue)
+    maxBlobId: Long = Long.MaxValue,
+    length: Long = -1L)
 
 /** The full engine state committed atomically. `nextVersion` is the
   * monotonic commit counter that replaces the reference's inverted-ts
@@ -52,9 +56,7 @@ final case class ManifestState(
     files: Vector[FileMeta],
     blobFiles: Vector[BlobFileMeta],
     rangeBoundsHex: Vector[String] = Vector.empty,
-    commitSeq: Long = 0L) {
-  def liveDataPaths: Seq[String] = files.map(_.path)
-}
+    commitSeq: Long = 0L)
 
 /** One committed change, O(touched files) in size — the reference's
   * manifest change records (`kv/file/manifest.go:122-174`: ADD/DELETE per

@@ -2,9 +2,11 @@ package graft.llmops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.functions.Text
 import graft.functions.expressions.HashExpressions
-import graft.store.{ManifestStore, TagFence}
+import graft.store.{ManifestStore, PartFile, TagFence}
+import graft.store.ManifestFileIndex.{Root, readRoots, stage}
 
 /** Persisted, appendable MinHash-LSH near-duplicate index — the streaming
   * complement to [[Dedup.minhashLshPairs]]: pay the corpus shingle/band
@@ -30,6 +32,10 @@ import graft.store.{ManifestStore, TagFence}
   *                     partitioned by ps = pmod(xxhash64(id), numBuckets)
   *                     so the verification scan prunes to the candidate
   *                     ids' partitions
+  *
+  * Read contract: each side reads as ONE parquet scan over the part files
+  * the manifest records ([[graft.store.ManifestFileIndex]]), its `pb`/`ps`
+  * partition filter pruning to the probed buckets; it lists nothing.
   *
   * Probes verify candidates with EXACT merge-scan Jaccard over the
   * stored shingle sets — the same verification as the batch operator, so
@@ -58,7 +64,9 @@ object NearDupIndex {
       tagHighWater: Long = -1L,
       tombs: Vector[String] = Vector.empty,
       nDocs: Long = 0L,
-      nDeleted: Long = 0L)
+      nDeleted: Long = 0L,
+      // per root, its part files (absent on older indexes: their roots list)
+      files: Map[String, Vector[PartFile]] = Map.empty)
 
   private val lock = new Object
 
@@ -68,51 +76,45 @@ object NearDupIndex {
     m => (m.appliedTags, m.tagHighWater),
     (m, t, hw) => m.copy(appliedTags = t, tagHighWater = hw))
 
-  private val bandSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bh", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pb", org.apache.spark.sql.types.IntegerType)))
-  private val shingleSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("sh", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)),
-    org.apache.spark.sql.types.StructField("ps", org.apache.spark.sql.types.IntegerType)))
-
-  private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ps", org.apache.spark.sql.types.IntegerType)))
+  private val bandSchema = StructType(Seq(
+    StructField("bh", LongType), StructField("id", LongType), StructField("pb", IntegerType)))
+  private val shingleSchema = StructType(Seq(StructField("id", LongType),
+    StructField("sh", ArrayType(StringType, containsNull = false)), StructField("ps", IntegerType)))
+  private val tombSchema =
+    StructType(Seq(StructField("id", LongType), StructField("ps", IntegerType)))
 
   private def tombIds(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       m: NearDupManifest): DataFrame =
-    if (m.tombs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        tombSchema).select(col("id"))
-    else readRoots(spark, indexDir, m.tombs, tombSchema).select(col("id"))
+    readRoots(spark, indexDir, m.tombs, m.files, tombSchema, Some("ps")).select(col("id"))
 
-  /** Stage one batch's band root + shingle root; returns the staged dirs
+  /** `next` with the staged roots' files recorded and the files of roots
+    * it no longer names dropped.
+    */
+  private def withFiles(next: NearDupManifest, staged: Root*): NearDupManifest = {
+    val live = (next.bands ++ next.shingles ++ next.tombs).toSet
+    next.copy(files = (next.files ++ staged).filter { case (r, _) => live(r) })
+  }
+
+  /** Stage one batch's band root + shingle root; returns the staged roots
     * and the batch's indexed doc count. Docs with zero shingles (empty
     * text) are indexable by neither side and are skipped — they can
     * never near-duplicate anything.
     */
   private def stageBatch(docs: DataFrame, indexDir: String, m: NearDupManifest,
-      idCol: String, textCol: String): Option[(String, String, Long)] = {
-    val spark = docs.sparkSession
+      idCol: String, textCol: String): Option[(Root, Root, Long)] = {
     val sh = docs.select(col(idCol).cast("long").as("id"),
         Text.shingles(col(textCol), m.shingleK).as("sh"))
       .filter(size(col("sh")) > 0)
     val n = sh.count()
     if (n == 0) return None
-    val bDir = s"bands-${java.util.UUID.randomUUID}"
-    sh.select(col("id"),
+    val bands = stage(sh.select(col("id"),
         explode(HashExpressions.minhash_bands(col("sh"), m.numBands, m.rowsPerBand)).as("bh"))
-      .withColumn("pb", pmod(col("bh"), lit(m.numBuckets.toLong)).cast("int"))
-      .repartition(col("pb"))
-      .write.mode("overwrite").partitionBy("pb").parquet(s"$indexDir/$bDir")
-    val sDir = s"shingles-${java.util.UUID.randomUUID}"
-    sh.withColumn("ps", pmod(xxhash64(col("id")), lit(m.numBuckets.toLong)).cast("int"))
-      .repartition(col("ps"))
-      .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$sDir")
-    Some((bDir, sDir, n))
+      .withColumn("pb", pmod(col("bh"), lit(m.numBuckets.toLong)).cast("int")),
+      indexDir, "bands-", Some("pb"))
+    val shingles = stage(
+      sh.withColumn("ps", pmod(xxhash64(col("id")), lit(m.numBuckets.toLong)).cast("int")),
+      indexDir, "shingles-", Some("ps"))
+    Some((bands, shingles, n))
   }
 
   /** Build a fresh index over `docs` (replacing any prior manifest at
@@ -137,8 +139,8 @@ object NearDupIndex {
     val empty = NearDupManifest(numBands, rowsPerBand, shingleK, numBuckets,
       Vector.empty, Vector.empty)
     val next = stageBatch(docs, indexDir, empty, idCol, textCol) match {
-      case Some((bDir, sDir, n)) =>
-        empty.copy(bands = Vector(bDir), shingles = Vector(sDir), nDocs = n)
+      case Some((b, sh, n)) =>
+        withFiles(empty.copy(bands = Vector(b._1), shingles = Vector(sh._1), nDocs = n), b, sh)
       case None => empty // empty corpus: a legitimate streaming start state
     }
     store.commitIfUnchanged(spark, indexDir, m0, next)
@@ -155,23 +157,17 @@ object NearDupIndex {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = lock.synchronized {
     val spark = docs.sparkSession
-    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"appendToNearDupIndex: no readable index manifest at $indexDir"))
+    val m = store.required(spark, indexDir, "appendToNearDupIndex")
     if (batchTag.exists(tags.applied(m, _))) return false
     stageBatch(docs, indexDir, m, idCol, textCol) match {
       case None => false
-      case Some((bDir, sDir, n)) =>
-        store.commitOrDrop(spark, indexDir, m, tags.record(
-          m.copy(bands = m.bands :+ bDir, shingles = m.shingles :+ sDir,
-            nDocs = m.nDocs + n), batchTag), Seq(bDir, sDir))
+      case Some((b, sh, n)) =>
+        store.commitOrDrop(spark, indexDir, m, withFiles(tags.record(
+          m.copy(bands = m.bands :+ b._1, shingles = m.shingles :+ sh._1,
+            nDocs = m.nDocs + n), batchTag), b, sh), Seq(b._1, sh._1))
         true
     }
   }
-
-  private def readRoots(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      roots: Seq[String], schema: org.apache.spark.sql.types.StructType): DataFrame =
-    roots.map(r => spark.read.schema(schema).parquet(s"$indexDir/$r"))
-      .reduce(_.unionByName(_))
 
   /** Tombstone `ids`: the docs stop appearing as `dup_id` in every later
     * probe, immediately and exactly; the physical band/shingle rows stay
@@ -190,31 +186,28 @@ object NearDupIndex {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = lock.synchronized {
     val spark = ids.sparkSession
-    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"deleteFromNearDupIndex: no readable index manifest at $indexDir"))
+    val m = store.required(spark, indexDir, "deleteFromNearDupIndex")
     val delIds = ids.select(col(idCol).cast("long").as("id")).distinct()
     val delPs = delIds
       .select(pmod(xxhash64(col("id")), lit(m.numBuckets.toLong)).cast("int").as("ps"))
       .distinct().collect().map(_.getInt(0)).toSeq
     if (m.shingles.isEmpty) return 0L // empty index: nothing to delete
-    val victims0 = readRoots(spark, indexDir, m.shingles, shingleSchema)
+    val victims0 = readRoots(spark, indexDir, m.shingles, m.files, shingleSchema, Some("ps"))
       .filter(col("ps").isin(delPs: _*))
       .join(delIds, Seq("id"), "left_semi")
       .select(col("id"), col("ps"))
     val victims = if (m.tombs.isEmpty) victims0
       else victims0.join(tombIds(spark, indexDir, m), Seq("id"), "left_anti")
-    val tDir = s"tombs-${java.util.UUID.randomUUID}"
-    victims.repartition(col("ps"))
-      .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$tDir")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = spark.read.schema(tombSchema).parquet(s"$indexDir/$tDir").count()
+    val t @ (tDir, _) = stage(victims, indexDir, "tombs-", Some("ps"))
+    val n = readRoots(spark, indexDir, Seq(tDir), Map(t), tombSchema, Some("ps"))
+      .count()
     if (n == 0) { // nothing newly deleted: drop the stage, swap nothing
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
+      new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
     store.commitOrDrop(spark, indexDir, m,
-      m.copy(tombs = m.tombs :+ tDir, nDeleted = m.nDeleted + n), Seq(tDir))
+      withFiles(m.copy(tombs = m.tombs :+ tDir, nDeleted = m.nDeleted + n), t), Seq(tDir))
     n
   }
 
@@ -240,8 +233,7 @@ object NearDupIndex {
       maxBucketSize: Int = 5000,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val m = store.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"probeNearDupIndex: no readable index manifest at $indexDir"))
+    val m = store.required(spark, indexDir, "probeNearDupIndex")
     val psh = probe.select(col(idCol).cast("long").as("probe_id"),
         Text.shingles(col(textCol), m.shingleK).as("psh"))
       .filter(size(col("psh")) > 0)
@@ -259,7 +251,7 @@ object NearDupIndex {
     // bucket in the pruned partitions. At bench scale this is noise (the
     // probe is job-overhead-bound); at corpus scale the difference is a
     // probe-bounded aggregation vs a corpus-bounded one.
-    val matched = readRoots(spark, indexDir, m.bands, bandSchema)
+    val matched = readRoots(spark, indexDir, m.bands, m.files, bandSchema, Some("pb"))
       .filter(col("pb").isin(pbs: _*))
       .join(broadcast(pbands.select(col("bh")).distinct()), Seq("bh"), "left_semi")
     val small = matched.groupBy(col("bh")).agg(count(lit(1)).as("__n"))
@@ -278,10 +270,10 @@ object NearDupIndex {
     // for the fold); the dead-id scan prunes to the candidates' buckets
     val candidates = if (m.tombs.isEmpty) candidates0
       else candidates0.join(
-        readRoots(spark, indexDir, m.tombs, tombSchema)
+        readRoots(spark, indexDir, m.tombs, m.files, tombSchema, Some("ps"))
           .filter(col("ps").isin(dupPs: _*)).select(col("id").as("dup_id")),
         Seq("dup_id"), "left_anti")
-    val idxSh = readRoots(spark, indexDir, m.shingles, shingleSchema)
+    val idxSh = readRoots(spark, indexDir, m.shingles, m.files, shingleSchema, Some("ps"))
       .filter(col("ps").isin(dupPs: _*))
       .select(col("id").as("dup_id"), col("sh"))
     candidates
@@ -306,20 +298,14 @@ object NearDupIndex {
       case Some(m) if m.bands.size > 1 || m.shingles.size > 1 ||
           m.tombs.nonEmpty || tags.pending(m) =>
         val dead = tombIds(spark, indexDir, m)
-        val bDir = s"bands-${java.util.UUID.randomUUID}"
-        readRoots(spark, indexDir, m.bands, bandSchema)
-          .join(dead, Seq("id"), "left_anti")
-          .repartition(col("pb"))
-          .write.mode("overwrite").partitionBy("pb").parquet(s"$indexDir/$bDir")
-        val sDir = s"shingles-${java.util.UUID.randomUUID}"
-        readRoots(spark, indexDir, m.shingles, shingleSchema)
-          .join(dead, Seq("id"), "left_anti")
-          .repartition(col("ps"))
-          .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$sDir")
-        store.commitOrDrop(spark, indexDir, m, tags.absorb(m.copy(
-          bands = Vector(bDir), shingles = Vector(sDir),
+        val b = stage(readRoots(spark, indexDir, m.bands, m.files, bandSchema, Some("pb"))
+          .join(dead, Seq("id"), "left_anti"), indexDir, "bands-", Some("pb"))
+        val sh = stage(readRoots(spark, indexDir, m.shingles, m.files, shingleSchema, Some("ps"))
+          .join(dead, Seq("id"), "left_anti"), indexDir, "shingles-", Some("ps"))
+        store.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m.copy(
+          bands = Vector(b._1), shingles = Vector(sh._1),
           tombs = Vector.empty,
-          nDocs = m.nDocs - m.nDeleted, nDeleted = 0L)), Seq(bDir, sDir))
+          nDocs = m.nDocs - m.nDeleted, nDeleted = 0L)), b, sh), Seq(b._1, sh._1))
         true
       case _ => false
     }

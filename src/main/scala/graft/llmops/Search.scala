@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.functions.expressions.TopKExpressions
-import graft.store.{ManifestStore, TagFence}
+import org.apache.spark.sql.types.StructType
+import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
+import graft.store.ManifestFileIndex.{Root, readRoots, stage}
 
 /** Keyword and hybrid retrieval over a document corpus — the lookup side of
   * a training-data pipeline (find documents for a probe set, attribute a
@@ -63,18 +65,24 @@ object Search {
     // corpus-level stats are over ALL documents (not just candidates)
     val corpus = docs.select(size(Text.tokens(col(textCol))).cast("double").as("__dl"))
       .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("__dl")).as("avgdl"))
-    // per-(query, doc, term) contribution, rounded then summed as decimal —
-    // exact, order-independent (see the object scaladoc)
-    val contrib = tf
-      .join(broadcast(dfreq), Seq("tok"))
-      .crossJoin(broadcast(corpus))
-      .join(broadcast(qterms), Seq("tok"))
+    bm25Scored(tf.join(broadcast(dfreq), Seq("tok")).crossJoin(broadcast(corpus))
+      .join(broadcast(qterms), Seq("tok")), col("n_docs"), col("avgdl"), k, k1, b, excludeSelf)
+  }
+
+  /** Top-k of BM25 over `(query_id, doc_id, tf, dl, df)` term rows: each
+    * per-(query, doc, term) contribution is rounded then summed as decimal
+    * — exact, order-independent (see the object scaladoc).
+    */
+  private def bm25Scored(terms: DataFrame, nDocs: org.apache.spark.sql.Column,
+      avgdl: org.apache.spark.sql.Column, k: Int, k1: Double, b: Double,
+      excludeSelf: Boolean): DataFrame = {
+    val perDoc = terms
       .withColumn("__w", round(
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+        log(lit(1.0) + (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
           (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))), 6)
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl)), 6)
         .cast("decimal(18,6)"))
-    val perDoc = contrib.groupBy(col("query_id"), col("doc_id"))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__w")).as("__dec"))
     val scoped =
       if (excludeSelf) perDoc.filter(col("query_id") =!= col("doc_id")) else perDoc
@@ -211,6 +219,11 @@ object Search {
   //                        proportional to the BATCH vocabulary, never
   //                        the corpus vocabulary
   //
+  // Read contract: each family reads as ONE parquet scan over the part
+  // files the manifest records (graft.store.ManifestFileIndex), its
+  // `bucket`/`ps` partition filter pruning to the probed buckets; it
+  // lists nothing.
+  //
   // nDocs/sumDl are exact integer totals (avgdl = sumDl/nDocs reproduces
   // the scan form's avg() bit-for-bit — integer-valued doubles sum
   // exactly), and tf/df/dl are integer-valued, so indexed scores are
@@ -237,8 +250,8 @@ object Search {
     * remembered exactly in `appliedTags` (bounded by the caller's tag
     * universe; legacy manifests may hold numeric tags here too — they are
     * honored on read and absorbed into the high-water at compaction).
-    */
-  /** `levelRoots` counts the leading postings roots that are FOLD
+    *
+    * `levelRoots` counts the leading postings roots that are FOLD
     * products (base + minor-fold L1s) — a minor fold must never re-fold
     * them, or per-fold cost would grow with the stream's lifetime instead
     * of the data appended since the last fold. The first `levelRoots - 1`
@@ -279,7 +292,9 @@ object Search {
       docLensFull: Boolean = false,
       tombs: Vector[String] = Vector.empty,
       nDeleted: Long = 0L,
-      sumDlDeleted: Long = 0L)
+      sumDlDeleted: Long = 0L,
+      // per root, its part files (absent on older indexes: their roots list)
+      files: Map[String, Vector[PartFile]] = Map.empty)
 
   /** A sequence tag is a [[TagFence.numericTag]] digit string, or the
     * historical `stream-batch-<n>` prefix this module's own streaming
@@ -326,11 +341,11 @@ object Search {
     require(numBuckets > 0, "buildTextIndex: numBuckets must be positive")
     val spark = docs.sparkSession
     val m0 = textStore.read(spark, indexDir)
-    val (pDir, dDir, lDir, n, sumDl) =
+    val (p, d, l, n, sumDl) =
       stageIndexDelta(docs, indexDir, numBuckets, idCol, textCol, skipIfEmpty = false).get
     textStore.commitIfUnchanged(spark, indexDir, m0,
-      TextIndexManifest(numBuckets, n, sumDl, dDir, Vector(pDir),
-        docLens = Vector(lDir), docLensFull = true))
+      withFiles(TextIndexManifest(numBuckets, n, sumDl, d._1, Vector(p._1),
+        docLens = Vector(l._1), docLensFull = true), p, d, l))
   }
 
   /** Append a document batch to an existing index: stage a new postings
@@ -358,20 +373,19 @@ object Search {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = textLock.synchronized {
     val spark = docs.sparkSession
-    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"appendToTextIndex: no readable index manifest at $indexDir"))
+    val m = textStore.required(spark, indexDir, "appendToTextIndex")
     if (batchTag.exists(tags.applied(m, _))) return false // replayed batch
     val staged = stageIndexDelta(docs, indexDir, m.numBuckets,
       idCol, textCol, skipIfEmpty = true)
     if (staged.isEmpty) return false // empty batch: nothing was written
-    val (pDir, dDir, lDir, n, sumDl) = staged.get
+    val (p, d, l, n, sumDl) = staged.get
     val next = m.copy(
       nDocs = m.nDocs + n, sumDl = m.sumDl + sumDl,
-      postings = m.postings :+ pDir, dicts = m.dicts :+ dDir,
-      docLens = m.docLens :+ lDir) // docLensFull inherited: appends can't
+      postings = m.postings :+ p._1, dicts = m.dicts :+ d._1,
+      docLens = m.docLens :+ l._1) // docLensFull inherited: appends can't
                                    // retrofit coverage a legacy base lacks
-    textStore.commitOrDrop(spark, indexDir, m, tags.record(next, batchTag),
-      Seq(pDir, dDir, lDir))
+    textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.record(next, batchTag), p, d, l),
+      Seq(p._1, d._1, l._1))
     true
   }
 
@@ -411,8 +425,7 @@ object Search {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = textLock.synchronized {
     val spark = ids.sparkSession
-    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"deleteFromTextIndex: no readable index manifest at $indexDir"))
+    val m = textStore.required(spark, indexDir, "deleteFromTextIndex")
     if (!m.docLensFull) throw new IllegalStateException(
       s"deleteFromTextIndex: index at $indexDir predates the doc-length " +
         "sidecar (docLensFull=false) — stats could not be adjusted exactly; " +
@@ -424,56 +437,39 @@ object Search {
     val delPs = delIds
       .select(pmod(xxhash64(col("doc_id")), lit(m.numBuckets.toLong)).cast("int").as("ps"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val victims0 = readDocLenRoots(spark, indexDir, m.docLens,
-        m.numBuckets, Some(delPs))
+    val victims0 = readRoots(spark, indexDir, m.docLens, m.files, docLenSchema, Some("ps"))
+      .filter(col("ps").isin(delPs: _*))
       .join(delIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("dl"))
     val victims = if (m.tombs.isEmpty) victims0
       else victims0.join(tombIds(spark, indexDir, m), Seq("doc_id"), "left_anti")
     // stage first, then read the staged root back for the exact totals —
     // one compute of the join, and the stats are exactly what was written
-    val tDir = s"tombs-${java.util.UUID.randomUUID}"
-    victims.write.mode("overwrite").parquet(s"$indexDir/$tDir")
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = spark.read.schema(tombSchema).parquet(s"$indexDir/$tDir")
+    val t @ (tDir, _) = stage(victims, indexDir, "tombs-", None)
+    val stats = readRoots(spark, indexDir, Seq(t._1), Map(t), tombSchema, None)
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
     val (n, sdl) = (stats.getLong(0), stats.getLong(1))
     if (n == 0) { // nothing newly deleted: drop the stage, swap nothing
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
+      new org.apache.hadoop.fs.Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
-    textStore.commitOrDrop(spark, indexDir, m, m.copy(
+    textStore.commitOrDrop(spark, indexDir, m, withFiles(m.copy(
       tombs = m.tombs :+ tDir,
-      nDeleted = m.nDeleted + n, sumDlDeleted = m.sumDlDeleted + sdl), Seq(tDir))
+      nDeleted = m.nDeleted + n, sumDlDeleted = m.sumDlDeleted + sdl), t), Seq(tDir))
     n
   }
 
-  // explicit read schemas: a build over an EMPTY corpus (the streaming
-  // start state) writes partition roots with no files, where schema
-  // inference would fail; partition column included so the empty frame
-  // still carries `bucket`
-  private val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("tok", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tf", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("dl", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType)))
-  private val dictSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("tok", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("df", org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType)))
+  // explicit read schemas, partition column included
+  private val postingsSchema =
+    StructType.fromDDL("tok STRING, doc_id BIGINT, tf DOUBLE, dl DOUBLE, bucket INT")
+  private val dictSchema = StructType.fromDDL("tok STRING, df DOUBLE, bucket INT")
   // tombstone roots: (doc_id, dl), read whole (they are delete-batch-sized)
-  private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl", org.apache.spark.sql.types.LongType)))
+  private val tombSchema = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
   // doc-length sidecar roots add an id-hash partition column so a delete
   // prunes its read to the batch's buckets instead of scanning the whole
   // corpus-sized sidecar
-  private val docLenSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ps", org.apache.spark.sql.types.IntegerType)))
+  private val docLenSchema = StructType.fromDDL("doc_id BIGINT, dl BIGINT, ps INT")
 
   /** Stage one batch's postings root, df-delta root, and doc-length
     * sidecar root (each holding only the batch's rows/vocabulary — see
@@ -486,7 +482,8 @@ object Search {
     * streaming start state.)
     */
   private def stageIndexDelta(docs: DataFrame, indexDir: String, numBuckets: Int,
-      idCol: String, textCol: String, skipIfEmpty: Boolean): Option[(String, String, String, Long, Long)] = {
+      idCol: String, textCol: String,
+      skipIfEmpty: Boolean): Option[(Root, Root, Root, Long, Long)] = {
     val spark = docs.sparkSession
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       Text.tokens(col(textCol)).as("__toks"))
@@ -500,126 +497,48 @@ object Search {
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(numBuckets.toLong)).cast("int"))
-    val pDir = s"postings-${java.util.UUID.randomUUID}"
     // one writer task per bucket hash (the IVF index's repartition(cell)
     // layout): without it every shuffle task writes a file into every
     // bucket dir — numBuckets x tasks files per root, and the probe pays
     // that file count on every query (measured 2.7x on the fresh-build
     // probe at sf0.01). numBuckets is the write-parallelism floor here,
     // which is exactly its documented sizing contract.
-    postings.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$pDir")
+    val p = stage(postings, indexDir, "postings-", Some("bucket"))
     // df delta from the STAGED postings (one narrow read-back — cheaper
     // than recomputing the tokenize+tf pipeline, and exactly consistent
     // with what was written). Only the batch's buckets materialize as
     // partitions — untouched vocabulary is never read or rewritten.
-    val dfDelta = spark.read.schema(postingsSchema).parquet(s"$indexDir/$pDir")
-      .groupBy(col("tok"), col("bucket")).agg(count(lit(1)).cast("double").as("df"))
-    val dDir = s"dict-${java.util.UUID.randomUUID}"
-    dfDelta.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$dDir")
+    val d = stage(readRoots(spark, indexDir, Seq(p._1), Map(p), postingsSchema, Some("bucket"))
+      .groupBy(col("tok"), col("bucket")).agg(count(lit(1)).cast("double").as("df")),
+      indexDir, "dict-", Some("bucket"))
     // doc-length sidecar: the per-document row a later delete joins
     // against to fix nDocs/sumDl exactly (16 bytes/doc — noise next to
     // the postings, and the only way a ZERO-TOKEN doc leaves any trace).
     // Partitioned by id hash so a delete prunes to its batch's buckets
     // instead of scanning the corpus-sized sidecar.
-    val lDir = s"doclens-${java.util.UUID.randomUUID}"
-    base.select(col("doc_id"), size(col("__toks")).cast("long").as("dl"))
-      .withColumn("ps", pmod(xxhash64(col("doc_id")), lit(numBuckets.toLong)).cast("int"))
-      .repartition(col("ps"))
-      .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$lDir")
-    Some((pDir, dDir, lDir, n, sumDl))
+    val l = stage(base.select(col("doc_id"), size(col("__toks")).cast("long").as("dl"))
+      .withColumn("ps", pmod(xxhash64(col("doc_id")), lit(numBuckets.toLong)).cast("int")),
+      indexDir, "doclens-", Some("ps"))
+    Some((p, d, l, n, sumDl))
   }
 
-  // ONE datasource scan over many sibling roots (guide §6: the previous
-  // one-read-per-root union paid a file listing + a scan operator per
-  // root — the dominant cost of a 51-root degraded probe was that fixed
-  // per-root overhead). A plain multi-path read would trip partition
-  // inference across sibling roots (CONFLICTING_DIRECTORY_STRUCTURES),
-  // so the scan reads with `recursiveFileLookup` and the DATA schema and
-  // re-derives the partition column — it is a pure function of a data
-  // column for every family here (`bucket` = hash(tok) % numBuckets,
-  // `ps` = hash(doc_id) % numBuckets, written by exactly the expression
-  // re-derived at read). With `parts` given, ONE Hadoop glob over
-  // roots x values selects the matching partition directories, so the
-  // probe keeps its path-level bucket pruning. Shared by the query path
-  // and the fold path so their read shapes can't diverge.
-  private def readFamilySingle(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      roots: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      partColName: String, derive: org.apache.spark.sql.Column,
-      parts: Option[Seq[Int]]): DataFrame = {
-    val dataSchema =
-      org.apache.spark.sql.types.StructType(schema.filterNot(_.name == partColName))
-    def read(paths: Seq[String]) =
-      spark.read.schema(dataSchema).option("recursiveFileLookup", "true")
-        .parquet(paths: _*).withColumn(partColName, derive)
-    parts match {
-      case None => read(roots.map(r => s"$indexDir/$r"))
-      case Some(vals) =>
-        val existing: Seq[String] =
-          if (vals.isEmpty) Nil
-          else {
-            // indexDir holds no glob metacharacter: textStore.read refuses one
-            val pattern = new org.apache.hadoop.fs.Path(
-              s"$indexDir/{${roots.mkString(",")}}/$partColName={${vals.mkString(",")}}")
-            val fs = new org.apache.hadoop.fs.Path(indexDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            Option(fs.globStatus(pattern)).fold(Seq.empty[String])(
-              _.map(_.getPath.toString).toSeq)
-          }
-        if (existing.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else read(existing)
-    }
+  /** `next` with the staged roots' files recorded and the files of roots
+    * it no longer names dropped.
+    */
+  private def withFiles(next: TextIndexManifest, staged: Root*): TextIndexManifest = {
+    val live = liveRoots(next)
+    next.copy(files = (next.files ++ staged).filter { case (r, _) => live(r) })
   }
 
-  private def bucketOfTok(numBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("tok")), lit(numBuckets.toLong)).cast("int")
-
-  private def readPostingsRoots(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, roots: Seq[String], numBuckets: Int,
-      buckets: Option[Seq[Int]] = None): DataFrame =
-    readFamilySingle(spark, indexDir, roots, postingsSchema,
-      "bucket", bucketOfTok(numBuckets), buckets)
-
-  private def readDictRoots(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, roots: Seq[String], numBuckets: Int,
-      buckets: Option[Seq[Int]] = None): DataFrame =
-    readFamilySingle(spark, indexDir, roots, dictSchema,
-      "bucket", bucketOfTok(numBuckets), buckets)
-
-  private def readDocLenRoots(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, roots: Seq[String], numBuckets: Int,
-      ps: Option[Seq[Int]] = None): DataFrame =
-    readFamilySingle(spark, indexDir, roots, docLenSchema, "ps",
-      pmod(xxhash64(col("doc_id")), lit(numBuckets.toLong)).cast("int"), ps)
+  private def liveRoots(m: TextIndexManifest): Set[String] =
+    (m.postings ++ m.dicts ++ m.docLens ++ m.tombs :+ m.dict).toSet
 
   /** All tombstoned ids — roots are disjoint by construction (every
     * delete anti-joins the prior tombstones), so the union IS the set.
-    * Plain unpartitioned dirs: one recursive multi-path scan.
     */
   private def tombIds(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, m: TextIndexManifest): DataFrame =
-    spark.read.schema(tombSchema).option("recursiveFileLookup", "true")
-      .parquet(m.tombs.map(d => s"$indexDir/$d"): _*).select(col("doc_id"))
-
-  /** Live postings rows, optionally path-pruned to the probed buckets. */
-  private def postingsFrame(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, m: TextIndexManifest,
-      buckets: Option[Seq[Int]] = None): DataFrame =
-    readPostingsRoots(spark, indexDir, m.postings, m.numBuckets, buckets)
-
-  /** Document frequencies summed across the base dict root and every
-    * append's delta root. df values are integer-valued doubles, so the
-    * sum is exact at any root count/order — indexed scores stay
-    * bit-identical to the scan form.
-    */
-  private def dictFrame(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, m: TextIndexManifest,
-      buckets: Option[Seq[Int]] = None): DataFrame =
-    readDictRoots(spark, indexDir, m.dict +: m.dicts, m.numBuckets, buckets)
+    readRoots(spark, indexDir, m.tombs, m.files, tombSchema, None).select(col("doc_id"))
 
   /** Fold append roots back together — the text analog of
     * [[Similarity.compactIvfAppends]], and the reference's own lifecycle
@@ -656,25 +575,19 @@ object Search {
   def compactTextIndex(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       includeBase: Boolean = true): Boolean = textLock.synchronized {
-    def foldRoots(postRoots: Seq[String], dictRoots: Seq[String],
-        numBuckets: Int): (String, Option[String]) = {
-      val pDir = s"postings-${java.util.UUID.randomUUID}"
-      // one task per bucket hash: each bucket partition folds to a
-      // bounded file count instead of one file per (root x bucket)
-      readPostingsRoots(spark, indexDir, postRoots, numBuckets)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$pDir")
+    // one task per bucket hash: each bucket partition folds to a bounded
+    // file count instead of one file per (root x bucket)
+    def foldRoots(m: TextIndexManifest, postRoots: Seq[String],
+        dictRoots: Seq[String]): (Root, Option[Root]) = {
+      val p = stage(readRoots(spark, indexDir, postRoots, m.files, postingsSchema, Some("bucket")),
+        indexDir, "postings-", Some("bucket"))
       // a legacy manifest (pre-delta-dict format) may fold postings with
       // NO dict deltas in play — nothing to write on that side
-      val dDirOpt = if (dictRoots.isEmpty) None else {
-        val dDir = s"dict-${java.util.UUID.randomUUID}"
-        readDictRoots(spark, indexDir, dictRoots, numBuckets)
-          .groupBy(col("tok"), col("bucket")).agg(sum(col("df")).as("df"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$dDir")
-        Some(dDir)
-      }
-      (pDir, dDirOpt)
+      val d = if (dictRoots.isEmpty) None
+        else Some(stage(readRoots(spark, indexDir, dictRoots, m.files, dictSchema, Some("bucket"))
+          .groupBy(col("tok"), col("bucket")).agg(sum(col("df")).as("df")),
+          indexDir, "dict-", Some("bucket")))
+      (p, d)
     }
     textStore.read(spark, indexDir) match {
       case Some(m) if includeBase && (m.postings.size > 1 || m.dicts.nonEmpty ||
@@ -685,50 +598,42 @@ object Search {
         // tombstones are in play (the summed dfs count dead docs), the
         // doc-length sidecar folds minus the dead docs, and the manifest
         // absorbs nDeleted/sumDlDeleted into the base totals
-        val pDir = s"postings-${java.util.UUID.randomUUID}"
-        val all = readPostingsRoots(spark, indexDir, m.postings, m.numBuckets)
+        val all = readRoots(spark, indexDir, m.postings, m.files, postingsSchema, Some("bucket"))
         val live = if (m.tombs.isEmpty) all
           else all.join(broadcast(tombIds(spark, indexDir, m)), Seq("doc_id"), "left_anti")
-        live.repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$pDir")
-        val dDir = s"dict-${java.util.UUID.randomUUID}"
+        val p = stage(live, indexDir, "postings-", Some("bucket"))
         val foldedDict =
           if (m.tombs.isEmpty)
-            readDictRoots(spark, indexDir, m.dict +: m.dicts, m.numBuckets)
+            readRoots(spark, indexDir, m.dict +: m.dicts, m.files, dictSchema, Some("bucket"))
               .groupBy(col("tok"), col("bucket")).agg(sum(col("df")).as("df"))
           else // one postings row per live (doc, tok): the row count IS df
-            spark.read.schema(postingsSchema).parquet(s"$indexDir/$pDir")
+            readRoots(spark, indexDir, Seq(p._1), Map(p), postingsSchema, Some("bucket"))
               .groupBy(col("tok"), col("bucket"))
               .agg(count(lit(1)).cast("double").as("df"))
-        foldedDict.repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/$dDir")
-        val lDirOpt = if (m.docLens.isEmpty) None else {
-          val lDir = s"doclens-${java.util.UUID.randomUUID}"
-          val lens = readDocLenRoots(spark, indexDir, m.docLens, m.numBuckets)
-          (if (m.tombs.isEmpty) lens
-           else lens.join(broadcast(tombIds(spark, indexDir, m)), Seq("doc_id"), "left_anti"))
-            .repartition(col("ps"))
-            .write.mode("overwrite").partitionBy("ps").parquet(s"$indexDir/$lDir")
-          Some(lDir)
+        val d = stage(foldedDict, indexDir, "dict-", Some("bucket"))
+        val l = if (m.docLens.isEmpty) None else {
+          val lens = readRoots(spark, indexDir, m.docLens, m.files, docLenSchema, Some("ps"))
+          Some(stage(if (m.tombs.isEmpty) lens
+            else lens.join(broadcast(tombIds(spark, indexDir, m)), Seq("doc_id"), "left_anti"),
+            indexDir, "doclens-", Some("ps")))
         }
-        textStore.commitOrDrop(spark, indexDir, m, tags.absorb(m).copy(
-          dict = dDir, dicts = Vector.empty, postings = Vector(pDir),
-          levelRoots = 1, docLens = lDirOpt.toVector,
+        textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m).copy(
+          dict = d._1, dicts = Vector.empty, postings = Vector(p._1),
+          levelRoots = 1, docLens = l.map(_._1).toVector,
           tombs = Vector.empty,
           nDocs = m.nDocs - m.nDeleted, sumDl = m.sumDl - m.sumDlDeleted,
-          nDeleted = 0L, sumDlDeleted = 0L),
-          Seq(pDir, dDir) ++ lDirOpt)
+          nDeleted = 0L, sumDlDeleted = 0L), Seq(p, d) ++ l: _*),
+          Seq(p._1, d._1) ++ l.map(_._1))
         true
       case Some(m) if !includeBase && m.postings.size - m.levelRoots >= 2 =>
         // fold ONLY the L0s — prior fold products stay untouched
-        val (pDir, dDirOpt) = foldRoots(
-          m.postings.drop(m.levelRoots), m.dicts.drop(m.levelRoots - 1),
-          m.numBuckets)
-        textStore.commitOrDrop(spark, indexDir, m, tags.absorb(m).copy(
-          postings = m.postings.take(m.levelRoots) :+ pDir,
-          dicts = m.dicts.take(m.levelRoots - 1) ++ dDirOpt.toVector,
-          levelRoots = m.levelRoots + 1),
-          pDir +: dDirOpt.toSeq)
+        val (p, d) = foldRoots(m,
+          m.postings.drop(m.levelRoots), m.dicts.drop(m.levelRoots - 1))
+        textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m).copy(
+          postings = m.postings.take(m.levelRoots) :+ p._1,
+          dicts = m.dicts.take(m.levelRoots - 1) ++ d.map(_._1).toVector,
+          levelRoots = m.levelRoots + 1), p +: d.toSeq: _*),
+          p._1 +: d.map(_._1).toSeq)
         true
       case Some(m) if tags.pending(m) =>
         // nothing to fold — only legacy numeric tags to absorb: a pure
@@ -748,8 +653,8 @@ object Search {
     * row is rewritten O(log growth) times over a stream's lifetime, never
     * per fold cycle. (A major is also when a replayed base-row duplicate
     * finally collapses — see [[Similarity.compactIvfAppends]]'s note on
-    * the same policy for vectors.) Root sizes come from one FS content
-    * summary per root — fold-cadence metadata, not a data read.
+    * the same policy for vectors.) Root sizes are the byte lengths the
+    * manifest records for each root's files.
     *
     * A major ALSO fires once tombstoned docs exceed `deadRatio` of the
     * indexed corpus (manifest counters — free to check): every query pays
@@ -765,11 +670,8 @@ object Search {
       case Some(m) if m.nDeleted > 0 && m.nDeleted >= deadRatio * m.nDocs =>
         compactTextIndex(spark, indexDir)
       case Some(m) if m.postings.size > 1 =>
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def bytes(root: String): Long =
-          try fs.getContentSummary(new org.apache.hadoop.fs.Path(s"$indexDir/$root")).getLength
-          catch { case _: java.io.FileNotFoundException => 0L }
+        def bytes(root: String): Long = ManifestFileIndex.rootFiles(spark, indexDir,
+          Seq(root), m.files, Some("bucket")).map(_.length).sum
         val base = math.max(1L, bytes(m.postings.head))
         if (m.postings.tail.map(bytes).sum >= majorSizeRatio * base)
           compactTextIndex(spark, indexDir)
@@ -796,8 +698,7 @@ object Search {
       excludeSelf: Boolean = false,
       queryIdCol: String = "query_id",
       queryTextCol: String = "qtext"): DataFrame = {
-    val m = textStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
-      s"bm25TopKIndexed: no readable index manifest at $indexDir"))
+    val m = textStore.required(spark, indexDir, "bm25TopKIndexed")
     // LIVE corpus stats: exact integer totals minus the tombstoned docs'
     // exact contributions — avgdl reproduces the scan form's avg() over
     // the remaining corpus bit-for-bit. Any value serves an empty index
@@ -810,15 +711,15 @@ object Search {
     val buckets = qterms.select(
         pmod(xxhash64(col("tok")), lit(m.numBuckets.toLong)).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    // ONE datasource scan per family, path-pruned to the probed buckets
-    // (readFamilySingle: a glob over roots x buckets replaces both the
-    // per-root scan operators and the per-root bucket filters). The df
-    // sum across the base dict + append deltas runs over the PRUNED
-    // buckets only — bounded by the query terms' vocabulary, not the
-    // corpus's.
-    val prunedPostings = postingsFrame(spark, indexDir, m, Some(buckets))
-    val dictTotals = dictFrame(spark, indexDir, m, Some(buckets))
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+    // ONE scan per family, its partition filter pruning to the probed
+    // buckets' files. The df sum across the base dict + append deltas
+    // (integer-valued doubles: exact at any root count/order) runs over
+    // the PRUNED buckets only — bounded by the query vocabulary.
+    val inBuckets = col("bucket").isin(buckets: _*)
+    val prunedPostings = readRoots(spark, indexDir, m.postings, m.files, postingsSchema,
+      Some("bucket")).filter(inBuckets)
+    val dictTotals = readRoots(spark, indexDir, m.dict +: m.dicts, m.files, dictSchema,
+      Some("bucket")).filter(inBuckets).groupBy(col("tok")).agg(sum(col("df")).as("df"))
     // tombstones subtract at read (the purge is the major fold's job):
     // dead postings rows still sit in the roots AND in the dict's df
     // sums, so one broadcast of the tombstoned ids both filters the
@@ -836,20 +737,8 @@ object Search {
             .select(col("tok"),
               (col("df") - coalesce(col("__ddf"), lit(0.0))).as("df")))
       }
-    val contrib = postings
-      .join(broadcast(dict), Seq("tok"))
-      .join(broadcast(qterms), Seq("tok"))
-      .withColumn("__w", round(
-        log(lit(1.0) + (lit(nLive.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))), 6)
-        .cast("decimal(18,6)"))
-    val perDoc = contrib.groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("__w")).as("__dec"))
-    val scoped =
-      if (excludeSelf) perDoc.filter(col("query_id") =!= col("doc_id")) else perDoc
-    topKScored(scoped.select(col("query_id"), col("doc_id"),
-      col("__dec").cast("double").as("score")), k)
+    bm25Scored(postings.join(broadcast(dict), Seq("tok")).join(broadcast(qterms), Seq("tok")),
+      lit(nLive.toDouble), lit(avgdl), k, k1, b, excludeSelf)
   }
 
   /** Delete index dirs the manifest no longer references — crashed stages
@@ -867,7 +756,6 @@ object Search {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       minAgeMs: Long = 600000L): Int = textLock.synchronized {
     textStore.vacuum(spark, indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
-      (m.postings ++ m.dicts ++ m.docLens ++ m.tombs :+ m.dict).toSet,
-      "postings-", "dict-", "doclens-", "tombs-")))
+      liveRoots(m), "postings-", "dict-", "doclens-", "tombs-")))
   }
 }

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.store.{ManifestStore, TagFence}
+import org.apache.spark.sql.types.{DecimalType, StructType}
+import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
 
 /** Incrementally-maintained materialized aggregate views — the LSM write
   * discipline (reference: `kv/lsm/level.go:82` flushes immutable runs,
@@ -31,6 +32,11 @@ import graft.store.{ManifestStore, TagFence}
   * partitioning and ANY append order; the Catalog row `q_agg_view` is
   * FULLY oracled on that property.
   *
+  * Read contract: every read is ONE parquet scan over the part files and
+  * data schema the manifest records ([[graft.store.ManifestFileIndex]]),
+  * listing nothing; a staged root whose footers do not read under that
+  * schema aborts its commit.
+  *
   * Scale shape: each root is hash-partitioned on the group keys (`pk`),
   * so [[lookupAggView]] point reads prune to one partition; a root's size
   * is bounded by KEY CARDINALITY, not ingested rows — the read-side merge
@@ -57,7 +63,11 @@ object AggView {
       histCols: Seq[String] = Nil,
       histLo: Double = 0.0,
       histHi: Double = 0.0,
-      histBins: Int = 0)
+      histBins: Int = 0,
+      // per root, its part files; the roots' data schema (StructType.json).
+      // Absent on older views: their roots list and a footer gives the schema
+      files: Map[String, Vector[PartFile]] = Map.empty,
+      schema: String = "")
 
   private val lock = new Object
 
@@ -185,14 +195,41 @@ object AggView {
     }
 
   private def stageRoot(df: DataFrame, viewDir: String, m: AggViewManifest,
-      skipIfEmpty: Boolean): Option[(String, Long)] = {
+      skipIfEmpty: Boolean): Option[(ManifestFileIndex.Root, Long)] = {
     val n = df.count()
-    if (skipIfEmpty && n == 0) return None
-    val dir = s"agg-${java.util.UUID.randomUUID}"
-    partialAgg(df, m)
-      .repartition(col("pk"))
-      .write.mode("overwrite").partitionBy("pk").parquet(s"$viewDir/$dir")
-    Some((dir, n))
+    if (skipIfEmpty && n == 0) None
+    else Some((ManifestFileIndex.stage(partialAgg(df, m), viewDir, "agg-", Some("pk")), n))
+  }
+
+  /** The roots' data schema, every non-key decimal widened to precision
+    * 38: append roots store `m__sum` as decimal(p+10, s), fold roots as
+    * decimal(38, s), and the reader widens the narrower one losslessly.
+    */
+  private def rootSchema(partial: StructType, keys: Seq[String]): StructType =
+    StructType(ManifestFileIndex.dataSchema(partial, "pk").map { f =>
+      f.dataType match {
+        case d: DecimalType if !keys.contains(f.name) => f.copy(dataType = DecimalType(38, d.scale))
+        case _ => f
+      }
+    })
+
+  /** The view's root files and their data schema. */
+  private def filesAndSchema(spark: SparkSession, viewDir: String,
+      m: AggViewManifest): (Seq[PartFile], StructType) = {
+    val files = ManifestFileIndex.rootFiles(spark, viewDir, m.roots, m.files, Some("pk"))
+    (files, rootSchema(ManifestFileIndex.recordedSchema(spark, m.schema, files), m.keys))
+  }
+
+  /** `next` with the staged root's files and the view's schema recorded,
+    * once the staged files read under that schema. Evaluated inside
+    * `commitOrDrop`, so a root that does not read aborts the commit.
+    */
+  private def withStaged(spark: SparkSession, viewDir: String, m: AggViewManifest,
+      staged: ManifestFileIndex.Root, next: AggViewManifest): AggViewManifest = {
+    val schema = filesAndSchema(spark, viewDir, m)._2
+    ManifestFileIndex.requireReadable(spark, viewDir, staged, schema)
+    next.copy(files = (m.files + staged).filter { case (r, _) => next.roots.contains(r) },
+      schema = schema.json)
   }
 
   /** Create a view at `viewDir` over `df`, grouped by `keys`, maintaining
@@ -227,9 +264,10 @@ object AggView {
       distinctCols = distinctCols, histCols = histCols,
       histLo = histLo, histHi = histHi,
       histBins = if (histCols.isEmpty) 0 else histBins)
-    val (dir, n) = stageRoot(df, viewDir, m0, skipIfEmpty = false).get
+    val (root, n) = stageRoot(df, viewDir, m0, skipIfEmpty = false).get
     store.commitIfUnchanged(spark, viewDir, prior,
-      m0.copy(roots = Vector(dir), nRows = n))
+      m0.copy(roots = Vector(root._1), nRows = n, files = Map(root),
+        schema = rootSchema(partialAgg(df, m0).schema, keys).json))
   }
 
   /** Fold one delta batch into the view: O(delta) — one partial agg over
@@ -243,59 +281,29 @@ object AggView {
       df: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = df.sparkSession
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"appendToAggView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "appendToAggView")
     if (batchTag.exists(tags.applied(m, _))) return false
     stageRoot(df, viewDir, m, skipIfEmpty = true) match {
       case None => false
-      case Some((dir, n)) =>
-        store.commitOrDrop(spark, viewDir, m, tags.record(
-          m.copy(roots = m.roots :+ dir, nRows = m.nRows + n), batchTag), Seq(dir))
-        true
+      case Some((root, n)) => commitAppend(spark, viewDir, m, root, n, batchTag); true
     }
   }
 
-  private def readRoots(spark: SparkSession, viewDir: String,
-      m: AggViewManifest): DataFrame =
-    m.roots.map(r => spark.read.parquet(s"$viewDir/$r"))
-      .reduce(_.unionByName(_))
-
-  /** All roots in ONE datasource scan (guide §6: the 51-separate-reads
-    * form paid one file listing + one parquet schema inference + one
-    * scan operator PER ROOT — the degraded long-append read's dominant
-    * cost was that fixed per-root overhead, not data). Sibling roots
-    * trip Spark's multi-path partition discovery
-    * (CONFLICTING_DIRECTORY_STRUCTURES), so this reads with
-    * `recursiveFileLookup` — no partition columns, one shared file
-    * index, one footer inference — which drops the directory-derived
-    * `pk`. That is fine for every MERGE consumer (the merge
-    * re-aggregates by the group keys and never touches `pk`);
-    * [[lookupAggView]] keeps the per-root partition-discovery path
-    * because pk-pruned point reads are its whole point.
-    *
-    * Decimal widening: append roots store `m__sum` as the partial agg's
-    * decimal(p+10, s) while FOLD roots store the re-aggregated
-    * decimal(38, s) — one sampled footer cannot read both
-    * (PARQUET_COLUMN_DATA_TYPE_MISMATCH, caught by AggViewFuzzSpec's
-    * fold/append interleavings). The read schema is the first root's
-    * footer with every decimal widened to precision 38 at its own scale;
-    * Spark 4's vectorized reader widens narrower stored decimals
-    * losslessly, and the old unionByName path coerced mixed roots to the
-    * same decimal(38, s) anyway, so merged values are bit-identical.
+  /** Commit staged append root `staged` of `n` ingested rows against `m`;
+    * a root that does not read under the view's schema aborts and is
+    * dropped.
     */
-  private def readRootsMerged(spark: SparkSession, viewDir: String,
+  private[operators] def commitAppend(spark: SparkSession, viewDir: String, m: AggViewManifest,
+      staged: ManifestFileIndex.Root, n: Long, batchTag: Option[String]): Unit =
+    store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, staged,
+      tags.record(m.copy(roots = m.roots :+ staged._1, nRows = m.nRows + n), batchTag)),
+      Seq(staged._1))
+
+  /** All roots in ONE scan over their recorded files, with `pk`. */
+  private def readRoots(spark: SparkSession, viewDir: String,
       m: AggViewManifest): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, StructType}
-    val sampled = spark.read.parquet(s"$viewDir/${m.roots.head}").schema
-    val widened = StructType(sampled.map { f =>
-      f.dataType match {
-        case d: DecimalType if !m.keys.contains(f.name) =>
-          f.copy(dataType = DecimalType(38, d.scale))
-        case _ => f
-      }
-    }.filterNot(_.name == "pk"))
-    spark.read.schema(widened).option("recursiveFileLookup", "true")
-      .parquet(m.roots.map(r => s"$viewDir/$r"): _*)
+    val (files, schema) = filesAndSchema(spark, viewDir, m)
+    ManifestFileIndex.read(spark, files, schema, Some("pk"))
   }
 
   /** The merged PARTIAL state (keys..., __cnt, m__sum/min/max, one row
@@ -305,7 +313,7 @@ object AggView {
   private def mergedPartial(spark: SparkSession, viewDir: String,
       m: AggViewManifest): DataFrame = {
     val aggs = mergeAggs(m)
-    readRootsMerged(spark, viewDir, m)
+    readRoots(spark, viewDir, m)
       .groupBy(m.keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -316,20 +324,18 @@ object AggView {
     * ever ingested, regardless of how the rows arrived.
     */
   def readAggView(spark: SparkSession, viewDir: String): DataFrame = {
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"readAggView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "readAggView")
     mergedPartial(spark, viewDir, m).select(finalizeCols(m): _*)
   }
 
-  /** Point lookup of one key tuple — prunes every root scan to the key's
+  /** Point lookup of one key tuple — the one scan prunes to the key's
     * single `pk` partition (the view's answer to the reference's `Get`:
     * manifest → partition prune → merge). `values` align with the view's
     * `keys`.
     */
   def lookupAggView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"lookupAggView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "lookupAggView")
     require(values.length == m.keys.length,
       s"lookupAggView: ${m.keys.length} key values expected")
     val aggs = mergeAggs(m)
@@ -363,13 +369,10 @@ object AggView {
   def compactAggView(spark: SparkSession, viewDir: String): Boolean = lock.synchronized {
     store.read(spark, viewDir) match {
       case Some(m) if m.roots.size > 1 || tags.pending(m) =>
-        val dir = s"agg-${java.util.UUID.randomUUID}"
-        mergedPartial(spark, viewDir, m)
-          .withColumn("pk", pkExpr(m.keys, m.numBuckets))
-          .repartition(col("pk"))
-          .write.mode("overwrite").partitionBy("pk").parquet(s"$viewDir/$dir")
-        store.commitOrDrop(spark, viewDir, m,
-          tags.absorb(m.copy(roots = Vector(dir))), Seq(dir))
+        val root = ManifestFileIndex.stage(mergedPartial(spark, viewDir, m)
+          .withColumn("pk", pkExpr(m.keys, m.numBuckets)), viewDir, "agg-", Some("pk"))
+        store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, root,
+          tags.absorb(m.copy(roots = Vector(root._1)))), Seq(root._1))
         true
       case _ => false
     }

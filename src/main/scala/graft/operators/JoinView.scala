@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.store.{ManifestStore, TagFence}
+import org.apache.spark.sql.types.StructType
+import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
+import graft.store.ManifestFileIndex.{Root, stage}
 
 /** Incrementally-maintained materialized JOIN views — delta-join
   * maintenance for the enrichment join every pipeline materializes:
@@ -27,11 +29,11 @@ import graft.store.{ManifestStore, TagFence}
   *    root, one manifest swap.
   *  - Dim upserts are O(Δdim + affected buckets): the delta's keys
   *    touch a bounded set of pk buckets; ONLY those buckets' view rows
-  *    are re-joined (partition-pruned on every root) and written as a
-  *    replacement root. The manifest maps each pk bucket to the roots
-  *    that own it, so a rebuilt bucket atomically supersedes its old
-  *    rows WITHOUT row-level LWW at read time — readers pay a plain
-  *    pruned union, never a resolve.
+  *    are re-joined (partition-pruned) and written as a replacement
+  *    root. The manifest maps each pk bucket to the roots that own it,
+  *    so a rebuilt bucket atomically supersedes its old rows WITHOUT
+  *    row-level LWW at read time — readers pay one scan, never a
+  *    resolve.
   *  - The dim itself persists as LWW generations (`__seq`, `__del`),
   *    pk-partitioned for pruned bucket rebuilds; [[compactJoinView]]
   *    folds both the view roots and the dim generations.
@@ -44,25 +46,24 @@ import graft.store.{ManifestStore, TagFence}
   * cross-process window); [[vacuumJoinView]] reclaims orphans past an
   * age grace.
   *
+  * Read contract: a read is ONE parquet scan over the part files and
+  * data schemas the manifest records ([[graft.store.ManifestFileIndex]]),
+  * taking each root's files of the buckets it still owns only, so rows a
+  * rebuild superseded are never read; it lists nothing. A staged root
+  * whose footers do not read under the recorded schema aborts its commit.
+  *
   * Scale notes: no driver-side data collects — affected-bucket lists
-  * are bounded by `numBuckets`, read from the staged parquet's
-  * partition directories. The append join is a plain equi-join (AQE
-  * broadcasts a small dim; a large dim shuffles on the key like any
-  * keyed join). Bucket rebuilds scan only the affected partitions of
-  * each root (parquet partition pruning on `pk`).
+  * are bounded by `numBuckets`, taken from the staged root's recorded
+  * files. The append join is a plain equi-join (AQE broadcasts a small
+  * dim; a large dim shuffles on the key like any keyed join). Bucket
+  * rebuilds scan only the affected `pk` partitions.
   */
 object JoinView {
 
   // `pks` = the pk buckets this root currently OWNS (dim upserts narrow
-  // it as bucket ownership moves to rebuild roots); `fullPks` = the
-  // buckets the root's parquet dir physically CONTAINS (fixed at stage
-  // time). A root whose pks == fullPks needs no per-root bucket filter,
-  // which lets a full-view read collapse every such root into ONE
-  // datasource scan (see readRaw). Manifests written before fullPks
-  // existed deserialize it empty — treated as "unknown, assume
-  // narrowed", which safely falls back to the filtered per-root path.
-  private[operators] final case class RootEntry(dir: String, pks: Seq[Int],
-      fullPks: Seq[Int] = Nil)
+  // it as bucket ownership moves to rebuild roots); a read takes only the
+  // root's files of those buckets
+  private[operators] final case class RootEntry(dir: String, pks: Seq[Int])
 
   private[operators] final case class JoinViewManifest(
       joinKeys: Seq[String],
@@ -79,7 +80,13 @@ object JoinView {
       appliedTags: Vector[String] = Vector.empty,
       tagHighWater: Long = -1L,
       dimAppliedTags: Vector[String] = Vector.empty,
-      dimTagHighWater: Long = -1L)
+      dimTagHighWater: Long = -1L,
+      // per root (view roots and dim generations), its part files; their
+      // data schemas (StructType.json). Absent on older views: their roots
+      // list and a footer gives the schema
+      files: Map[String, Vector[PartFile]] = Map.empty,
+      schema: String = "",
+      dimSchema: String = "")
 
   private val lock = new Object
 
@@ -95,28 +102,39 @@ object JoinView {
   private def pkExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
 
-  /** pk partition values a staged parquet dir actually contains — read
-    * from the partition DIRECTORY NAMES (bounded by numBuckets), never
-    * from the data.
+  /** The pk buckets a staged root holds, from its recorded files. */
+  private def pksOf(files: Vector[PartFile]): Seq[Int] = files.flatMap(_.part).distinct.sorted
+
+  /** The dim generations' files (`dim`) or the view roots' files of the
+    * buckets each still owns, with their data schema.
     */
-  private def stagedPks(spark: SparkSession, dir: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("pk="))
-      .map(n => n.substring(3).toInt).toSeq.sorted
+  private def filesAndSchema(spark: SparkSession, viewDir: String, m: JoinViewManifest,
+      dim: Boolean): (Seq[PartFile], StructType) = {
+    val files =
+      if (dim) ManifestFileIndex.rootFiles(spark, viewDir, m.dimRoots, m.files, Some("pk"))
+      else m.roots.flatMap { r =>
+        val owned = r.pks.toSet
+        ManifestFileIndex.rootFiles(spark, viewDir, Seq(r.dir), m.files, Some("pk"))
+          .filter(f => owned(f.part.get))
+      }
+    (files, ManifestFileIndex.recordedSchema(spark, if (dim) m.dimSchema else m.schema, files))
+  }
+
+  /** [[filesAndSchema]] read as one scan. */
+  private def scan(spark: SparkSession, viewDir: String, m: JoinViewManifest,
+      dim: Boolean): DataFrame = {
+    val (files, schema) = filesAndSchema(spark, viewDir, m, dim)
+    ManifestFileIndex.read(spark, files, schema, Some("pk"))
   }
 
   /** Current dimension state: LWW per key across generations, tombstones
-    * dropped. `pkFilter` prunes every generation scan to the probed
+    * dropped. `pkFilter` prunes the generations' one scan to the probed
     * buckets (None = full dim).
     */
   private def dimCurrent(spark: SparkSession, viewDir: String,
       m: JoinViewManifest, pkFilter: Option[Seq[Int]]): DataFrame = {
-    val gens = m.dimRoots.map { r =>
-      val df = spark.read.parquet(s"$viewDir/$r")
-      pkFilter.fold(df)(pks => df.filter(col("pk").isin(pks: _*)))
-    }.reduce(_.unionByName(_))
+    val all = scan(spark, viewDir, m, dim = true)
+    val gens = pkFilter.fold(all)(pks => all.filter(col("pk").isin(pks: _*)))
     val payload = struct((m.dimCols.map(col) :+ col("__del")): _*)
     gens.groupBy(m.joinKeys.map(col): _*)
       .agg(max_by(payload, col("__seq")).as("__p"))
@@ -136,25 +154,15 @@ object JoinView {
       .withColumn("__m", coalesce(col("__m"), lit(false)))
       .withColumn("pk", pkExpr(m.joinKeys, m.numBuckets))
 
-  private def stageViewRoot(spark: SparkSession, viewDir: String,
-      df: DataFrame): (String, Seq[Int]) = {
-    val dir = s"jv-${java.util.UUID.randomUUID}"
-    df.repartition(col("pk"))
-      .write.mode("overwrite").partitionBy("pk").parquet(s"$viewDir/$dir")
-    (dir, stagedPks(spark, s"$viewDir/$dir"))
-  }
 
-  /** Stage one dim generation. `delExpr` is the per-row tombstone flag;
+  /** One dim generation's rows. `delExpr` is the per-row tombstone flag;
     * when every row is a delete the delta may carry only key columns —
-    * payload types then come from the live dim schema so the
+    * payload types then come from the recorded dim schema so the
     * generations stay union-compatible.
     */
-  private def stageDimRoot(spark: SparkSession, viewDir: String,
-      delta: DataFrame, m: JoinViewManifest, seq: Long,
-      delExpr: Column): (String, Seq[Int]) = {
-    val dir = s"jvdim-${java.util.UUID.randomUUID}"
-    lazy val dimSchema =
-      spark.read.parquet(s"$viewDir/${m.dimRoots.head}").schema
+  private def dimGeneration(spark: SparkSession, viewDir: String,
+      delta: DataFrame, m: JoinViewManifest, seq: Long, delExpr: Column): DataFrame = {
+    lazy val dimSchema = filesAndSchema(spark, viewDir, m, dim = true)._2
     val have = delta.columns.toSet
     val cols = m.joinKeys.map(col) ++ m.dimCols.map { c =>
       if (have(c)) col(c)
@@ -162,9 +170,22 @@ object JoinView {
     }
     delta.select((cols :+ lit(seq).as("__seq") :+ delExpr.as("__del")): _*)
       .withColumn("pk", pkExpr(m.joinKeys, m.numBuckets))
-      .repartition(col("pk"))
-      .write.mode("overwrite").partitionBy("pk").parquet(s"$viewDir/$dir")
-    (dir, stagedPks(spark, s"$viewDir/$dir"))
+  }
+
+  /** `next` with the staged roots' files and the schemas recorded, once
+    * each staged root reads under its schema. Evaluated inside
+    * `commitOrDrop`, so a root that does not read aborts the commit.
+    */
+  private def withStaged(spark: SparkSession, viewDir: String, m: JoinViewManifest,
+      views: Seq[Root], dims: Seq[Root],
+      next: JoinViewManifest): JoinViewManifest = {
+    val schema = filesAndSchema(spark, viewDir, m, dim = false)._2
+    val dimSchema = filesAndSchema(spark, viewDir, m, dim = true)._2
+    views.foreach(ManifestFileIndex.requireReadable(spark, viewDir, _, schema))
+    dims.foreach(ManifestFileIndex.requireReadable(spark, viewDir, _, dimSchema))
+    val live = next.roots.map(_.dir).toSet ++ next.dimRoots
+    next.copy(files = (next.files ++ views ++ dims).filter { case (r, _) => live(r) },
+      schema = schema.json, dimSchema = dimSchema.json)
   }
 
   /** Create the view at `viewDir`: `fact` LEFT-materialized against
@@ -193,12 +214,16 @@ object JoinView {
     val prior = store.read(spark, viewDir)
     val m0 = JoinViewManifest(joinKeys, factCols, dimCols, numBuckets,
       Vector.empty, Vector.empty)
-    val (dimDir, _) = stageDimRoot(spark, viewDir, dim, m0, seq = 0L, lit(false))
-    val m1 = m0.copy(dimRoots = Vector(dimDir))
-    val (viewDir0, pks) = stageViewRoot(spark, viewDir,
-      joined(fact, dimCurrent(spark, viewDir, m1, None), m1))
+    val gen = dimGeneration(spark, viewDir, dim, m0, seq = 0L, lit(false))
+    val (dimDir, dimFs) = stage(gen, viewDir, "jvdim-", Some("pk"))
+    val m1 = m0.copy(dimRoots = Vector(dimDir), files = Map(dimDir -> dimFs),
+      dimSchema = ManifestFileIndex.dataSchema(gen.schema, "pk").json)
+    val rows = joined(fact, dimCurrent(spark, viewDir, m1, None), m1)
+    val (root, files) = stage(rows, viewDir, "jv-", Some("pk"))
     store.commitIfUnchanged(spark, viewDir, prior,
-      m1.copy(roots = Vector(RootEntry(viewDir0, pks, pks))))
+      m1.copy(roots = Vector(RootEntry(root, pksOf(files))),
+        files = m1.files + (root -> files),
+        schema = ManifestFileIndex.dataSchema(rows.schema, "pk").json))
   }
 
   /** Fold one fact delta into the view: Δfact LEFT JOIN current dim →
@@ -211,15 +236,14 @@ object JoinView {
       delta: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"appendFactsToJoinView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "appendFactsToJoinView")
     if (batchTag.exists(factTags.applied(m, _))) return false
     if (delta.isEmpty) return false
-    val (dir, pks) = stageViewRoot(spark, viewDir,
-      joined(delta.select((m.joinKeys ++ m.factCols).map(col): _*),
-        dimCurrent(spark, viewDir, m, None), m))
-    store.commitOrDrop(spark, viewDir, m, factTags.record(
-      m.copy(roots = m.roots :+ RootEntry(dir, pks, pks)), batchTag), Seq(dir))
+    val (dir, files) = stage(joined(delta.select((m.joinKeys ++ m.factCols).map(col): _*),
+      dimCurrent(spark, viewDir, m, None), m), viewDir, "jv-", Some("pk"))
+    store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, Seq(dir -> files), Nil,
+      factTags.record(m.copy(roots = m.roots :+ RootEntry(dir, pksOf(files))), batchTag)),
+      Seq(dir))
     true
   }
 
@@ -255,25 +279,27 @@ object JoinView {
       delExpr: Column,
       batchTag: Option[String]): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"upsertDimToJoinView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "upsertDimToJoinView")
     if (batchTag.exists(dimTags.applied(m, _))) return false
     if (delta.isEmpty) return false
-    val (dimDir, touched) =
-      stageDimRoot(spark, viewDir, delta, m, m.nextSeq, delExpr)
-    val mDim = m.copy(dimRoots = m.dimRoots :+ dimDir, nextSeq = m.nextSeq + 1)
+    val (dimDir, dimFs) = stage(dimGeneration(spark, viewDir, delta, m, m.nextSeq, delExpr),
+      viewDir, "jvdim-", Some("pk"))
+    val touched = pksOf(dimFs)
+    val mDim = m.copy(dimRoots = m.dimRoots :+ dimDir, nextSeq = m.nextSeq + 1,
+      files = m.files + (dimDir -> dimFs))
     // rebuild ONLY the touched buckets, from the view's own fact columns.
     // Buckets no root owns hold no fact rows — nothing to repair there
     // (a brand-new dim key with no facts yet joins when facts arrive).
     val touchedSet = touched.toSet
     val owned = touched.filter(p => m.roots.exists(_.pks.contains(p)))
-    val staged: Option[(String, Seq[Int])] =
+    val staged: Option[Root] =
       if (owned.isEmpty) None
       else {
-        val factSlice = readRaw(spark, viewDir, mDim, Some(owned))
+        val factSlice = readRaw(spark, viewDir, mDim)
+          .filter(col("pk").isin(owned: _*))
           .select((m.joinKeys ++ m.factCols).map(col): _*)
-        Some(stageViewRoot(spark, viewDir,
-          joined(factSlice, dimCurrent(spark, viewDir, mDim, Some(owned)), m)))
+        Some(stage(joined(factSlice, dimCurrent(spark, viewDir, mDim, Some(owned)), m),
+          viewDir, "jv-", Some("pk")))
       }
     // an affected bucket's ownership moves atomically to the rebuild
     // root; roots left owning nothing are dropped (vacuum reclaims them)
@@ -281,57 +307,20 @@ object JoinView {
       .map(r => r.copy(pks = r.pks.filterNot(touchedSet)))
       .filter(_.pks.nonEmpty)
     val next = mDim.copy(roots = staged match {
-      case Some((dir, pks)) if pks.nonEmpty => kept :+ RootEntry(dir, pks, pks)
+      case Some((dir, files)) if files.nonEmpty => kept :+ RootEntry(dir, pksOf(files))
       case _ => kept
     })
-    store.commitOrDrop(spark, viewDir, m, dimTags.record(next, batchTag),
+    store.commitOrDrop(spark, viewDir, m,
+      withStaged(spark, viewDir, m, staged.toSeq, Seq(dimDir -> dimFs), dimTags.record(next, batchTag)),
       dimDir +: staged.map(_._1).toSeq)
     true
   }
 
-  /** The stored LEFT-join rows (fact cols + nullable dim payload + __m),
-    * each pk bucket read from exactly the roots that own it.
+  /** The stored LEFT-join rows (fact cols + nullable dim payload + __m +
+    * `pk`): one scan over each root's files of the buckets it owns.
     */
-  private def readRaw(spark: SparkSession, viewDir: String,
-      m: JoinViewManifest, pkFilter: Option[Seq[Int]]): DataFrame = {
-    val wanted = pkFilter.map(_.toSet)
-    val live = m.roots.flatMap { r =>
-      val pks = wanted.fold(r.pks)(w => r.pks.filter(w))
-      if (pks.isEmpty) None else Some((r, pks))
-    }
-    if (live.isEmpty)
-      throw new IllegalStateException(
-        s"readRaw: join view at $viewDir has no live roots for $pkFilter")
-    // Full-view read over un-narrowed roots (pks == fullPks: every bucket
-    // on disk is still owned) needs NO per-root bucket filter, so all
-    // roots collapse into ONE datasource scan — guide §6: the per-root
-    // form paid one file listing + one parquet schema inference + one
-    // scan operator per root, the dominant cost of a many-append read.
-    // Sibling roots trip multi-path partition discovery
-    // (CONFLICTING_DIRECTORY_STRUCTURES), so the single scan uses
-    // `recursiveFileLookup`, which drops the directory-derived `pk`; pk
-    // is re-derived from the join keys by the SAME expression that
-    // bucketed the write, so downstream consumers (compact's repartition,
-    // the select in readJoinView) see identical values.
-    val unNarrowed = live.forall { case (r, pks) =>
-      r.fullPks.nonEmpty && r.pks == r.fullPks && pks == r.pks }
-    if (unNarrowed && pkFilter.isEmpty && live.size > 1) {
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(live.map { case (r, _) => s"$viewDir/${r.dir}" }: _*)
-        .withColumn("pk", pkExpr(m.joinKeys, m.numBuckets))
-    } else {
-      // pruned / narrowed path: per-root reads keep `pk` a partition
-      // column so the isin filter prunes at the file index. The parquet
-      // schema is inferred ONCE (first root) and passed to the rest —
-      // every root is written by the same stage pipeline, so the
-      // schemas are identical by construction.
-      val sch = spark.read.parquet(s"$viewDir/${live.head._1.dir}").schema
-      live.map { case (r, pks) =>
-        spark.read.schema(sch).parquet(s"$viewDir/${r.dir}")
-          .filter(col("pk").isin(pks: _*))
-      }.reduce(_.unionByName(_))
-    }
-  }
+  private def readRaw(spark: SparkSession, viewDir: String, m: JoinViewManifest): DataFrame =
+    scan(spark, viewDir, m, dim = false)
 
   /** Read the view. `inner = true` (default) yields exactly
     * `facts JOIN dim_current`; `inner = false` yields the LEFT form with
@@ -339,37 +328,32 @@ object JoinView {
     */
   def readJoinView(spark: SparkSession, viewDir: String,
       inner: Boolean = true): DataFrame = {
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"readJoinView: no readable view manifest at $viewDir"))
-    val raw = readRaw(spark, viewDir, m, None)
+    val m = store.required(spark, viewDir, "readJoinView")
+    val raw = readRaw(spark, viewDir, m)
     val base = if (inner) raw.filter(col("__m")) else raw
     base.select((m.joinKeys ++ m.factCols ++ m.dimCols).map(col): _*)
   }
 
   /** Point lookup of one join-key tuple — the view's answer to the
     * reference's `Get` (`kv/db.go:107-130`: manifest → prune → resolve):
-    * the key hashes to ONE pk bucket, only the roots owning that bucket
-    * are scanned, and each scan prunes to the single `pk` partition.
-    * Returns the inner rows for that key (empty when unmatched/deleted).
+    * the key hashes to ONE pk bucket and the view's scan prunes to the
+    * owning root's files of that bucket. Returns the inner rows for that
+    * key (empty when unmatched/deleted).
     */
   def lookupJoinView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = store.read(spark, viewDir).getOrElse(throw new IllegalStateException(
-      s"lookupJoinView: no readable view manifest at $viewDir"))
+    val m = store.required(spark, viewDir, "lookupJoinView")
     require(values.length == m.joinKeys.length,
       s"lookupJoinView: ${m.joinKeys.length} key values expected")
-    val sample = spark.read.parquet(s"$viewDir/${m.roots.head.dir}")
+    val raw = readRaw(spark, viewDir, m)
     val typed = m.joinKeys.zip(values)
-      .map { case (k, v) => (k, lit(v).cast(sample.schema(k).dataType)) }
+      .map { case (k, v) => (k, lit(v).cast(raw.schema(k).dataType)) }
     val pk = spark.range(1)
       .select(typed.map { case (k, v) => v.as(k) }: _*)
       .select(pkExpr(m.joinKeys, m.numBuckets).as("pk"))
       .collect().head.getInt(0)
     val pred = typed.map { case (k, v) => col(k) <=> v }.reduce(_ && _)
-    val raw =
-      if (m.roots.exists(_.pks.contains(pk))) readRaw(spark, viewDir, m, Some(Seq(pk)))
-      else sample.filter(lit(false)) // bucket holds no facts at all
-    raw.filter(pred && col("__m"))
+    raw.filter(col("pk") === pk && pred && col("__m"))
       .select((m.joinKeys ++ m.factCols ++ m.dimCols).map(col): _*)
   }
 
@@ -382,14 +366,14 @@ object JoinView {
     store.read(spark, viewDir) match {
       case Some(m) if m.roots.size > 1 || m.dimRoots.size > 1 ||
           factTags.pending(m) || dimTags.pending(m) =>
-        val (viewDir1, pks) = stageViewRoot(spark, viewDir,
-          readRaw(spark, viewDir, m, None))
-        val (dimDir, _) = stageDimRoot(spark, viewDir,
-          dimCurrent(spark, viewDir, m, None), m, m.nextSeq, lit(false))
-        store.commitOrDrop(spark, viewDir, m, dimTags.absorb(factTags.absorb(m.copy(
-          roots = Vector(RootEntry(viewDir1, pks, pks)),
-          dimRoots = Vector(dimDir),
-          nextSeq = m.nextSeq + 1))), Seq(viewDir1, dimDir))
+        val (root, files) = stage(readRaw(spark, viewDir, m), viewDir, "jv-", Some("pk"))
+        val (dimDir, dimFs) = stage(dimGeneration(spark, viewDir,
+          dimCurrent(spark, viewDir, m, None), m, m.nextSeq, lit(false)), viewDir, "jvdim-", Some("pk"))
+        store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m,
+          Seq(root -> files), Seq(dimDir -> dimFs), dimTags.absorb(factTags.absorb(m.copy(
+            roots = Vector(RootEntry(root, pksOf(files))),
+            dimRoots = Vector(dimDir),
+            nextSeq = m.nextSeq + 1)))), Seq(root, dimDir))
         true
       case _ => false
     }

@@ -525,13 +525,7 @@ object Catalog {
     }
   }
   private def bucketedFor(s: SparkSession, dir: String): (String, String) = {
-    def sig(name: String): String = {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    }
+    def sig(name: String): String = tableSig(new java.io.File(s"$dir/$name.parquet"))
     // both sources fingerprinted: a regenerated orders.parquet under an
     // unchanged lineitem.parquet must rebuild too
     val key = s"$dir|${sig("lineitem")}|${sig("orders")}"
@@ -7725,15 +7719,19 @@ object Catalog {
     * time the CLUSTERED READ, not the write (the bucketedFor /
     * ivfIndexFor convention: layout writes amortize).
     */
+  /** A memo key part for source table `f`: each part file's name, length
+    * and mtime (or the file's own), so a rewritten table misses the memo.
+    */
+  private def tableSig(f: java.io.File): String =
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
+        .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
+    else s"${f.length}:${f.lastModified}"
+
   private val zorderDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def zorderFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/lineitem.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    zorderDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    zorderDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val out = Files.createTempDirectory("graft-q-zorder").toString + "/lineitem"
       graft.operators.Layout.writeZOrdered(t(s, dir, "lineitem"), out,
         Seq("l_orderkey", "l_partkey"), bits = 6, numFiles = 8)
@@ -7749,12 +7747,7 @@ object Catalog {
   private val hilbertDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def hilbertFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/lineitem.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    hilbertDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    hilbertDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val out = Files.createTempDirectory("graft-q-hilbert").toString + "/lineitem"
       graft.operators.Layout.writeHilbertOrdered(t(s, dir, "lineitem"), out,
         Seq("l_orderkey", "l_partkey"), bits = 6, numFiles = 8)
@@ -7801,12 +7794,7 @@ object Catalog {
   private val aggViewDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def aggViewFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/orders.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    aggViewDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    aggViewDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val vd = Files.createTempDirectory("graft-q-aggview").toString
       val orders = t(s, dir, "orders")
       graft.operators.AggView.buildAggView(
@@ -7832,12 +7820,7 @@ object Catalog {
   private val joinViewDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def joinViewFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/orders.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    joinViewDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    joinViewDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val vd = Files.createTempDirectory("graft-q-joinview").toString
       val fact = t(s, dir, "orders").select(
         col("o_custkey").as("custkey"), col("o_orderkey"), col("o_totalprice"))
@@ -7875,12 +7858,7 @@ object Catalog {
 
   private def ivfIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/embeddings.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    ivfIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    ivfIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-ivf").toString
       Similarity.buildIvfIndex(t(s, dir, "embeddings"), idx, numCentroids = 16)
       idx
@@ -7896,12 +7874,7 @@ object Catalog {
   private val ivfDeletedIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfDeletedIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/embeddings.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    ivfDeletedIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    ivfDeletedIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-ivf-del").toString
       val emb = t(s, dir, "embeddings")
       Similarity.buildIvfIndex(emb, idx, numCentroids = 16)
@@ -7918,12 +7891,7 @@ object Catalog {
   private val ivfPqIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfPqIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/embeddings.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    ivfPqIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    ivfPqIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-ivfpq").toString
       Similarity.buildIvfPqIndex(t(s, dir, "embeddings"), idx, numCentroids = 16)
       idx
@@ -7939,12 +7907,7 @@ object Catalog {
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
   private def pqCodebooksFor(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
     val src = new java.io.File(s"$dir/embeddings.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    pqCodebookCache.computeIfAbsent(s"${src.getPath}|${sig(src)}",
+    pqCodebookCache.computeIfAbsent(s"${src.getPath}|${tableSig(src)}",
       _ => Similarity.fitPqCodebooks(t(s, dir, "embeddings")))
   }
 
@@ -8878,12 +8841,7 @@ object Catalog {
   private val textIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def textIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    textIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    textIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-textidx").toString
       Search.buildTextIndex(t(s, dir, "documents"), idx, numBuckets = 64)
       idx
@@ -8901,12 +8859,7 @@ object Catalog {
   private val textIndexDeletedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def textIndexDeletedFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    textIndexDeletedDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    textIndexDeletedDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-textidx-del").toString
       val docs = t(s, dir, "documents")
       Search.buildTextIndex(docs, idx, numBuckets = 64)
@@ -8923,12 +8876,7 @@ object Catalog {
   private val nearDupIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def nearDupIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    nearDupIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    nearDupIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-ndidx").toString
       NearDupIndex.buildNearDupIndex(
         t(s, dir, "documents").filter(col("doc_id") % 13 =!= 5), idx, numBuckets = 64)
@@ -8945,12 +8893,7 @@ object Catalog {
   private val nearDupDeletedIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def nearDupDeletedIndexFor(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
-      else s"${f.length}:${f.lastModified}"
-    nearDupDeletedIndexDirs.computeIfAbsent(s"${src.getPath}|${sig(src)}", _ => {
+    nearDupDeletedIndexDirs.computeIfAbsent(s"${src.getPath}|${tableSig(src)}", _ => {
       val idx = Files.createTempDirectory("graft-q-ndidx-del").toString
       val indexed = t(s, dir, "documents").filter(col("doc_id") % 13 =!= 5)
       NearDupIndex.buildNearDupIndex(indexed, idx, numBuckets = 64)

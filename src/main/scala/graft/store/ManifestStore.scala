@@ -48,10 +48,10 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
     * stamp-match.
     *
     * Throws IllegalArgumentException when `dir` holds a Hadoop glob
-    * metacharacter. The families read their roots through path lists
-    * and globs that would expand such a dir as a pattern and silently
-    * match nothing; every entry point starts with this read, so the
-    * check fails before anything is staged.
+    * metacharacter: path-taking Hadoop and Spark tools (`hadoop fs`,
+    * `spark.read`) would expand such a dir as a pattern and silently
+    * match nothing. Every entry point starts with this read, so the check
+    * fails before anything is staged.
     */
   def read(spark: SparkSession, dir: String, fresh: Boolean = false): Option[M] = {
     if (dir.exists(ManifestStore.globChars.contains(_)))
@@ -81,6 +81,11 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
     }
   }
 
+  /** The manifest under `dir`, or an IllegalStateException naming `op`. */
+  def required(spark: SparkSession, dir: String, op: String): M =
+    read(spark, dir).getOrElse(throw new IllegalStateException(
+      s"$op: no readable $kind manifest at $dir"))
+
   /** Replace the manifest with `next` only if a fresh read still equals
     * `expected` (None: no manifest yet); throws IllegalStateException
     * otherwise, leaving the manifest untouched. See the class doc for the
@@ -104,8 +109,11 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
   /** [[commitIfUnchanged]] against snapshot `m`; when it aborts, the
     * writer's `staged` dirs (relative to `dir`) are deleted before the
     * error propagates, and the foreign writer's state stays intact.
+    * `next` is evaluated inside the guard: a family check that throws
+    * IllegalStateException while computing it (a staged root that does
+    * not read under the recorded schema) aborts the commit the same way.
     */
-  def commitOrDrop(spark: SparkSession, dir: String, m: M, next: M,
+  def commitOrDrop(spark: SparkSession, dir: String, m: M, next: => M,
       staged: Seq[String]): Unit =
     try commitIfUnchanged(spark, dir, Some(m), next)
     catch { case e: IllegalStateException =>

@@ -562,6 +562,9 @@ class GraftDBSpec extends AnyFunSuite {
     val db = new GraftDB(spark, dir)
     assert(Seq("a", "b", "c").map(k => db.get(b(k)).map(new String(_))) ==
       Seq(Some("inline"), Some("blob"), None))
+    // the view lists the DIR entries and reads the same rows
+    assert(db.view().collect().map(r => new String(r.getAs[Array[Byte]]("key")) ->
+      new String(r.getAs[Array[Byte]]("value"))).toSet == Set("a" -> "inline", "b" -> "blob"))
   }
 
   test("point get runs no Spark job: hit, miss, blob hit, tombstone, expired") {

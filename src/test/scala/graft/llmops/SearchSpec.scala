@@ -382,10 +382,8 @@ class SearchSpec extends AnyFunSuite {
     assert(Search.appendToTextIndex(idx, corpus(3L -> "gamma delta"), batchTag = Some("0")))
     assert(Search.appendToTextIndex(idx, corpus(4L -> "beta epsilon"), batchTag = Some("1")))
     val probe = Search.bm25TopKIndexed(spark, idx, queries(0L -> "beta"), k = 4)
-    // pruning is now PATH-LEVEL (one glob over roots x probed buckets
-    // feeding ONE datasource scan per family, instead of a filtered scan
-    // per root): the plan's scan locations must reference only the
-    // probed term's bucket dir, across all three roots of each family
+    // ONE scan per family over the recorded files of all its roots; the
+    // scan's partition filter selects only the probed term's bucket files
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
@@ -394,7 +392,7 @@ class SearchSpec extends AnyFunSuite {
         case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       }.flatten
     val fileScans = scans(probe.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("bucket=")))
+      .filter(_.relation.partitionSchema.fieldNames.toSeq == Seq("bucket"))
     // one postings scan + one dict scan — not one per root
     assert(fileScans.size == 2,
       s"expected 2 bucket-pruned family scans, got ${fileScans.size}")
@@ -403,13 +401,17 @@ class SearchSpec extends AnyFunSuite {
       org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
         beta, org.apache.spark.sql.types.StringType, 42L), 16L)
     for (s <- fileScans) {
-      val roots = s.relation.location.rootPaths.map(_.toString)
-      // "beta" lives in the base and the second append — the glob also
-      // skips the root whose batch never touched the probed bucket
-      assert(roots.size == 2, s"expected 2 root paths (the beta-bearing " +
+      val read = s.relation.location.listFiles(s.partitionFilters, Nil)
+        .flatMap(_.files.map(_.getPath.toString))
+      assert(read.forall(_.contains(s"/bucket=$expectedBucket/")),
+        s"scan reads a non-probed bucket's files: $read")
+      // "beta" lives in the base and the second append — the root whose
+      // batch never touched the probed bucket has no file there
+      val roots = read.map(f => new org.apache.hadoop.fs.Path(f).getParent.getParent).distinct
+      assert(roots.size == 2, s"expected files of 2 roots (the beta-bearing " +
         s"base + append; the gamma-delta root has no beta bucket), got $roots")
-      assert(roots.forall(_.endsWith(s"bucket=$expectedBucket")),
-        s"scan reads a non-probed bucket dir: $roots")
+      assert(s.relation.location.inputFiles.length > read.size,
+        "the index holds only the probed bucket: the pruning check would be vacuous")
     }
   }
 

@@ -234,6 +234,27 @@ class AggViewSpec extends AnyFunSuite {
     assert(m.roots.size == 2 && m.nRows == 120L && m.tagHighWater == 9L)
   }
 
+  test("a staged root missing a recorded column aborts its commit and is dropped") {
+    val dir = Files.createTempDirectory("aggview-schema").toString
+    AggView.buildAggView(mkBatch(0 until 80), dir, Seq("status", "prio"), Seq("price"))
+    val m = AggView.store.read(spark, dir).get
+    val manifest = java.nio.file.Paths.get(dir, "MANIFEST.json")
+    val bytes = Files.readAllBytes(manifest).toSeq
+    val before = readSorted(dir)
+    // a partial root without the price__max column, as a writer with a
+    // diverging partial aggregate would stage it
+    val bad = AggView.readAggView(spark, dir).select(col("status"), col("prio"),
+        col("cnt").as("__cnt"), lit(0).as("pk"))
+    val root = graft.store.ManifestFileIndex.stage(bad, dir, "agg-", Some("pk"))
+    val e = intercept[IllegalStateException] {
+      AggView.commitAppend(spark, dir, m, root, 1L, None)
+    }
+    assert(e.getMessage.contains("price__max"), e.getMessage)
+    assert(Files.readAllBytes(manifest).toSeq == bytes, "the aborted commit changed the manifest")
+    assert(!Files.exists(java.nio.file.Paths.get(dir, root._1)), "the aborted stage was kept")
+    assert(readSorted(dir).sameElements(before))
+  }
+
   test("streaming ingestToAggView equals the batch view over the same rows") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -20,6 +20,37 @@ class PlanShapeSpec extends AnyFunSuite {
     df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
   }
 
+  /** The file scans in `name`'s physical plan. */
+  private def fileScans(name: String): Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    }.flatten
+    scans(Catalog.queries(name)(spark, sf).queryExecution.executedPlan)
+  }
+
+  /** `name`'s scans of bucket-partitioned index roots select, by their
+    * partition filters, only some of the files the index holds, each in
+    * a bucket dir.
+    */
+  private def assertBucketPruned(name: String): Unit = {
+    val bucketScans = fileScans(name)
+      .filter(_.relation.partitionSchema.fieldNames.toSeq == Seq("bucket"))
+    assert(bucketScans.nonEmpty, s"$name: no scan over a bucket-partitioned index")
+    for (s <- bucketScans) {
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "bucket")),
+        s"$name: the index scan lost its bucket PartitionFilters")
+      val read = s.relation.location.listFiles(s.partitionFilters, Nil)
+        .flatMap(_.files.map(_.getPath.toString))
+      assert(read.nonEmpty && read.forall(_.contains("/bucket=")) &&
+        read.size < s.relation.location.inputFiles.length,
+        s"$name: the scan reads ${read.size} of ${s.relation.location.inputFiles.length} " +
+          "index files — every query would read the whole index")
+    }
+  }
+
   test("emb_rp / emb_sq8: projection and quantization stay narrow maps — one exchange (the output sort), pruned scan") {
     for (name <- Seq("emb_rp", "emb_sq8")) {
       val p = plan(name)
@@ -253,24 +284,18 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("search_bm25_indexed: query-term buckets prune the postings scan at the PATH level") {
-    // pruning moved from per-root PartitionFilters to path-level: one
-    // glob over roots x probed buckets feeds ONE scan per family whose
-    // Location lists only bucket=N dirs (SearchSpec pins the multi-root
-    // scan-count/locations contract rigorously; this pins the headline
-    // query's shape)
-    val p = plan("search_bm25_indexed")
-    val loc = p.linesIterator.filter(_.contains("Location")).mkString
-    assert(loc.contains("bucket="),
-      s"the postings scan lost path-level bucket pruning — every query " +
-        s"would read the whole index: $loc")
-    assert(p.contains("partial_topkby"), "indexed bm25 lost map-side top-k truncation")
+    // one scan per family over the index's recorded files, whose
+    // PartitionFilters select only the query terms' bucket files
+    // (SearchSpec pins the multi-root scan-count/files contract
+    // rigorously; this pins the headline query's shape)
+    assertBucketPruned("search_bm25_indexed")
+    assert(plan("search_bm25_indexed").contains("partial_topkby"),
+      "indexed bm25 lost map-side top-k truncation")
   }
 
   test("search_bm25_deleted: tombstones broadcast AND query-term buckets still prune") {
+    assertBucketPruned("search_bm25_deleted")
     val p = plan("search_bm25_deleted")
-    val loc = p.linesIterator.filter(_.contains("Location")).mkString
-    assert(loc.contains("bucket="),
-      s"the deleted-index probe lost path-level bucket pruning: $loc")
     // the tombstone subtraction must ride broadcast joins — a shuffled
     // anti/semi join here would re-shuffle the postings stream per query
     assert(p.contains("BroadcastHashJoin") &&
@@ -397,14 +422,27 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q_join_view: read is a pruned union — no join, no LWW resolve at read time") {
     val p = plan("q_join_view")
-    // the whole IVM contract: maintenance pays the joins, reads pay a
-    // plain pruned union. A Join or Window here means the read path
-    // started re-deriving state
-    assert(!p.contains("Join") && !p.contains("Window"),
-      "join-view read stopped being a pure pruned union")
-    assert(p.contains("Union"), "join-view read lost its root union")
-    assert(p.linesIterator.exists(l => l.contains("PartitionFilters") &&
-      l.contains("pk#")), s"root scans lost their pk partition filters:\n$p")
+    // the whole IVM contract: maintenance pays the joins, reads pay ONE
+    // scan over the union of the roots' owned files. A Join or Window
+    // here means the read path started re-deriving state
+    assert(!p.contains("Join") && !p.contains("Window") && !p.contains("Union"),
+      "join-view read stopped being a single scan")
+    val scans = fileScans("q_join_view")
+    assert(scans.size == 1, s"expected one view scan, got ${scans.size}")
+    // the dim mutations moved buckets to rebuild roots: the scan reads
+    // only each live root's files of the buckets it still owns, fewer
+    // than those roots hold on disk
+    val loc = scans.head.relation.location
+    val read = loc.inputFiles.toSet
+    val fs = loc.rootPaths.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = loc.rootPaths.flatMap { r =>
+      val it = fs.listFiles(r, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+    }.toSet
+    assert(read.nonEmpty && read.subsetOf(onDisk) && read.size < onDisk.size,
+      s"the view scan reads ${read.size} of the ${onDisk.size} files its roots hold: " +
+        "superseded buckets would read stale rows")
   }
 
   test("dedup_editdist_pairs: candidates equi-join on chunk hashes — never a cartesian") {
