@@ -1,8 +1,11 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Graph capabilities: parity with the reference's adjacency-list-as-JSON
   * storage queried by point lookups (`kv/db_test.go:107-179`), extended to
@@ -272,120 +275,95 @@ object GraphOps {
   /** HITS (Kleinberg hubs & authorities) over the directed graph, FIXED
     * iteration count — the classic mutual-reinforcement ranking (a good
     * hub points at good authorities; a good authority is pointed at by
-    * good hubs), which PageRank's single score can't separate.
-    * Dataframe algebra like [[labelPropagation]] (not GraphX), so every
-    * step replays in SQL and the Catalog row is FULLY oracled by
-    * unrolled iterations.
+    * good hubs), which PageRank's single score can't separate. The
+    * Catalog row is FULLY oracled by unrolled iterations in SQL.
+    *
+    * A co-partitioned superstep loop, GraphX's layout (OSDI 2014): the
+    * distinct non-null edges are built once as two adjacency RDDs —
+    * out-neighbours keyed by `src`, in-neighbours keyed by `dst` —
+    * persisted on one `HashPartitioner`, and the hub and authority
+    * scores are keyed by that same partitioner. Each half-step is a
+    * narrow join of an adjacency against the scores plus one
+    * `reduceByKey` of the messages: the edges never move again, no step
+    * is planned by Catalyst, and no step is checkpointed — up to 10
+    * iterations' half-steps are stages of ONE job (the norm action; a
+    * longer run adds one job per 10 iterations), and the scheduler skips
+    * finished stages, so the growing lineage costs no recomputation.
+    * Vertices with no in-edges (resp. out-edges) carry authority (resp.
+    * hub) 0.
     *
     * The power steps run UNNORMALIZED with ONE L2 normalization at the
     * end: per-step and end normalization give exactly proportional
     * vectors (normalization is a scalar multiple, and every step is
-    * linear), and the unnormalized step references its input ONCE — so
-    * the whole 2·iters-join chain stays a single linear plan in one
-    * Spark job, no per-step norm branch, no lineage checkpoints, no
-    * per-step materialization. The price is dynamic range: raw scores
-    * grow like (average degree)^2k, so past ~50 iterations on dense
-    * graphs doubles overflow — guarded by a loud raise_error when the
-    * final norm is non-finite (choose fewer iterations or rescale
-    * upstream; ranking use cases converge in ~10).
+    * linear). The price is dynamic range: raw scores grow like (average
+    * degree)^2k, so past ~50 iterations on dense graphs the squared norm
+    * overflows — the call then fails loudly, before any row is returned
+    * (choose fewer iterations or rescale upstream; ranking use cases
+    * converge in ~10).
     *
-    * Scale shape: per iteration two keyed joins of the edge set against
-    * the vertex-score frame plus two hash aggs — the PageRank cost
-    * class. The edge set persists TWICE, pre-partitioned AND pre-sorted
-    * on each join side's key (`src` for the hub→auth join, `dst` for
-    * auth→hub): its cached outputPartitioning/outputOrdering satisfy
-    * every iteration's join requirement, so the 2·iters joins only ever
-    * shuffle+sort the VERTEX-sized score frames, never the edges (the
-    * single-copy form re-shuffled the edge set 2·iters times — 2.5× the
-    * wall clock at sf0.1). Cheap at any scale: two edge-set copies vs
-    * 2·iters edge shuffles. The final norms are one-row aggregates
-    * broadcast back (no driver collect). Vertices with no in-edges
-    * (resp. out-edges) carry authority (resp. hub) 0. Score sums stay
-    * EXACT under any partitioning while the raw scores are
-    * integer-valued doubles below 2^53 (they are, within the overflow
-    * guard's range), so the repartitioned plan is value-identical.
+    * Exactness: raw scores are integer-valued doubles, but on any graph
+    * with well-connected hubs they pass 2^53 within a few iterations
+    * (the Catalog's event graph does by iteration 6), and from there a
+    * sum rounds at the ulp level depending on its order, which depends
+    * on the partitioning and on shuffle arrival. What holds is the
+    * 6-decimal rounded output: after the final normalization that noise
+    * is ~1e-16 relative, ten orders below the 6th decimal, so rounded
+    * rows do not change with the input's partitioning.
+    *
+    * Partitioning: one partition per input split, and never fewer than
+    * the default parallelism (one per core), so every superstep's tasks
+    * fill one wave and a large edge set fans out with its input — no
+    * size estimate that could collapse it to one partition.
     */
   def hits(edges: DataFrame, iters: Int = 10,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "hits: iters must be >= 1")
     val spark = edges.sparkSession
-    val eRaw = edges
+    import spark.implicits._
+    val pairs = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = eRaw.distinct()
-    // SCALE-ADAPTIVE iteration partitioning (guide §2: over-partitioning
-    // anti-scales). The 2·iters per-step joins/aggs inherit the persisted
-    // edge copies' partition count, and the default (shuffle.partitions =
-    // core count) turns a small graph's 10-iteration loop into ~40 stages
-    // of per-task overhead: the r16 driver measured graph_hits FASTER on 8
-    // cores (2.17 s) than 32 (3.03 s) purely from that. Size partitions
-    // from the optimizer's size estimate of the edge input (driver-side,
-    // no job — an exact pre-count was measured at 0.4 s of pure overhead
-    // per call), targeting `spark.graft.graph.bytesPerPartition` per
-    // partition (default 64 MB, the shuffle-partition sizing band of
-    // guide §2.2), capped at the session's shuffle parallelism so a
-    // 100 TB edge set still fans out fully. Values are partition-count-
-    // independent (integer-valued double sums below 2^53 are exact in
-    // any order — see the normalization note above), so this changes
-    // wall clock only.
-    val bytesPerPartKey = "spark.graft.graph.bytesPerPartition"
-    val bytesPerPart = spark.conf.getOption(bytesPerPartKey)
-      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$bytesPerPartKey must be a whole number of bytes, got '$v'")))
-      .filter(_ > 0).getOrElse(64L * 1024 * 1024)
-    val maxParts = math.max(
-      spark.sessionState.conf.numShufflePartitions,
-      spark.sparkContext.defaultParallelism)
-    val estBytes = eRaw.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nParts = ((estBytes + bytesPerPart - 1) / bytesPerPart)
-      .min(BigInt(maxParts)).max(BigInt(1)).toInt
-    val eBySrc = e.repartition(nParts, col("src")).sortWithinPartitions("src").persist()
-    // the dst copy re-shuffles the PERSISTED src copy instead of
-    // re-deriving `e` — the scan + edge-normalize + distinct pipeline
-    // evaluates once per call, not once per persisted copy (§6: don't
-    // pay two source passes for two layouts of the same rows)
-    val eByDst = eBySrc.repartition(nParts, col("dst")).sortWithinPartitions("dst").persist()
-    val verts = eBySrc.select(col("src").as("v"))
-      .union(eByDst.select(col("dst").as("v"))).distinct().persist()
-    var h = verts.select(col("v"), lit(1.0).as("score"))
-    var a: DataFrame = null
-    for (_ <- 1 to iters) {
-      a = eBySrc.join(h.withColumnRenamed("v", "sv"), col("src") === col("sv"))
-        .groupBy(col("dst").as("v")).agg(sum(col("score")).as("score"))
-      h = eByDst.join(a.select(col("v").as("dv"), col("score").as("as")),
-          col("dst") === col("dv"))
-        .groupBy(col("src").as("v")).agg(sum(col("as")).as("score"))
-      // eager localCheckpoint per step: the scores are vertex-sized, but
-      // the LINEAGE grows by a join+agg pair every iteration and Catalyst
-      // re-optimizes the whole accumulated tree at each reuse — measured
-      // at sf0.1/local[32]: 8.7-11.8 s uncut vs 5.0-5.9 s with the
-      // per-step cut (the same fix the memory-doubling normalize needed
-      // before r10's deferred-norm rewrite). Iterative engines pay this
-      // as a per-step materialization by design (GraphX caches each
-      // Pregel round); the cost is one tiny job per step. Only `h` is
-      // cut: `a`'s lineage above a checkpointed h is one join+agg, so
-      // checkpointing it too bought nothing but a second per-step JOB
-      // (each eager checkpoint is a scheduled job — half the loop's
-      // wall clock at small scale was that scheduling). The final
-      // iteration's `a` is cut once after the loop for the norm/join
-      // fan-out below.
-      h = h.localCheckpoint(true)
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val part = new HashPartitioner(
+      math.max(pairs.getNumPartitions, spark.sparkContext.defaultParallelism))
+    val out = pairs.groupByKey(part).mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val in = out.flatMap { case (s, ds) => ds.iterator.map(_ -> s) }
+      .groupByKey(part).mapValues(_.toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      def spread(adj: RDD[(Long, Array[Long])], score: RDD[(Long, Double)]) =
+        adj.join(score, part)
+          .flatMap { case (_, (ns, x)) => ns.iterator.map(_ -> x) }
+          .reduceByKey(part, _ + _)
+      var hub = out.mapValues(_ => 1.0)
+      var auth: RDD[(Long, Double)] = null
+      for (i <- 1 to iters) {
+        auth = spread(out, hub)
+        hub = spread(in, auth)
+        // after each job Spark walks the job's not-yet-walked lineage
+        // recursively (RDD.doCheckpoint), and a 120-iteration lineage
+        // overflowed the stack: a longer run materializes every 10
+        if (i % 10 == 0 && i < iters) hub.count()
+      }
+      val scores = hub.fullOuterJoin(auth, part)
+        .mapValues { case (h, a) => (h.getOrElse(0.0), a.getOrElse(0.0)) }
+      val (n, hubSq, authSq) = scores.aggregate((0L, 0.0, 0.0))(
+        { case ((c, hs, as), (_, (h, a))) => (c + 1, hs + h * h, as + a * a) },
+        { case ((c1, h1, a1), (c2, h2, a2)) => (c1 + c2, h1 + h2, a1 + a2) })
+      val (hubNorm, authNorm) = (math.sqrt(hubSq), math.sqrt(authSq))
+      for ((name, norm) <- Seq("hub" -> hubNorm, "auth" -> authNorm)
+           if n > 0 && !(norm > 0 && norm < Double.PositiveInfinity))
+        throw new IllegalStateException(s"hits: non-finite or zero $name norm after " +
+          s"$iters iterations — reduce iters or rescale edge weights")
+      // the rows re-read the last two half-steps' shuffle output, so the
+      // adjacency caches can go before the caller collects
+      scores.map { case (v, (h, a)) => (v, h / hubNorm, a / authNorm) }
+        .toDF("vertex", "hub", "auth")
+    } finally {
+      out.unpersist(blocking = false)
+      in.unpersist(blocking = false)
     }
-    a = a.localCheckpoint(true)
-    def widened(raw: DataFrame, name: String): DataFrame = {
-      val n = raw.agg(sqrt(sum(col("score") * col("score"))).as("n"))
-      val guarded = when(
-        isnan(col("n")) || col("n") === Double.PositiveInfinity || col("n") <= 0,
-        raise_error(lit(s"hits: non-finite or zero $name norm after " +
-          s"$iters iterations — reduce iters or rescale edge weights")))
-        .otherwise(col("n"))
-      verts.join(raw, Seq("v"), "left")
-        .crossJoin(broadcast(n))
-        .select(col("v"),
-          (coalesce(col("score"), lit(0.0)) / guarded).as(name))
-    }
-    widened(h, "hub").join(widened(a, "auth"), Seq("v"))
-      .select(col("v").as("vertex"), col("hub"), col("auth"))
   }
 
   /** Triangle count per vertex — pure SQL 3-way self-join on canonicalized

@@ -8562,12 +8562,13 @@ object Catalog {
     "graph_hits" -> QueryDef(
       // HITS hubs & authorities (GraphOps.hits, 10 iterations):
       // UNNORMALIZED power steps — per-step and end normalization are
-      // exactly proportional, so one final L2 normalize suffices and the
-      // whole 20-join chain plans as a single linear job (no per-step
-      // norm branch, no checkpoints). FULLY oracled by unrolling all 10
-      // mutual-reinforcement iterations in SQL (the pagerank/LPA
-      // pattern) — 2 keyed joins + 2 hash aggs per iteration, the same
-      // scale class as pagerank's power steps.
+      // exactly proportional, so one final L2 normalize suffices. The 20
+      // half-steps are a co-partitioned superstep loop (narrow join of
+      // the persisted adjacency + one reduceByKey each), all stages of
+      // one job; the call runs at most 5 jobs with the collect. FULLY
+      // oracled by unrolling all 10 mutual-reinforcement iterations in
+      // SQL (the pagerank/LPA pattern); rounding to 6 decimals keeps the
+      // rows independent of summation order.
       (s, dir) => GraphOps.hits(eventEdges(s, dir), iters = 10)
         .select(col("vertex"), round(col("hub"), 6).as("hub"),
           round(col("auth"), 6).as("auth"))

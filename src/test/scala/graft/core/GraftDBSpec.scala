@@ -16,6 +16,29 @@ object TestSpark {
     .config("spark.sql.warehouse.dir",
       Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
+
+  /** The number of Spark jobs `body` starts. */
+  def sparkJobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel"))
+          sentinelSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once the sentinel job's start
+      // arrives, every job `body` launched would have arrived before it
+      sc.setJobGroup("sentinel", "flush the listener bus")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Parity tests mirroring the reference's API round-trip suite
@@ -573,40 +596,17 @@ class GraftDBSpec extends AnyFunSuite {
     db.batchSet(Seq(KVEntry(b("hit"), b("v")), KVEntry(b("blob"), blob),
       KVEntry(b("gone"), b("v")), KVEntry.withTTL(b("old"), b("v"), -100)))
     db.del(b("gone"))
-    val jobs = sparkJobsDuring {
+    val jobs = TestSpark.sparkJobsDuring {
       val got = Seq("hit", "blob", "gone", "old", "absent").map(k => db.get(b(k)).map(_.toSeq))
       assert(got == Seq(Some(b("v").toSeq), Some(blob.toSeq), None, None, None))
     }
     assert(jobs == 0, s"$jobs Spark jobs ran for five point gets")
   }
 
-  /** The number of Spark jobs `body` starts. */
-  private def sparkJobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel"))
-          sentinelSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      // the bus delivers events in order: once the sentinel job's start
-      // arrives, every job `body` launched would have arrived before it
-      sc.setJobGroup("sentinel", "flush the listener bus")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("batchSet runs no Spark job: inline, blob, TTL and tombstone in one batch") {
     val db = freshDb(GraftOptions(valueThreshold = 16, compactTriggerFiles = 1000))
     val blob = Array.fill[Byte](64)(7)
-    val jobs = sparkJobsDuring {
+    val jobs = TestSpark.sparkJobsDuring {
       db.batchSet(Seq(KVEntry(b("inline"), b("v")), KVEntry(b("blob"), blob),
         KVEntry.withTTL(b("ttl"), b("t"), 10000), KVEntry.tombstone(b("gone"))))
       db.set(b("one"), b("1"))

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.core.{GraftDB, GraftOptions, TestSpark}
+import org.apache.spark.sql.{CacheEntries, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -253,15 +254,81 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(got(4L)._2 > got(3L)._2 && got(4L)._1 == 0.0)
   }
 
-  test("hits: a malformed bytesPerPartition conf fails naming the key") {
+  /** `hits` over `input` equals [[hitsModel]] over `clean` to 1e-9. */
+  private def assertHitsModel(input: DataFrame, clean: Seq[(Long, Long)], iters: Int): Unit = {
+    val got = GraphOps.hits(input, iters).collect()
+      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    val want = hitsModel(clean, iters)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (v, (hub, auth)) =>
+      assert(math.abs(hub - want(v)._1) < 1e-9 && math.abs(auth - want(v)._2) < 1e-9,
+        s"scores diverged at $v")
+    }
+  }
+
+  private def completeDigraph(n: Long): Seq[(Long, Long)] =
+    for (i <- 0L until n; j <- 0L until n if i != j) yield (i, j)
+
+  test("hits: rounded rows do not change with the input's partitioning past 2^53") {
     import spark.implicits._
-    val key = "spark.graft.graph.bytesPerPartition"
-    spark.conf.set(key, "64MB")
-    try {
-      val e = intercept[IllegalArgumentException](
-        GraphOps.hits(Seq((1L, 2L)).toDF("src", "dst"), iters = 1))
-      assert(e.getMessage.contains(key) && e.getMessage.contains("64MB"))
-    } finally spark.conf.unset(key)
+    // the Catalog's event-graph shape: 20 sources x 100 sinks, 2 000 draws
+    val rnd = new scala.util.Random(11)
+    val edges = Seq.fill(2000)((100L + rnd.nextInt(20), rnd.nextInt(100).toLong))
+    // the unnormalized scores leave the exact-integer range of doubles, so
+    // sums round differently under different summation orders
+    val e = edges.distinct
+    var h = e.map(_._1 -> 1.0).toMap
+    for (_ <- 1 to 10) {
+      val a = e.groupMapReduce(_._2)(p => h(p._1))(_ + _)
+      h = e.groupMapReduce(_._1)(p => a(p._2))(_ + _)
+    }
+    assert(h.values.max > math.pow(2, 53))
+    def rounded(parts: Int) = GraphOps.hits(edges.toDF("src", "dst").repartition(parts), 10)
+      .select(col("vertex"), round(col("hub"), 6), round(col("auth"), 6))
+      .orderBy("vertex").collect().toSeq
+    val one = rounded(1)
+    assert(one.size == e.flatMap(p => Seq(p._1, p._2)).distinct.size)
+    assert(rounded(7) == one)
+  }
+
+  test("hits fails loudly on a non-finite norm, returning no NaN or Infinity rows") {
+    import spark.implicits._
+    // raw scores grow ~39^2 per iteration: the squared norm overflows
+    val e = intercept[IllegalStateException](
+      GraphOps.hits(completeDigraph(40).toDF("src", "dst"), iters = 120).collect())
+    assert(e.getMessage.contains("non-finite"))
+  }
+
+  test("hits: an empty edge set returns zero rows") {
+    import spark.implicits._
+    assert(GraphOps.hits(Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0)
+  }
+
+  test("hits drops null endpoints and duplicate edges") {
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(1L), Some(2L)), (Some(1L), None), (None, Some(3L)),
+      (Some(2L), Some(3L)), (Some(3L), Some(1L)), (Some(3L), Some(1L)), (None, None))
+    assertHitsModel(edges.toDF("src", "dst"), Seq((1L, 2L), (2L, 3L), (3L, 1L)), 10)
+  }
+
+  test("hits counts a self-loop once") {
+    import spark.implicits._
+    val edges = Seq((1L, 1L), (1L, 1L), (1L, 1L), (1L, 2L), (2L, 3L))
+    assertHitsModel(edges.toDF("src", "dst"), edges.distinct, 10)
+  }
+
+  test("hits unpersists what it persists, on success and on the guard's failure") {
+    import spark.implicits._
+    def held = (spark.sparkContext.getPersistentRDDs.size, CacheEntries(spark))
+    def noMoreThan(before: (Int, Int)) =
+      assert(held._1 <= before._1 && held._2 <= before._2, s"$before -> $held")
+    val before = held
+    assert(GraphOps.hits(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")).collect().length == 3)
+    noMoreThan(before)
+    intercept[IllegalStateException](
+      GraphOps.hits(completeDigraph(40).toDF("src", "dst"), iters = 60))
+    noMoreThan(before)
   }
 
   test("scc: direction splits what cc merges; two cycles bridged one-way stay apart") {
