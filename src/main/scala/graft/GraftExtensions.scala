@@ -370,9 +370,8 @@ object GraftExtensions {
 
   // ---- TVF builders: each opens the engine/view read-only and hands its
   // DataFrame's ANALYZED plan to the SQL query tree. Opening per query is
-  // cheap by design — a manifest stat + stamp-cached parse, the same cost
-  // the Column-API read pays — and keeps the TVF stateless (no handle
-  // cache to invalidate when another process swaps the manifest).
+  // cheap by design — a warm manifest load, the state being cached per dir —
+  // and keeps the TVF stateless (no handle cache to invalidate on commits).
 
   private def stringLit(e: Expression, name: String): String = {
     require(e.foldable && e.dataType == org.apache.spark.sql.types.StringType,

@@ -91,8 +91,10 @@ final case class GraftOptions(
   *     key-sorted output (reference compaction, `kv/lsm/compact.go:239-447`).
   *   - `blobs/<uuid>/` parquet blob segments (the value-log analog,
   *     reference `kv/vlog.go:366-484`).
-  *   - `MANIFEST.json`  atomic list of live segments + counters (reference
-  *     manifest, `kv/file/manifest.go`).
+  *   - `_manifest/`    the [[Manifest]]: numbered change records of the
+  *     live segments and counters, and periodic whole-state checkpoints
+  *     (reference manifest, `kv/file/manifest.go`). An older store's
+  *     `MANIFEST.json` + `MANIFEST.log` are read, never modified.
   *
   * Read semantics are merge-on-read: union of live segments, last-writer-wins
   * by `version` (reference merge-iterator dedup, `kv/lsm/iterator.go:357-366`),
@@ -115,7 +117,8 @@ final class GraftDB(
     val rootDir: String,
     val options: GraftOptions = GraftOptions()) {
 
-  private val manifest = new Manifest(rootDir, options.manifestLogCompactEvery)
+  private val manifest = new Manifest(spark.sparkContext.hadoopConfiguration, rootDir,
+    options.manifestLogCompactEvery)
   private def newSegmentDir(kind: String): String =
     s"$rootDir/$kind/${UUID.randomUUID().toString}"
 
@@ -1061,9 +1064,10 @@ final class GraftDB(
   }
 
   /** Delete segment dirs no longer referenced by the manifest (orphan
-    * cleanup, reference `kv/file/manifest.go:227-243`). Files referenced
-    * by a live [[snapshot]] are skipped — take a snapshot first if a
-    * reader must survive the vacuum.
+    * cleanup, reference `kv/file/manifest.go:227-243`), and the manifest
+    * records before its newest checkpoint. Files referenced by a live
+    * [[snapshot]] are skipped — take a snapshot first if a reader must
+    * survive the vacuum.
     */
   def vacuum(): Unit = snapshotLock.synchronized {
     val st = manifest.load()
@@ -1084,6 +1088,7 @@ final class GraftDB(
         if (!inUse) fs.delete(f.getPath, true)
       }
     }
+    manifest.vacuum()
   }
 
   def stats(): Map[String, Long] = {
@@ -1094,7 +1099,8 @@ final class GraftDB(
       "blobSegments" -> st.blobFiles.size.toLong,
       "rows" -> st.files.map(_.rows).sum,
       "nextVersion" -> st.nextVersion,
-      "nextBlobId" -> st.nextBlobId)
+      "nextBlobId" -> st.nextBlobId,
+      "manifestSeq" -> st.commitSeq)
   }
 
   /** Total manifest-recorded rows at one level (L1 bound checks, tests). */
@@ -1127,7 +1133,7 @@ final class GraftDB(
     */
   def backupTo(destDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    require(!GraftDB.hasManifest(new Path(destDir), hconf),
+    require(!Manifest.exists(hconf, destDir),
       s"backupTo: $destDir already holds an engine manifest — refusing to overwrite")
     val s = snapshot()
     try {
@@ -1152,7 +1158,7 @@ final class GraftDB(
           throw new java.io.IOException(s"backupTo: copy failed for $src")
       }
       // manifest LAST: the atomic commit is what makes the backup real
-      val dm = new Manifest(destDir, options.manifestLogCompactEvery)
+      val dm = new Manifest(hconf, destDir, options.manifestLogCompactEvery)
       dm.commit(_ => ManifestDelta(
         nextVersion = Some(st.nextVersion),
         nextBlobId = Some(st.nextBlobId),
@@ -1198,15 +1204,9 @@ object GraftDB {
     */
   def openBackup(spark: SparkSession, dir: String,
       options: GraftOptions = GraftOptions()): GraftDB = {
-    require(hasManifest(new Path(dir), spark.sparkContext.hadoopConfiguration),
+    require(Manifest.exists(spark.sparkContext.hadoopConfiguration, dir),
       s"openBackup: no engine manifest at $dir — incomplete or missing backup")
     new GraftDB(spark, dir, options)
-  }
-
-  /** Whether `dir` holds an engine manifest (a base snapshot or a log). */
-  private def hasManifest(dir: Path, conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val fs = dir.getFileSystem(conf)
-    fs.exists(new Path(dir, "MANIFEST.json")) || fs.exists(new Path(dir, "MANIFEST.log"))
   }
 
   /** [[GraftDB.resolved]]'s window order as a driver-side ordering, the

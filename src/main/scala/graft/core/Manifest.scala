@@ -1,7 +1,8 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import graft.store.{Logged, ManifestLog}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -47,8 +48,7 @@ final case class BlobFileMeta(
   * `kv/lsm/compact.go:626-751`). Empty until the first multi-file write;
   * json4s fills the default for manifests written before this field.
   *
-  * `commitSeq` numbers commits; it anchors the change-log replay (a log
-  * record applies iff its seq is past the base snapshot's).
+  * `commitSeq` numbers commits: it is the seq of the last record applied.
   */
 final case class ManifestState(
     nextVersion: Long,
@@ -101,119 +101,42 @@ object ManifestDelta {
   val empty: ManifestDelta = ManifestDelta()
 }
 
-object Manifest {
-  // one writer monitor per rootDir: two Manifest instances on the same
-  // dir (stateless reopen, a second GraftDB handle in one JVM) must
-  // serialize through the same in-process lock — per-instance locks
-  // would let their commits interleave the truncate/append sequence.
-  // Keyed by the REAL path (dir created first so it resolves): a lexical
-  // normalize would give aliased spellings of one dir — a symlink and
-  // its target — different monitors, and the second concurrent commit
-  // would then hit the same MANIFEST.lock inode from one JVM and die
-  // with OverlappingFileLockException instead of waiting its turn.
-  private val rootLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[core] def lockFor(rootDir: String): Object = {
-    val p = Paths.get(rootDir).toAbsolutePath
-    Files.createDirectories(p)
-    val key =
-      try p.toRealPath().toString
-      catch { case _: java.io.IOException => p.normalize.toString }
-    rootLocks.computeIfAbsent(key, _ => new Object)
-  }
-}
-
-/** Change-log manifest, reference-shaped (`kv/file/manifest.go:122-174,
-  * 291-348`): a base snapshot (`MANIFEST.json`, atomic rename) plus an
-  * append-only record log (`MANIFEST.log`, one JSON line per commit).
-  * A commit appends ONE record sized by the [[ManifestDelta]] it was
-  * handed — never the whole table's metadata — so at the O(10^5) files a
-  * 100 TB table implies, a 1-row `batchSet` writes ~hundreds of bytes,
-  * not tens of MB, and spends commit CPU proportional to the files it
-  * touched. Past `logCompactEvery` records the log folds into a fresh
-  * snapshot (the reference's rewrite threshold) and restarts empty.
+/** The engine's manifest: a [[ManifestLog]] of [[ChangeRecord]]s under
+  * `rootDir`, the reference's change records plus rewrite
+  * (`kv/file/manifest.go:122-174, 291-348`). A commit publishes ONE
+  * record sized by the [[ManifestDelta]] it was handed, so at the O(10^5)
+  * files a 100 TB table implies a 1-row `batchSet` writes ~hundreds of
+  * bytes and spends commit CPU proportional to the files it touched.
+  * Every `logCompactEvery` records the committer also writes a
+  * whole-state checkpoint, where cold readers start.
   *
-  * Crash contract:
-  *  - record append: an UNTERMINATED final chunk (the trailing '\n' is the
-  *    last byte a successful append writes) is a crashed append of a
-  *    commit that never returned — dropped on replay, truncated by the
-  *    next commit before it appends (readers never truncate; only the
-  *    single writer does). An unparsable newline-TERMINATED record was
-  *    acknowledged to its committer, and an out-of-sequence record broke
-  *    the chain — both are real corruption and fail loudly.
-  *  - snapshot compaction: snapshot rename is atomic; a crash before the
-  *    log truncation leaves stale records whose `seq <= base.commitSeq`,
-  *    which replay skips (idempotent).
-  *
-  * Reads are served from an in-process cached state, revalidated by two
-  * cheap file stats (size + mtime of snapshot and log) so a second
-  * Manifest instance on the same dir — the stateless-reopen path — still
-  * observes foreign commits. A cold (re)load holds the file lock in
-  * SHARED mode: it reads two files, and a foreign commit+fold landing
-  * between them would otherwise present as corruption (see [[load]]).
-  *
-  * Writer safety, three rings (the reference's single writer goroutine,
-  * `kv/db.go:224-285`, generalized to writers it never had to face):
-  *  - same instance, many threads: the per-rootDir monitor serializes.
-  *  - same JVM, many INSTANCES on one dir: the monitor is keyed by
-  *    normalized rootDir in [[Manifest.lockFor]], so they share it.
-  *  - separate PROCESSES on one dir: every commit holds an OS file lock
-  *    on `MANIFEST.lock` for its load→truncate→append critical section
-  *    (and re-loads inside it), so two JVMs cannot interleave torn-tail
-  *    truncation with a live append or double-assign a commit seq. The
-  *    lock is advisory, per-commit (never held across commits), and
-  *    released by the OS on process death — no stale-lock recovery
-  *    needed.
+  * Nothing is locked: a writer that loses its seq to another (thread,
+  * handle or process) re-runs `f` on the state holding the winner's
+  * record, and a crashed writer leaves no state to recover. The state
+  * last read is cached per dir and shared by every instance on it, so a
+  * reopen starts warm; a load probes for foreign commits. (As with Delta
+  * Lake's per-path log cache, deleting a store and making a new one at
+  * the same path in a JVM that read the old one is not supported.) A
+  * store written before the log is the base of its first records (see
+  * [[legacy]]).
   */
-final class Manifest(rootDir: String, logCompactEvery: Int = 1024) {
+final class Manifest(conf: Configuration, rootDir: String, logCompactEvery: Int = 1024) {
   private implicit val fmts: Formats = DefaultFormats
-  private val manifestPath: Path = Paths.get(rootDir, "MANIFEST.json")
-  private val tmpPath: Path = Paths.get(rootDir, "MANIFEST.json.tmp")
-  private val logPath: Path = Paths.get(rootDir, "MANIFEST.log")
-  private val lockFilePath: Path = Paths.get(rootDir, "MANIFEST.lock")
-  private val lock = Manifest.lockFor(rootDir)
-
-  // cached state + the on-disk fingerprint it was derived from
-  private var cached: ManifestState = _
-  private var cachedStamp: (Long, Long, Long, Long) = _
-  private var logRecords: Int = 0
-  // byte length of the log's VALID prefix (complete, parsed records). A
-  // torn tail beyond it is truncated by the next commit — never appended
-  // after, which would merge the torn bytes and the new record into one
-  // unparsable line.
-  private var validLogBytes: Long = 0L
-
-  Files.createDirectories(Paths.get(rootDir))
-
-  private def stamp(): (Long, Long, Long, Long) = {
-    def sizeMtime(p: Path): (Long, Long) =
-      if (Files.exists(p)) (Files.size(p), Files.getLastModifiedTime(p).toMillis)
-      else (-1L, -1L)
-    val (ms, mt) = sizeMtime(manifestPath)
-    val (ls, lt) = sizeMtime(logPath)
-    (ms, mt, ls, lt)
-  }
+  private val log = new ManifestLog(conf, rootDir, wholeRecords = false)
+  private val legacySnapshot = new Path(rootDir, "MANIFEST.json")
+  private val legacyLog = new Path(rootDir, "MANIFEST.log")
+  private val key = legacySnapshot.getFileSystem(conf).makeQualified(new Path(rootDir)).toString
 
   private def applyRecord(st: ManifestState, r: ChangeRecord): ManifestState = {
-    val files =
-      if (r.removePaths.isEmpty && r.addFiles.isEmpty) st.files
-      else {
-        val rm = r.removePaths.toSet
-        st.files.filterNot(f => rm.contains(f.path)) ++ r.addFiles
-      }
-    val blobs =
-      if (r.removeBlobPaths.isEmpty && r.addBlobs.isEmpty) st.blobFiles
-      else {
-        val rm = r.removeBlobPaths.toSet
-        st.blobFiles.filterNot(b => rm.contains(b.path)) ++ r.addBlobs
-      }
+    def patch[A](xs: Vector[A], rm: Vector[String], add: Vector[A])(key: A => String) =
+      if (rm.isEmpty && add.isEmpty) xs
+      else { val gone = rm.toSet; xs.filterNot(x => gone(key(x))) ++ add }
     val bounds0 = if (r.clearBounds) Vector.empty[String] else st.rangeBoundsHex
     val bounds =
       if (r.addBounds.isEmpty && r.removeBounds.isEmpty) bounds0
-      else {
-        val rm = r.removeBounds.toSet
-        (bounds0.filterNot(rm.contains) ++ r.addBounds).sorted
-      }
-    ManifestState(r.nextVersion, r.nextBlobId, files, blobs, bounds, r.seq)
+      else patch(bounds0, r.removeBounds, r.addBounds)(identity).sorted
+    ManifestState(r.nextVersion, r.nextBlobId, patch(st.files, r.removePaths, r.addFiles)(_.path),
+      patch(st.blobFiles, r.removeBlobPaths, r.addBlobs)(_.path), bounds, r.seq)
   }
 
   /** The change record one delta produces on top of `cur` — a rename plus
@@ -232,155 +155,88 @@ final class Manifest(rootDir: String, logCompactEvery: Int = 1024) {
       addBounds = d.addBounds,
       removeBounds = d.removeBounds)
 
-  private def coldLoad(): ManifestState = {
-    val base =
-      if (Files.exists(manifestPath))
-        Serialization.read[ManifestState](Files.readString(manifestPath))
-      else ManifestState(1L, 1L, Vector.empty, Vector.empty)
-    var st = base
-    logRecords = 0
-    validLogBytes = 0L
-    if (Files.exists(logPath)) {
-      val bytes = Files.readAllBytes(logPath)
-      // Byte-accurate line walk: a record is COMMITTED iff its trailing
-      // '\n' made it to disk (the last byte a successful append writes).
-      // An unterminated final chunk — parseable or not — is a crashed,
-      // unacknowledged append: dropped here, truncated by the next commit.
-      // (Applying a parseable-but-unterminated record would advance the
-      // in-memory seq past validLogBytes, and the truncating writer would
-      // then leave a seq gap on disk.) An unparsable newline-TERMINATED
-      // record was acknowledged to its committer — real corruption, fails
-      // loudly wherever it sits.
-      var start = 0
-      var lineNo = 0
-      while (start < bytes.length) {
-        var end = start
-        while (end < bytes.length && bytes(end) != '\n') end += 1
-        val terminated = end < bytes.length
-        lineNo += 1
-        if (terminated && end > start) {
-          val line = new String(bytes, start, end - start, StandardCharsets.UTF_8)
-          val r =
-            try Serialization.read[ChangeRecord](line)
-            catch {
-              case e: Exception => throw new IllegalStateException(
-                s"corrupt manifest log record at $logPath line $lineNo", e)
-            }
-          if (r.seq > st.commitSeq) {
-            if (r.seq != st.commitSeq + 1)
-              throw new IllegalStateException(
-                s"manifest log gap at $logPath: have seq ${st.commitSeq}, next record is ${r.seq}")
-            st = applyRecord(st, r)
-            logRecords += 1
-          } // seq <= commitSeq: stale pre-compaction record — skip
-        }
-        if (terminated) validLogBytes = (end + 1).toLong
-        start = end + 1
-      }
-    }
-    st
-  }
-
-  def load(): ManifestState = lock.synchronized {
-    if (cached == null || stamp() != cachedStamp) {
-      // cold (re)load under a SHARED file lock: snapshot and log are two
-      // files read non-atomically, and a foreign process's commit+fold
-      // landing between the two reads would replay as a phantom seq gap
-      // (new log against the old snapshot) or cache a state missing the
-      // folded records (new snapshot, log read after delete but before
-      // the next append). Shared mode: readers never queue behind each
-      // other, only behind a writer mid-commit. The stamp is re-taken
-      // inside the lock so it fingerprints exactly what was read.
-      withFileLock(shared = true) {
-        val s = stamp()
-        cached = coldLoad()
-        cachedStamp = s
-      }
-    }
-    cached
-  }
-
-  /** Atomically apply one explicit [[ManifestDelta]] (computed by `f` from
-    * the freshest state). Returns the committed new state. Cost is
-    * O(delta), not O(all files): the commit appends one change record
-    * sized by the delta; only every `logCompactEvery` commits does the
-    * full snapshot rewrite run. `ManifestDelta.empty` commits nothing.
-    *
-    * The whole load→f→truncate→append sequence runs under the
-    * cross-process file lock (see the class scaladoc): the inner `load()`
-    * re-stats INSIDE it, so a record another process committed between
-    * our last read and lock acquisition is replayed before `f` sees the
-    * state, and our record chains after it — never over it.
+  /** The record `text` at `where` applied on top of `st`. A record was
+    * acknowledged once written whole, so one that does not parse, or does
+    * not carry the next seq, fails loudly; with `folded`, one at or below
+    * `st`'s seq (folded into a legacy snapshot) is skipped.
     */
-  def commit(f: ManifestState => ManifestDelta): ManifestState = lock.synchronized {
-    withFileLock(shared = false) {
-      val cur = load()
-      val d = f(cur)
-      if (d == ManifestDelta.empty) cur // no-op: no record, no seq burn
+  private def chain(where: Any, st: ManifestState, text: String, folded: Boolean): ManifestState = {
+    val r =
+      try Serialization.read[ChangeRecord](text)
+      catch { case e: Exception => throw new IllegalStateException(s"corrupt manifest record at $where", e) }
+    if (folded && r.seq <= st.commitSeq) st
+    else if (r.seq == st.commitSeq + 1) applyRecord(st, r)
+    else throw new IllegalStateException(
+      s"manifest record gap at $where: have seq ${st.commitSeq}, next record is ${r.seq}")
+  }
+
+  /** A store written before the log, read and never modified:
+    * `MANIFEST.json` (the whole state) plus `MANIFEST.log` (one change
+    * record a line, [[chain]]ed). An unterminated final line is an append
+    * that crashed before it was acknowledged, and is dropped. The empty
+    * state when neither file exists.
+    */
+  private def legacy(): Logged[ManifestState] = {
+    val snapshot = log.read(legacySnapshot)
+    val lines = log.read(legacyLog)
+    var st = snapshot.fold(ManifestState(1L, 1L, Vector.empty, Vector.empty))(
+      Serialization.read[ManifestState](_))
+    for (text <- lines; (line, i) <- text.split("\n", -1).dropRight(1).zipWithIndex if line.nonEmpty)
+      st = chain(s"$legacyLog line ${i + 1}", st, line, folded = true)
+    Logged(st.commitSeq, st, lines.map(_ => legacyLog).orElse(snapshot.map(_ => legacySnapshot)))
+  }
+
+  def load(): ManifestState = synchronized {
+    val cur = log.load(Option(Manifest.cache.get(key)), legacy(),
+      Serialization.read[ManifestState](_))((st, seq, text) =>
+      chain(log.record(seq), st, text, folded = false))
+    Manifest.cache.put(key, cur)
+    cur.state
+  }
+
+  /** Atomically apply one explicit [[ManifestDelta]], computed by `f` from
+    * the freshest state. Returns the committed new state. Cost is
+    * O(delta), not O(all files): the commit publishes one change record
+    * sized by the delta, and only every `logCompactEvery` records a
+    * whole-state checkpoint. `ManifestDelta.empty` commits nothing. When
+    * another writer publishes the seq first, `f` runs again on the state
+    * that includes its record, so `f` must only read the state it is
+    * handed.
+    */
+  def commit(f: ManifestState => ManifestDelta): ManifestState = synchronized {
+    val cur = load()
+    val d = f(cur)
+    if (d == ManifestDelta.empty) cur // no-op: no record, no seq burn
+    else {
+      val rec = recordOf(cur, d)
+      if (!log.publish(log.record(rec.seq), Serialization.write(rec))) commit(f)
       else {
-        val rec = recordOf(cur, d)
         val next = applyRecord(cur, rec)
-        val line = Serialization.write(rec) + "\n"
-        // writer-side recovery: drop a torn tail BEFORE appending, so the
-        // new record starts its own line instead of merging with the torn
-        // bytes (readers never truncate — only the locked writer does)
-        if (Files.exists(logPath) && Files.size(logPath) > validLogBytes) {
-          val ch = java.nio.channels.FileChannel.open(logPath, StandardOpenOption.WRITE)
-          try ch.truncate(validLogBytes) finally ch.close()
-        }
-        Files.write(logPath, line.getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        validLogBytes += line.getBytes(StandardCharsets.UTF_8).length.toLong
-        logRecords += 1
-        if (logRecords >= logCompactEvery) compactLog(next)
-        cached = next
-        cachedStamp = stamp()
+        Manifest.cache.put(key, Logged(rec.seq, next, Some(log.record(rec.seq))))
+        if (rec.seq % logCompactEvery == 0)
+          log.publish(log.checkpoint(rec.seq), Serialization.write(next))
         next
       }
     }
   }
 
-  // file-lock reentrancy: commit holds the EXCLUSIVE lock and calls
-  // load() inside it, which must not reacquire (the JVM would throw
-  // OverlappingFileLockException on the self-overlap). Guarded by the
-  // per-rootDir monitor, which is always held here.
-  private var fileLockHeld = false
-
-  /** Run `body` holding the advisory OS lock on `MANIFEST.lock` — the
-    * cross-PROCESS ring: exclusive for a writer's load→truncate→append
-    * critical section, shared for a reader's two-file cold load. Within
-    * one JVM the per-rootDir monitor is already held (OS file locks are
-    * per-JVM, so without it a second in-JVM committer would hit
-    * OverlappingFileLockException instead of waiting). `lock()` BLOCKS
-    * until a foreign process releases: honest processes serialize rather
-    * than fail; the crash case self-heals because the OS drops a dead
-    * process's locks.
+  /** Delete the log files a cold reader no longer needs: those before the
+    * newest checkpoint, and the legacy files it supersedes.
     */
-  private def withFileLock[A](shared: Boolean)(body: => A): A = {
-    if (fileLockHeld) body
-    else {
-      val ch = java.nio.channels.FileChannel.open(lockFilePath,
-        StandardOpenOption.CREATE, StandardOpenOption.READ, StandardOpenOption.WRITE)
-      try {
-        val fl = ch.lock(0L, Long.MaxValue, shared)
-        fileLockHeld = true
-        try body finally { fileLockHeld = false; fl.release() }
-      } finally ch.close()
-    }
-  }
+  def vacuum(): Unit = log.vacuum(legacySnapshot, legacyLog)
+}
 
-  /** Fold the log into a fresh base snapshot (the reference's manifest
-    * rewrite, `kv/file/manifest.go:291-348`). Snapshot rename is atomic;
-    * a crash before the log delete leaves only stale-seq records, which
-    * replay skips.
+object Manifest {
+  // qualified root dir -> the state last read or committed there
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Logged[ManifestState]]()
+
+  /** Whether `dir` holds an engine manifest, in either layout: whether a
+    * load read anything.
     */
-  private def compactLog(st: ManifestState): Unit = {
-    Files.writeString(tmpPath, Serialization.write(st))
-    Files.move(tmpPath, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    Files.deleteIfExists(logPath)
-    logRecords = 0
-    validLogBytes = 0L
+  def exists(conf: Configuration, dir: String): Boolean = {
+    val m = new Manifest(conf, dir)
+    m.load()
+    cache.get(m.key).source.isDefined
   }
 }
 

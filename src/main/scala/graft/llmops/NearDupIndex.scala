@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
 import graft.functions.Text
 import graft.functions.expressions.HashExpressions
 import graft.store.{ManifestStore, PartFile, TagFence}
+import graft.store.ManifestStore.conf
 import graft.store.ManifestFileIndex.{Root, readRoots, stage}
 
 /** Persisted, appendable MinHash-LSH near-duplicate index — the streaming
@@ -21,8 +22,9 @@ import graft.store.ManifestFileIndex.{Root, readRoots, stage}
   * Layout under `indexDir` (the text/IVF index contract: stage dirs,
   * then ONE atomic manifest swap; readers never see a torn batch):
   *
-  *   MANIFEST.json    {numBands, rowsPerBand, shingleK, numBuckets,
-  *                     bands[], shingles[], appliedTags[], tagHighWater}
+  *   _manifest/       records of {numBands, rowsPerBand, shingleK,
+  *                     numBuckets, bands[], shingles[], appliedTags[],
+  *                     tagHighWater} ([[graft.store.ManifestStore]])
   *   bands-<uuid>/pb=N/     (bh, id) — one row per (doc, band key),
   *                     partitioned by pb = pmod(bh, numBuckets): a probe
   *                     batch's band keys hash to a bounded pb set, so
@@ -135,7 +137,7 @@ object NearDupIndex {
     require(numBands > 0 && rowsPerBand > 0 && shingleK > 0 && numBuckets > 0,
       "buildNearDupIndex: all parameters must be positive")
     val spark = docs.sparkSession
-    val m0 = store.read(spark, indexDir)
+    val m0 = store.read(conf(spark), indexDir)
     val empty = NearDupManifest(numBands, rowsPerBand, shingleK, numBuckets,
       Vector.empty, Vector.empty)
     val next = stageBatch(docs, indexDir, empty, idCol, textCol) match {
@@ -143,7 +145,7 @@ object NearDupIndex {
         withFiles(empty.copy(bands = Vector(b._1), shingles = Vector(sh._1), nDocs = n), b, sh)
       case None => empty // empty corpus: a legitimate streaming start state
     }
-    store.commitIfUnchanged(spark, indexDir, m0, next)
+    store.commitIfUnchanged(conf(spark), indexDir, m0, next)
   }
 
   /** Append a batch of NEW documents. Returns false (writing nothing)
@@ -157,12 +159,12 @@ object NearDupIndex {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = lock.synchronized {
     val spark = docs.sparkSession
-    val m = store.required(spark, indexDir, "appendToNearDupIndex")
+    val m = store.required(conf(spark), indexDir, "appendToNearDupIndex")
     if (batchTag.exists(tags.applied(m, _))) return false
     stageBatch(docs, indexDir, m, idCol, textCol) match {
       case None => false
       case Some((b, sh, n)) =>
-        store.commitOrDrop(spark, indexDir, m, withFiles(tags.record(
+        store.commitOrDrop(conf(spark), indexDir, m, withFiles(tags.record(
           m.copy(bands = m.bands :+ b._1, shingles = m.shingles :+ sh._1,
             nDocs = m.nDocs + n), batchTag), b, sh), Seq(b._1, sh._1))
         true
@@ -186,7 +188,7 @@ object NearDupIndex {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = lock.synchronized {
     val spark = ids.sparkSession
-    val m = store.required(spark, indexDir, "deleteFromNearDupIndex")
+    val m = store.required(conf(spark), indexDir, "deleteFromNearDupIndex")
     val delIds = ids.select(col(idCol).cast("long").as("id")).distinct()
     val delPs = delIds
       .select(pmod(xxhash64(col("id")), lit(m.numBuckets.toLong)).cast("int").as("ps"))
@@ -206,7 +208,7 @@ object NearDupIndex {
         .delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
-    store.commitOrDrop(spark, indexDir, m,
+    store.commitOrDrop(conf(spark), indexDir, m,
       withFiles(m.copy(tombs = m.tombs :+ tDir, nDeleted = m.nDeleted + n), t), Seq(tDir))
     n
   }
@@ -233,7 +235,7 @@ object NearDupIndex {
       maxBucketSize: Int = 5000,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val m = store.required(spark, indexDir, "probeNearDupIndex")
+    val m = store.required(conf(spark), indexDir, "probeNearDupIndex")
     val psh = probe.select(col(idCol).cast("long").as("probe_id"),
         Text.shingles(col(textCol), m.shingleK).as("psh"))
       .filter(size(col("psh")) > 0)
@@ -294,7 +296,7 @@ object NearDupIndex {
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Boolean = lock.synchronized {
-    store.read(spark, indexDir) match {
+    store.read(conf(spark), indexDir) match {
       case Some(m) if m.bands.size > 1 || m.shingles.size > 1 ||
           m.tombs.nonEmpty || tags.pending(m) =>
         val dead = tombIds(spark, indexDir, m)
@@ -302,7 +304,7 @@ object NearDupIndex {
           .join(dead, Seq("id"), "left_anti"), indexDir, "bands-", Some("pb"))
         val sh = stage(readRoots(spark, indexDir, m.shingles, m.files, shingleSchema, Some("ps"))
           .join(dead, Seq("id"), "left_anti"), indexDir, "shingles-", Some("ps"))
-        store.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m.copy(
+        store.commitOrDrop(conf(spark), indexDir, m, withFiles(tags.absorb(m.copy(
           bands = Vector(b._1), shingles = Vector(sh._1),
           tombs = Vector.empty,
           nDocs = m.nDocs - m.nDeleted, nDeleted = 0L)), b, sh), Seq(b._1, sh._1))
@@ -320,7 +322,7 @@ object NearDupIndex {
   def maintainNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, foldRootsAbove: Int = 4,
       deadRatio: Double = 0.25): Boolean = lock.synchronized {
-    store.read(spark, indexDir) match {
+    store.read(conf(spark), indexDir) match {
       case Some(m) if m.bands.size > foldRootsAbove ||
           (m.nDeleted > 0 && m.nDeleted >= deadRatio * math.max(1L, m.nDocs)) =>
         compactNearDupIndex(spark, indexDir)
@@ -335,7 +337,7 @@ object NearDupIndex {
     */
   def vacuumNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, minAgeMs: Long = 600000L): Int = lock.synchronized {
-    store.vacuum(spark, indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+    store.vacuum(conf(spark), indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
       (m.bands ++ m.shingles ++ m.tombs).toSet, "bands-", "shingles-", "tombs-")))
   }
 }

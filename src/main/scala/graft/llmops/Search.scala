@@ -6,6 +6,7 @@ import graft.functions.Text
 import graft.functions.expressions.TopKExpressions
 import org.apache.spark.sql.types.StructType
 import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
+import graft.store.ManifestStore.conf
 import graft.store.ManifestFileIndex.{Root, readRoots, stage}
 
 /** Keyword and hybrid retrieval over a document corpus — the lookup side of
@@ -199,11 +200,12 @@ object Search {
   // tokenize/tf/df scan once, then every query reads only the index
   // partitions its terms hash to. Layout under `indexDir`:
   //
-  //   MANIFEST.json        {numBuckets, nDocs, sumDl, dict, postings[],
-  //                        appliedTags[]} — every mutation stages its data
-  //                        dirs first and commits with ONE atomic-rename
-  //                        manifest swap (the GraftDB/IVF write-then-flip
-  //                        contract); readers never see a torn batch
+  //   _manifest/           records of {numBuckets, nDocs, sumDl, dict,
+  //                        postings[], appliedTags[]} — every mutation
+  //                        stages its data dirs first and commits by
+  //                        publishing ONE manifest record (the GraftDB/IVF
+  //                        write-then-flip contract); readers never see a
+  //                        torn batch
   //   postings-<uuid>/bucket=N/  (tok, doc_id, tf, dl) — immutable roots,
   //                        one per build/append, partitioned by
   //                        bucket = xxhash64(tok) % numBuckets
@@ -340,10 +342,10 @@ object Search {
       textCol: String = "text"): Unit = textLock.synchronized {
     require(numBuckets > 0, "buildTextIndex: numBuckets must be positive")
     val spark = docs.sparkSession
-    val m0 = textStore.read(spark, indexDir)
+    val m0 = textStore.read(conf(spark), indexDir)
     val (p, d, l, n, sumDl) =
       stageIndexDelta(docs, indexDir, numBuckets, idCol, textCol, skipIfEmpty = false).get
-    textStore.commitIfUnchanged(spark, indexDir, m0,
+    textStore.commitIfUnchanged(conf(spark), indexDir, m0,
       withFiles(TextIndexManifest(numBuckets, n, sumDl, d._1, Vector(p._1),
         docLens = Vector(l._1), docLensFull = true), p, d, l))
   }
@@ -373,7 +375,7 @@ object Search {
       idCol: String = "doc_id",
       textCol: String = "text"): Boolean = textLock.synchronized {
     val spark = docs.sparkSession
-    val m = textStore.required(spark, indexDir, "appendToTextIndex")
+    val m = textStore.required(conf(spark), indexDir, "appendToTextIndex")
     if (batchTag.exists(tags.applied(m, _))) return false // replayed batch
     val staged = stageIndexDelta(docs, indexDir, m.numBuckets,
       idCol, textCol, skipIfEmpty = true)
@@ -384,7 +386,7 @@ object Search {
       postings = m.postings :+ p._1, dicts = m.dicts :+ d._1,
       docLens = m.docLens :+ l._1) // docLensFull inherited: appends can't
                                    // retrofit coverage a legacy base lacks
-    textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.record(next, batchTag), p, d, l),
+    textStore.commitOrDrop(conf(spark), indexDir, m, withFiles(tags.record(next, batchTag), p, d, l),
       Seq(p._1, d._1, l._1))
     true
   }
@@ -425,7 +427,7 @@ object Search {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = textLock.synchronized {
     val spark = ids.sparkSession
-    val m = textStore.required(spark, indexDir, "deleteFromTextIndex")
+    val m = textStore.required(conf(spark), indexDir, "deleteFromTextIndex")
     if (!m.docLensFull) throw new IllegalStateException(
       s"deleteFromTextIndex: index at $indexDir predates the doc-length " +
         "sidecar (docLensFull=false) — stats could not be adjusted exactly; " +
@@ -454,7 +456,7 @@ object Search {
         .delete(new org.apache.hadoop.fs.Path(s"$indexDir/$tDir"), true)
       return 0L
     }
-    textStore.commitOrDrop(spark, indexDir, m, withFiles(m.copy(
+    textStore.commitOrDrop(conf(spark), indexDir, m, withFiles(m.copy(
       tombs = m.tombs :+ tDir,
       nDeleted = m.nDeleted + n, sumDlDeleted = m.sumDlDeleted + sdl), t), Seq(tDir))
     n
@@ -589,7 +591,7 @@ object Search {
           indexDir, "dict-", Some("bucket")))
       (p, d)
     }
-    textStore.read(spark, indexDir) match {
+    textStore.read(conf(spark), indexDir) match {
       case Some(m) if includeBase && (m.postings.size > 1 || m.dicts.nonEmpty ||
           m.tombs.nonEmpty || m.docLens.size > 1) =>
         // the major fold is the PURGE point for tombstoned docs (the
@@ -617,7 +619,7 @@ object Search {
             else lens.join(broadcast(tombIds(spark, indexDir, m)), Seq("doc_id"), "left_anti"),
             indexDir, "doclens-", Some("ps")))
         }
-        textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m).copy(
+        textStore.commitOrDrop(conf(spark), indexDir, m, withFiles(tags.absorb(m).copy(
           dict = d._1, dicts = Vector.empty, postings = Vector(p._1),
           levelRoots = 1, docLens = l.map(_._1).toVector,
           tombs = Vector.empty,
@@ -629,7 +631,7 @@ object Search {
         // fold ONLY the L0s — prior fold products stay untouched
         val (p, d) = foldRoots(m,
           m.postings.drop(m.levelRoots), m.dicts.drop(m.levelRoots - 1))
-        textStore.commitOrDrop(spark, indexDir, m, withFiles(tags.absorb(m).copy(
+        textStore.commitOrDrop(conf(spark), indexDir, m, withFiles(tags.absorb(m).copy(
           postings = m.postings.take(m.levelRoots) :+ p._1,
           dicts = m.dicts.take(m.levelRoots - 1) ++ d.map(_._1).toVector,
           levelRoots = m.levelRoots + 1), p +: d.toSeq: _*),
@@ -638,7 +640,7 @@ object Search {
       case Some(m) if tags.pending(m) =>
         // nothing to fold — only legacy numeric tags to absorb: a pure
         // manifest edit, never a corpus-wide postings/dict rewrite
-        textStore.commitIfUnchanged(spark, indexDir, Some(m), tags.absorb(m))
+        textStore.commitIfUnchanged(conf(spark), indexDir, Some(m), tags.absorb(m))
         true
       case _ => false
     }
@@ -666,7 +668,7 @@ object Search {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       majorSizeRatio: Double = 1.0, deadRatio: Double = 0.25): Boolean = textLock.synchronized {
     val minored = compactTextIndex(spark, indexDir, includeBase = false)
-    val majored = textStore.read(spark, indexDir) match {
+    val majored = textStore.read(conf(spark), indexDir) match {
       case Some(m) if m.nDeleted > 0 && m.nDeleted >= deadRatio * m.nDocs =>
         compactTextIndex(spark, indexDir)
       case Some(m) if m.postings.size > 1 =>
@@ -698,7 +700,7 @@ object Search {
       excludeSelf: Boolean = false,
       queryIdCol: String = "query_id",
       queryTextCol: String = "qtext"): DataFrame = {
-    val m = textStore.required(spark, indexDir, "bm25TopKIndexed")
+    val m = textStore.required(conf(spark), indexDir, "bm25TopKIndexed")
     // LIVE corpus stats: exact integer totals minus the tombstoned docs'
     // exact contributions — avgdl reproduces the scan form's avg() over
     // the remaining corpus bit-for-bit. Any value serves an empty index
@@ -755,7 +757,7 @@ object Search {
   def vacuumTextIndex(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       minAgeMs: Long = 600000L): Int = textLock.synchronized {
-    textStore.vacuum(spark, indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+    textStore.vacuum(conf(spark), indexDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
       liveRoots(m), "postings-", "dict-", "doclens-", "tombs-")))
   }
 }

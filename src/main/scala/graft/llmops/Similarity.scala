@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 import graft.functions.expressions.TopKExpressions
 import graft.store.ManifestStore
+import graft.store.ManifestStore.conf
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -114,12 +115,12 @@ object Similarity {
   //
   // Generational: each build/re-fit writes a COMPLETE new generation under
   // indexDir/g<N>/{centroids,assigned,stats} and then atomically points
-  // indexDir/MANIFEST.json at it — a writer never touches the live
+  // indexDir's manifest at it — a writer never touches the live
   // generation, so a re-fit that dies mid-write leaves the index exactly
   // as it was (the GraftDB manifest pattern applied to the index). Old
   // generations stay on disk for in-flight readers until vacuumIvfIndex.
   // Indexes from the pre-manifest layout (tables at the indexDir root) are
-  // still readable: no MANIFEST.json resolves to the root paths.
+  // still readable: no manifest resolves to the root paths.
 
   private def ivfFs(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -167,7 +168,7 @@ object Similarity {
     * a legacy root-layout (or empty) directory.
     */
   def ivfGeneration(spark: org.apache.spark.sql.SparkSession, indexDir: String): Option[Int] =
-    ivfStore.read(spark, indexDir).map(_.gen)
+    ivfStore.read(conf(spark), indexDir).map(_.gen)
 
   private def ivfPaths(spark: org.apache.spark.sql.SparkSession, indexDir: String): (String, String, String) =
     ivfGeneration(spark, indexDir) match {
@@ -182,7 +183,7 @@ object Similarity {
     */
   private def ivfAssignedPaths(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Seq[String] =
-    ivfStore.read(spark, indexDir) match {
+    ivfStore.read(conf(spark), indexDir) match {
       case Some(m) =>
         s"$indexDir/g${m.gen}/assigned" +: m.sealedDirs.map(d => s"$indexDir/g${m.gen}/$d")
       case None => Seq(s"$indexDir/assigned")
@@ -228,7 +229,7 @@ object Similarity {
 
   private def commitIvfGeneration(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, expected: Option[IvfManifest], gen: Int): Unit =
-    ivfStore.commitIfUnchanged(spark, indexDir, expected, IvfManifest(gen)) // fresh gen: no sealed appends
+    ivfStore.commitIfUnchanged(conf(spark), indexDir, expected, IvfManifest(gen)) // fresh gen: no sealed appends
 
   /** Delete all index generations except the live one (the explicit
     * cleanup point, like GraftDB.vacuum — in-flight readers of old
@@ -242,7 +243,7 @@ object Similarity {
     */
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       minAgeMs: Long = 600000L): Int = ivfLock.synchronized {
-    ivfStore.vacuum(spark, indexDir, minAgeMs)(m => Seq(
+    ivfStore.vacuum(conf(spark), indexDir, minAgeMs)(m => Seq(
       // superseded generations, plus the pre-manifest root tables a
       // legacy index leaves behind after its first manifest-era build
       "" -> ((n: String) => (n.matches("g\\d+") && n != s"g${m.gen}") ||
@@ -305,7 +306,7 @@ object Similarity {
     val centroidArr = model.clusterCenters.map(_.toArray)
     // write the ENTIRE generation before the manifest flips — a failure
     // anywhere below leaves the previous generation live and untouched
-    val m0 = ivfStore.read(spark, indexDir)
+    val m0 = ivfStore.read(conf(spark), indexDir)
     val nextGen = m0.map(_.gen + 1).getOrElse(0)
     val genDir = s"$indexDir/g$nextGen"
     centroidArr.zipWithIndex
@@ -374,7 +375,7 @@ object Similarity {
     import spark.implicits._
     import graft.functions.expressions.VectorExpressions
     val (centroidsPath, assignedPath, statsPath) = ivfPaths(spark, indexDir)
-    val manifest = ivfStore.read(spark, indexDir)
+    val manifest = ivfStore.read(conf(spark), indexDir)
     val centroids = spark.read.parquet(centroidsPath)
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
@@ -415,7 +416,7 @@ object Similarity {
         while (!hasParquet && it.hasNext)
           hasParquet = it.next().getPath.getName.endsWith(".parquet")
         if (hasParquet)
-          ivfStore.commitOrDrop(spark, indexDir, m,
+          ivfStore.commitOrDrop(conf(spark), indexDir, m,
             m.copy(sealedDirs = m.sealedDirs :+ batchDir), Seq(s"g${m.gen}/$batchDir"))
         else fs.delete(new org.apache.hadoop.fs.Path(batchPath), true)
       case None => // legacy root layout: no manifest to seal into
@@ -496,7 +497,7 @@ object Similarity {
     */
   def compactIvfAppends(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, includeBase: Boolean = true): Boolean = ivfLock.synchronized {
-    ivfStore.read(spark, indexDir) match {
+    ivfStore.read(conf(spark), indexDir) match {
       case Some(m) if !includeBase && m.sealedDirs.size - m.sealedLevels >= 2 =>
         // minor: fold the L0 batches into one dir, base, generation, and
         // prior fold products untouched
@@ -507,7 +508,7 @@ object Similarity {
           .dropDuplicates("neighbor_id")
           .repartition(col("cell"))
           .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/$batchDir")
-        ivfStore.commitOrDrop(spark, indexDir, m,
+        ivfStore.commitOrDrop(conf(spark), indexDir, m,
           m.copy(sealedDirs = m.sealedDirs.take(m.sealedLevels) :+ batchDir,
             sealedLevels = m.sealedLevels + 1), Seq(s"g${m.gen}/$batchDir"))
         true
@@ -559,7 +560,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       majorSizeRatio: Double = 1.0, maxTombRoots: Int = 8): Boolean = ivfLock.synchronized {
     val minored = compactIvfAppends(spark, indexDir, includeBase = false)
-    val majored = ivfStore.read(spark, indexDir) match {
+    val majored = ivfStore.read(conf(spark), indexDir) match {
       case Some(m) if m.tombDirs.size >= math.max(1, maxTombRoots) =>
         compactIvfAppends(spark, indexDir)
       case Some(m) if m.sealedDirs.nonEmpty =>
@@ -597,7 +598,7 @@ object Similarity {
     // probes, ADC scans, re-ranks, drift re-fits, and the major fold all
     // see only live vectors, and the fold/re-fit generation rewrite is
     // thereby the physical purge (its fresh manifest carries no tombs)
-    ivfStore.read(spark, indexDir) match {
+    ivfStore.read(conf(spark), indexDir) match {
       case Some(m) if m.tombDirs.nonEmpty =>
         all.join(broadcast(ivfTombIds(spark, indexDir, m)), Seq("neighbor_id"), "left_anti")
       case _ => all
@@ -636,7 +637,7 @@ object Similarity {
       indexDir: String,
       ids: DataFrame,
       idCol: String = "vec_id"): Long = ivfLock.synchronized {
-    val m = ivfStore.read(spark, indexDir).getOrElse(throw new IllegalStateException(
+    val m = ivfStore.read(conf(spark), indexDir).getOrElse(throw new IllegalStateException(
       s"deleteFromIvfIndex: no manifest at $indexDir — legacy root-layout " +
         "indexes don't support deletes; rebuild with buildIvfIndex"))
     val fresh0 = ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
@@ -653,7 +654,7 @@ object Similarity {
       fs.delete(new org.apache.hadoop.fs.Path(tPath), true)
       return 0L
     }
-    ivfStore.commitOrDrop(spark, indexDir, m,
+    ivfStore.commitOrDrop(conf(spark), indexDir, m,
       m.copy(tombDirs = m.tombDirs :+ tDir), Seq(s"g${m.gen}/$tDir"))
     n
   }
@@ -957,7 +958,7 @@ object Similarity {
     val codebooks = fitPqCodebooks(c, m, ksub,
       fitSampleRows = math.min(fitSampleRows, Int.MaxValue.toLong).toInt, seed = seed,
       vecCol = "cv")
-    val m0 = ivfStore.read(spark, indexDir)
+    val m0 = ivfStore.read(conf(spark), indexDir)
     val nextGen = m0.map(_.gen + 1).getOrElse(0)
     val genDir = s"$indexDir/g$nextGen"
     centroidArr.zipWithIndex

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
+import graft.store.ManifestStore.conf
 
 /** Incrementally-maintained materialized aggregate views — the LSM write
   * discipline (reference: `kv/lsm/level.go:82` flushes immutable runs,
@@ -259,13 +260,13 @@ object AggView {
     require(histCols.isEmpty || (histBins > 0 && histHi > histLo),
       "buildAggView: histogram needs histHi > histLo and histBins > 0")
     val spark = df.sparkSession
-    val prior = store.read(spark, viewDir)
+    val prior = store.read(conf(spark), viewDir)
     val m0 = AggViewManifest(keys, metrics, scale, numBuckets, Vector.empty,
       distinctCols = distinctCols, histCols = histCols,
       histLo = histLo, histHi = histHi,
       histBins = if (histCols.isEmpty) 0 else histBins)
     val (root, n) = stageRoot(df, viewDir, m0, skipIfEmpty = false).get
-    store.commitIfUnchanged(spark, viewDir, prior,
+    store.commitIfUnchanged(conf(spark), viewDir, prior,
       m0.copy(roots = Vector(root._1), nRows = n, files = Map(root),
         schema = rootSchema(partialAgg(df, m0).schema, keys).json))
   }
@@ -281,7 +282,7 @@ object AggView {
       df: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = df.sparkSession
-    val m = store.required(spark, viewDir, "appendToAggView")
+    val m = store.required(conf(spark), viewDir, "appendToAggView")
     if (batchTag.exists(tags.applied(m, _))) return false
     stageRoot(df, viewDir, m, skipIfEmpty = true) match {
       case None => false
@@ -295,7 +296,7 @@ object AggView {
     */
   private[operators] def commitAppend(spark: SparkSession, viewDir: String, m: AggViewManifest,
       staged: ManifestFileIndex.Root, n: Long, batchTag: Option[String]): Unit =
-    store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, staged,
+    store.commitOrDrop(conf(spark), viewDir, m, withStaged(spark, viewDir, m, staged,
       tags.record(m.copy(roots = m.roots :+ staged._1, nRows = m.nRows + n), batchTag)),
       Seq(staged._1))
 
@@ -324,7 +325,7 @@ object AggView {
     * ever ingested, regardless of how the rows arrived.
     */
   def readAggView(spark: SparkSession, viewDir: String): DataFrame = {
-    val m = store.required(spark, viewDir, "readAggView")
+    val m = store.required(conf(spark), viewDir, "readAggView")
     mergedPartial(spark, viewDir, m).select(finalizeCols(m): _*)
   }
 
@@ -335,7 +336,7 @@ object AggView {
     */
   def lookupAggView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = store.required(spark, viewDir, "lookupAggView")
+    val m = store.required(conf(spark), viewDir, "lookupAggView")
     require(values.length == m.keys.length,
       s"lookupAggView: ${m.keys.length} key values expected")
     val aggs = mergeAggs(m)
@@ -367,11 +368,11 @@ object AggView {
     * when a fold ran.
     */
   def compactAggView(spark: SparkSession, viewDir: String): Boolean = lock.synchronized {
-    store.read(spark, viewDir) match {
+    store.read(conf(spark), viewDir) match {
       case Some(m) if m.roots.size > 1 || tags.pending(m) =>
         val root = ManifestFileIndex.stage(mergedPartial(spark, viewDir, m)
           .withColumn("pk", pkExpr(m.keys, m.numBuckets)), viewDir, "agg-", Some("pk"))
-        store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, root,
+        store.commitOrDrop(conf(spark), viewDir, m, withStaged(spark, viewDir, m, root,
           tags.absorb(m.copy(roots = Vector(root._1)))), Seq(root._1))
         true
       case _ => false
@@ -384,7 +385,7 @@ object AggView {
     */
   def maintainAggView(spark: SparkSession, viewDir: String,
       foldRootsAbove: Int = 4): Boolean = lock.synchronized {
-    store.read(spark, viewDir) match {
+    store.read(conf(spark), viewDir) match {
       case Some(m) if m.roots.size > foldRootsAbove =>
         compactAggView(spark, viewDir)
       case _ => false
@@ -397,7 +398,7 @@ object AggView {
     */
   def vacuumAggView(spark: SparkSession, viewDir: String,
       minAgeMs: Long = 600000L): Int = lock.synchronized {
-    store.vacuum(spark, viewDir, minAgeMs)(m =>
+    store.vacuum(conf(spark), viewDir, minAgeMs)(m =>
       Seq("" -> ManifestStore.unreferenced(m.roots.toSet, "agg-")))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.store.{ManifestFileIndex, ManifestStore, PartFile, TagFence}
+import graft.store.ManifestStore.conf
 import graft.store.ManifestFileIndex.{Root, stage}
 
 /** Incrementally-maintained materialized JOIN views — delta-join
@@ -211,7 +212,7 @@ object JoinView {
       s"buildJoinView: fact/dim column names must be disjoint, got $clash")
     require(!(factCols ++ dimCols).exists(c => c == "pk" || c.startsWith("__")),
       "buildJoinView: pk and __-prefixed column names are reserved")
-    val prior = store.read(spark, viewDir)
+    val prior = store.read(conf(spark), viewDir)
     val m0 = JoinViewManifest(joinKeys, factCols, dimCols, numBuckets,
       Vector.empty, Vector.empty)
     val gen = dimGeneration(spark, viewDir, dim, m0, seq = 0L, lit(false))
@@ -220,7 +221,7 @@ object JoinView {
       dimSchema = ManifestFileIndex.dataSchema(gen.schema, "pk").json)
     val rows = joined(fact, dimCurrent(spark, viewDir, m1, None), m1)
     val (root, files) = stage(rows, viewDir, "jv-", Some("pk"))
-    store.commitIfUnchanged(spark, viewDir, prior,
+    store.commitIfUnchanged(conf(spark), viewDir, prior,
       m1.copy(roots = Vector(RootEntry(root, pksOf(files))),
         files = m1.files + (root -> files),
         schema = ManifestFileIndex.dataSchema(rows.schema, "pk").json))
@@ -236,12 +237,12 @@ object JoinView {
       delta: DataFrame,
       batchTag: Option[String] = None): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = store.required(spark, viewDir, "appendFactsToJoinView")
+    val m = store.required(conf(spark), viewDir, "appendFactsToJoinView")
     if (batchTag.exists(factTags.applied(m, _))) return false
     if (delta.isEmpty) return false
     val (dir, files) = stage(joined(delta.select((m.joinKeys ++ m.factCols).map(col): _*),
       dimCurrent(spark, viewDir, m, None), m), viewDir, "jv-", Some("pk"))
-    store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m, Seq(dir -> files), Nil,
+    store.commitOrDrop(conf(spark), viewDir, m, withStaged(spark, viewDir, m, Seq(dir -> files), Nil,
       factTags.record(m.copy(roots = m.roots :+ RootEntry(dir, pksOf(files))), batchTag)),
       Seq(dir))
     true
@@ -279,7 +280,7 @@ object JoinView {
       delExpr: Column,
       batchTag: Option[String]): Boolean = lock.synchronized {
     val spark = delta.sparkSession
-    val m = store.required(spark, viewDir, "upsertDimToJoinView")
+    val m = store.required(conf(spark), viewDir, "upsertDimToJoinView")
     if (batchTag.exists(dimTags.applied(m, _))) return false
     if (delta.isEmpty) return false
     val (dimDir, dimFs) = stage(dimGeneration(spark, viewDir, delta, m, m.nextSeq, delExpr),
@@ -310,7 +311,7 @@ object JoinView {
       case Some((dir, files)) if files.nonEmpty => kept :+ RootEntry(dir, pksOf(files))
       case _ => kept
     })
-    store.commitOrDrop(spark, viewDir, m,
+    store.commitOrDrop(conf(spark), viewDir, m,
       withStaged(spark, viewDir, m, staged.toSeq, Seq(dimDir -> dimFs), dimTags.record(next, batchTag)),
       dimDir +: staged.map(_._1).toSeq)
     true
@@ -328,7 +329,7 @@ object JoinView {
     */
   def readJoinView(spark: SparkSession, viewDir: String,
       inner: Boolean = true): DataFrame = {
-    val m = store.required(spark, viewDir, "readJoinView")
+    val m = store.required(conf(spark), viewDir, "readJoinView")
     val raw = readRaw(spark, viewDir, m)
     val base = if (inner) raw.filter(col("__m")) else raw
     base.select((m.joinKeys ++ m.factCols ++ m.dimCols).map(col): _*)
@@ -342,7 +343,7 @@ object JoinView {
     */
   def lookupJoinView(spark: SparkSession, viewDir: String,
       values: Seq[Any]): DataFrame = {
-    val m = store.required(spark, viewDir, "lookupJoinView")
+    val m = store.required(conf(spark), viewDir, "lookupJoinView")
     require(values.length == m.joinKeys.length,
       s"lookupJoinView: ${m.joinKeys.length} key values expected")
     val raw = readRaw(spark, viewDir, m)
@@ -363,13 +364,13 @@ object JoinView {
     * Bit-identical reads before/after. Returns true when a fold ran.
     */
   def compactJoinView(spark: SparkSession, viewDir: String): Boolean = lock.synchronized {
-    store.read(spark, viewDir) match {
+    store.read(conf(spark), viewDir) match {
       case Some(m) if m.roots.size > 1 || m.dimRoots.size > 1 ||
           factTags.pending(m) || dimTags.pending(m) =>
         val (root, files) = stage(readRaw(spark, viewDir, m), viewDir, "jv-", Some("pk"))
         val (dimDir, dimFs) = stage(dimGeneration(spark, viewDir,
           dimCurrent(spark, viewDir, m, None), m, m.nextSeq, lit(false)), viewDir, "jvdim-", Some("pk"))
-        store.commitOrDrop(spark, viewDir, m, withStaged(spark, viewDir, m,
+        store.commitOrDrop(conf(spark), viewDir, m, withStaged(spark, viewDir, m,
           Seq(root -> files), Seq(dimDir -> dimFs), dimTags.absorb(factTags.absorb(m.copy(
             roots = Vector(RootEntry(root, pksOf(files))),
             dimRoots = Vector(dimDir),
@@ -385,7 +386,7 @@ object JoinView {
   def maintainJoinView(spark: SparkSession, viewDir: String,
       foldRootsAbove: Int = 4, foldDimGensAbove: Int = 4): Boolean =
     lock.synchronized {
-      store.read(spark, viewDir) match {
+      store.read(conf(spark), viewDir) match {
         case Some(m) if m.roots.size > foldRootsAbove ||
             m.dimRoots.size > foldDimGensAbove =>
           compactJoinView(spark, viewDir)
@@ -399,7 +400,7 @@ object JoinView {
     */
   def vacuumJoinView(spark: SparkSession, viewDir: String,
       minAgeMs: Long = 600000L): Int = lock.synchronized {
-    store.vacuum(spark, viewDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
+    store.vacuum(conf(spark), viewDir, minAgeMs)(m => Seq("" -> ManifestStore.unreferenced(
       m.roots.map(_.dir).toSet ++ m.dimRoots, "jv-", "jvdim-")))
   }
 }

@@ -3,28 +3,25 @@ package graft.store
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The `MANIFEST.json` machinery of the persisted index families (text
-  * index, near-dup index, IVF, AggView, JoinView). Each family keeps ONE
-  * instance for its manifest case class `M` and gets from it the
-  * stamp-cached read, the guarded commit and the vacuum skeleton. The
-  * family keeps its case class (the JSON on disk is json4s's rendering
-  * of it), its data layout, its merge logic and its in-process writer
-  * lock.
+/** The manifest machinery of the persisted index families (text index,
+  * near-dup index, IVF, AggView, JoinView). Each family keeps ONE
+  * instance for its manifest case class `M` and gets from it the cached
+  * read, the guarded commit and the vacuum skeleton. The family keeps its
+  * case class (each record on disk is json4s's rendering of it), its data
+  * layout, its merge logic and its in-process writer lock.
   *
-  * Cross-process contract, as implemented: a commit is an OPTIMISTIC
-  * check followed by a rename. [[commitIfUnchanged]] re-reads the
-  * manifest fresh and aborts when it no longer equals the snapshot the
-  * writer staged against; otherwise it writes a tmp file and renames it
-  * over the manifest. Nothing holds the manifest between that check and
-  * the rename, so two writers in different processes can both pass the
-  * check, and then the later rename wins: the earlier commit is lost
-  * without an error (its staged dirs are left unreferenced for
-  * [[vacuum]]). A foreign commit that lands BEFORE a writer's check is
-  * always seen and aborts that writer. Inside one JVM the families'
-  * writer locks serialize mutations, so the window is cross-process only.
+  * A manifest is a [[ManifestLog]] of whole-manifest records under the
+  * store dir; a bare `MANIFEST.json` (a store written before the log)
+  * reads as seq 0. Cross-process contract: a commit publishes the record
+  * after the one its writer staged against, which only one writer can
+  * do, and aborts when the manifest has moved past that snapshot. So a
+  * commit lands or fails loudly, in one JVM or across processes, as long
+  * as no writer takes longer than [[ManifestLog.retainMs]] from its read
+  * to its publish.
   *
   * @param kind       the family's name in abort messages ("text-index")
   * @param vacuumName the public vacuum that reclaims an aborted stage
@@ -34,76 +31,69 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
 
   private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  // store dir -> (length, mtime, parsed manifest)
-  private val cache = new ConcurrentHashMap[String, (Long, Long, M)]()
+  // store dir -> its manifest as of the newest record read (None: none)
+  private val cache = new ConcurrentHashMap[String, Logged[Option[M]]]()
 
-  /** Actual parses (cache misses), so a spec can pin the cache. */
+  /** Actual parses, so a spec can pin the cache. */
   val parses = new AtomicLong(0L)
 
-  /** The manifest under `dir`, None when there is none. A cached parse is
-    * revalidated by (length, mtime) with one getFileStatus; every commit
-    * changes that stamp, so foreign commits are seen. `fresh = true`
-    * always re-parses: the guard reads need it, because a foreign commit
-    * of identical length inside the store's mtime granularity would
-    * stamp-match.
-    *
-    * Throws IllegalArgumentException when `dir` holds a Hadoop glob
+  private def parse(text: String): Option[M] = {
+    parses.incrementAndGet()
+    Some(org.json4s.jackson.Serialization.read[M](text))
+  }
+
+  /** Throws IllegalArgumentException when `dir` holds a Hadoop glob
     * metacharacter: path-taking Hadoop and Spark tools (`hadoop fs`,
     * `spark.read`) would expand such a dir as a pattern and silently
-    * match nothing. Every entry point starts with this read, so the check
+    * match nothing. Every entry point starts with a read, so the check
     * fails before anything is staged.
     */
-  def read(spark: SparkSession, dir: String, fresh: Boolean = false): Option[M] = {
+  private def logOf(conf: Configuration, dir: String): ManifestLog = {
     if (dir.exists(ManifestStore.globChars.contains(_)))
       throw new IllegalArgumentException(
         s"$kind dir '$dir' contains a glob metacharacter " +
           s"(one of ${ManifestStore.globChars}); Hadoop would expand it as a " +
           "pattern — use a path without them")
-    val p = new Path(s"$dir/MANIFEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case None => cache.remove(dir); None
-      case Some(s) =>
-        val cached = cache.get(dir)
-        if (!fresh && cached != null &&
-            cached._1 == s.getLen && cached._2 == s.getModificationTime)
-          Some(cached._3)
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          val m = org.json4s.jackson.Serialization.read[M](text)
-          parses.incrementAndGet()
-          cache.put(dir, (s.getLen, s.getModificationTime, m))
-          Some(m)
-        }
-    }
+    new ManifestLog(conf, dir, wholeRecords = true)
   }
 
+  private def legacy(dir: String) = new Path(dir, "MANIFEST.json")
+
+  /** The manifest under `dir` with its seq. */
+  private def current(conf: Configuration, dir: String): Logged[Option[M]] = {
+    val log = logOf(conf, dir)
+    def legacyBase = log.read(legacy(dir))
+      .fold(Logged(0L, Option.empty[M], None))(t => Logged(0L, parse(t), Some(legacy(dir))))
+    val cur = log.load(Option(cache.get(dir)), legacyBase, parse)((_, _, t) => parse(t))
+    cache.put(dir, cur)
+    cur
+  }
+
+  /** The manifest under `dir`, None when there is none; a warm read makes no listing. */
+  def read(conf: Configuration, dir: String): Option[M] = current(conf, dir).state
+
   /** The manifest under `dir`, or an IllegalStateException naming `op`. */
-  def required(spark: SparkSession, dir: String, op: String): M =
-    read(spark, dir).getOrElse(throw new IllegalStateException(
+  def required(conf: Configuration, dir: String, op: String): M =
+    read(conf, dir).getOrElse(throw new IllegalStateException(
       s"$op: no readable $kind manifest at $dir"))
 
-  /** Replace the manifest with `next` only if a fresh read still equals
-    * `expected` (None: no manifest yet); throws IllegalStateException
-    * otherwise, leaving the manifest untouched. See the class doc for the
-    * window this check leaves across processes.
+  /** Publish `next` as the manifest only if it still equals `expected`
+    * (None: no manifest yet); throws IllegalStateException otherwise,
+    * leaving the manifest untouched.
     */
-  def commitIfUnchanged(spark: SparkSession, dir: String,
+  def commitIfUnchanged(conf: Configuration, dir: String,
       expected: Option[M], next: M): Unit = {
-    val cur = read(spark, dir, fresh = true)
-    if (cur != expected)
-      throw new IllegalStateException(
-        s"concurrent $kind mutation on $dir: manifest moved from $expected " +
-          s"to $cur while this writer staged against the former — aborting; " +
-          s"staged dirs are unreferenced and reclaimed by $vacuumName")
-    ManifestStore.writeJson(spark, s"$dir/MANIFEST.json",
-      org.json4s.jackson.Serialization.write(next))
-    // drop, don't update: the next read restamps from the renamed file's
-    // actual status (a cache-side stamp guess could race the rename)
-    cache.remove(dir)
+    val cur = current(conf, dir)
+    def abort(now: Any) = throw new IllegalStateException(
+      s"concurrent $kind mutation on $dir: manifest moved from $expected " +
+        s"to $now while this writer staged against the former — aborting; " +
+        s"staged dirs are unreferenced and reclaimed by $vacuumName")
+    if (cur.state != expected) abort(cur.state)
+    val log = logOf(conf, dir)
+    // the cache keeps `cur`: the next read probes this record and reads
+    // back what is on disk
+    if (!log.publish(log.record(cur.seq + 1), org.json4s.jackson.Serialization.write(next)))
+      abort(s"record ${cur.seq + 1} of another writer")
   }
 
   /** [[commitIfUnchanged]] against snapshot `m`; when it aborts, the
@@ -113,32 +103,34 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
     * IllegalStateException while computing it (a staged root that does
     * not read under the recorded schema) aborts the commit the same way.
     */
-  def commitOrDrop(spark: SparkSession, dir: String, m: M, next: => M,
+  def commitOrDrop(conf: Configuration, dir: String, m: M, next: => M,
       staged: Seq[String]): Unit =
-    try commitIfUnchanged(spark, dir, Some(m), next)
+    try commitIfUnchanged(conf, dir, Some(m), next)
     catch { case e: IllegalStateException =>
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = new Path(dir).getFileSystem(conf)
       staged.foreach(d => fs.delete(new Path(s"$dir/$d"), true))
       throw e
     }
 
   /** Delete the dirs the manifest no longer references (crashed stages,
-    * superseded roots). `garbage(m)` names, per dir to list (relative to
-    * `dir`; "" is `dir` itself), which child dir names `m` leaves
-    * unreferenced. Dirs modified within `minAgeMs` of now are spared: a
-    * cross-process writer mid-stage has dirs on disk that no manifest
-    * references yet, and the guard below only sees COMMITTED foreign
-    * mutations (pass 0 to reclaim everything after a known crash with no
-    * live writers). Before deleting anything, a fresh re-read must still
-    * equal the manifest the listing was made against, or vacuum throws.
-    * Returns the number of dirs removed; 0 when there is no manifest.
+    * superseded roots), and the superseded manifest records (by the log's
+    * own age rule, [[ManifestLog.vacuum]]). `garbage(m)` names, per dir to
+    * list (relative to `dir`; "" is `dir` itself), which child dir names
+    * `m` leaves unreferenced. Dirs modified within `minAgeMs` of now are
+    * spared: a cross-process writer mid-stage
+    * has dirs on disk that no manifest references yet, and the guard below
+    * only sees COMMITTED foreign mutations (pass 0 to reclaim everything
+    * after a known crash with no live writers). Before deleting anything,
+    * a re-read must still equal the manifest the listing was made
+    * against, or vacuum throws. Returns the number of dirs removed; 0
+    * when there is no manifest.
     */
-  def vacuum(spark: SparkSession, dir: String, minAgeMs: Long)(
+  def vacuum(conf: Configuration, dir: String, minAgeMs: Long)(
       garbage: M => Seq[(String, String => Boolean)]): Int =
-    read(spark, dir) match {
+    read(conf, dir) match {
       case None => 0
       case Some(m) =>
-        val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = new Path(dir).getFileSystem(conf)
         val cutoff = System.currentTimeMillis() - minAgeMs
         val stale = garbage(m).flatMap { case (sub, unreferenced) =>
           val listed =
@@ -147,11 +139,12 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
           listed.filter(st => st.isDirectory && st.getModificationTime <= cutoff &&
             unreferenced(st.getPath.getName))
         }
-        if (read(spark, dir, fresh = true) != Some(m))
+        if (read(conf, dir) != Some(m))
           throw new IllegalStateException(
             s"concurrent $kind mutation on $dir during vacuum — " +
               "aborting before deleting anything; re-run vacuum")
         stale.foreach(st => fs.delete(st.getPath, true))
+        logOf(conf, dir).vacuum(legacy(dir))
         stale.length
     }
 }
@@ -159,6 +152,9 @@ final class ManifestStore[M <: AnyRef](kind: String, vacuumName: String)(
 object ManifestStore {
 
   private val globChars = "{}[]*?\\"
+
+  /** The Hadoop configuration the family calls take from their session. */
+  def conf(spark: SparkSession): Configuration = spark.sparkContext.hadoopConfiguration
 
   /** Write `json` to `path` atomically: a tmp file, then a FileContext
     * rename with OVERWRITE, the Hadoop-sanctioned atomic replace (a

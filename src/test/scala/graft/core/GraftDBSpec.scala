@@ -482,19 +482,25 @@ class GraftDBSpec extends AnyFunSuite {
   test("manifest commit cost stays flat as the file count grows (change-log, not whole-state)") {
     val dir = Files.createTempDirectory("graftdb-logcost").toString
     val db = new GraftDB(spark, dir, GraftOptions(compactTriggerFiles = 100000))
-    val log = java.nio.file.Paths.get(dir, "MANIFEST.log")
+    val log = java.nio.file.Paths.get(dir, "_manifest")
+    def logFiles(): Map[String, Long] =
+      if (!Files.exists(log)) Map.empty
+      else Files.list(log).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.getFileName.toString -> Files.size(p)).toMap
+    // the bytes of the manifest records one set publishes
     def costOfOneSet(i: Int): Long = {
-      val before = if (Files.exists(log)) java.nio.file.Files.size(log) else 0L
+      val before = logFiles()
       db.set(b(f"key-$i%05d"), b("v"))
-      java.nio.file.Files.size(log) - before
+      (logFiles() -- before.keySet).values.sum
     }
     val early = costOfOneSet(0)
+    assert(early > 0, "a set published no manifest record")
     (1 until 60).foreach(i => db.set(b(f"key-$i%05d"), b("v")))
     val late = costOfOneSet(60)
-    // 61 live L0 segments vs 1: the appended bytes per 1-row set must not
+    // 61 live L0 segments vs 1: the published bytes per 1-row set must not
     // scale with the table's file count (the old whole-state rewrite did)
     assert(late <= 2 * early,
-      s"1-row set wrote $late log bytes at 61 files vs $early at 1")
+      s"1-row set published $late manifest bytes at 61 files vs $early at 1")
     assert(db.view().count() == 61)
   }
 
@@ -578,7 +584,7 @@ class GraftDBSpec extends AnyFunSuite {
       .write.mode(SaveMode.Overwrite).parquet(segDir)
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(7L, b("blob"))), 1),
       KVEntry.blobSchema).write.mode(SaveMode.Overwrite).parquet(blobDir)
-    new Manifest(dir, 1024).commit(_ => ManifestDelta(
+    new Manifest(spark.sparkContext.hadoopConfiguration, dir, 1024).commit(_ => ManifestDelta(
       nextVersion = Some(2L), nextBlobId = Some(8L),
       addFiles = Vector(FileMeta(segDir, 0, Hex.encode(b("a")), Hex.encode(b("b")), 2L, 0L)),
       addBlobs = Vector(BlobFileMeta(blobDir, 1L))))
@@ -620,13 +626,13 @@ class GraftDBSpec extends AnyFunSuite {
     val db = freshDb()
     db.set(b("a"), b("1"))
     val stats0 = db.stats()
-    val files0 = new Manifest(db.rootDir).load().files
+    val files0 = new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).load().files
     val e = intercept[IllegalArgumentException] {
       db.batchSet(Seq(KVEntry(b("x"), b("1")), KVEntry(b("y"), b("2")), KVEntry(null, b("3"))))
     }
     assert(e.getMessage.contains("entry 2"), e.getMessage)
     assert(db.stats() == stats0)
-    assert(new Manifest(db.rootDir).load().files == files0)
+    assert(new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).load().files == files0)
     assert(db.get(b("x")).isEmpty && db.get(b("a")).map(new String(_)).contains("1"))
   }
 
@@ -690,7 +696,7 @@ class GraftDBSpec extends AnyFunSuite {
         }
       })
     }
-    val st = new Manifest(db.rootDir).load()
+    val st = new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).load()
     assert(st.files.exists(_.level == 0) && st.files.count(_.level == 1) >= 2, st.files)
     val asOf = System.currentTimeMillis() / 1000
     val view = viewMap(db, asOf).toSeq.sortBy(_._1)

@@ -35,15 +35,17 @@ class RobustnessSpec extends AnyFunSuite {
     val db = new GraftDB(spark, dir, GraftOptions(compactTriggerFiles = 1000))
     db.set(b("k"), b("v"))
     // corrupt: point the manifest at a segment that does not exist (the
-    // path may live in the base snapshot or the change log — mangle both)
-    for (name <- Seq("MANIFEST.json", "MANIFEST.log")) {
-      val mf = Paths.get(dir, name)
-      if (Files.exists(mf)) {
-        val txt = Files.readString(mf).replaceAll("data/[0-9a-f-]+", "data/deadbeef")
-        Files.writeString(mf, txt)
-      }
+    // path may live in any record or checkpoint of the log — mangle all)
+    val logFiles = Files.list(Paths.get(dir, "_manifest")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    assert(logFiles.nonEmpty)
+    for (mf <- logFiles) {
+      val txt = Files.readString(mf).replaceAll("data/[0-9a-f-]+", "data/deadbeef")
+      Files.writeString(mf, txt)
     }
-    val reopened = new GraftDB(spark, dir)
+    // reopened cold, through another spelling of the dir: instances on
+    // `dir` itself share the state this JVM has read there
+    val cold = Files.createSymbolicLink(Paths.get(dir + "-cold"), Paths.get(dir)).toString
+    val reopened = new GraftDB(spark, cold)
     intercept[Exception] { reopened.view().count() }
   }
 

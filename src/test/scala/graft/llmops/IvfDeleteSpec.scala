@@ -3,6 +3,7 @@ package graft.llmops
 import graft.core.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 /** Tombstone deletes on the persisted IVF index — the vector-index twin of
   * TextDeleteSpec: deletes mark (one tombstone root + manifest swap),
@@ -39,7 +40,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     // major fold = physical purge: new generation has no dead rows and a
     // tombstone-free manifest
     assert(Similarity.compactIvfAppends(spark, dir)) // tombs force a rewrite
-    val m = Similarity.ivfStore.read(spark, dir).get
+    val m = Similarity.ivfStore.read(conf(spark), dir).get
     assert(m.tombDirs.isEmpty)
     assert(Similarity.ivfAssigned(spark, dir).count() === total - deadIds.size)
     val onDisk = spark.read.parquet(s"$dir/g${m.gen}/assigned")
@@ -51,11 +52,11 @@ class IvfDeleteSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivf-del-idem").toString
     Similarity.buildIvfIndex(emb, dir, numCentroids = 8)
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(7L, 8L).toDF("vec_id")) === 2L)
-    val m1 = Similarity.ivfStore.read(spark, dir).get
+    val m1 = Similarity.ivfStore.read(conf(spark), dir).get
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(7L, 8L).toDF("vec_id")) === 0L)
-    assert(Similarity.ivfStore.read(spark, dir).get === m1, "replay mutated the manifest")
+    assert(Similarity.ivfStore.read(conf(spark), dir).get === m1, "replay mutated the manifest")
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(8L, 9L).toDF("vec_id")) === 1L)
-    assert(Similarity.ivfStore.read(spark, dir).get.tombDirs.size === 2)
+    assert(Similarity.ivfStore.read(conf(spark), dir).get.tombDirs.size === 2)
   }
 
   test("delete interacts with appends: sealed batches honor tombstones too") {
@@ -89,7 +90,7 @@ class IvfDeleteSpec extends AnyFunSuite {
       s"ADC path surfaced dead ids: ${hits.intersect(deadIds)}")
     // purge rewrites the generation with codes intact and tombstones gone
     assert(Similarity.compactIvfAppends(spark, dir))
-    val m = Similarity.ivfStore.read(spark, dir).get
+    val m = Similarity.ivfStore.read(conf(spark), dir).get
     assert(m.tombDirs.isEmpty)
     val hits2 = Similarity.ivfPqTopK(spark, dir, q, k = 10, nProbe = 8, rerank = 50)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
@@ -144,11 +145,11 @@ class IvfDeleteSpec extends AnyFunSuite {
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(1L).toDF("vec_id")) === 1L)
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(2L).toDF("vec_id")) === 1L)
     assert(!Similarity.maintainIvfIndex(spark, dir, maxTombRoots = 3))
-    assert(Similarity.ivfStore.read(spark, dir).get.tombDirs.size === 2)
+    assert(Similarity.ivfStore.read(conf(spark), dir).get.tombDirs.size === 2)
     // the third root trips the purge even though nothing was ever appended
     assert(Similarity.deleteFromIvfIndex(spark, dir, Seq(3L).toDF("vec_id")) === 1L)
     assert(Similarity.maintainIvfIndex(spark, dir, maxTombRoots = 3))
-    val m = Similarity.ivfStore.read(spark, dir).get
+    val m = Similarity.ivfStore.read(conf(spark), dir).get
     assert(m.tombDirs.isEmpty)
     assert(Similarity.ivfAssigned(spark, dir)
       .filter(col("neighbor_id").isin(1L, 2L, 3L)).count() === 0L)
@@ -179,7 +180,7 @@ class IvfDeleteSpec extends AnyFunSuite {
       "the outlier batch should have triggered a drift re-fit")
     // fresh generation: tombstones consumed, dead ids physically gone,
     // outliers present, probes serve
-    val m = Similarity.ivfStore.read(spark, dir).get
+    val m = Similarity.ivfStore.read(conf(spark), dir).get
     assert(m.tombDirs.isEmpty, "re-fit generation must carry no tombstones")
     val ids = Similarity.ivfAssigned(spark, dir).select("neighbor_id")
       .collect().map(_.getLong(0)).toSet

@@ -4,6 +4,7 @@ import graft.core.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 /** Persisted MinHash-LSH near-dup index: build/append/probe/compact/
   * vacuum lifecycle plus the streaming dedup-at-ingest wire.
@@ -67,7 +68,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     val pre = pairs(NearDupIndex.probeNearDupIndex(spark, idx, probe, threshold = 0.8))
     assert(pre.map(p => (p._1, p._2)) === Set((30L, 1L), (31L, 12L)))
     assert(NearDupIndex.compactNearDupIndex(spark, idx))
-    val m = NearDupIndex.store.read(spark, idx).get
+    val m = NearDupIndex.store.read(conf(spark), idx).get
     assert(m.bands.size === 1 && m.shingles.size === 1 && m.tagHighWater === 3L)
     assert(pairs(NearDupIndex.probeNearDupIndex(spark, idx, probe, threshold = 0.8)) === pre)
     assert(!NearDupIndex.compactNearDupIndex(spark, idx)) // nothing left
@@ -122,7 +123,7 @@ class NearDupIndexSpec extends AnyFunSuite {
   test("empty-text docs index nothing and probe nothing") {
     val idx = java.nio.file.Files.createTempDirectory("ndidx-empty").toString
     NearDupIndex.buildNearDupIndex(corpus(1L -> ""), idx, numBuckets = 8)
-    assert(NearDupIndex.store.read(spark, idx).get.bands.isEmpty)
+    assert(NearDupIndex.store.read(conf(spark), idx).get.bands.isEmpty)
     // probing an EMPTY index returns an empty, well-typed frame
     val out = NearDupIndex.probeNearDupIndex(spark, idx,
       corpus(2L -> "some words"), threshold = 0.5)
@@ -174,7 +175,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     assert(NearDupIndex.deleteFromNearDupIndex(idx, Seq(1L).toDF("doc_id")) === 1L)
     val after = pairs(NearDupIndex.probeNearDupIndex(spark, idx, dupProbe, threshold = 0.8))
     assert(after.map(p => (p._1, p._2)) === Set((41L, 2L)), s"unexpected: $after")
-    val m = NearDupIndex.store.read(spark, idx).get
+    val m = NearDupIndex.store.read(conf(spark), idx).get
     assert(m.nDocs === 3L && m.nDeleted === 1L && m.tombs.size === 1)
   }
 
@@ -182,10 +183,10 @@ class NearDupIndexSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("ndidx-del2").toString
     NearDupIndex.buildNearDupIndex(base, idx, numBuckets = 8)
     assert(NearDupIndex.deleteFromNearDupIndex(idx, Seq(1L).toDF("doc_id")) === 1L)
-    val m1 = NearDupIndex.store.read(spark, idx).get
+    val m1 = NearDupIndex.store.read(conf(spark), idx).get
     // re-delete + unknown id: 0 newly dead, no new tomb root, manifest unmoved
     assert(NearDupIndex.deleteFromNearDupIndex(idx, Seq(1L, 999L).toDF("doc_id")) === 0L)
-    assert(NearDupIndex.store.read(spark, idx).get === m1)
+    assert(NearDupIndex.store.read(conf(spark), idx).get === m1)
   }
 
   test("delete survives the fold as a physical purge; counts and tombs reset") {
@@ -196,7 +197,7 @@ class NearDupIndexSpec extends AnyFunSuite {
       batchTag = Some("0")))
     assert(NearDupIndex.deleteFromNearDupIndex(idx, Seq(1L).toDF("doc_id")) === 1L)
     assert(NearDupIndex.compactNearDupIndex(spark, idx))
-    val m = NearDupIndex.store.read(spark, idx).get
+    val m = NearDupIndex.store.read(conf(spark), idx).get
     assert(m.tombs.isEmpty && m.nDocs === 3L && m.nDeleted === 0L)
     // post-purge probes equal an index never containing doc 1
     val after = pairs(NearDupIndex.probeNearDupIndex(spark, idx, dupProbe, threshold = 0.8))
@@ -242,7 +243,7 @@ class NearDupIndexSpec extends AnyFunSuite {
       .select(col("probe_id"), col("dup_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((5L, 3L)), s"unexpected pair set: $got")
-    val m = NearDupIndex.store.read(spark, idx).get
+    val m = NearDupIndex.store.read(conf(spark), idx).get
     assert(m.nDeleted === 2L && m.tagHighWater === 2L)
     // probing after the physical purge converges to the same answer
     assert(NearDupIndex.compactNearDupIndex(spark, idx))
@@ -312,7 +313,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     // 1 of 3 dead = 0.33 >= 0.25 default: folds and purges
     assert(NearDupIndex.deleteFromNearDupIndex(idx, Seq(3L).toDF("doc_id")) === 1L)
     assert(NearDupIndex.maintainNearDupIndex(spark, idx))
-    assert(NearDupIndex.store.read(spark, idx).get.tombs.isEmpty)
+    assert(NearDupIndex.store.read(conf(spark), idx).get.tombs.isEmpty)
     // root pileup path: 5 appends > foldRootsAbove=4
     (0 until 5).foreach { i =>
       assert(NearDupIndex.appendToNearDupIndex(idx,
@@ -320,6 +321,6 @@ class NearDupIndexSpec extends AnyFunSuite {
         batchTag = Some(i.toString)))
     }
     assert(NearDupIndex.maintainNearDupIndex(spark, idx, foldRootsAbove = 4))
-    assert(NearDupIndex.store.read(spark, idx).get.bands.size === 1)
+    assert(NearDupIndex.store.read(conf(spark), idx).get.bands.size === 1)
   }
 }

@@ -4,6 +4,7 @@ import graft.core.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 /** BM25 + RRF retrieval semantics on hand-checkable corpora. */
 class SearchSpec extends AnyFunSuite {
@@ -221,7 +222,7 @@ class SearchSpec extends AnyFunSuite {
     batches.tail.zipWithIndex.foreach { case (b, i) =>
       assert(Search.appendToTextIndex(idx, b, batchTag = Some(i.toString)))
     }
-    val m0 = Search.textStore.read(spark, idx).get
+    val m0 = Search.textStore.read(conf(spark), idx).get
     assert(m0.postings.size === 4 && m0.dicts.size === 3,
       s"expected one root per batch before fold: $m0")
     val qs = queries(0L -> "apple banana", 1L -> "fig dog", 7L -> "cherry")
@@ -230,7 +231,7 @@ class SearchSpec extends AnyFunSuite {
         r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toSet
     val preFold = rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5))
     assert(Search.compactTextIndex(spark, idx))
-    val m1 = Search.textStore.read(spark, idx).get
+    val m1 = Search.textStore.read(conf(spark), idx).get
     // ONE postings root, ONE dict root, numeric tags collapsed to the
     // high-water — the manifest no longer grows with stream lifetime
     assert(m1.postings.size === 1 && m1.dicts.isEmpty && m1.appliedTags.isEmpty)
@@ -257,7 +258,7 @@ class SearchSpec extends AnyFunSuite {
       corpus(5L -> "cherry dog apple"))
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx-minor").toString
     Search.buildTextIndex(batches.head, idx, numBuckets = 8)
-    val base = Search.textStore.read(spark, idx).get.postings.head
+    val base = Search.textStore.read(conf(spark), idx).get.postings.head
     batches.tail.zipWithIndex.foreach { case (b, i) =>
       assert(Search.appendToTextIndex(idx, b, batchTag = Some(i.toString)))
     }
@@ -267,7 +268,7 @@ class SearchSpec extends AnyFunSuite {
         r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toSet
     val pre = rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5))
     assert(Search.compactTextIndex(spark, idx, includeBase = false))
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     // three L0s folded into one L1; the base root is the SAME directory
     assert(m.postings.size === 2 && m.postings.head === base &&
       m.dicts.size === 1 && m.levelRoots === 2, s"minor fold shape wrong: $m")
@@ -283,7 +284,7 @@ class SearchSpec extends AnyFunSuite {
     // stream lifetime instead of data-since-last-fold)
     assert(Search.appendToTextIndex(idx, corpus(7L -> "banana yak"), batchTag = Some("10")))
     assert(Search.compactTextIndex(spark, idx, includeBase = false))
-    val m2 = Search.textStore.read(spark, idx).get
+    val m2 = Search.textStore.read(conf(spark), idx).get
     assert(m2.postings.size === 3 && m2.postings.head === base &&
       m2.postings(1) === l1 && m2.levelRoots === 3,
       s"minor fold re-folded a prior level: $m2")
@@ -294,7 +295,7 @@ class SearchSpec extends AnyFunSuite {
       === rows(Search.bm25TopK(full, qs, k = 5)))
     // a MAJOR fold collapses all levels to one root
     assert(Search.compactTextIndex(spark, idx))
-    val m3 = Search.textStore.read(spark, idx).get
+    val m3 = Search.textStore.read(conf(spark), idx).get
     assert(m3.postings.size === 1 && m3.dicts.isEmpty && m3.levelRoots === 1)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5))
       === rows(Search.bm25TopK(full, qs, k = 5)))
@@ -304,13 +305,13 @@ class SearchSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx-maint").toString
     Search.buildTextIndex(
       corpus((1L to 20L).map(i => i -> s"base$i common words here"): _*), idx, numBuckets = 8)
-    val base = Search.textStore.read(spark, idx).get.postings.head
+    val base = Search.textStore.read(conf(spark), idx).get.postings.head
     // two tiny appends: minor fold runs, but the major must NOT (appends
     // are a sliver of the base)
     assert(Search.appendToTextIndex(idx, corpus(100L -> "tiny one"), batchTag = Some("0")))
     assert(Search.appendToTextIndex(idx, corpus(101L -> "tiny two"), batchTag = Some("1")))
     assert(Search.maintainTextIndex(spark, idx))
-    val m1 = Search.textStore.read(spark, idx).get
+    val m1 = Search.textStore.read(conf(spark), idx).get
     assert(m1.postings.head === base && m1.levelRoots === 2,
       s"maintain majored on a sliver: $m1")
     // a big append (larger than the base) crosses the ratio: maintain
@@ -320,7 +321,7 @@ class SearchSpec extends AnyFunSuite {
       batchTag = Some("2")))
     assert(Search.appendToTextIndex(idx, corpus(300L -> "more"), batchTag = Some("3")))
     assert(Search.maintainTextIndex(spark, idx))
-    val m2 = Search.textStore.read(spark, idx).get
+    val m2 = Search.textStore.read(conf(spark), idx).get
     assert(m2.postings.size === 1 && m2.levelRoots === 1,
       s"maintain failed to major once appends outgrew the base: $m2")
   }
@@ -334,7 +335,7 @@ class SearchSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx").toString
     Search.buildTextIndex(big, idx, numBuckets = 32)
     assert(Search.appendToTextIndex(idx, corpus(100L -> "zzz-solo"), batchTag = Some("d1")))
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.dicts.size === 1)
     val deltaBuckets = new java.io.File(s"$idx/${m.dicts.head}")
       .listFiles().filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
@@ -343,7 +344,7 @@ class SearchSpec extends AnyFunSuite {
         deltaBuckets.mkString(","))
     // the base dict was NOT rewritten — still the build's root
     val m0dict = m.dict
-    assert(Search.textStore.read(spark, idx).get.dict === m0dict)
+    assert(Search.textStore.read(conf(spark), idx).get.dict === m0dict)
   }
 
   test("an empty append batch stages nothing (no orphan dirs)") {
@@ -355,14 +356,14 @@ class SearchSpec extends AnyFunSuite {
     assert(dirCount === before, "empty batch leaked staged dirs")
     // and the manifest did not move (the tag is NOT burned — a later
     // non-empty retry of the same micro-batch must not be fenced out)
-    assert(!Search.textStore.read(spark, idx).get.appliedTags.contains("e1"))
+    assert(!Search.textStore.read(conf(spark), idx).get.appliedTags.contains("e1"))
   }
 
   test("numeric tags fence via the high-water mark, non-numeric tags exactly") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx").toString
     Search.buildTextIndex(corpus(1L -> "alpha"), idx, numBuckets = 4)
     assert(Search.appendToTextIndex(idx, corpus(2L -> "beta"), batchTag = Some("5")))
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.tagHighWater === 5L && m.appliedTags.isEmpty,
       s"numeric tag not absorbed into the high-water: $m")
     // at-or-below the high-water = replay (the monotonic batch-id contract)
@@ -372,7 +373,7 @@ class SearchSpec extends AnyFunSuite {
     // non-numeric tags are remembered exactly, independent of the fence
     assert(Search.appendToTextIndex(idx, corpus(4L -> "delta"), batchTag = Some("run-a")))
     assert(!Search.appendToTextIndex(idx, corpus(4L -> "delta"), batchTag = Some("run-a")))
-    val m2 = Search.textStore.read(spark, idx).get
+    val m2 = Search.textStore.read(conf(spark), idx).get
     assert(m2.tagHighWater === 6L && m2.appliedTags === Vector("run-a"))
   }
 
@@ -504,7 +505,7 @@ class SearchSpec extends AnyFunSuite {
         Seq((4L, "dog cherry fig"))
       ).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     // batches 1 and 3 (0-indexed) folded: at most (1 fold result + 1
     // unfolded append) roots at any point — never one root per batch
     assert(m.postings.size <= 2 && m.dicts.size <= 2,
@@ -523,20 +524,20 @@ class SearchSpec extends AnyFunSuite {
   test("a previous-format manifest (no dicts/tagHighWater fields) still loads and migrates") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx-legacy").toString
     Search.buildTextIndex(corpus(1L -> "alpha beta", 2L -> "beta gamma"), idx, numBuckets = 4)
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     // rewrite the manifest in the OLD schema: single dict, applied tags as
     // a plain vector (numeric ones included), none of the new fields
     val legacy = s"""{"numBuckets":${m.numBuckets},"nDocs":${m.nDocs},
       "sumDl":${m.sumDl},"dict":"${m.dict}",
       "postings":[${m.postings.map("\"" + _ + "\"").mkString(",")}],
       "appliedTags":["stream-batch-7","run-x"]}""".replaceAll("\n\\s*", "")
-    // write through the Hadoop FS (not java.nio) so the LocalFileSystem's
-    // .crc sidecar stays consistent with the rewritten bytes
+    // as the old code stored it: a bare MANIFEST.json and no manifest log
     val mp = new org.apache.hadoop.fs.Path(s"$idx/MANIFEST.json")
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_manifest"), true))
     val out = fs.create(mp, true)
     try out.write(legacy.getBytes("UTF-8")) finally out.close()
-    val parsed = Search.textStore.read(spark, idx).get
+    val parsed = Search.textStore.read(conf(spark), idx).get
     assert(parsed.dicts.isEmpty && parsed.tagHighWater === -1L,
       s"legacy manifest did not default the new fields: $parsed")
     // legacy tags still fence — INCLUDING the old ingest's
@@ -552,9 +553,9 @@ class SearchSpec extends AnyFunSuite {
     // compaction migrates: numeric tags absorb into the high-water mark —
     // and a tag-ONLY migration is a pure manifest edit (identical roots,
     // no corpus rewrite)
-    val rootsBefore = Search.textStore.read(spark, idx).get.postings
+    val rootsBefore = Search.textStore.read(conf(spark), idx).get.postings
     assert(Search.compactTextIndex(spark, idx))
-    val migrated = Search.textStore.read(spark, idx).get
+    val migrated = Search.textStore.read(conf(spark), idx).get
     assert(migrated.tagHighWater === 7L && migrated.appliedTags === Vector("run-x"))
     assert(migrated.postings === rootsBefore,
       "tag-only migration rewrote the postings roots")
@@ -566,7 +567,7 @@ class SearchSpec extends AnyFunSuite {
     // takes the exact-match path (first use appends, replay fences)
     assert(Search.appendToTextIndex(idx, corpus(4L -> "neg"), batchTag = Some("-1")))
     assert(!Search.appendToTextIndex(idx, corpus(4L -> "neg"), batchTag = Some("-1")))
-    assert(Search.textStore.read(spark, idx).get.appliedTags.contains("-1"))
+    assert(Search.textStore.read(conf(spark), idx).get.appliedTags.contains("-1"))
   }
 
   test("topk scored output carries the decimal-exact score") {
@@ -581,17 +582,17 @@ class SearchSpec extends AnyFunSuite {
   test("cross-process guard: a commit staged against a stale manifest aborts loudly") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textidx-guard").toString
     Search.buildTextIndex(corpus(1L -> "apple banana"), idx, numBuckets = 4)
-    val before = Search.textStore.read(spark, idx)
+    val before = Search.textStore.read(conf(spark), idx)
     // a "foreign" writer appends — the manifest moves
     assert(Search.appendToTextIndex(idx, corpus(2L -> "cherry dog"), batchTag = Some("f1")))
-    val moved = Search.textStore.read(spark, idx)
+    val moved = Search.textStore.read(conf(spark), idx)
     assert(moved != before, "append did not move the manifest")
     // a writer that staged against the PRE-append snapshot must abort,
     // leaving the moved manifest exactly as the foreign writer wrote it
     intercept[IllegalStateException] {
-      Search.textStore.commitIfUnchanged(spark, idx, before, moved.get.copy(nDocs = 99L))
+      Search.textStore.commitIfUnchanged(conf(spark), idx, before, moved.get.copy(nDocs = 99L))
     }
-    assert(Search.textStore.read(spark, idx) == moved,
+    assert(Search.textStore.read(conf(spark), idx) == moved,
       "aborted commit must not touch the manifest")
     // and the index still answers with both writers' documents
     val out = Search.bm25TopKIndexed(spark, idx, queries(0L -> "cherry apple"), k = 4)

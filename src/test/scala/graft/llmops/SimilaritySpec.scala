@@ -3,6 +3,7 @@ package graft.llmops
 import graft.core.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 class SimilaritySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -254,18 +255,18 @@ class SimilaritySpec extends AnyFunSuite {
   test("cross-process guard: a commit staged against a stale manifest aborts loudly") {
     val dir = java.nio.file.Files.createTempDirectory("ivf-guard").toString
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < 100), dir, numCentroids = 4)
-    val before = Similarity.ivfStore.read(spark, dir)
+    val before = Similarity.ivfStore.read(conf(spark), dir)
     // a "foreign" writer seals an append batch — the manifest moves
     Similarity.appendToIvfIndex(spark, dir,
       emb.filter(col("vec_id") >= 100 && col("vec_id") < 150))
-    val moved = Similarity.ivfStore.read(spark, dir)
+    val moved = Similarity.ivfStore.read(conf(spark), dir)
     assert(moved != before, "append did not move the manifest")
     // a writer that staged against the PRE-append snapshot must abort,
     // leaving the moved manifest exactly as the foreign writer wrote it
     intercept[IllegalStateException] {
-      Similarity.ivfStore.commitIfUnchanged(spark, dir, before, Similarity.IvfManifest(99))
+      Similarity.ivfStore.commitIfUnchanged(conf(spark), dir, before, Similarity.IvfManifest(99))
     }
-    assert(Similarity.ivfStore.read(spark, dir) == moved,
+    assert(Similarity.ivfStore.read(conf(spark), dir) == moved,
       "aborted commit must not touch the manifest")
     // and the index remains fully queryable
     assert(Similarity.ivfTopKIndexed(spark, dir, emb.limit(2), k = 2, nProbe = 4)
@@ -334,7 +335,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.compactIvfAppends(spark, dir, includeBase = false))
     assert(Similarity.ivfGeneration(spark, dir).contains(genPre),
       "minor fold must not flip the generation")
-    assert(Similarity.ivfStore.read(spark, dir).get.sealedDirs.size == 1)
+    assert(Similarity.ivfStore.read(conf(spark), dir).get.sealedDirs.size == 1)
     assert(Similarity.ivfAssigned(spark, dir).count() == total)
     // one sealed dir left: a second minor fold has nothing to do
     assert(!Similarity.compactIvfAppends(spark, dir, includeBase = false))
@@ -416,7 +417,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.maintainIvfIndex(spark, dir))
     assert(Similarity.ivfGeneration(spark, dir).contains(gen0),
       "maintain majored on a sliver of appends")
-    assert(Similarity.ivfStore.read(spark, dir).get.sealedLevels === 1)
+    assert(Similarity.ivfStore.read(conf(spark), dir).get.sealedLevels === 1)
     // appends that rival the base cross the size ratio: maintain majors
     // (the corpus is 500 rows — re-shift ids to fabricate bulk appends)
     Similarity.appendToIvfIndex(spark, dir,
@@ -428,7 +429,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.maintainIvfIndex(spark, dir, majorSizeRatio = 0.5))
     assert(Similarity.ivfGeneration(spark, dir).contains(gen0 + 1),
       "maintain failed to major once appends outgrew the ratio")
-    assert(Similarity.ivfStore.read(spark, dir).get.sealedDirs.isEmpty)
+    assert(Similarity.ivfStore.read(conf(spark), dir).get.sealedDirs.isEmpty)
   }
 
   test("randomized append/compact interleavings keep the assignment table exact (seeded mini-fuzz)") {

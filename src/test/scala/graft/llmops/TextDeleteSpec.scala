@@ -4,6 +4,7 @@ import graft.core.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 /** Tombstone deletes on the persisted text index — the reference's
   * Del→tombstone→compaction-purge lifecycle (delete marks at write time,
@@ -37,13 +38,13 @@ class TextDeleteSpec extends AnyFunSuite {
   test("delete: indexed scores bit-identical to the scan form over the remaining corpus") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textdel").toString
     Search.buildTextIndex(docs, idx, numBuckets = 8)
-    val m0 = Search.textStore.read(spark, idx).get
+    val m0 = Search.textStore.read(conf(spark), idx).get
     // the sidecar is id-hash partitioned (ps=N dirs) so deletes prune
     // their read instead of scanning the corpus-sized sidecar
     assert(new java.io.File(s"$idx/${m0.docLens.head}").listFiles()
       .exists(_.getName.startsWith("ps=")), "doc-length sidecar lost its ps partitioning")
     assert(Search.deleteFromTextIndex(idx, Seq(2L, 5L).toDF("doc_id")) === 2L)
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDeleted === 2L && m.tombs.size === 1)
     // deleting changes EVERY doc's score (nDocs and avgdl shift), so the
     // identity below exercises the full stats correction, not just the
@@ -57,15 +58,15 @@ class TextDeleteSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-textdel-idem").toString
     Search.buildTextIndex(docs, idx, numBuckets = 8)
     assert(Search.deleteFromTextIndex(idx, Seq(3L).toDF("doc_id")) === 1L)
-    val m1 = Search.textStore.read(spark, idx).get
+    val m1 = Search.textStore.read(conf(spark), idx).get
     // replayed delete and never-indexed ids: 0 newly deleted, no new
     // tombstone root, stats untouched
     assert(Search.deleteFromTextIndex(idx, Seq(3L).toDF("doc_id")) === 0L)
     assert(Search.deleteFromTextIndex(idx, Seq(99L, -1L).toDF("doc_id")) === 0L)
-    assert(Search.textStore.read(spark, idx).get === m1)
+    assert(Search.textStore.read(conf(spark), idx).get === m1)
     // a mixed batch counts only the genuinely new victim
     assert(Search.deleteFromTextIndex(idx, Seq(3L, 4L, 99L).toDF("doc_id")) === 1L)
-    val m2 = Search.textStore.read(spark, idx).get
+    val m2 = Search.textStore.read(conf(spark), idx).get
     assert(m2.nDeleted === 2L && m2.tombs.size === 2)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) ===
       rows(Search.bm25TopK(docs.filter(!col("doc_id").isin(3L, 4L)), qs, k = 5)))
@@ -80,7 +81,7 @@ class TextDeleteSpec extends AnyFunSuite {
     // corpus stats, so deleting the doc shifts nDocs/avgdl (idf) for
     // every scored document identically on each side
     assert(Search.deleteFromTextIndex(idx, Seq(6L).toDF("doc_id")) === 1L)
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDeleted === 1L && m.sumDlDeleted === 1L)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) ===
       rows(Search.bm25TopK(docs, qs, k = 5)))
@@ -103,19 +104,19 @@ class TextDeleteSpec extends AnyFunSuite {
     // minor fold: L0s fold, dead rows carried VERBATIM (tombstones drop
     // only at the bottom level), scores unchanged
     assert(Search.compactTextIndex(spark, idx, includeBase = false))
-    val mMinor = Search.textStore.read(spark, idx).get
+    val mMinor = Search.textStore.read(conf(spark), idx).get
     assert(mMinor.tombs.size === 1 && mMinor.nDeleted === 2L)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) === expected)
     // major fold: tombstoned postings physically dropped, dict recomputed,
     // sidecar folded, stats absorbed, tombstones cleared
     assert(Search.compactTextIndex(spark, idx))
-    val mMajor = Search.textStore.read(spark, idx).get
+    val mMajor = Search.textStore.read(conf(spark), idx).get
     assert(mMajor.tombs.isEmpty && mMajor.nDeleted === 0L && mMajor.sumDlDeleted === 0L)
     assert(mMajor.nDocs === 3L && mMajor.docLens.size === 1)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) === expected)
     // the purge is physical: no postings row carries a dead id, and the
     // sidecar no longer lists them
-    val deadInPostings = Search.textStore.read(spark, idx).get.postings
+    val deadInPostings = Search.textStore.read(conf(spark), idx).get.postings
       .map(p => spark.read.parquet(s"$idx/$p"))
       .reduce(_ unionByName _).filter(col("doc_id").isin(1L, 4L)).count()
     assert(deadInPostings === 0L)
@@ -148,7 +149,7 @@ class TextDeleteSpec extends AnyFunSuite {
     assert(Search.deleteFromTextIndex(idx, docs.select("doc_id")) === 5L)
     assert(Search.bm25TopKIndexed(spark, idx, qs, k = 5).count() === 0L)
     assert(Search.compactTextIndex(spark, idx)) // purge runs clean
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDocs === 0L && m.sumDl === 0L && m.tombs.isEmpty)
     assert(Search.bm25TopKIndexed(spark, idx, qs, k = 5).count() === 0L)
   }
@@ -156,7 +157,7 @@ class TextDeleteSpec extends AnyFunSuite {
   test("cross-process guard: a delete staged against a stale manifest aborts and cleans up") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textdel-xproc").toString
     Search.buildTextIndex(docs, idx, numBuckets = 8)
-    val stale = Search.textStore.read(spark, idx).get
+    val stale = Search.textStore.read(conf(spark), idx).get
     // a "foreign" writer moves the manifest after our snapshot
     assert(Search.appendToTextIndex(idx, corpus(6L -> "apple zebra"), batchTag = Some("f0")))
     // replaying the foreign state behind deleteFromTextIndex's back:
@@ -165,12 +166,12 @@ class TextDeleteSpec extends AnyFunSuite {
     // through the public API in-process (the lock serializes), so assert
     // the guard through the commit primitive the delete uses
     val e = intercept[IllegalStateException] {
-      Search.textStore.commitIfUnchanged(spark, idx, Some(stale),
+      Search.textStore.commitIfUnchanged(conf(spark), idx, Some(stale),
         stale.copy(nDeleted = 1L))
     }
     assert(e.getMessage.contains("concurrent"))
     // the index remains exactly the foreign writer's state
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDocs === 6L && m.nDeleted === 0L)
     // no tombs- orphans linger after a real delete on the CURRENT state
     assert(Search.deleteFromTextIndex(idx, Seq(6L).toDF("doc_id")) === 1L)
@@ -180,9 +181,9 @@ class TextDeleteSpec extends AnyFunSuite {
   test("delete refuses an index without full doc-length coverage (legacy base)") {
     val idx = java.nio.file.Files.createTempDirectory("graft-textdel-legacy").toString
     Search.buildTextIndex(docs, idx, numBuckets = 8)
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     // simulate a pre-sidecar manifest: coverage flag off
-    Search.textStore.commitIfUnchanged(spark, idx, Some(m), m.copy(docLensFull = false))
+    Search.textStore.commitIfUnchanged(conf(spark), idx, Some(m), m.copy(docLensFull = false))
     val e = intercept[IllegalStateException] {
       Search.deleteFromTextIndex(idx, Seq(1L).toDF("doc_id"))
     }
@@ -195,12 +196,12 @@ class TextDeleteSpec extends AnyFunSuite {
     // 1 of 5 dead: below the 0.25 default, no fold of any kind runs
     assert(Search.deleteFromTextIndex(idx, Seq(2L).toDF("doc_id")) === 1L)
     assert(!Search.maintainTextIndex(spark, idx))
-    assert(Search.textStore.read(spark, idx).get.tombs.nonEmpty)
+    assert(Search.textStore.read(conf(spark), idx).get.tombs.nonEmpty)
     // 2 of 5 dead: the dead-ratio trigger fires a major fold (no appends
     // ever happened, so the size-ratio trigger alone would never purge)
     assert(Search.deleteFromTextIndex(idx, Seq(5L).toDF("doc_id")) === 1L)
     assert(Search.maintainTextIndex(spark, idx))
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.tombs.isEmpty && m.nDeleted === 0L && m.nDocs === 3L)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) ===
       rows(Search.bm25TopK(docs.filter(!col("doc_id").isin(2L, 5L)), qs, k = 5)))
@@ -233,7 +234,7 @@ class TextDeleteSpec extends AnyFunSuite {
     // which the stats correction handles exactly (append then tombstone)
     assert(rows(Search.bm25TopKIndexed(spark, idx, qs, k = 5)) ===
       rows(Search.bm25TopK(net, qs, k = 5)))
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDeleted === 2L && m.tagHighWater === 2L)
     // the purge converges to the same answers
     assert(Search.compactTextIndex(spark, idx))
@@ -281,7 +282,7 @@ class TextDeleteSpec extends AnyFunSuite {
         s"diverged from the scan form after step $step")
     }
     // final manifest sanity: totals reconcile with the model
-    val m = Search.textStore.read(spark, idx).get
+    val m = Search.textStore.read(conf(spark), idx).get
     assert(m.nDocs - m.nDeleted === model.size.toLong)
   }
 

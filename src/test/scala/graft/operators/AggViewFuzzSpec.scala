@@ -5,6 +5,7 @@ import graft.core.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 /** Lifecycle fuzz for the incremental aggregate view: random
   * interleavings of append / replayed-tag append / fold / vacuum must
@@ -76,7 +77,7 @@ class AggViewFuzzSpec extends AnyFunSuite {
     // final fold + vacuum leaves one root and the exact same answer
     AggView.compactAggView(spark, dir)
     AggView.vacuumAggView(spark, dir, minAgeMs = 0L)
-    assert(AggView.store.read(spark, dir).get.roots.size == 1)
+    assert(AggView.store.read(conf(spark), dir).get.roots.size == 1)
     assert(AggView.readAggView(spark, dir).orderBy("k1", "k2")
       .collect().map(_.toSeq).toSeq == oneShot(applied).toSeq)
   }

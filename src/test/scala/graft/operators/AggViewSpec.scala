@@ -5,6 +5,7 @@ import graft.core.TestSpark
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.store.ManifestStore.conf
 
 class AggViewSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -40,7 +41,7 @@ class AggViewSpec extends AnyFunSuite {
       .collect().map(_.toSeq)
 
   private def rootCount(dir: String): Int =
-    AggView.store.read(spark, dir).get.roots.size
+    AggView.store.read(conf(spark), dir).get.roots.size
 
   test("incremental view == one-shot aggregate at every step, any append order") {
     val dir = Files.createTempDirectory("aggview").toString
@@ -220,26 +221,29 @@ class AggViewSpec extends AnyFunSuite {
   test("cross-process guard: a commit against a stale manifest aborts, state intact") {
     val dir = Files.createTempDirectory("aggview-xproc").toString
     AggView.buildAggView(mkBatch(0 until 80), dir, Seq("status", "prio"), Seq("price"))
-    val stale = AggView.store.read(spark, dir).get
+    val stale = AggView.store.read(conf(spark), dir).get
     // a "foreign" writer moves the manifest after our snapshot (the
     // in-process lock serializes the public API, so the guard is
     // asserted through the commit primitive — the TextDelete pattern)
     assert(AggView.appendToAggView(dir, mkBatch(80 until 120), Some("9")))
     val e = intercept[IllegalStateException] {
-      AggView.store.commitIfUnchanged(spark, dir, Some(stale), stale.copy(nRows = 999L))
+      AggView.store.commitIfUnchanged(conf(spark), dir, Some(stale), stale.copy(nRows = 999L))
     }
     assert(e.getMessage.contains("concurrent"))
     // the view remains exactly the foreign writer's state
-    val m = AggView.store.read(spark, dir).get
+    val m = AggView.store.read(conf(spark), dir).get
     assert(m.roots.size == 2 && m.nRows == 120L && m.tagHighWater == 9L)
   }
 
   test("a staged root missing a recorded column aborts its commit and is dropped") {
     val dir = Files.createTempDirectory("aggview-schema").toString
     AggView.buildAggView(mkBatch(0 until 80), dir, Seq("status", "prio"), Seq("price"))
-    val m = AggView.store.read(spark, dir).get
-    val manifest = java.nio.file.Paths.get(dir, "MANIFEST.json")
-    val bytes = Files.readAllBytes(manifest).toSeq
+    val m = AggView.store.read(conf(spark), dir).get
+    // every file of the manifest log, by name
+    def manifestBytes = Files.list(java.nio.file.Paths.get(dir, "_manifest")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+    val bytes = manifestBytes
     val before = readSorted(dir)
     // a partial root without the price__max column, as a writer with a
     // diverging partial aggregate would stage it
@@ -250,7 +254,7 @@ class AggViewSpec extends AnyFunSuite {
       AggView.commitAppend(spark, dir, m, root, 1L, None)
     }
     assert(e.getMessage.contains("price__max"), e.getMessage)
-    assert(Files.readAllBytes(manifest).toSeq == bytes, "the aborted commit changed the manifest")
+    assert(manifestBytes == bytes, "the aborted commit changed the manifest")
     assert(!Files.exists(java.nio.file.Paths.get(dir, root._1)), "the aborted stage was kept")
     assert(readSorted(dir).sameElements(before))
   }

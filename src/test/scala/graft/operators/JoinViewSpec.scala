@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
+import graft.store.ManifestStore.conf
 
 /** Lifecycle + model-fuzz coverage for [[JoinView]]: at every point the
   * view must read as `facts_so_far JOIN dim_current` (inner) and as the
@@ -80,7 +81,7 @@ class JoinViewSpec extends AnyFunSuite {
     // fold: bit-identical reads, one root + one dim generation
     assert(JoinView.compactJoinView(spark, dir))
     assert(readInner(dir) == m.inner)
-    val man = JoinView.store.read(spark, dir).get
+    val man = JoinView.store.read(conf(spark), dir).get
     assert(man.roots.size == 1 && man.dimRoots.size == 1)
   }
 
@@ -92,9 +93,9 @@ class JoinViewSpec extends AnyFunSuite {
       joinKeys = Seq("k"), numBuckets = 16)
     val delta = Seq((4L, 70L), (5L, 80L))
     JoinView.appendFactsToJoinView(dir, factDf(delta))
-    val before = JoinView.store.read(spark, dir).get
+    val before = JoinView.store.read(conf(spark), dir).get
     JoinView.upsertDimToJoinView(dir, dimDf(Seq((8L, "new8"))))
-    val after = JoinView.store.read(spark, dir).get
+    val after = JoinView.store.read(conf(spark), dir).get
     // exactly one new root; prior entries survive minus the touched pks
     assert(after.roots.size == before.roots.size + 1)
     val touched = after.roots.last.pks.toSet
@@ -126,16 +127,16 @@ class JoinViewSpec extends AnyFunSuite {
     JoinView.buildJoinView(factDf(Seq((1L, 10L))), dimDf(Seq((1L, "a"))), dir,
       joinKeys = Seq("k"), numBuckets = 4)
     // find a key hashing to a bucket no fact occupies
-    val owned = JoinView.store.read(spark, dir).get.roots.flatMap(_.pks).toSet
+    val owned = JoinView.store.read(conf(spark), dir).get.roots.flatMap(_.pks).toSet
     val probe = (2L until 200L).find { cand =>
       val pk = spark.range(1).select(
         pmod(xxhash64(lit(cand)), lit(4)).cast("int").as("p"))
         .collect().head.getInt(0)
       !owned.contains(pk)
     }.get
-    val rootsBefore = JoinView.store.read(spark, dir).get.roots
+    val rootsBefore = JoinView.store.read(conf(spark), dir).get.roots
     assert(JoinView.upsertDimToJoinView(dir, dimDf(Seq((probe, "ghost")))))
-    val after = JoinView.store.read(spark, dir).get
+    val after = JoinView.store.read(conf(spark), dir).get
     assert(after.roots == rootsBefore, "no rebuild root for an empty bucket")
     // the dim row is live: a fact arriving later joins against it
     assert(JoinView.appendFactsToJoinView(dir, factDf(Seq((probe, 1L)))))
@@ -149,7 +150,7 @@ class JoinViewSpec extends AnyFunSuite {
     for (i <- 2 to 7)
       JoinView.appendFactsToJoinView(dir, factDf(Seq((i.toLong, i * 10L))))
     assert(JoinView.maintainJoinView(spark, dir, foldRootsAbove = 4))
-    assert(JoinView.store.read(spark, dir).get.roots.size == 1)
+    assert(JoinView.store.read(conf(spark), dir).get.roots.size == 1)
     val n = JoinView.vacuumJoinView(spark, dir, minAgeMs = 0L)
     assert(n >= 6, s"expected the superseded roots reclaimed, got $n")
     assert(readInner(dir) == (1 to 7).map(i => (i.toLong, i * 10L, if (i == 1) "a" else null))
@@ -169,7 +170,7 @@ class JoinViewSpec extends AnyFunSuite {
     // replay fences the WHOLE batch
     assert(!JoinView.applyDimCdcToJoinView(dir, cdc, batchTag = Some("7")))
     // exactly one dim generation landed for the mixed batch
-    assert(JoinView.store.read(spark, dir).get.dimRoots.size == 2)
+    assert(JoinView.store.read(conf(spark), dir).get.dimRoots.size == 2)
   }
 
   test("lookupJoinView prunes to one bucket and resolves like Get") {
@@ -224,18 +225,18 @@ class JoinViewSpec extends AnyFunSuite {
     val dir = tmp()
     JoinView.buildJoinView(factDf(Seq((1L, 10L), (2L, 20L))),
       dimDf(Seq((1L, "a"))), dir, joinKeys = Seq("k"), numBuckets = 4)
-    val stale = JoinView.store.read(spark, dir).get
+    val stale = JoinView.store.read(conf(spark), dir).get
     // a "foreign" writer advances the manifest after our snapshot (the
     // in-process lock serializes the public API, so the guard is
     // asserted through the commit primitive — the AggView pattern)
     assert(JoinView.appendFactsToJoinView(dir, factDf(Seq((3L, 30L))), Some("9")))
     val e = intercept[IllegalStateException] {
-      JoinView.store.commitIfUnchanged(spark, dir, Some(stale),
+      JoinView.store.commitIfUnchanged(conf(spark), dir, Some(stale),
         stale.copy(nextSeq = 999L))
     }
     assert(e.getMessage.contains("concurrent"))
     // the view remains exactly the foreign writer's state
-    val m = JoinView.store.read(spark, dir).get
+    val m = JoinView.store.read(conf(spark), dir).get
     assert(m.roots.size == 2 && m.tagHighWater == 9L && m.nextSeq == stale.nextSeq)
     assert(readInner(dir) == Set((1L, 10L, "a")))
   }

@@ -145,15 +145,17 @@ class ListingFreeReadSpec extends AnyFunSuite {
   test("family manifests without recorded files or schemas read the same rows") {
     val s = spark; import s.implicits._
     def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
-    /** Rewrite `dir`'s manifest without the fields recording files and
-      * schemas, as a manifest written before they existed.
+    /** Publish `dir`'s manifest again without the fields recording files
+      * and schemas, as a manifest written before they existed.
       */
     def stripRecorded(dir: String): Unit = {
-      val p = java.nio.file.Paths.get(dir, "MANIFEST.json")
-      val json = org.json4s.jackson.JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8"))
+      val log = new ManifestLog(spark.sparkContext.hadoopConfiguration, dir, wholeRecords = true)
+      val seq = Files.list(java.nio.file.Paths.get(dir, "_manifest")).toArray.map(_.toString)
+        .collect { case p if p.matches(".*/\\d{20}\\.json") => p.takeRight(25).take(20).toLong }.max
+      val json = org.json4s.jackson.JsonMethods.parse(log.read(log.record(seq)).get)
       val stripped = json.removeField { case (k, _) => Set("files", "schema", "dimSchema")(k) }
       assert(stripped != json, s"$dir records no files")
-      ManifestStore.writeJson(spark, p.toString, org.json4s.jackson.JsonMethods.compact(stripped))
+      assert(log.publish(log.record(seq + 1), org.json4s.jackson.JsonMethods.compact(stripped)))
     }
     def sameAfterStrip(dir: String)(read: => DataFrame): Unit = {
       val before = rows(read)
