@@ -1,24 +1,22 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetCompressionCodec, SparkToParquetSchemaConverter}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructType}
 import graft.store.{ManifestFileIndex, PartFile}
@@ -96,14 +94,20 @@ final case class GraftOptions(
   *     (reference manifest, `kv/file/manifest.go`). An older store's
   *     `MANIFEST.json` + `MANIFEST.log` are read, never modified.
   *
-  * Read semantics are merge-on-read: union of live segments, last-writer-wins
-  * by `version` (reference merge-iterator dedup, `kv/lsm/iterator.go:357-366`),
-  * then tombstone and TTL visibility filters (reference `kv/db.go:114-130`) —
-  * TTL strictly AFTER LWW so a newer expired version shadows an older live one.
+  * Read semantics are merge-on-read: the live segments merged by key,
+  * last-writer-wins by [[GraftDB.lwwOrder]] (`version`, then a
+  * deterministic tie-break; reference merge-iterator dedup,
+  * `kv/lsm/iterator.go:357-366`), then tombstone and TTL visibility filters
+  * (reference `kv/db.go:114-130`) — TTL strictly AFTER LWW so a newer
+  * expired version shadows an older live one.
   *
   * Scale design: the driver holds only metadata and a point get's few
-  * matching rows; every lifecycle job is a linear scan plus at most one
-  * shuffle; compaction output is range-partitioned and key-sorted so
+  * matching rows. Every data file is key-sorted and compacted files sit
+  * on a fixed bucket grid, so [[view]], [[scan]] and compaction resolve
+  * LWW without a shuffle: one task per grid bucket k-way merges the files
+  * overlapping it ([[MergeScan]]), and Spark is told the output is
+  * range-partitioned and sorted by key. Compaction output is
+  * key-sorted per bucket so
   * parquet footer min/max stats prune files/row-groups on point and range
   * reads, and a parquet bloom filter on `key`, sized to each file's keys,
   * serves the negative-lookup role of the reference's per-SST bloom
@@ -183,11 +187,10 @@ final class GraftDB(
     }
     val sorted = rows.sortBy(_.key)(UnsignedBytesOrdering)
     val part = writePart("data", KVEntry.schema, sorted)(GraftDB.fillRow)
-    manifest.commit(_ => ManifestDelta(
+    maybeCompact(manifest.commit(_ => ManifestDelta(
       addFiles = Vector(FileMeta(part.path, level = 0, Hex.encode(sorted.head.key),
         Hex.encode(sorted.last.key), sorted.size, baseVersion, part.length)),
-      addBlobs = blobMetas))
-    maybeCompact()
+      addBlobs = blobMetas)))
   }
 
   /** Write `rows` on the driver as `<kind>/<uuid>/part-00000.parquet` and
@@ -198,16 +201,26 @@ final class GraftDB(
     * statistics and column-index pages). A `key` column gets a bloom
     * filter sized to the rows, which bound the file's distinct keys: a
     * 16-row segment carries a 32-byte filter. The writer uses the
-    * session's Hadoop conf, like [[openParquet]].
+    * session's Hadoop conf, like [[openParquet]]. On `file:` the file is
+    * written with `java.nio`: without Hadoop's native library every local
+    * `create` forks a `chmod`, about 4 ms, where the whole java.nio write
+    * of a 16-row file takes about 1 ms.
     */
   private def writePart[T](kind: String, schema: StructType, rows: Seq[T])(
       fill: (Group, T) => Unit): PartFile = {
     val path = s"${newSegmentDir(kind)}/part-00000.parquet"
     val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val local = Some(fs.makeQualified(p).toUri).filter(_.getScheme == "file").map(Paths.get)
     val msg = new SparkToParquetSchemaConverter().convert(schema)
     val codec = ParquetCompressionCodec.fromString(
       spark.sessionState.conf.parquetCompressionCodec).getCompressionCodec
-    val builder = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), conf))
+    val out = local.fold(HadoopOutputFile.fromPath(p, conf): org.apache.parquet.io.OutputFile) { f =>
+      Files.createDirectories(f.getParent)
+      new LocalOutputFile(f)
+    }
+    val builder = ExampleParquetWriter.builder(out)
       .withConf(conf).withType(msg).withCompressionCodec(codec)
     val writer = (if (!schema.fieldNames.contains("key")) builder
       else builder.withBloomFilterEnabled("key", true).withBloomFilterNDV("key", rows.size.toLong))
@@ -215,8 +228,7 @@ final class GraftDB(
     val groups = new SimpleGroupFactory(msg)
     try rows.foreach { r => val g = groups.newGroup(); fill(g, r); writer.write(g) }
     finally writer.close()
-    val p = new Path(path)
-    PartFile(path, p.getFileSystem(conf).getFileStatus(p).getLen, None)
+    PartFile(path, local.fold(fs.getFileStatus(p).getLen)(Files.size), None)
   }
 
   /** Bulk ingest: a whole DataFrame `(key binary, value binary[, expiresAt
@@ -224,7 +236,7 @@ final class GraftDB(
     * micro-batch or a load job). The whole batch shares one commit version
     * (like the reference stamping one ts per Set, `kv/db.go:78`);
     * intra-batch duplicate keys resolve by the deterministic tie-break in
-    * [[resolved]]. Blob ids come from `monotonically_increasing_id`
+    * [[GraftDB.lwwOrder]]. Blob ids come from `monotonically_increasing_id`
     * (unique, shuffle-free) over a reserved id block.
     */
   def write(df0: DataFrame): Unit = {
@@ -234,7 +246,7 @@ final class GraftDB(
     val df = if (df0.rdd.getNumPartitions > 4096) df0.coalesce(4096) else df0
     var baseVersion = 0L
     var baseBlob = 0L
-    manifest.commit { st =>
+    val reserved = manifest.commit { st =>
       baseVersion = st.nextVersion; baseBlob = st.nextBlobId
       // Blob-id block sized for monotonically_increasing_id's
       // (partitionId << 33 | offset) layout: supports 4096 input partitions
@@ -274,14 +286,14 @@ final class GraftDB(
         col("key"),
         when(col("blobId").isNotNull, lit(null).cast("binary")).otherwise(col("value")).as("value"),
         col("version"), col("expiresAt"), col("tombstone"), col("blobId")),
-      dataDir)
+      dataDir, reserved.rangeBoundsHex)
     val metas = segmentFileMetas(dataDir, level = 0, baseVersion)
     // reclaim the unused tail of the 2^45 blob-id reservation when OUR
     // reservation is still the frontier (no concurrent writer reserved
     // past it): id usage then tracks the actual blob count instead of
     // burning 2^45 per batch, and the exhaustion guard above becomes
     // unreachable in single-writer deployments
-    manifest.commit { st =>
+    val committed = manifest.commit { st =>
       val reclaimed =
         if (st.nextBlobId != baseBlob + (1L << 45)) st.nextBlobId // raced: keep
         else if (blobCount == 0L) baseBlob
@@ -292,7 +304,7 @@ final class GraftDB(
         nextBlobId = Some(reclaimed))
     }
     maybeCaptureGrid(metas)
-    maybeCompact()
+    maybeCompact(committed)
   }
 
   // ------------------------------------------------------------- segment write
@@ -307,9 +319,10 @@ final class GraftDB(
   private def bucketExpr(key: Column, bounds: Vector[String]): Column =
     graft.functions.expressions.VectorExpressions.grid_bucket(key, bounds)
 
-  /** Write one sorted segment directory. With a captured grid
-    * ([[ManifestState.rangeBoundsHex]]): rows are bucketed against the
-    * FIXED split keys and written one-bucket-per-file via `partitionBy`,
+  /** Write one sorted segment directory from unsorted rows. With a
+    * captured grid `bounds` ([[ManifestState.rangeBoundsHex]]): rows are
+    * bucketed against the FIXED split keys and written one-bucket-per-file
+    * via `partitionBy`,
     * so every generation's files align on the same sub-ranges and
     * L0→L1 compaction touches only the dirty buckets instead of an
     * unbounded overlap set (the analog of the reference's stable per-level
@@ -317,9 +330,8 @@ final class GraftDB(
     * exists (first write): sample-based `repartitionByRange`, whose output
     * boundaries then BECOME the grid (see [[maybeCaptureGrid]]).
     */
-  private def writeSegment(df: DataFrame, dir: String): Unit = {
-    val bounds = manifest.load().rangeBoundsHex
-    val writer =
+  private def writeSegment(df: DataFrame, dir: String, bounds: Vector[String]): Unit =
+    writeSorted(
       if (bounds.nonEmpty) {
         df.withColumn("__bucket", bucketExpr(col("key"), bounds))
           .repartition(bounds.size + 1, col("__bucket"))
@@ -329,16 +341,19 @@ final class GraftDB(
         df.repartitionByRange(options.rangePartitions, col("key"))
           .sortWithinPartitions("key")
           .write
-      }
-    // the adaptive filter keeps candidates from 1 MB down to 2 KB and
-    // writes the smallest that holds the file's distinct keys at the
-    // target false-positive rate, so a bucket file's filter tracks its size
+      }, dir)
+
+  /** Write key-sorted rows as parquet under `dir`, with a key bloom filter.
+    * The adaptive filter keeps candidates from 1 MB down to 2 KB and
+    * writes the smallest that holds the file's distinct keys at the
+    * target false-positive rate, so a bucket file's filter tracks its size.
+    */
+  private def writeSorted(writer: DataFrameWriter[Row], dir: String): Unit =
     writer.mode(SaveMode.Overwrite)
       .option("parquet.bloom.filter.enabled#key", "true")
       .option("parquet.bloom.filter.adaptive.enabled", "true")
       .option("parquet.bloom.filter.candidates.number#key", "10")
       .parquet(dir)
-  }
 
   /** Establish the fixed bucket grid from the FIRST multi-file segment
     * write: the sampled range boundaries of that write (each file's max
@@ -347,13 +362,19 @@ final class GraftDB(
     * rewrite re-samples it (the one sanctioned grid-refresh point).
     */
   private def maybeCaptureGrid(metas: Vector[FileMeta]): Unit = {
-    if (metas.size < 2) return
-    val bounds = metas.sortBy(_.minKeyHex).init.map(_.maxKeyHex)
+    val bounds = gridOf(metas)
+    if (bounds.isEmpty) return
     manifest.commit { st =>
       if (st.rangeBoundsHex.nonEmpty) ManifestDelta.empty
       else ManifestDelta(addBounds = bounds)
     }
   }
+
+  /** The grid a multi-file segment write defines: each file's max key,
+    * ascending, all but the last. Empty for fewer than two files.
+    */
+  private def gridOf(metas: Vector[FileMeta]): Vector[String] =
+    if (metas.size < 2) Vector.empty else metas.sortBy(_.minKeyHex).init.map(_.maxKeyHex)
 
   /** The part files behind one manifest entry: itself, with its recorded
     * length; an entry without one (a segment DIR, or a file recorded before
@@ -367,16 +388,11 @@ final class GraftDB(
   /** Open one part file on the driver with the SESSION's Hadoop conf —
     * `ParquetFileReader.open(InputFile)` and `ParquetReader.builder` each
     * build a fresh `Configuration`, ~10 ms a file against ~1 ms here —
-    * at its known length. The reader keeps only the row groups `filter`
-    * cannot rule out by their statistics, dictionary or key bloom
-    * filter, and only the pages of those the column index cannot.
+    * at its known length (see [[MergeScan.open]]).
     */
   private def openParquet(f: PartFile,
-      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    ParquetFileReader.open(HadoopInputFile.fromStatus(ManifestFileIndex.status(conf, f), conf),
-      HadoopReadOptions.builder(conf).withRecordFilter(filter).build())
-  }
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader =
+    MergeScan.open(spark.sparkContext.hadoopConfiguration, f, filter)
 
   /** Open one file's parquet footer, run `g`, close. */
   private def withFooter[T](f: PartFile)(g: ParquetMetadata => T): T = {
@@ -388,24 +404,7 @@ final class GraftDB(
   private def filteredRows(f: PartFile, pred: FilterPredicate): Vector[Group] = {
     val filter = FilterCompat.get(pred)
     val rd = openParquet(f, filter)
-    try {
-      val schema = rd.getFileMetaData.getSchema
-      val io = new ColumnIOFactory().getColumnIO(schema)
-      val out = Vector.newBuilder[Group]
-      var pages = rd.readNextFilteredRowGroup()
-      while (pages != null) {
-        val records = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
-        var i = 0L
-        while (i < pages.getRowCount) {
-          // the record filter materializes non-matching rows as null
-          val g = records.read()
-          if (g != null) out += g
-          i += 1
-        }
-        pages = rd.readNextFilteredRowGroup()
-      }
-      out.result()
-    } finally rd.close()
+    try MergeScan.groups(rd, filter).toVector finally rd.close()
   }
 
   /** Per-part-file blob metas of a freshly written blob dir: row count and
@@ -503,23 +502,24 @@ final class GraftDB(
   /** Raw union of live segments (all versions, tombstones included). */
   def rawLog(): DataFrame = readSegments(manifest.load().files)
 
-  /** The LWW-resolved view BEFORE visibility filters: one row per key —
-    * the newest version, whether live, deleted, or expired.
-    * (Reference merge iterator semantics, `kv/lsm/iterator.go:303-366`.)
+  /** The LWW merge of `files` over the key range `[lo, hi)`, one task per
+    * bucket of the grid `bounds` (see [[MergeScan]]): each key's winner by
+    * [[GraftDB.lwwOrder]], in key order, emitted as `out` says.
     */
-  def resolved(df: DataFrame): DataFrame = {
-    // version desc is the LWW order; the remaining columns are a
-    // deterministic tie-break for intra-batch duplicate keys (same version).
-    // GraftDB.lwwOrder is the same order for the driver-side point get.
-    val w = Window.partitionBy(col("key")).orderBy(
-      col("version").desc, xxhash64(col("value")).desc, col("blobId").desc_nulls_last,
-      col("expiresAt").desc, col("tombstone").desc)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
+  private def merged(bounds: Vector[String], files: Seq[FileMeta], lo: Option[Array[Byte]],
+      hi: Option[Array[Byte]], ascending: Boolean, out: MergeOutput): DataFrame =
+    MergeScan.frame(spark,
+      MergeScan.tasks(bounds, files.map(f => f -> partsOf(f.path, f.length)), lo, hi), ascending, out)
 
-  private def visible(df: DataFrame, asOfUnixSec: Long): DataFrame =
-    df.filter(!col("tombstone") &&
-      (col("expiresAt") === 0L || col("expiresAt") > asOfUnixSec))
+  /** The split keys `st`'s merges run on: the fixed grid, or before one is
+    * captured the edges of the compacted files. Any ascending split keys
+    * partition the key space, so these only set the merge's parallelism:
+    * a store that has only seen `batchSet`s still merges its
+    * range-partitioned compaction output one task per file.
+    */
+  private def mergeGrid(st: ManifestState): Vector[String] =
+    if (st.rangeBoundsHex.nonEmpty) st.rangeBoundsHex
+    else gridOf(st.files.filter(_.level >= 1)).distinct.sorted
 
   /** The merge-on-read user view: `(key, value, version, expiresAt)` with
     * blob values resolved. This is what every read operator composes over.
@@ -528,23 +528,19 @@ final class GraftDB(
     viewOf(manifest.load(), asOfUnixSec)
 
   private[core] def viewOf(st: ManifestState, asOfUnixSec: Long): DataFrame =
-    viewOver(st, st.files, None, asOfUnixSec)
+    viewOver(st, None, None, ascending = true, asOfUnixSec)
 
-  /** The view of the keys `keyPred` admits, read from `files` only. The
-    * predicate applies before [[resolved]]: the LWW window partitions by
-    * key, so dropping whole keys first is exact, provided `files` hold
-    * every version of the admitted keys.
+  /** The view of the keys in `[lo, hi)`: the merge's winners, visible at
+    * `asOfUnixSec` (tombstone and TTL applied AFTER LWW, so a newer
+    * expired version shadows an older live one), blob pointers read
+    * from only the blob files whose recorded id range covers them.
     */
-  private def viewOver(st: ManifestState, files: Seq[FileMeta], keyPred: Option[Column],
-      asOfUnixSec: Long): DataFrame = {
-    val log = readSegments(files)
-    val base = visible(resolved(keyPred.fold(log)(log.filter)), asOfUnixSec)
-    val blobs = readBlobs(st.blobFiles).withColumnRenamed("value", "__blobValue")
-    base.join(blobs, Seq("blobId"), "left")
-      .select(col("key"),
-        coalesce(col("value"), col("__blobValue")).as("value"),
-        col("version"), col("expiresAt"))
-  }
+  private def viewOver(st: ManifestState, lo: Option[Array[Byte]], hi: Option[Array[Byte]],
+      ascending: Boolean, asOfUnixSec: Long): DataFrame =
+    merged(mergeGrid(st), st.files, lo, hi, ascending, ViewRows(asOfUnixSec, blobParts(st)))
+
+  private def blobParts(st: ManifestState): Vector[BlobPart] =
+    st.blobFiles.flatMap(b => partsOf(b.path, b.length).map(BlobPart(b.minBlobId, b.maxBlobId, _)))
 
   // ---------------------------------------------------------------- snapshots
 
@@ -625,7 +621,7 @@ final class GraftDB(
     * few files whose range covers the key; inside each, a `key ==` read
     * skips every row group that stats or the key bloom filter rule out and
     * every page the column index does. The surviving versions resolve by
-    * [[resolved]]'s exact order ([[lwwOrder]]), then the same tombstone/TTL
+    * [[lwwOrder]], the order the view's merge keeps, then the same tombstone/TTL
     * visibility as [[view]]; a blob pointer dereferences through the blob
     * files whose id range covers it, and a missing blob fails loudly.
     */
@@ -638,23 +634,9 @@ final class GraftDB(
       .flatMap(f => partsOf(f.path, f.length))
       .flatMap(p => filteredRows(p, keyEq).map(GraftDB.entryOf))
     versions.maxOption(GraftDB.lwwOrder)
-      .filter(e => !e.tombstone && (e.expiresAt == 0L || e.expiresAt > System.currentTimeMillis() / 1000))
-      .map(e => if (e.blobId == null) e.value else blobValue(st, e.blobId))
-  }
-
-  /** The value of blob `id`: a `blobId ==` read of the blob files whose id
-    * range covers it, stopping at the first hit.
-    */
-  private def blobValue(st: ManifestState, id: Long): Array[Byte] = {
-    val idEq = FilterApi.eq(FilterApi.longColumn("blobId"), java.lang.Long.valueOf(id))
-    st.blobFiles.iterator
-      .filter(b => b.minBlobId <= id && id <= b.maxBlobId)
-      .flatMap(b => partsOf(b.path, b.length))
-      .flatMap(p => filteredRows(p, idEq))
-      .nextOption()
-      .getOrElse(throw new NoSuchElementException(
-        s"blob $id is referenced by a live key but missing from the blob table"))
-      .getBinary("value", 0).getBytes
+      .filter(MergeScan.visible(_, System.currentTimeMillis() / 1000))
+      .map(e => if (e.blobId == null) e.value else MergeScan.blobValues(
+        spark.sparkContext.hadoopConfiguration, Seq(e.blobId.longValue), blobParts(st))(e.blobId))
   }
 
   /** Ordered scan (reference `NewIterator`, `kv/iterator.go:19-79`), with
@@ -663,9 +645,11 @@ final class GraftDB(
     * two comparisons (the reference declared prefix but never enforced it,
     * `kv/utils/iterator.go:16-19` — we implement it for real).
     *
-    * The options narrow to one `[lo, hi)` key range, and only the manifest
-    * files whose `[minKey, maxKey]` overlaps it are read, the range filter
-    * applied before the LWW resolve (see [[viewOver]]).
+    * The options narrow to one `[lo, hi)` key range: the merge runs one
+    * task per grid bucket the range overlaps, over only the manifest files
+    * whose `[minKey, maxKey]` overlaps that bucket's part of the range (see
+    * [[viewOver]]). Its output is already in key order, so the `orderBy`
+    * plans no Exchange and no Sort.
     */
   def scan(
       from: Option[Array[Byte]] = None,
@@ -675,34 +659,31 @@ final class GraftDB(
       asOfUnixSec: Long = System.currentTimeMillis() / 1000): DataFrame = {
     val lo = (from ++ prefix).maxOption(UnsignedBytesOrdering)
     val hi = (until ++ prefix.flatMap(GraftDB.prefixSuccessor)).minOption(UnsignedBytesOrdering)
-    val (loHex, hiHex) = (lo.map(Hex.encode), hi.map(Hex.encode))
-    val st = manifest.load()
-    val files = st.files.filter(f =>
-      loHex.forall(f.maxKeyHex >= _) && hiHex.forall(f.minKeyHex < _))
-    val keyPred = (lo.map(col("key") >= lit(_)) ++ hi.map(col("key") < lit(_))).reduceOption(_ && _)
-    viewOver(st, files, keyPred, asOfUnixSec)
+    viewOver(manifest.load(), lo, hi, ascending, asOfUnixSec)
       .orderBy(if (ascending) col("key").asc else col("key").desc)
   }
 
   // ------------------------------------------------------------ lifecycle jobs
 
-  private def maybeCompact(): Unit = {
-    val st = manifest.load()
+  /** Compact when `st`, the state a commit just returned, holds
+    * `compactTriggerFiles` level-0 files.
+    */
+  private def maybeCompact(st: ManifestState): Unit =
     if (st.files.count(_.level == 0) >= options.compactTriggerFiles) compact()
-  }
 
   /** Leveled compaction: THE natural Spark job (reference
     * `compactBuildTables`, `kv/lsm/compact.go:239-447`). Inputs are the
     * level-0 generations plus every level-1 file whose key range overlaps
-    * them (the reference's L0->Lbase merge): LWW-resolve -> drop dead
-    * entries (only while L1 is the bottom level — once L2 exists a dropped
-    * tombstone could resurrect an older L2 version) -> grid-bucket +
-    * key-sort -> write level-1 files with per-file manifest stats;
+    * them (the reference's L0->Lbase merge): one merge task per dirty
+    * grid bucket LWW-resolves its inputs -> drops dead entries (only while
+    * L1 is the bottom level — once L2 exists a dropped tombstone could
+    * resurrect an older L2 version) -> writes its bucket's level-1 file,
+    * already key-sorted, so the job is map-only; per-file manifest stats;
     * atomically swap the manifest. Non-overlapping level-1 files are
     * untouched — with the fixed grid, "overlapping" means exactly the
     * dirty buckets, so write amplification is bounded by the touched
     * range, not the table size. The reference's parallel subcompactions
-    * become the per-bucket write tasks.
+    * become the per-bucket merge tasks.
     *
     * After the merge, every level is scored against its geometric target
     * (the reference's level scoring, `kv/lsm/compact.go:626-751`): while
@@ -883,40 +864,43 @@ final class GraftDB(
     * versions and dead rows, and re-samples the bucket grid (the one
     * sanctioned grid-refresh point — key distributions drift).
     */
-  def majorCompact(): Unit = {
-    manifest.commit(st =>
-      if (st.rangeBoundsHex.isEmpty) ManifestDelta.empty
-      else ManifestDelta(clearBounds = true))
-    compactInputs(_.files, outputLevel = 1, dropDead = true, captureGrid = true)
-  }
+  def majorCompact(): Unit =
+    compactInputs(_.files, outputLevel = 1, dropDead = true, regrid = true)
 
   private def overlaps(a: FileMeta, b: FileMeta): Boolean =
     !(a.maxKeyHex < b.minKeyHex || b.maxKeyHex < a.minKeyHex)
 
-  /** Shared merge job: LWW-resolve the picked inputs, optionally drop dead
-    * rows (ONLY when every older version of the inputs' keys is itself in
-    * the inputs — i.e. compacting into the bottom level), write one new
-    * segment at `outputLevel`, swap the manifest.
+  /** Shared merge job: LWW-merge the picked inputs per grid bucket,
+    * optionally drop dead rows (ONLY when every older version of the
+    * inputs' keys is itself in the inputs — i.e. compacting into the
+    * bottom level), write one new segment at `outputLevel`, swap the
+    * manifest. On a grid each merge task writes its bucket's file: no
+    * shuffle. Without one, or with `regrid` (the grid is re-sampled from
+    * the output, which replaces it in the same commit), the merged rows
+    * are range-partitioned by a sampled `repartitionByRange`.
     */
   private def compactInputs(
       pick: ManifestState => Vector[FileMeta],
       outputLevel: Int,
       dropDead: Boolean,
-      captureGrid: Boolean = false): Unit = {
+      regrid: Boolean = false): Unit = {
     val st0 = manifest.load()
     val inputs = pick(st0)
     if (inputs.isEmpty) return
     val now = System.currentTimeMillis() / 1000
-    val merged = resolved(readSegments(inputs))
-    val compacted = if (dropDead) visible(merged, now) else merged
+    val compacted = merged(mergeGrid(st0), inputs, None, None, ascending = true,
+      LogRows(if (dropDead) Some(now) else None))
     val outDir = newSegmentDir("data")
-    writeSegment(compacted, outDir)
+    if (regrid || st0.rangeBoundsHex.isEmpty)
+      writeSegment(compacted.drop("__bucket"), outDir, Vector.empty)
+    else writeSorted(compacted.write.partitionBy("__bucket"), outDir)
     val maxVersion = inputs.map(_.createdVersion).max
     val newMetas = segmentFileMetas(outDir, level = outputLevel, maxVersion)
     manifest.commit(_ => ManifestDelta(
       addFiles = newMetas,
-      removePaths = inputs.map(_.path)))
-    if (captureGrid) maybeCaptureGrid(newMetas)
+      removePaths = inputs.map(_.path),
+      clearBounds = regrid,
+      addBounds = if (regrid) gridOf(newMetas) else Vector.empty))
     // Old segment dirs stay on disk until vacuum() — snapshot readers may
     // still hold them (replaces the reference's iterator refcounts,
     // kv/vlog_gc.go:364-390).
@@ -939,7 +923,7 @@ final class GraftDB(
     * the rewrite itself, skewing every later discard ratio.
     */
   private def liveBlobRefsOf(st: ManifestState): DataFrame =
-    resolved(readSegments(st.files))
+    merged(mergeGrid(st), st.files, None, None, ascending = true, LogRows(None))
       .filter(!col("tombstone") && col("blobId").isNotNull)
       .select(col("blobId"))
 
@@ -1209,10 +1193,11 @@ object GraftDB {
     new GraftDB(spark, dir, options)
   }
 
-  /** [[GraftDB.resolved]]'s window order as a driver-side ordering, the
-    * winner greatest: version, then the same-version tie-break —
-    * `xxhash64(value)` (Spark's seed 42, null hashing to the seed), blobId
-    * with nulls lowest, expiresAt, tombstone.
+  /** The one last-writer-wins order, used by the point [[GraftDB.get]]
+    * and by every merge task ([[MergeScan]]), the winner greatest:
+    * version, then a deterministic tie-break for same-version duplicates
+    * of one bulk write — `xxhash64(value)` (Spark's seed 42, null hashing
+    * to the seed), blobId with nulls lowest, expiresAt, tombstone.
     */
   private[core] val lwwOrder: Ordering[KVEntry] = Ordering.by((e: KVEntry) => (
     e.version,

@@ -1,8 +1,15 @@
 package graft.core
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Row, SparkSession}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
@@ -19,26 +26,67 @@ object TestSpark {
 
   /** The number of Spark jobs `body` starts. */
   def sparkJobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel"))
-          sentinelSeen.countDown()
-        else jobs.incrementAndGet()
+        if (!isSentinel(e)) jobs.incrementAndGet()
+    })(body)
+    jobs.get
+  }
+
+  /** The bytes the stages `body` runs write to shuffle files. */
+  def shuffleBytesDuring(body: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(body)
+    bytes.get
+  }
+
+  private def isSentinel(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel")
+
+  /** Run `body` with `listener` on the listener bus, until every event
+    * `body` caused has reached it.
+    */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val flush = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (isSentinel(e)) sentinelSeen.countDown()
     }
     sc.addSparkListener(listener)
+    sc.addSparkListener(flush)
     try {
       body
       // the bus delivers events in order: once the sentinel job's start
-      // arrives, every job `body` launched would have arrived before it
+      // arrives, every event `body` caused would have arrived before it
       sc.setJobGroup("sentinel", "flush the listener bus")
       try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
+    } finally { sc.removeSparkListener(listener); sc.removeSparkListener(flush) }
   }
+}
+
+/** The local `file` filesystem, recording the paths it opens and
+  * creates (Hadoop's local filesystem keeps no per-operation statistics).
+  */
+class CallRecordingFileSystem extends LocalFileSystem {
+  import CallRecordingFileSystem._
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    opens.add(f.toString); super.open(f, bufferSize)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    creates.add(f.toString)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CallRecordingFileSystem {
+  val opens, creates = new ConcurrentLinkedQueue[String]
 }
 
 /** Parity tests mirroring the reference's API round-trip suite
@@ -784,5 +832,183 @@ class GraftDBSpec extends AnyFunSuite {
       (0 until 400).map(i => Row(b(f"bw$i%04d"), b(s"w$i"))), 4), schema))
     db.compact()
     files(db).foreach(f => assert(keyBloomBytes(f) <= 4096, s"compacted file $f"))
+  }
+  /** A store on a four-bucket grid: L1 files from a bulk write and a
+    * compaction, under L0 batches of sets, blob values, deletes, and live
+    * and expired TTLs.
+    */
+  private def layeredDb(seed: Long): GraftDB = {
+    // 20-key buckets: no pair falls under half of bucketTargetRows, so the
+    // grid keeps its four buckets
+    val db = freshDb(GraftOptions(valueThreshold = 12, compactTriggerFiles = 1000,
+      rangePartitions = 4, bucketTargetRows = 40))
+    val rnd = new scala.util.Random(seed)
+    val keyspace = for (c <- "abcd"; i <- 0 until 20) yield f"$c$i%02d"
+    def value() = if (rnd.nextInt(4) == 0) "B" * 20 else s"v${rnd.nextInt(1000)}"
+    import org.apache.spark.sql.types._
+    val kv = StructType(Seq(StructField("key", BinaryType), StructField("value", BinaryType)))
+    db.write(spark.createDataFrame(spark.sparkContext.parallelize(
+      keyspace.map(k => Row(b(k), b(value()))), 4), kv))
+    db.compact()
+    (0 until 4).foreach { _ =>
+      db.batchSet((0 until 12).map { _ =>
+        val k = b(keyspace(rnd.nextInt(keyspace.size)))
+        rnd.nextInt(4) match {
+          case 0 => KVEntry.tombstone(k)
+          case 1 => KVEntry.withTTL(k, b(value()), if (rnd.nextBoolean()) -100 else 10000)
+          case _ => KVEntry(k, b(value()))
+        }
+      })
+    }
+    val st = new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).load()
+    assert(st.rangeBoundsHex.size == 3 && st.files.exists(_.level == 0) &&
+      st.files.count(_.level == 1) >= 2 && st.blobFiles.nonEmpty, st)
+    db
+  }
+
+  private def noShuffle(what: String, plan: String): Unit =
+    Seq("Exchange", "Window", "Sort [").foreach(op =>
+      assert(!plan.contains(op), s"the $what plan holds a $op:\n$plan"))
+
+  test("view and scans plan no Exchange, Window or Sort; a prefix scan collects in one job") {
+    val db = layeredDb(1L)
+    noShuffle("view", db.view().queryExecution.executedPlan.toString)
+    Seq(true, false).foreach { asc =>
+      val scan = db.scan(prefix = Some(b("b")), ascending = asc)
+      noShuffle(s"scan(ascending = $asc)", scan.queryExecution.executedPlan.toString)
+    }
+    var rows = 0
+    val jobs = TestSpark.sparkJobsDuring { rows = db.scan(prefix = Some(b("b1"))).collect().length }
+    assert(rows > 0 && jobs == 1, s"a prefix scan of $rows rows ran $jobs jobs")
+  }
+
+  test("before a grid exists the merge runs one task per compacted file") {
+    val db = freshDb(GraftOptions(compactTriggerFiles = 1000, rangePartitions = 4))
+    (0 until 4).foreach(i => db.batchSet((0 until 40).map(j => KVEntry(b(f"k$j%03d"), b(s"v$i")))))
+    db.compact()
+    val files = db.stats()("dataSegments")
+    assert(db.gridBounds().isEmpty && files >= 2, db.stats())
+    val view = db.view()
+    assert(view.rdd.getNumPartitions == files)
+    assert(view.collect().map(r => new String(r.getAs[Array[Byte]]("value"))).toSet == Set("v3"))
+  }
+
+  test("compaction is one map-only job: no shuffle bytes, no Exchange or Window in its write") {
+    val db = layeredDb(2L)
+    val before = viewMap(db)
+    val plans = new ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    var jobs = 0
+    val shuffled =
+      try TestSpark.shuffleBytesDuring { jobs = TestSpark.sparkJobsDuring(db.compact()) }
+      finally spark.listenerManager.unregister(listener)
+    assert(db.stats()("level0Segments") == 0L)
+    assert(viewMap(db) == before)
+    assert(shuffled == 0L && jobs == 1, s"compaction shuffled $shuffled bytes in $jobs jobs")
+    val writes = plans.asScala.filter(_.contains("InsertIntoHadoopFsRelationCommand")).toSeq
+    assert(writes.size == 1, plans.asScala.mkString("\n\n"))
+    noShuffle("compaction write", writes.head)
+  }
+
+  test("iterator over a multi-bucket store equals the view sorted on the driver, both ways") {
+    val db = layeredDb(3L)
+    val view = viewMap(db).toSeq.sortBy(_._1)
+    assert(view.exists(_._2 == b("B" * 20).toSeq), "no blob value is visible")
+    for (seek <- Seq(None, Some("a"), Some("b07"), Some("b075"), Some("c19"), Some("e"));
+         asc <- Seq(true, false)) {
+      val got = db.iterator(asc, seek.map(b)).map(r =>
+        new String(r.getAs[Array[Byte]]("key")) -> r.getAs[Array[Byte]]("value").toSeq).toList
+      val want =
+        if (asc) view.filter { case (k, _) => seek.forall(k >= _) }
+        else view.filter { case (k, _) => seek.forall(k <= _) }.reverse
+      assert(got == want, s"iterator(ascending = $asc, seek = $seek)")
+    }
+  }
+
+  test("scans over files of many row groups and pages merge in order both ways") {
+    val db = freshDb(GraftOptions(compactTriggerFiles = 1000, rangePartitions = 1))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = (0 until 1000).map(i => f"r$i%04d")
+    import org.apache.spark.sql.types._
+    val kv = StructType(Seq(StructField("key", BinaryType), StructField("value", BinaryType)))
+    // the writer checks its size every 100 rows: ~100-row row groups and pages
+    val saved = Seq("parquet.block.size", "parquet.page.size").map(k => k -> Option(conf.get(k)))
+    conf.set("parquet.block.size", "1024"); conf.set("parquet.page.size", "256")
+    try db.write(spark.createDataFrame(spark.sparkContext.parallelize(
+      keys.map(k => Row(b(k), b(s"v$k"))), 1), kv))
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    db.batchSet(Seq(KVEntry(b("r0500"), b("new")), KVEntry.tombstone(b("r0250"))))
+    val rowGroups = new Manifest(conf, db.rootDir).load().files.filter(_.rows == 1000).map { f =>
+      val rd = MergeScan.open(conf, graft.store.PartFile(f.path, f.length, None))
+      try rd.getRowGroups.size finally rd.close()
+    }
+    assert(rowGroups.size == 1 && rowGroups.head >= 5, rowGroups)
+    val want = keys.filter(_ != "r0250").map(k => k -> (if (k == "r0500") "new" else s"v$k"))
+    for ((from, until) <- Seq((None, None), (Some("r0123"), Some("r0877")), (Some("r0499"), Some("r0502")));
+         asc <- Seq(true, false)) {
+      val got = db.scan(from.map(b), until.map(b), ascending = asc).collect().map(r =>
+        new String(r.getAs[Array[Byte]]("key")) -> new String(r.getAs[Array[Byte]]("value"))).toSeq
+      val in = want.filter { case (k, _) => from.forall(k >= _) && until.forall(k < _) }
+      assert(got == (if (asc) in else in.reverse), s"scan($from, $until, ascending = $asc)")
+    }
+  }
+
+  test("a data file whose keys are out of order fails the view, naming the file") {
+    val db = freshDb()
+    db.set(b("m"), b("1"))
+    val dir = s"${db.rootDir}/data/unsorted"
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(b("b"), b("2"), 1L, 0L, false, null), Row(b("a"), b("3"), 1L, 0L, false, null)), 1),
+      KVEntry.schema).write.parquet(dir)
+    val part = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet")).toSeq match {
+      case Seq(f) => f
+      case fs => fail(s"expected one part file, got $fs")
+    }
+    new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).commit(st => ManifestDelta(
+      nextVersion = Some(st.nextVersion + 1), addFiles = Vector(FileMeta(part.getPath, 0,
+        Hex.encode(b("a")), Hex.encode(b("b")), 2L, st.nextVersion, part.length))))
+    val e = intercept[Exception](db.view().collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"data file ${part.getPath} is not sorted by key"), msgs)
+  }
+
+  /** `body`'s result and the `file` paths it opened and created. The
+    * recording filesystem serves `file` paths only while it runs: with the
+    * cache off, every `getFileSystem` builds a fresh instance of it.
+    */
+  private def recordingCalls[T](body: => T): (T, Seq[String], Seq[String]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[CallRecordingFileSystem].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    CallRecordingFileSystem.opens.clear(); CallRecordingFileSystem.creates.clear()
+    val out = try body finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    def norm(p: String) = p.replaceFirst("^file:/+", "/")
+    (out, CallRecordingFileSystem.opens.asScala.map(norm).toSeq,
+      CallRecordingFileSystem.creates.asScala.map(norm).toSeq)
+  }
+
+  test("a local batchSet creates no file through Hadoop; a prefix scan opens only what it reads") {
+    val db = freshDb(GraftOptions(valueThreshold = 12, compactTriggerFiles = 1000))
+    // batch i holds one blob under a<i> (even i) or b<i> (odd i), and c<i>
+    val (_, _, creates) = recordingCalls((0 until 6).foreach { i =>
+      db.batchSet(Seq(KVEntry(b(s"${if (i % 2 == 0) "a" else "b"}$i"), b("B" * 20)),
+        KVEntry(b(s"c$i"), b("inline"))))
+    })
+    assert(creates.isEmpty, s"batchSet created through Hadoop: $creates")
+    val st = new Manifest(spark.sparkContext.hadoopConfiguration, db.rootDir).load()
+    assert(st.files.size == 6 && st.blobFiles.size == 6)
+    val (rows, opens, _) = recordingCalls(db.scan(prefix = Some(b("a"))).collect())
+    assert(rows.map(r => new String(r.getAs[Array[Byte]]("key"))).toSeq == Seq("a0", "a2", "a4"))
+    assert(rows.forall(r => new String(r.getAs[Array[Byte]]("value")) == "B" * 20))
+    // commit order: batch i wrote data file i and blob file i
+    val even = Set(0, 2, 4)
+    assert(opens.filter(_.contains("/blobs/")).toSet == even.map(st.blobFiles(_).path))
+    assert(opens.filter(_.contains("/data/")).toSet == even.map(st.files(_).path))
   }
 }
